@@ -1,8 +1,11 @@
 """Geo stage: ODS place -> Region/Country (reference parse_country_ods_*_load2.py).
 
-Full mode rewrites T_ODS wholesale; delta mode parses only rows not yet
-in T_ODS (anti-join J3) and appends. The states lookup rides a
-broadcast join (J1) — the fact-sized side never shuffles.
+Full mode rewrites T_ODS wholesale. Delta mode is handed only the rows
+this delivery added to ODS (plans/ods.py), parses those, appends them
+and returns them; T_ODS is only ever written from rows just added to
+ODS, so they cannot already be in T_ODS and need no anti-join (the
+reference's J3). The states lookup rides a broadcast join (J1) — the
+fact-sized side never shuffles.
 """
 
 from __future__ import annotations
@@ -33,8 +36,7 @@ def stage_geo(
         wh.overwrite(
             parsed.hint("rebalance") if clamp_writes else parsed, table
         )
-    else:
-        existing_ids = wh.read(table).select("ID_Event")
-        fresh = parsed.join(existing_ids, "ID_Event", "left_anti")
-        wh.append(fresh.hint("rebalance") if clamp_writes else fresh, table)
-    return wh.read(table)
+        return wh.read(table)
+    # a delta's rows come from stage_ods' snapshot, already rebalanced
+    wh.append(parsed, table)
+    return parsed

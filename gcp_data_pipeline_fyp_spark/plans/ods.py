@@ -83,6 +83,18 @@ def stage_ods(
     table: str = "ODS_earthquake",
     clamp_writes: bool = False,
 ) -> DataFrame:
+    """Land the delivery's ODS rows; return the rows this call added.
+
+    Full mode and a first delivery (no table yet) write every row and
+    return the table. A delta into an existing table keeps only rows
+    whose ID_Event is new (deduplicated within the delivery, then
+    anti-joined against the table), snapshots them with an eager
+    `localCheckpoint`, appends the snapshot and returns it, so later
+    stages reuse these rows instead of re-deriving them from the grown
+    table. A `persist` would not do: the append re-plans cached frames
+    that read the table path, and the re-planned anti-join against the
+    grown table comes back empty.
+    """
     projected = ods_projection(staged, job_id, data_source, run_ts)
     # clamp_writes: REBALANCE on small inputs so the table's file count
     # follows data size, not the per-core split count (plans/pipeline.py)
@@ -90,10 +102,13 @@ def stage_ods(
         wh.overwrite(
             projected.hint("rebalance") if clamp_writes else projected, table
         )
-    else:
-        existing_ids = wh.read(table).select("ID_Event")
-        fresh = projected.dropDuplicates(["ID_Event"]).join(
-            existing_ids, "ID_Event", "left_anti"
-        )
-        wh.append(fresh.hint("rebalance") if clamp_writes else fresh, table)
-    return wh.read(table)
+        return wh.read(table)
+    existing_ids = wh.read(table).select("ID_Event")
+    fresh = projected.dropDuplicates(["ID_Event"]).join(
+        existing_ids, "ID_Event", "left_anti"
+    )
+    fresh = (fresh.hint("rebalance") if clamp_writes else fresh).localCheckpoint(
+        eager=True
+    )
+    wh.append(fresh, table)
+    return fresh

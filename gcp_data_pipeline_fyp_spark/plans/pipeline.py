@@ -62,13 +62,34 @@ def run_pipeline(
     # default split size, which would serialize the parse — and the
     # parse feeds every downstream stage. For inputs >= cores*128 MB
     # the clamp leaves the default in place.
+    #
+    # A shrunken split also needs a shrunken file open cost. Spark packs
+    # small files into one scan task until split bytes are reached,
+    # charging each file its size plus the open cost (4 MB default), so
+    # with a split below the open cost every file is its own task: each
+    # delta load's scans of the append-grown warehouse tables would cost
+    # one more task per file appended so far. When the clamp shrinks the
+    # split, the open cost shrinks in proportion (Spark's defaults keep
+    # it at 1/32 of the split), so a scan packs its small files into
+    # ~cores tasks.
+    # `prior_*` are the explicitly set values (None: unset) to restore;
+    # `*_before` the effective byte counts.
     prior_split = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    prior_open = spark.conf.get("spark.sql.files.openCostInBytes", None)
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    split_before = sql_conf.filesMaxPartitionBytes()
+    open_before = sql_conf.filesOpenCostInBytes()
     clamp_writes = False
     try:
         file_bytes = os.path.getsize(raw_path)
         cores = spark.sparkContext.defaultParallelism
         split = min(max(file_bytes // max(cores, 1), 1 << 20), 128 << 20)
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        if split < split_before:
+            spark.conf.set(
+                "spark.sql.files.openCostInBytes",
+                str(max(1, open_before * split // split_before)),
+            )
         # write clamp (guide §6, r13): with a small input the parse
         # fans to ~`cores` splits, and every stage table then lands
         # one TINY file per core (a 32-core run writes 4x the files
@@ -89,13 +110,17 @@ def run_pipeline(
             warehouse_root, archive, clamp_writes,
         )
     finally:
-        # restore the session-wide split size — leaving a CSV-sized
-        # split active would fragment every later parquet scan in the
-        # caller's session into thousands of tiny tasks
-        if prior_split is None:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prior_split)
+        # restore the session-wide split size and open cost — leaving
+        # CSV-sized values active would fragment every later parquet
+        # scan in the caller's session into thousands of tiny tasks
+        for key, prior in (
+            ("spark.sql.files.maxPartitionBytes", prior_split),
+            ("spark.sql.files.openCostInBytes", prior_open),
+        ):
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
 
 
 def _run_pipeline_stages(
@@ -126,23 +151,16 @@ def _run_pipeline_stages(
             t_ods, wh, job_id, data_source, run_ts, clamp_writes=clamp_writes
         )
     else:
-        before_ids = None
-        ods_table = "ODS_earthquake"
-        if wh.exists(ods_table):
-            before_ids = wh.read(ods_table).select("ID_Event")
-        ods = stage_ods(
+        # each stage hands the next only the rows this delivery added:
+        # the new ODS rows are computed once (stage_ods snapshots them)
+        # and flow through geo into the dimension and fact upkeep,
+        # instead of being re-derived from the grown ODS/T_ODS tables.
+        # A first delivery (no ODS yet) lands, and hands on, every row.
+        new_ods = stage_ods(
             staged, wh, mode, job_id, data_source, run_ts,
             clamp_writes=clamp_writes,
         )
-        # only newly-landed ODS rows flow into geo + dw (delta scope)
-        new_ods = ods if before_ids is None else ods.join(
-            before_ids, "ID_Event", "left_anti"
-        )
-        stage_geo(new_ods, states, wh, mode, clamp_writes=clamp_writes)
-        t_ods = wh.read("T_ODS_earthquake")
-        new_t_ods = t_ods if before_ids is None else t_ods.join(
-            before_ids, "ID_Event", "left_anti"
-        )
+        new_t_ods = stage_geo(new_ods, states, wh, mode, clamp_writes=clamp_writes)
         if wh.exists("T_FACT_Events"):
             tables = stage_dw_delta(
                 new_t_ods, wh, job_id, data_source, run_ts,
@@ -150,7 +168,7 @@ def _run_pipeline_stages(
             )
         else:
             tables = stage_dw_full(
-                t_ods, wh, job_id, data_source, run_ts,
+                wh.read("T_ODS_earthquake"), wh, job_id, data_source, run_ts,
                 clamp_writes=clamp_writes,
             )
     if archive:

@@ -176,7 +176,8 @@ def _merge_into(
             wh.overwrite(merged.hint("rebalance"), staging)
             wh.swap(staging, table)
     else:
-        wh.overwrite(batch.hint("rebalance"), table, partition_cols=part_cols)
+        first = batch.hint("rebalance", partition_col) if partition_col else batch.hint("rebalance")
+        wh.overwrite(first, table, partition_cols=part_cols)
 
 
 def stream_validated_ingest(

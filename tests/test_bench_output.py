@@ -35,25 +35,25 @@ def _recover_map(lines, prefix, final_key):
 
 
 def test_aux_legs_constant_matches_mains_emission():
-    """AUX_LEGS documents the qv order; keep it in sync with the
-    timings keys the _bench_* helpers actually write (greppable from
-    the source — each helper assigns timings[...] literally)."""
+    """AUX_LEGS documents the qv order; keep it in sync, in ORDER, with
+    the timings keys main() writes: the HEADLINE loop first, then each
+    _bench_* helper in main()'s call order, each helper's legs in its
+    source order (greppable — each helper assigns timings[...] literally,
+    once per leg, with no reordering branches)."""
     import inspect
+    import re
 
-    src = "".join(
-        inspect.getsource(fn)
-        for fn in (
-            bench._bench_pipeline,
-            bench._bench_streaming,
-            bench._bench_text_index,
-            bench._bench_zonemap,
-            bench._bench_dsir_indexed_scoring,
-            bench._bench_incremental_neardup_steady,
-        )
-    )
-    for leg in bench.AUX_LEGS:
-        assert f'timings["{leg}"]' in src, leg
-    assert src.count('timings["') == len(bench.AUX_LEGS)
+    main_src = inspect.getsource(bench.main)
+    calls = re.findall(r"^\s*(_bench_\w+)\(spark, sf_dir, timings\)", main_src, re.M)
+    assert calls, "main() no longer calls the _bench_* helpers"
+    # the HEADLINE legs are timed before any helper runs
+    assert main_src.index("timings[name] =") < main_src.index(calls[0] + "(")
+    emitted = [
+        leg
+        for name in calls
+        for leg in re.findall(r'timings\["([^"]+)"\]', inspect.getsource(getattr(bench, name)))
+    ]
+    assert emitted == list(bench.AUX_LEGS)
 
 
 def test_final_line_carries_qv_at_current_headline_size():

@@ -169,6 +169,34 @@ def test_available_now_ingest_partition_scoped_merge(spark, tmp_path):
     assert snapshot("20240101") == before
 
 
+def test_first_create_lands_one_file_per_partition_dir(spark, tmp_path):
+    """The batch that creates a partitioned table is rebalanced BY the
+    partition column, as the merge branch is: each partition value's
+    rows go to one write task, so each directory holds one file. A
+    bare rebalance spreads every value over all write tasks: this
+    ~6 MB batch then lands 4 files in every directory."""
+    import os
+
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import _merge_into
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    batch = spark.range(0, 60000, numPartitions=4).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).cast("int").alias("pt"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+    )
+    _merge_into(wh, "ev_first", batch, ["event_id"], "pt")
+    root = wh.path("ev_first")
+    files = {
+        d: [f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")]
+        for d in os.listdir(root)
+        if d.startswith("pt=")
+    }
+    assert sorted(files) == ["pt=0", "pt=1", "pt=2"]
+    assert {d: len(fs) for d, fs in files.items()} == {"pt=0": 1, "pt=1": 1, "pt=2": 1}
+    assert wh.read("ev_first").count() == 60000
+
+
 def test_interval_join_stream_matches_batch(spark, tmp_path):
     """Same rows through the SAME interval_join body in streaming mode
     (two file-source streams, watermarked state) and batch mode."""
