@@ -695,7 +695,10 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-    spark = get_spark(app_name="bench", cpus=cpus, shuffle_partitions=cpus)
+    # shuffle partitions: session.default_shuffle_partitions (the core
+    # count unless $SPARK_GRAFT_SHUFFLE sizes it, e.g. down for small
+    # stateful streams)
+    spark = get_spark(app_name="bench", cpus=cpus)
     timings: dict[str, float] = {}
     # drift calibration (only meaningful at the canonical sf0.1 /
     # 32-cpu config the pins were taken at): ratios vs pinned r01

@@ -516,10 +516,18 @@ def build_dsir_profiles(
     count-where-predicate per bucket (rows with 0 dropped, matching
     the separate-fit output exactly) is the target profile. Exactly
     one of `target` / `target_filter` must be given; the two-frame
-    form remains for targets that are not a slice of `raw`."""
+    form remains for targets that are not a slice of `raw`. The
+    filtered target is the `text_col` of the selected rows, so
+    `target_text_col` (which names a column of a target frame) is
+    refused with it rather than ignored."""
     if (target is None) == (target_filter is None):
         raise ValueError(
             "build_dsir_profiles: pass exactly one of target / target_filter"
+        )
+    if target_filter is not None and target_text_col is not None:
+        raise ValueError(
+            "build_dsir_profiles: target_text_col applies to a target "
+            "frame; with target_filter the target text is text_col"
         )
     if target_filter is not None:
         flagged = raw.withColumn(

@@ -29,9 +29,11 @@ across engines — see queries_util.micro6 note).
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -116,6 +118,21 @@ def row_count_between(
     lo: int | None = None, hi: int | None = None, name: str | None = None
 ) -> Expectation:
     return Expectation(name or "row_count", "row_count", "", lo=lo, hi=hi)
+
+
+def row_violation(rules: list[Expectation]) -> Column | None:
+    """True on a row that breaks any ROW-LEVEL rule (a NULL predicate
+    counts as no violation): the quarantine split of an ingest. None
+    when no rule is row-level — aggregate-shaped rules (unique /
+    row_count / referential) cannot name individual rows."""
+    preds = [
+        F.coalesce(r.violated, F.lit(False))
+        for r in rules
+        if r.violated is not None
+    ]
+    if not preds:
+        return None
+    return reduce(operator.or_, preds, F.lit(False))
 
 
 def expectations_report(df: DataFrame, rules: list[Expectation]) -> DataFrame:

@@ -634,10 +634,10 @@ def append_ivf_index(
     (one broadcast-assign pass + a partitioned append that touches only
     the centroid directories present in the batch), and queries see the
     new vectors immediately. The stored-index paths (this append + the
-    drift monitor below) assign with the broadcast-array fold and so
-    inherit its `_ASSIGN_FOLD_MAX_CENTROIDS` ceiling — an index BUILT
-    with more centroids than that should thread its build-time
-    n_centroids through `_assign` (build_ivf_index already does). Drift is handled by periodically
+    drift monitor below) count the stored codebook (one tiny-table
+    count) and pass the size to `_assign`, so an index BUILT with more
+    centroids than `_ASSIGN_FOLD_MAX_CENTROIDS` assigns with the
+    shuffle form, as its build did. Drift is handled by periodically
     rebuilding with `build_ivf_index` (same cadence discipline as
     compaction) — incremental Lloyd updates would make the index
     depend on ingest order, breaking rerun determinism.
@@ -653,7 +653,7 @@ def append_ivf_index(
     b = batch.select(
         F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")
     )
-    assigned = _assign(b, cent)
+    assigned = _assign(b, cent, cent.count())
     if "codes" in wh.read(f"{name}__postings").columns:
         rows = with_sq8_columns(
             assigned.withColumnRenamed("__cv", "vec"), "vec"
@@ -1254,7 +1254,7 @@ def ivf_retrain_decision_indexed(
         F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")
     )
     cur_counts = (
-        _assign(b, cent)
+        _assign(b, cent, cent.count())
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("__cc"))
     )

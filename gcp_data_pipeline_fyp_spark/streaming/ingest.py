@@ -9,6 +9,23 @@ semantics of `Delta Load Scripts/ods_delta_load2.py:140-190` /
 `dw2_delta_load2.py:101-131`, but incremental per micro-batch and
 restartable from the checkpoint.
 
+Every `stream_*` ingest here is one batch operator run per micro-batch
+on three shared helpers:
+
+- `_feed` is the one place a `readStream` is set up: headered CSV or
+  parquet, optional `maxFilesPerTrigger`, optional watermark +
+  `dropDuplicatesWithinWatermark`;
+- `_run_available_now` is the one `foreachBatch` +
+  `Trigger.AvailableNow` site. It dedups and persists each batch once
+  for its fold and skips the data-less batch AvailableNow runs to
+  flush dedup state;
+- `_fold_state` is the one replay guard for distributive-but-not-
+  idempotent state (counts, sums): it refuses a state table from a
+  foreign checkpoint lineage, skips a batch the state already holds,
+  and otherwise stamps `(__stream_id, __last_batch_id)` onto the merged
+  state and promotes it by staging + `Warehouse.swap`. Plain appends
+  guard themselves with `batch_already_appended`.
+
 `windowed_event_counts` is the watermarked tumbling-window aggregation
 (the streaming measure layer); in batch mode the same function body
 answers the DuckDB-checked `windowed_counts` probe — one definition,
@@ -34,14 +51,11 @@ from gcp_data_pipeline_fyp_spark.operators.merge import (
 )
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
-
 def checkpoint_stream_id(checkpoint_dir: str) -> str:
     """The stream's identity from its checkpoint metadata — the key
     every replay-guarded ingest stamps into its state so a state
     table from a DIFFERENT checkpoint lineage (whose batch ids are
-    not comparable) raises instead of silently double-counting.
-    Shared helper: the per-ingest copies of this logic had started
-    to drift."""
+    not comparable) raises instead of silently double-counting."""
     import json as _json
     import os as _os
 
@@ -57,7 +71,8 @@ def batch_already_appended(
     whose output rides a plain append (a crash between append and
     state swap re-delivers the batch; the probe turns the re-append
     into a no-op). `col` names the stamp column: newer ingests stamp
-    `__batch_id`; the validated/scored report tables predate the
+    `__batch_id`; the validated ingest's report/quarantine tables,
+    the monitors' reports and the index ledger predate the
     convention and stamp `batch_id`.
 
     COMMIT-PROTOCOL ASSUMPTION (documented, not hidden): the probe
@@ -81,6 +96,136 @@ def batch_already_appended(
         .count()
         > 0
     )
+
+
+def _feed(
+    spark: SparkSession,
+    input_dir: str,
+    schema_ddl: str,
+    parquet: bool = False,
+    max_files: int | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    ts_col: str | None = None,
+    watermark: str | None = None,
+    dedup_cols: list[str] | None = None,
+) -> DataFrame:
+    """The file-source stream every ingest reads: headered CSV (the
+    delta-chain convention), or parquet for feeds carrying types CSV
+    cannot represent (array<double> embeddings). `max_files` bounds a
+    batch (`maxFilesPerTrigger`); `transform` runs on the raw rows;
+    `dedup_cols` drops re-deliveries within the `watermark` horizon of
+    `ts_col`."""
+    reader = spark.readStream.schema(schema_ddl)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    if parquet:
+        feed = reader.parquet(input_dir)
+    else:
+        feed = reader.option("header", True).csv(input_dir)
+    if transform is not None:
+        feed = transform(feed)
+    if dedup_cols:
+        feed = feed.withWatermark(ts_col, watermark)
+        feed = feed.dropDuplicatesWithinWatermark(dedup_cols)
+    return feed
+
+
+def _run_available_now(
+    feed: DataFrame,
+    fold: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    dedup_cols: list[str] | None = None,
+) -> StreamingQuery:
+    """Run `fold(batch, batch_id)` over every micro-batch of what is
+    available now, then stop; a re-run resumes from the checkpoint and
+    sees only new files.
+
+    The batch is deduplicated on `dedup_cols` (watermark dedup keeps
+    the first arrival per key across batches; this drops in-batch
+    repeats) and persisted, so a fold may read it several times for
+    one computation. Empty batches never reach the fold: AvailableNow
+    + stateful dedup runs a trailing data-less batch to flush state,
+    and folding it would append spurious all-zero report rows (and
+    trip row_count lower bounds) or rewrite a table for nothing."""
+
+    def _each(batch: DataFrame, batch_id: int) -> None:
+        if dedup_cols:
+            batch = batch.dropDuplicates(dedup_cols)
+        batch = batch.persist()
+        try:
+            if not batch.isEmpty():
+                fold(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    return (
+        feed.writeStream.foreachBatch(_each)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _fold_state(
+    wh: Warehouse,
+    table: str,
+    checkpoint_dir: str,
+    batch_id: int,
+    part: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> bool:
+    """Fold one batch's partial state `part` into the persisted state
+    `table` as `merge(prior, part)`, at most once per batch. Returns
+    False when the state already held the batch (a replay).
+
+    Count/sum merges are distributive but NOT idempotent — replaying a
+    merged batch double-counts. The guard is `__stream_id` (the
+    checkpoint's persisted query id) + `__last_batch_id`, stamped on
+    every state row and promoted in the SAME staging + swap as the
+    data, so state and mark can never disagree even across a crash
+    mid-promotion. Within one checkpoint lineage foreachBatch
+    re-delivers only the LAST batch, so `batch_id <=
+    max(__last_batch_id)` identifies every already-merged delivery,
+    which leaves the state as it is. Batch ids from a DIFFERENT
+    checkpoint (deleted/recreated) are NOT comparable — the source
+    renumbers and re-delivers everything, so silently applying the id
+    guard would both double-count replayed files and DROP files that
+    arrived after the old high-water mark. That case raises instead.
+
+    Either way the state afterwards holds this batch: derive anything
+    (reports, rates) from the table as read after this call, and
+    append what is derived after it too. An append then needs its
+    `batch_already_appended` probe only on a replay: a batch the state
+    did not hold cannot have reached any append yet."""
+    sid = checkpoint_stream_id(checkpoint_dir)
+    if wh.exists(table):
+        prior = wh.read(table)
+        mark = prior.select(
+            F.max("__stream_id").alias("sid"),
+            F.max("__last_batch_id").alias("m"),
+        ).first()
+        if mark["sid"] is not None and mark["sid"] != sid:
+            raise ValueError(
+                f"state table {table!r} was built by stream {mark['sid']} "
+                f"but this checkpoint is {sid}: batch ids are "
+                "not comparable across checkpoints (every file "
+                "re-delivers under new numbering). Drop the state table "
+                "to rebuild it under this checkpoint, or restart from "
+                "the original checkpoint directory."
+            )
+        if mark["m"] is not None and batch_id <= mark["m"]:
+            return False
+        part = merge(prior.drop("__stream_id", "__last_batch_id"), part)
+    staging = f"{table}__staging"
+    wh.overwrite(
+        part.withColumn("__stream_id", F.lit(sid)).withColumn(
+            "__last_batch_id", F.lit(batch_id)
+        ),
+        staging,
+    )
+    wh.swap(staging, table)
+    return True
+
 
 
 def stream_ingest_available_now(
@@ -109,30 +254,15 @@ def stream_ingest_available_now(
     batch against a large table never rewrites the whole table — same
     discipline as the batch delta path (plans/delta.py).
     """
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    if transform is not None:
-        raw = transform(raw)
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
+    feed = _feed(
+        spark, input_dir, schema_ddl, transform=transform, ts_col=ts_col,
+        watermark=watermark, dedup_cols=event_id_cols,
     )
 
     def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        _merge_into(
-            wh, table, batch.dropDuplicates(event_id_cols), event_id_cols,
-            partition_col,
-        )
+        _merge_into(wh, table, batch, event_id_cols, partition_col)
 
-    return (
-        deduped.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _merge_batch, checkpoint_dir, event_id_cols)
 
 
 def _merge_into(
@@ -219,89 +349,64 @@ def stream_validated_ingest(
     batch, and the merge is the partition-scoped batch path — nothing
     here holds streaming state beyond the dedup watermark.
     """
-    from pyspark.sql import functions as SF
-
     from gcp_data_pipeline_fyp_spark.operators.expectations import (
         expectations_report,
+        row_violation,
     )
 
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
+    feed = _feed(
+        spark, input_dir, schema_ddl, ts_col=ts_col, watermark=watermark,
+        dedup_cols=event_id_cols,
     )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
-    )
-    row_rules = [r for r in rules if r.violated is not None]
+    violated = row_violation(rules)
 
     def _validate_and_merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.dropDuplicates(event_id_cols).persist()
-        try:
-            # AvailableNow + stateful dedup runs a trailing data-less
-            # batch to flush state; logging it would append spurious
-            # all-zero report rows (and trip row_count lower bounds)
-            if batch.isEmpty():
-                return
-            # foreachBatch is at-least-once: on a replay after a
-            # mid-batch failure the MERGE is naturally idempotent, but
-            # the appends are not — each append-only table is its OWN
-            # replay ledger (probe its batch_id before appending).
-            # Guarding quarantine with the report ledger would leave a
-            # crash window between the two appends that duplicates
-            # dead-letter rows on replay.
-            def _batch_seen(t: str) -> bool:
-                return batch_already_appended(wh, t, batch_id, col="batch_id")
-
-            already_logged = _batch_seen(report_table)
-            clean = batch
-            if row_rules:
-                violated = SF.lit(False)
-                for r in row_rules:
-                    violated = violated | SF.coalesce(r.violated, SF.lit(False))
-                if quarantine_table is not None and not _batch_seen(
-                    quarantine_table
-                ):
-                    # rebalance: dead-letter appends are a (usually
-                    # tiny) filtered slice of the batch — without the
-                    # clamp each append lands one file PER PARTITION
-                    # of the batch (cores-sized), decaying the
-                    # quarantine into core-count x batches files
-                    wh.append(
-                        batch.filter(violated)
-                        .withColumn(
-                            "batch_id", SF.lit(batch_id).cast("long")
-                        )
-                        .hint("rebalance"),
-                        quarantine_table,
-                    )
-                clean = batch.filter(~violated)
-            if not already_logged:
-                report = expectations_report(batch, rules).withColumn(
-                    "batch_id", SF.lit(batch_id).cast("long")
+        # foreachBatch is at-least-once: on a replay after a mid-batch
+        # failure the MERGE is naturally idempotent, but the appends
+        # are not — each append-only table is its OWN replay ledger
+        # (probe its batch_id before appending). Guarding quarantine
+        # with the report ledger would leave a crash window between
+        # the two appends that duplicates dead-letter rows on replay.
+        already_logged = batch_already_appended(
+            wh, report_table, batch_id, col="batch_id"
+        )
+        clean = batch
+        if violated is not None:
+            if quarantine_table is not None and not batch_already_appended(
+                wh, quarantine_table, batch_id, col="batch_id"
+            ):
+                # rebalance: dead-letter appends are a (usually tiny)
+                # filtered slice of the batch — without the clamp each
+                # append lands one file PER PARTITION of the batch
+                # (cores-sized), decaying the quarantine into
+                # core-count x batches files
+                wh.append(
+                    batch.filter(violated)
+                    .withColumn("batch_id", F.lit(batch_id).cast("long"))
+                    .hint("rebalance"),
+                    quarantine_table,
                 )
-                wh.append(report, report_table)
-            _merge_into(wh, table, clean, event_id_cols, partition_col)
-            if zonemap_cols:
-                # keep the skipping index fresh as the stream appends:
-                # stats only the batch's new files (operators/zonemap.
-                # refresh_zonemap); entries for files the merge rewrote
-                # go stale and are ignored by prune_files, so pruned
-                # reads stay exact between (occasional) full rebuilds
-                from gcp_data_pipeline_fyp_spark.operators.zonemap import (
-                    refresh_zonemap,
-                )
+            clean = batch.filter(~violated)
+        if not already_logged:
+            report = expectations_report(batch, rules).withColumn(
+                "batch_id", F.lit(batch_id).cast("long")
+            )
+            wh.append(report, report_table)
+        _merge_into(wh, table, clean, event_id_cols, partition_col)
+        if zonemap_cols:
+            # keep the skipping index fresh as the stream appends:
+            # stats only the batch's new files (operators/zonemap.
+            # refresh_zonemap); entries for files the merge rewrote go
+            # stale and are ignored by prune_files, so pruned reads
+            # stay exact between (occasional) full rebuilds
+            from gcp_data_pipeline_fyp_spark.operators.zonemap import (
+                refresh_zonemap,
+            )
 
-                refresh_zonemap(wh, table, zonemap_cols)
-        finally:
-            batch.unpersist()
+            refresh_zonemap(wh, table, zonemap_cols)
 
-    return (
-        deduped.writeStream.foreachBatch(_validate_and_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        feed, _validate_and_merge, checkpoint_dir, event_id_cols
     )
 
 
@@ -348,14 +453,13 @@ def reprocess_quarantine(
     before the merge (the target table never carries it). Batch-sized
     work only: one filter split + the idempotent partition-scoped merge.
     """
-    from pyspark.sql import functions as SF
+    from gcp_data_pipeline_fyp_spark.operators.expectations import row_violation
 
     q = wh.read(quarantine_table).persist()
     try:
-        row_rules = [r for r in rules if r.violated is not None]
-        violated = SF.lit(False)
-        for r in row_rules:
-            violated = violated | SF.coalesce(r.violated, SF.lit(False))
+        violated = row_violation(rules)
+        if violated is None:
+            violated = F.lit(False)
         clean = q.filter(~violated).drop("batch_id")
         still_bad = q.filter(violated)
         released = clean.count()
@@ -372,147 +476,6 @@ def reprocess_quarantine(
         return {"released": released, "remaining": remaining}
     finally:
         q.unpersist()
-
-
-def stream_scored_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    id_col: str,
-    ts_col: str,
-    text_col: str,
-    wh: Warehouse,
-    table: str,
-    checkpoint_dir: str,
-    weights_table: str,
-    n_buckets: int | None = None,
-    threshold_micro: int = 0,
-    watermark: str = "1 day",
-    partition_col: str | None = None,
-    rejects_table: str | None = None,
-    score_log_table: str = "QUALITY_SCORES_LOG",
-) -> StreamingQuery:
-    """Model-filtered streaming corpus ingest: per micro-batch, score
-    every document with OFFLINE-trained classifier weights
-    (operators/classifier.py) and merge only the keepers — the
-    streaming rendering of the DCLM/FineWeb model-based quality gate,
-    structured exactly like `stream_validated_ingest`.
-
-    Per batch:
-    - documents are scored through the broadcast weight table (read
-      once at stream start — the model is a versioned warehouse table,
-      trained offline on a labeled seed set, never inside the stream).
-      The feature-space geometry (n_buckets/seed/bigrams) is read from
-      the stored model's own metadata columns, so a model trained
-      off-defaults scores correctly with no caller coordination;
-      `n_buckets` is accepted only for legacy metadata-less tables and
-      validated against stored metadata otherwise;
-    - 'drop' and 'empty' docs append to `rejects_table` (if set) WITH
-      their score and batch id — the quality dead-letter, auditable
-      and reprocessable when the model is retrained. The append is
-      guarded by its own batch_id probe of the rejects table, so a
-      replayed batch never duplicates dead-letter rows;
-    - a per-batch summary (n_docs / n_keep / n_drop / n_empty) appends
-      to `score_log_table` — the feed-quality time series and replay
-      ledger. Each append is idempotent at BATCH granularity (probe
-      then write); a crash strictly inside one append can still leave
-      that one table partially written — the same at-least-once caveat
-      `stream_validated_ingest` documents — but ordering between the
-      two appends no longer matters;
-    - keepers merge via the staging-swap batch path.
-
-    Scale: scoring is one feature explode + broadcast join + id-keyed
-    aggregation per batch; no streaming state beyond the dedup
-    watermark; the weight table is ≤ n_buckets rows.
-    """
-    from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        _resolve_meta,
-        bucketed_features,
-        score_from_buckets,
-    )
-
-    weights = wh.read(weights_table)
-    # resolve the feature-space geometry ONCE at stream start (fail
-    # fast on a conflict, not mid-batch) and pass the resolved ints to
-    # the geometry-explicit scoring path below — the r5 form re-ran the
-    # metadata first() inside every micro-batch (ADVICE r5)
-    rb_buckets, rb_bigrams, rb_seed = _resolve_meta(
-        weights, n_buckets, None, None
-    )
-
-    def _batch_seen(table: str, batch_id: int) -> bool:
-        return batch_already_appended(wh, table, batch_id, col="batch_id")
-
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
-
-    def _score_and_merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.dropDuplicates([id_col]).persist()
-        try:
-            if batch.isEmpty():
-                return
-            already_logged = _batch_seen(score_log_table, batch_id)
-            feats = bucketed_features(
-                batch, [id_col], text_col, rb_buckets, rb_bigrams, rb_seed
-            )
-            scored = score_from_buckets(
-                feats, id_col, weights, batch.select(id_col),
-                threshold_micro,
-            ).persist()
-            try:
-                _route_batch(scored, batch, batch_id, already_logged)
-            finally:
-                scored.unpersist()
-        finally:
-            batch.unpersist()
-
-    def _route_batch(
-        scored: DataFrame, batch: DataFrame, batch_id: int, already_logged: bool
-    ) -> None:
-        # rejects idempotency is probed on the rejects table ITSELF
-        # (not the ledger) so replay after a crash between the two
-        # appends cannot duplicate dead-letter rows
-        if rejects_table is not None and not _batch_seen(rejects_table, batch_id):
-            rejected = batch.join(
-                scored.filter(F.col("label") != "keep"), id_col
-            ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-            wh.append(rejected, rejects_table)
-        if not already_logged:
-            summary = (
-                scored.agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum((F.col("label") == "keep").cast("long")).alias(
-                        "n_keep"
-                    ),
-                    F.sum((F.col("label") == "drop").cast("long")).alias(
-                        "n_drop"
-                    ),
-                    F.sum((F.col("label") == "empty").cast("long")).alias(
-                        "n_empty"
-                    ),
-                ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-            wh.append(summary, score_log_table)
-        keep = batch.join(
-            scored.filter(F.col("label") == "keep").select(id_col), id_col,
-            "left_semi",
-        )
-        if not keep.isEmpty():
-            _merge_into(wh, table, keep, [id_col], partition_col)
-
-    return (
-        deduped.writeStream.foreachBatch(_score_and_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_dedup_ingest(
@@ -555,283 +518,30 @@ def stream_dedup_ingest(
     anything corpus-sized is the digest index (16 bytes/doc, ~1/10^4
     of corpus bytes)."""
     from gcp_data_pipeline_fyp_spark.operators.dedup import (
+        _content_digest,
         exact_dedup,
         incremental_dedup_indexed,
     )
 
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
+    feed = _feed(
+        spark, input_dir, schema_ddl, ts_col=ts_col, watermark=watermark,
+        dedup_cols=[id_col],
     )
 
     def _dedup_and_append(batch: DataFrame, batch_id: int) -> None:
-        batch = exact_dedup(
-            batch.dropDuplicates([id_col]), key_cols, id_col
-        ).persist()
-        try:
-            if batch.isEmpty():
-                return
-            fresh = incremental_dedup_indexed(
-                wh, batch, key_cols, index_name, update_index=False
-            ).localCheckpoint()
-            if fresh.isEmpty():
-                return
-            wh.append(fresh, table)
-            from gcp_data_pipeline_fyp_spark.operators.dedup import (
-                _content_digest,
-            )
-            from pyspark.sql import functions as SF  # noqa: F401
-
-            wh.append(
-                fresh.select(_content_digest(key_cols).alias("digest"))
-                .distinct(),
-                f"{index_name}__digests",
-            )
-        finally:
-            batch.unpersist()
-
-    return (
-        deduped.writeStream.foreachBatch(_dedup_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_neardup_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    id_col: str,
-    text_col: str,
-    ts_col: str,
-    wh: Warehouse,
-    table: str,
-    index_name: str,
-    checkpoint_dir: str,
-    watermark: str = "1 day",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    feed_format: str = "csv",
-) -> StreamingQuery:
-    """Streaming ingest with history-aware NEAR-dup suppression — the
-    streaming composition of the two persisted indexes
-    (operators/dedup.py): the 16-byte content-digest index is the
-    exact gate AND the replay ledger, the MinHash band index is the
-    near-dup gate. `stream_dedup_ingest` only stops byte-identical
-    re-deliveries; this also stops the near-copies (boilerplate
-    re-wraps, tail edits) that dominate crawled feeds.
-
-    Per micro-batch: (1) in-batch exact dedup, (2) digest anti-join
-    against `{index_name}__digests` (drops exact re-deliveries AND
-    makes a FULLY-COMPLETED batch's replay a no-op — band matching
-    alone cannot self-suppress a replay because same-id pairs are
-    filtered; honest at-least-once window: a crash AFTER the data
-    append but BEFORE the digest append re-appends that batch's
-    survivors on retry — plain parquet has no two-table transaction;
-    run the exact digest dedup over the table, or rebuild via
-    `build_digest_index`, to reap that window after a crash),
-    (3) band-match the remainder against `{index_name}__bands` plus
-    itself via `incremental_neardup_indexed` (the batch signs ONLY
-    itself; the corpus is never re-tokenized), (4) suppress every doc
-    banded with an indexed doc or with a smaller-id batch doc,
-    (5) append survivors, then fold ONLY the survivors' digests and
-    band rows into the indexes.
-
-    Suppression is pair-greedy, not transitive-closure: in a batch
-    chain a<b<c with pairs (a,b),(b,c) only `a` survives — `c` is
-    suppressed by the already-suppressed `b`. Deliberately
-    conservative (never ingests anything banded with a smaller id);
-    chains that straddle batches converge through the index anyway.
-
-    Scale: batch-sized signing + index-sized joins (band rows are
-    partition-pruned on `band`); nothing corpus-sized is read except
-    the two slim indexes.
-
-    `feed_format`: "csv" (headered, the delta-chain convention) or
-    "jsonl" (the public-corpus convention, sources/jsonl.py) —
-    document feeds overwhelmingly land as JSONL. Parse-corrupt lines
-    surface as all-NULL rows; a row with no id cannot be deduplicated,
-    watermarked, or healed, so NULL-id rows are dropped at the source
-    (torn lines never crash the stream and never land in the table —
-    E2E-pinned). Feeds that must QUARANTINE torn lines instead go
-    through `stream_validated_ingest` / sources/jsonl.split_corrupt.
-    """
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        _content_digest,
-        _lsh_band_rows,
-        exact_dedup,
-        incremental_dedup_indexed,
-        incremental_neardup_indexed,
-    )
-
-    if feed_format == "jsonl":
-        raw = spark.readStream.schema(schema_ddl).json(input_dir)
-    elif feed_format == "csv":
-        raw = (
-            spark.readStream.schema(schema_ddl)
-            .option("header", True)
-            .csv(input_dir)
-        )
-    else:
-        raise ValueError(f"unknown feed_format: {feed_format!r}")
-    raw = raw.filter(F.col(id_col).isNotNull())
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
-
-    def _gate_and_append(batch: DataFrame, batch_id: int) -> None:
-        batch = exact_dedup(
-            batch.dropDuplicates([id_col]), [text_col], id_col
-        ).persist()
-        try:
-            if batch.isEmpty():
-                return
-            fresh = incremental_dedup_indexed(
-                wh, batch, [text_col], index_name, update_index=False
-            ).localCheckpoint()
-            if fresh.isEmpty():
-                return
-            pairs = incremental_neardup_indexed(
-                wh,
-                fresh,
-                id_col,
-                text_col,
-                index_name,
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-                update_index=False,
-            )
-            batch_ids = fresh.select(F.col(id_col).alias("__bid"))
-            # every pair involves the batch on >=1 side (operator
-            # contract), and id_a < id_b. If id_b is a batch doc its
-            # partner is either indexed or a smaller batch doc — drop
-            # id_b either way. If id_b is NOT in the batch, id_a is a
-            # batch doc banded with an indexed doc — drop id_a.
-            suppress_b = pairs.join(
-                batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_semi"
-            ).select(F.col("id_b").alias("__drop"))
-            suppress_a = pairs.join(
-                batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_anti"
-            ).select(F.col("id_a").alias("__drop"))
-            drops = suppress_b.unionByName(suppress_a).distinct()
-            survivors = fresh.join(
-                drops, fresh[id_col] == drops["__drop"], "left_anti"
-            ).localCheckpoint()
-            if survivors.isEmpty():
-                return
-            wh.append(survivors, table)
-            wh.append(
-                survivors.select(
-                    _content_digest([text_col]).alias("digest")
-                ).distinct(),
-                f"{index_name}__digests",
-            )
-            wh.append(
-                _lsh_band_rows(
-                    survivors, id_col, text_col, num_hashes, bands, shingle_n
-                ),
-                f"{index_name}__bands",
-                partition_cols=["band"],
-            )
-        finally:
-            batch.unpersist()
-
-    return (
-        deduped.writeStream.foreachBatch(_gate_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_scd2_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    key_cols: list[str],
-    attr_cols: list[str],
-    order_col: str,
-    tiebreak_cols: list[str],
-    wh: Warehouse,
-    dim_table: str,
-    checkpoint_dir: str,
-    watermark: str = "1 day",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Streaming SCD Type 2 dimension maintenance: each micro-batch
-    folds into the persisted dimension with `scd2_apply`
-    (operators/scd.py) — the recompute is sized by |current rows| +
-    |batch|, never |history|, and the result is BYTE-EQUIVALENT to
-    rebuilding from the whole feed (certified by the
-    `scd2_incremental_state` probe's full-snapshot oracle).
-
-    The updated dimension promotes via staging + `Warehouse.swap`
-    (rename-with-backup): a reader sees the old or the new dimension,
-    never a torn table. Replay is safe by ALGEBRA, not bookkeeping —
-    re-applying a batch whose versions already landed collapses into
-    the baseline run-compare and changes nothing (unit-pinned in
-    tests/test_operators.py), so at-least-once foreachBatch delivery
-    needs no ledger.
-
-    Ordering contract: `order_col` must be non-decreasing per entity
-    beyond CLOSED history (the watermark bounds intra-stream disorder;
-    the apply folds intra-batch and batch-vs-current disorder
-    correctly, but an event older than an entity's already-CLOSED
-    interval lands as a new current-era version — retroactive
-    backfills that deep should rebuild with `scd2_snapshot`)."""
-    from gcp_data_pipeline_fyp_spark.operators.scd import (
-        scd2_apply,
-        scd2_snapshot,
-    )
-
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = (
-        raw.csv(input_dir)
-        .withWatermark(order_col, watermark)
-        # order_col is part of the dedup key: without it, an entity's
-        # SECOND state change inside the watermark would be dropped as
-        # a "duplicate" of its first whenever tiebreak_cols is empty
-        # or non-unique — silent history loss, not dedup
-        .dropDuplicatesWithinWatermark(
-            [*key_cols, order_col, *tiebreak_cols]
-        )
-    )
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
+        fresh = incremental_dedup_indexed(
+            wh, exact_dedup(batch, key_cols, id_col), key_cols, index_name,
+            update_index=False,
+        ).localCheckpoint()
+        if fresh.isEmpty():
             return
-        cols = [*key_cols, *attr_cols, order_col, *tiebreak_cols]
-        batch = batch.select(*cols)
-        if wh.exists(dim_table):
-            out = scd2_apply(
-                wh.read(dim_table), batch,
-                key_cols, attr_cols, order_col, tiebreak_cols,
-            )
-        else:
-            out = scd2_snapshot(
-                batch, key_cols, attr_cols, order_col, tiebreak_cols
-            )
-        staging = f"{dim_table}__scd2_staging"
-        wh.overwrite(out, staging)
-        wh.swap(staging, dim_table)
+        wh.append(fresh, table)
+        wh.append(
+            fresh.select(_content_digest(key_cols).alias("digest")).distinct(),
+            f"{index_name}__digests",
+        )
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _dedup_and_append, checkpoint_dir, [id_col])
 
 
 def stream_rollup_ingest(
@@ -853,139 +563,49 @@ def stream_rollup_ingest(
     rescans history.
 
     Count/sum merges are distributive but NOT idempotent — replaying
-    a merged batch double-counts, so unlike the SCD2 fold this needs
-    a replay guard. The guard is `__stream_id` (the checkpoint's
-    persisted query id) + `__last_batch_id`, stamped on every state
-    row and promoted in the SAME staging+swap as the data, so state
-    and mark can never disagree even across a crash mid-promotion.
-    Within one checkpoint lineage foreachBatch re-delivers only the
-    LAST batch, so `batch_id <= max(__last_batch_id)` identifies
-    every already-merged delivery. Batch ids from a DIFFERENT
-    checkpoint (deleted/recreated) are NOT comparable — the source
-    renumbers and re-delivers everything, so silently applying the
-    id guard would both double-count replayed files and DROP files
-    that arrived after the old high-water mark. That case raises
-    instead: rebuild the state table with the new checkpoint, or
-    keep the original checkpoint directory."""
+    a merged batch double-counts, so this needs a replay guard. The
+    guard is `__stream_id` (the checkpoint's persisted query id) +
+    `__last_batch_id`, stamped on every state row and promoted in the
+    SAME staging+swap as the data, so state and mark can never
+    disagree even across a crash mid-promotion. Within one checkpoint
+    lineage foreachBatch re-delivers only the LAST batch, so
+    `batch_id <= max(__last_batch_id)` identifies every
+    already-merged delivery. Batch ids from a DIFFERENT checkpoint
+    (deleted/recreated) are NOT comparable — the source renumbers and
+    re-delivers everything, so silently applying the id guard would
+    both double-count replayed files and DROP files that arrived
+    after the old high-water mark. That case raises instead: rebuild
+    the state table with the new checkpoint, or keep the original
+    checkpoint directory."""
     from gcp_data_pipeline_fyp_spark.operators.rollup import (
         merge_states,
         rollup_state,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
+    feed = _feed(spark, input_dir, schema_ddl, max_files=max_files_per_trigger)
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
-        part = rollup_state(batch, keys, sum_cols)
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"rollup state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints (every "
-                    "file re-delivers under new numbering). Drop the "
-                    "state table to rebuild it under this checkpoint, "
-                    "or restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            out = merge_states(
-                [prior.drop("__stream_id", "__last_batch_id"), part], keys
-            )
-        else:
-            out = part
-        staging = f"{state_table}__rollup_staging"
-        wh.overwrite(
-            out.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        _fold_state(
+            wh, state_table, checkpoint_dir, batch_id,
+            rollup_state(batch, keys, sum_cols),
+            lambda prior, part: merge_states([prior, part], keys),
         )
-        wh.swap(staging, state_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _fold, checkpoint_dir)
 
 
-def stream_enriched_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    event_id_cols: list[str],
-    ts_col: str,
-    wh: Warehouse,
-    dim_table: str,
-    join_cols: list[str],
-    table: str,
-    checkpoint_dir: str,
-    watermark: str = "1 day",
-    dim_versioned: bool = False,
-) -> StreamingQuery:
-    """Stream-static enrichment against the CURRENT dimension snapshot:
-    CSV directory -> watermarked dedup -> per-batch broadcast LEFT join
-    with `dim_table` -> append to `table`.
+def _sum_counts(keys: list[str], count_col: str):
+    """The merge of count states keyed by `keys`: sum `count_col`."""
 
-    The dimension is re-read INSIDE foreachBatch, so every micro-batch
-    joins the dimension as of batch time — a dim update between batches
-    is visible to the next batch without restarting the stream (the
-    plan-cached stream-static join would pin the file listing;
-    re-reading per batch is the refresh contract, and the dim is
-    broadcast so the join adds no shuffle). With `dim_versioned=True`
-    the read goes through the versioned-table pointer
-    (`read_versioned`) — each batch joins one consistent SNAPSHOT,
-    never a half-overwritten directory, because published version dirs
-    are immutable (`overwrite_versioned`).
-
-    LEFT join: a fact row whose key has no dim row yet survives with
-    NULL attributes (late-arriving dimension; re-enrichment is a batch
-    backfill, not a streaming concern). Append sink + watermarked
-    dedup: replays within the watermark dedup upstream of the join, so
-    the at-least-once batch delivery does not double-append
-    (the `stream_dedup_ingest` discipline).
-    """
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
-    )
-
-    def _enrich_and_append(batch: DataFrame, batch_id: int) -> None:
-        dim = (
-            wh.read_versioned(dim_table)
-            if dim_versioned
-            else wh.read(dim_table)
+    def merge(prior: DataFrame, part: DataFrame) -> DataFrame:
+        return (
+            prior.select(*keys, count_col)
+            .unionByName(part)
+            .groupBy(*keys)
+            .agg(F.sum(count_col).alias(count_col))
         )
-        out = batch.dropDuplicates(event_id_cols).join(
-            F.broadcast(dim), join_cols, "left"
-        )
-        wh.append(out, table)
 
-    return (
-        deduped.writeStream.foreachBatch(_enrich_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return merge
 
 
 def stream_drift_monitor(
@@ -1015,9 +635,11 @@ def stream_drift_monitor(
     __last_batch_id) stamped in the SAME staging+swap as the counts —
     a replayed batch is skipped before any merge, and a state table
     from a different checkpoint lineage raises instead of silently
-    double-counting. The report row appends AFTER the state swap: a
-    crash inside that window loses one observability row, never
-    corrupts counts (the next batch's row reflects the healed state).
+    double-counting. The report row appends AFTER the state swap,
+    computed from the state as of its batch; a crash inside that
+    window is healed by the replay, which finds the batch in the state
+    and appends the row it is missing (probed by batch id), so the
+    report has exactly one row per (batch, group).
 
     Scale: per batch, one scan of the batch (map-side-combinable
     count), then profile-sized joins; state and report are
@@ -1028,53 +650,19 @@ def stream_drift_monitor(
         psi_from_profile,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
+    feed = _feed(spark, input_dir, schema_ddl, max_files=max_files_per_trigger)
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         profile = wh.read(profile_table)
-        part = bin_against_profile(
-            batch, profile, value_col, group_cols, n_bins
+        part = bin_against_profile(batch, profile, value_col, group_cols, n_bins)
+        merged = _fold_state(
+            wh, state_table, checkpoint_dir, batch_id, part,
+            _sum_counts([*group_cols, "bin"], "cur_cnt"),
         )
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"drift state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = (
-                prior.select(*group_cols, "bin", "cur_cnt")
-                .unionByName(part)
-                .groupBy(*group_cols, "bin")
-                .agg(F.sum("cur_cnt").alias("cur_cnt"))
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__drift_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
-        )
-        wh.swap(staging, state_table)
+        if not merged and batch_already_appended(
+            wh, report_table, batch_id, col="batch_id"
+        ):
+            return
         report = psi_from_profile(
             profile,
             wh.read(state_table).select(*group_cols, "bin", "cur_cnt"),
@@ -1083,12 +671,7 @@ def stream_drift_monitor(
         ).withColumn("batch_id", F.lit(batch_id))
         wh.append(report, report_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _fold, checkpoint_dir)
 
 
 def stream_retrain_monitor(
@@ -1125,21 +708,27 @@ def stream_retrain_monitor(
     via staging+swap stamped with (__stream_id, __last_batch_id), so
     a replayed batch is skipped before any merge and a state table
     from a foreign checkpoint lineage raises instead of silently
-    double-counting. The report appends AFTER the swap — a crash in
-    that window loses one observability row, never corrupts counts.
+    double-counting. The report appends AFTER the swap; a replay after
+    a crash in that window appends the missing row.
 
     Scale: per batch, one broadcast-codebook assignment scan of the
-    batch plus n_centroids-sized math; the training distribution is
-    read ONCE at stream construction (n_centroids rows held on the
-    driver); the corpus is never re-read. `vec_sep` parses a
+    batch plus n_centroids-sized math; the training distribution and
+    the codebook size are read ONCE at stream construction
+    (n_centroids rows held on the driver; the size picks `_assign`'s
+    form, so a codebook above its fold ceiling takes the shuffle
+    form); the corpus is never re-read. `vec_sep` parses a
     delimited-string vector column from CSV feeds; pass None when the
     stream already carries array<double> (parquet feeds).
     """
+    from gcp_data_pipeline_fyp_spark.operators.profile import (
+        psi_from_joint_counts,
+    )
     from gcp_data_pipeline_fyp_spark.operators.similarity import _assign
 
     cent = wh.read(f"{index_name}__centroids").select(
         "centroid_id", F.col("centroid").alias("__centroid")
     )
+    n_centroids = cent.count()
     if wh.exists(f"{index_name}__train_mix"):
         base_df = wh.read(f"{index_name}__train_mix")
     else:
@@ -1155,56 +744,29 @@ def stream_retrain_monitor(
         for r in base_df.collect()  # n_centroids rows — scalar-bounded
     ]
 
-    feed = _vector_feed(
-        spark, input_dir, schema_ddl, vec_sep, max_files_per_trigger
+    feed = _feed(
+        spark, input_dir, schema_ddl, parquet=vec_sep is None,
+        max_files=max_files_per_trigger,
     )
 
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         vecs = batch.select(
             F.col(id_col).alias("corpus_id"),
             _vec_expr(vec_col, vec_sep).alias("__cv")
         ).filter(F.col("__cv").isNotNull())
         part = (
-            _assign(vecs, cent)
+            _assign(vecs, cent, n_centroids)
             .groupBy("centroid_id")
             .agg(F.count(F.lit(1)).alias("cur_cnt"))
         )
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"retrain state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}; drop "
-                    "the state table or restart from the original "
-                    "checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = (
-                prior.select("centroid_id", "cur_cnt")
-                .unionByName(part)
-                .groupBy("centroid_id")
-                .agg(F.sum("cur_cnt").alias("cur_cnt"))
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__retrain_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        merged = _fold_state(
+            wh, state_table, checkpoint_dir, batch_id, part,
+            _sum_counts(["centroid_id"], "cur_cnt"),
         )
-        wh.swap(staging, state_table)
+        if not merged and batch_already_appended(
+            wh, report_table, batch_id, col="batch_id"
+        ):
+            return
         # PSI over the centroid-id mix: training distribution vs the
         # streamed-so-far cumulative — THE shared counts-level algebra
         # (operators/profile.py:psi_from_joint_counts), so this can
@@ -1217,10 +779,6 @@ def stream_retrain_monitor(
             F.coalesce("__cb", F.lit(0)).alias("__cb"),
             F.coalesce("__cc", F.lit(0)).alias("__cc"),
         )
-        from gcp_data_pipeline_fyp_spark.operators.profile import (
-            psi_from_joint_counts,
-        )
-
         report = (
             psi_from_joint_counts(pooled, [])
             .select(
@@ -1236,36 +794,13 @@ def stream_retrain_monitor(
         )
         wh.append(report, report_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _vector_feed(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    vec_sep: str | None,
-    max_files_per_trigger: int | None,
-):
-    """Streaming source for embedding feeds, keyed off `vec_sep`:
-    a separator means a CSV feed carrying the vector as a delimited
-    string; None means a parquet feed already carrying array<double>
-    (CSV cannot represent arrays — the two options are one choice)."""
-    raw = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    if vec_sep is not None:
-        return raw.option("header", True).csv(input_dir)
-    return raw.parquet(input_dir)
+    return _run_available_now(feed, _fold, checkpoint_dir)
 
 
 def _vec_expr(vec_col: str, vec_sep: str | None):
     """The batch-side reading of `vec_sep`: parse the delimited string
-    (CSV feeds) or pass the array column through (parquet feeds)."""
+    (CSV feeds) or pass the array column through (parquet feeds —
+    CSV cannot represent arrays, so the two options are one choice)."""
     import re as _re
 
     if vec_sep is None:
@@ -1297,30 +832,29 @@ def stream_index_ingest(
     as soon as their batch lands.
 
     Postings appends are not idempotent, so the fold is guarded by an
-    append-only LEDGER table (batch_id rows, the `_batch_seen`
-    discipline): a replayed batch is skipped before the append. Order
-    matters for the crash window between the two writes: ledger-first
-    would silently DROP a batch whose postings append then crashed;
-    postings-first can only DUPLICATE rows, which
-    `similarity.dedup_index_postings` heals (and which queries
-    over-recall rather than miss in the meantime) — so postings go
-    first, the recoverable failure mode, and the trade-off is stated
-    here rather than hidden.
+    append-only LEDGER table (batch_id rows, the
+    `batch_already_appended` discipline): a replayed batch is skipped
+    before the append. Order matters for the crash window between the
+    two writes: ledger-first would silently DROP a batch whose
+    postings append then crashed; postings-first can only DUPLICATE
+    rows, which `similarity.dedup_index_postings` heals (and which
+    queries over-recall rather than miss in the meantime) — so
+    postings go first, the recoverable failure mode, and the
+    trade-off is stated here rather than hidden.
 
-    Completes the streaming vector pipeline: scored ingest →
-    stream_index_ingest → stream_retrain_monitor → rebuild.
+    Completes the streaming vector pipeline: stream_index_ingest →
+    stream_retrain_monitor → rebuild.
     """
     from gcp_data_pipeline_fyp_spark.operators.similarity import (
         append_ivf_index,
     )
 
-    feed = _vector_feed(
-        spark, input_dir, schema_ddl, vec_sep, max_files_per_trigger
+    feed = _feed(
+        spark, input_dir, schema_ddl, parquet=vec_sep is None,
+        max_files=max_files_per_trigger,
     )
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         if batch_already_appended(wh, ledger_table, batch_id, col="batch_id"):
             return
         vecs = batch.select(
@@ -1336,113 +870,19 @@ def stream_index_ingest(
             ledger_table,
         )
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _fold, checkpoint_dir)
 
 
-def stream_quality_monitor(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    score_col: str,
-    label_col: str,
-    wh: Warehouse,
-    state_table: str,
-    report_table: str,
-    checkpoint_dir: str,
-    n_bins: int = 10,
-    lo: float = 0.0,
-    hi: float = 1.0,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Streaming model-quality monitor: every micro-batch folds its
-    calibration partial state (operators/evalmetrics.py:
-    calibration_state — per-bin counts + exact-decimal score sums,
-    distributive) into a persisted cumulative state, then appends one
-    (batch_id, n, n_pos, ece_micro, auc_binned_micro) row to a report
-    table — "is the quality classifier still calibrated, and does it
-    still rank?" over the ENTIRE stream so far, per batch, with
-    |bins|-sized state and no history rescans. The production loop
-    this renders: score -> route (classifier_filter) -> monitor; when
-    ECE or binned AUC degrades past a threshold, retrain/recalibrate
-    — the model-quality sibling of stream_drift_monitor (input drift)
-    and stream_retrain_monitor (index drift).
-
-    Replay discipline is stream_drift_monitor's exactly: counts fold
-    distributively but not idempotently, so (__stream_id,
-    __last_batch_id) ride the SAME staging+swap as the state —
-    replayed batches are skipped before any merge, and a state table
-    from a different checkpoint lineage raises instead of silently
-    double-counting. The report row appends AFTER the swap: a crash
-    in that window loses one observability row, never corrupts state.
-
-    `auc_binned` treats the bin as the score (within-bin order is
-    lost) — the bounded-underestimate contract of ks_binned_report,
-    tightened by n_bins; the batch-side exact `roc_auc` is the
-    certification-grade reading when a full snapshot is worth a scan.
-    """
-    from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
-        calibration_state,
-        merge_calibration_states,
-        quality_summary_from_state,
-    )
-
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
-        part = calibration_state(batch, score_col, label_col, n_bins, lo, hi)
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"quality state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = merge_calibration_states(
-                [prior.select("bin", "n", "__sv", "__np"), part]
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__quality_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+def _append_kept(
+    wh: Warehouse, kept: DataFrame, out_table: str, batch_id: int, merged: bool
+) -> None:
+    """Append a state-gated ingest's keepers for `batch_id`, once: on a
+    replay (`merged` False) the keepers may have landed already."""
+    if merged or not batch_already_appended(wh, out_table, batch_id):
+        wh.append(
+            kept.withColumn("__batch_id", F.lit(batch_id).cast("long")),
+            out_table,
         )
-        wh.swap(staging, state_table)
-        report = quality_summary_from_state(
-            wh.read(state_table).select("bin", "n", "__sv", "__np")
-        ).withColumn("batch_id", F.lit(batch_id))
-        wh.append(report, report_table)
-
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_match_ingest(
@@ -1490,11 +930,13 @@ def stream_match_ingest(
     Replay discipline is stream_rollup_ingest's: count sums fold
     distributively but not idempotently, so (__stream_id,
     __last_batch_id) ride the state's staging+swap; a replayed batch
-    skips the merge, and the keeper append is separately guarded by a
-    batch_id probe of `out_table` itself (a crash between append and
-    swap re-delivers into a no-op append, never duplicate rows; an
-    all-dropped batch re-appends nothing, harmlessly). A state table
-    from a different checkpoint lineage raises instead of silently
+    skips the merge and still derives its rates from the state, which
+    already holds it. The keeper append comes AFTER the swap and, on
+    a replay, is guarded by a batch_id probe of `out_table` itself (a
+    crash between swap and append re-delivers into the missing
+    append, a crash after the append into a no-op; an all-dropped
+    batch re-appends nothing, harmlessly). A state table from a
+    different checkpoint lineage raises instead of silently
     double-counting.
 
     Scale: state is |buckets| rows; rates are |buckets| rows
@@ -1514,49 +956,19 @@ def stream_match_ingest(
         .localCheckpoint(eager=True)
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-    _batch_seen = lambda t, b: batch_already_appended(wh, t, b)  # noqa: E731
+    feed = _feed(spark, input_dir, schema_ddl, max_files=max_files_per_trigger)
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         bc = batch.groupBy(F.col(bucket_col).alias("bucket")).agg(
             F.count(F.lit(1)).alias("n_src")
         )
-        already_merged = False
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"match state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            already_merged = mark["m"] is not None and batch_id <= mark["m"]
-            if already_merged:
-                merged = prior.select("bucket", "n_src")
-            else:
-                merged = (
-                    prior.select("bucket", "n_src")
-                    .unionByName(bc)
-                    .groupBy("bucket")
-                    .agg(F.sum("n_src").alias("n_src"))
-                )
-        else:
-            merged = bc
-        rates = match_rates_from_counts(merged, ref_counts)
+        merged = _fold_state(
+            wh, state_table, checkpoint_dir, batch_id, bc,
+            _sum_counts(["bucket"], "n_src"),
+        )
+        rates = match_rates_from_counts(
+            wh.read(state_table).select("bucket", "n_src"), ref_counts
+        )
         r = F.broadcast(
             rates.select(F.col("bucket").alias("__mb"), "rate_micro")
         )
@@ -1565,27 +977,9 @@ def stream_match_ingest(
             .filter(hash_bucket(key_cols, seed) < F.col("rate_micro"))
             .drop("__mb", "rate_micro")
         )
-        if not _batch_seen(out_table, batch_id):
-            wh.append(
-                kept.withColumn("__batch_id", F.lit(batch_id).cast("long")),
-                out_table,
-            )
-        if not already_merged:
-            staging = f"{state_table}__match_staging"
-            wh.overwrite(
-                merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                    "__last_batch_id", F.lit(batch_id)
-                ),
-                staging,
-            )
-            wh.swap(staging, state_table)
+        _append_kept(wh, kept, out_table, batch_id, merged)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _fold, checkpoint_dir)
 
 
 def stream_dsir_ingest(
@@ -1633,10 +1027,10 @@ def stream_dsir_ingest(
     Replay discipline is stream_match_ingest's: count sums fold
     distributively but not idempotently, so (__stream_id,
     __last_batch_id) ride the state's staging+swap; a replayed batch
-    skips the merge, and the keeper append is separately guarded by a
-    batch_id probe of `out_table` itself. A state table from a
-    different checkpoint lineage raises instead of silently
-    double-counting.
+    skips the merge, and the keeper append (after the swap) is
+    guarded on a replay by a batch_id probe of `out_table` itself. A
+    state table from a different checkpoint lineage raises instead of
+    silently double-counting.
 
     Scale: state is <= n_buckets rows; the ratio table is broadcast
     by construction; per-batch work is one batch-sized explode +
@@ -1674,71 +1068,22 @@ def stream_dsir_ingest(
             "— rename those columns; the ingest appends its own."
         )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-    _batch_seen = lambda t, b: batch_already_appended(wh, t, b)  # noqa: E731
+    feed = _feed(spark, input_dir, schema_ddl, max_files=max_files_per_trigger)
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
-        bc = bucket_profile(batch, text_col, nb)
-        already_merged = False
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"dsir state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            already_merged = mark["m"] is not None and batch_id <= mark["m"]
-            if already_merged:
-                merged = prior.select("bucket", "c")
-            else:
-                merged = (
-                    prior.select("bucket", "c")
-                    .unionByName(bc)
-                    .groupBy("bucket")
-                    .agg(F.sum("c").alias("c"))
-                )
-        else:
-            merged = bc
-        ratios = dsir_log_ratios(merged, tgt_prof, nb)
+        merged = _fold_state(
+            wh, state_table, checkpoint_dir, batch_id,
+            bucket_profile(batch, text_col, nb), _sum_counts(["bucket"], "c"),
+        )
+        ratios = dsir_log_ratios(
+            wh.read(state_table).select("bucket", "c"), tgt_prof, nb
+        )
         w = score_against_ratios(batch, id_col, ratios, text_col, nb)
         kept = batch.join(
             w.filter(F.col("logw") >= F.lit(float(min_logw))),
             id_col,
             "inner",
         )
-        if not _batch_seen(out_table, batch_id):
-            wh.append(
-                kept.withColumn("__batch_id", F.lit(batch_id).cast("long")),
-                out_table,
-            )
-        if not already_merged:
-            staging = f"{state_table}__dsir_staging"
-            wh.overwrite(
-                merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                    "__last_batch_id", F.lit(batch_id)
-                ),
-                staging,
-            )
-            wh.swap(staging, state_table)
+        _append_kept(wh, kept, out_table, batch_id, merged)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_available_now(feed, _fold, checkpoint_dir)

@@ -134,3 +134,32 @@ def test_backstop_demotes_qv_for_extreme_leg_counts():
     assert d["n_queries"] == 400
     assert any(ln.startswith("BENCH_QV: ") for ln in lines[:-1])
     assert _recover_map(lines, "BENCH_QUERIES: ", "queries") == timings
+
+
+def test_bench_session_takes_shuffle_partitions_from_the_session_default(
+    monkeypatch,
+):
+    """bench.main leaves the shuffle-partition count to get_spark, so
+    $SPARK_GRAFT_SHUFFLE sizes it (session.default_shuffle_partitions)
+    instead of being overridden by the core count."""
+    import pytest
+
+    from gcp_data_pipeline_fyp_spark.session import default_shuffle_partitions
+
+    class _Stop(Exception):
+        pass
+
+    seen = {}
+
+    def fake_get_spark(**kw):
+        seen.update(kw)
+        raise _Stop
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "2")
+    monkeypatch.setattr(bench, "get_spark", fake_get_spark)
+    with pytest.raises(_Stop):
+        bench.main()
+    assert seen["cpus"] == 8
+    assert seen.get("shuffle_partitions") is None
+    assert default_shuffle_partitions(seen["cpus"]) == 2

@@ -430,7 +430,8 @@ def test_fused_profile_build_matches_two_frame_fit(spark, tmp_path):
     of ONE explode pass — must be bit-identical to the two-frame fit
     on the same slice, including bucket sets (target buckets with zero
     occurrences must NOT appear) and the meta row. Also pins the
-    exactly-one-of-target/target_filter contract."""
+    exactly-one-of-target/target_filter contract, and that the filter
+    form refuses a target_text_col it could not honour."""
     import pytest as _pt
     from pyspark.sql import functions as F
 
@@ -465,3 +466,8 @@ def test_fused_profile_build_matches_two_frame_fit(spark, tmp_path):
         build_dsir_profiles(wh, d, d, "BAD", target_filter=F.lit(True))
     with _pt.raises(ValueError):
         build_dsir_profiles(wh, d, None, "BAD")
+    # a target text column names a column of a target FRAME; with the
+    # filter form it would be silently ignored, so it is refused
+    with _pt.raises(ValueError, match="target_text_col"):
+        build_dsir_profiles(wh, d, None, "BAD", target_text_col="lang",
+                            target_filter=F.col("lang") == "en")

@@ -527,81 +527,6 @@ def test_reprocess_quarantine_releases_now_clean_rows(spark, tmp_path):
     assert {r["event_id"] for r in wh.read("Q").collect()} == {3}
 
 
-def test_stream_scored_ingest_filters_by_model(spark, tmp_path):
-    """Model-filtered corpus ingest: offline-trained weights score each
-    micro-batch; keepers merge, dropped/empty docs land in the rejects
-    table with their scores, the per-batch summary is logged — and a
-    restart processes only new files from the checkpoint."""
-    import csv as _csv
-
-    from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        train_linear_classifier,
-    )
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_scored_ingest,
-    )
-
-    good = "science method evidence theory result data"
-    bad = "spam click buy now free winner"
-    seed = spark.createDataFrame(
-        [(i, f"{good} {good}", True) for i in range(10)]
-        + [(100 + i, f"{bad} {bad}", False) for i in range(10)],
-        "doc_id long, text string, lbl boolean",
-    )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(
-        train_linear_classifier(seed, "doc_id", "text", "lbl", n_buckets=512),
-        "MODEL_V1",
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    schema = "doc_id LONG, ts TIMESTAMP, text STRING"
-
-    def _write(path, rows):
-        with open(path, "w", newline="") as f:
-            w = _csv.writer(f)
-            w.writerow(["doc_id", "ts", "text"])
-            w.writerows(rows)
-
-    _write(
-        in_dir / "b1.csv",
-        [
-            (1, "2024-01-01 10:00:00", f"more {good} here"),
-            (2, "2024-01-01 10:01:00", f"ugh {bad} again"),
-            (3, "2024-01-01 10:02:00", ""),
-        ],
-    )
-    ckpt = str(tmp_path / "ckpt")
-    kw = dict(
-        weights_table="MODEL_V1", n_buckets=512, rejects_table="REJ",
-        score_log_table="SLOG",
-    )
-    q = stream_scored_ingest(
-        spark, str(in_dir), schema, "doc_id", "ts", "text", wh, "docs", ckpt,
-        **kw,
-    )
-    q.awaitTermination(120)
-    assert {r["doc_id"] for r in wh.read("docs").collect()} == {1}
-    rej = {r["doc_id"]: r["label"] for r in wh.read("REJ").collect()}
-    assert rej == {2: "drop", 3: "empty"}
-    log = wh.read("SLOG").collect()
-    assert len(log) == 1
-    assert (log[0]["n_docs"], log[0]["n_keep"], log[0]["n_drop"],
-            log[0]["n_empty"]) == (3, 1, 1, 1)
-
-    # restart from checkpoint: only the new file processes
-    _write(in_dir / "b2.csv", [(4, "2024-01-01 11:00:00", f"{good} encore")])
-    q2 = stream_scored_ingest(
-        spark, str(in_dir), schema, "doc_id", "ts", "text", wh, "docs", ckpt,
-        **kw,
-    )
-    q2.awaitTermination(120)
-    assert {r["doc_id"] for r in wh.read("docs").collect()} == {1, 4}
-    assert wh.read("REJ").count() == 2
-    assert wh.read("SLOG").count() == 2
-
-
 def test_stream_dedup_ingest_history_aware(spark, tmp_path):
     """Streaming dedup against the PERSISTED digest index: a document
     re-delivered far outside the watermark state still drops (the
@@ -705,73 +630,6 @@ def test_stream_dedup_ingest_replay_from_scratch_is_noop(spark, tmp_path):
     assert after == before
 
 
-def test_stream_scd2_ingest_matches_full_snapshot_and_replays_idempotent(
-    spark, tmp_path
-):
-    """Streaming SCD2 dimension maintenance: two micro-batches fold to
-    EXACTLY the full-feed snapshot (the scd2_apply algebra), and a
-    re-delivered batch under a new filename changes nothing."""
-    from gcp_data_pipeline_fyp_spark.operators.scd import scd2_snapshot
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_scd2_ingest,
-    )
-
-    in_dir = tmp_path / "sin"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    schema = "event_id long, ts timestamp, event_type string, value double"
-
-    rows1 = [
-        (1, "2024-01-01 10:00:00", "a", 0.0),
-        (2, "2024-01-01 10:01:00", "a", 0.0),   # same state -> collapses
-        (3, "2024-01-01 10:02:00", "b", 0.0),
-    ]
-    rows2 = [
-        (4, "2024-01-02 10:00:00", "b", 0.0),   # no-op vs current 'b'
-        (5, "2024-01-02 10:01:00", "c", 0.0),   # closes 'b'
-    ]
-    _write_csv(in_dir / "f1.csv", [(i, ts, f"u0_{s}", v) for i, ts, s, v in rows1])
-    _write_csv(in_dir / "f2.csv", [(i, ts, f"u0_{s}", v) for i, ts, s, v in rows2])
-
-    def run():
-        q = stream_scd2_ingest(
-            spark, str(in_dir), schema,
-            key_cols=["value"], attr_cols=["event_type"],
-            order_col="ts", tiebreak_cols=["event_id"],
-            wh=wh, dim_table="DIM_STATE",
-            checkpoint_dir=str(tmp_path / "sckpt"),
-            max_files_per_trigger=1,  # force one fold per file
-        )
-        q.awaitTermination(120)
-
-    run()
-    got = sorted(
-        (r.value, r.event_type, str(r.valid_from), str(r.valid_to), r.is_current)
-        for r in wh.read("DIM_STATE").collect()
-    )
-    full = spark.createDataFrame(
-        [(i, ts, f"u0_{s}", v) for i, ts, s, v in rows1 + rows2],
-        "event_id long, ts string, event_type string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    expect = sorted(
-        (r.value, r.event_type, str(r.valid_from), str(r.valid_to), r.is_current)
-        for r in scd2_snapshot(
-            full, ["value"], ["event_type"], "ts", ["event_id"]
-        ).collect()
-    )
-    assert got == expect
-    assert len(got) == 3  # a, b, c runs
-
-    # re-delivery of batch 2 under a NEW filename: pure replay, no-op
-    _write_csv(in_dir / "f3.csv", [(i, ts, f"u0_{s}", v) for i, ts, s, v in rows2])
-    run()
-    again = sorted(
-        (r.value, r.event_type, str(r.valid_from), str(r.valid_to), r.is_current)
-        for r in wh.read("DIM_STATE").collect()
-    )
-    assert again == got
-
-
 def test_stream_rollup_ingest_matches_batch_and_replay_guarded(
     spark, tmp_path
 ):
@@ -841,68 +699,6 @@ def test_stream_rollup_ingest_matches_batch_and_replay_guarded(
     # lineage: nothing new to process, state unchanged)
     run("rckpt")
     assert read_final() == got
-
-
-def test_stream_enriched_ingest_sees_dim_updates_between_batches(
-    spark, tmp_path
-):
-    """Stream-static enrichment re-reads the dimension per micro-batch:
-    rows ingested before a dim update carry the old attributes, rows
-    after carry the new ones (no stream restart), an unmatched key
-    survives the LEFT join with NULLs — and with dim_versioned=True
-    each batch joins one immutable published snapshot."""
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_enriched_ingest,
-    )
-
-    in_dir = tmp_path / "ein"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "eckpt")
-
-    wh.overwrite_versioned(
-        spark.createDataFrame(
-            [("purchase", "BUY-V1"), ("signup", "NEW-V1")],
-            "event_type string, type_desc string",
-        ),
-        "dim_type",
-    )
-    _write_csv(
-        in_dir / "e1.csv",
-        [
-            (1, "2024-01-01 10:00:00", "purchase", 5.0),
-            (2, "2024-01-01 10:01:00", "mystery", 6.0),  # no dim row
-        ],
-    )
-    args = dict(
-        spark=spark, input_dir=str(in_dir), schema_ddl=SCHEMA,
-        event_id_cols=["event_id"], ts_col="ts", wh=wh,
-        dim_table="dim_type", join_cols=["event_type"],
-        table="enriched", checkpoint_dir=ckpt, dim_versioned=True,
-    )
-    stream_enriched_ingest(**args).awaitTermination()
-    got = {
-        r["event_id"]: r["type_desc"] for r in wh.read("enriched").collect()
-    }
-    assert got == {1: "BUY-V1", 2: None}
-
-    # publish dim v2, stream new rows WITHOUT clearing the checkpoint
-    wh.overwrite_versioned(
-        spark.createDataFrame(
-            [("purchase", "BUY-V2"), ("mystery", "SOLVED")],
-            "event_type string, type_desc string",
-        ),
-        "dim_type",
-    )
-    _write_csv(
-        in_dir / "e2.csv", [(3, "2024-01-01 11:00:00", "purchase", 7.0)]
-    )
-    stream_enriched_ingest(**args).awaitTermination()
-    got = {
-        r["event_id"]: r["type_desc"] for r in wh.read("enriched").collect()
-    }
-    # old rows keep batch-time attributes; the new row sees v2
-    assert got == {1: "BUY-V1", 2: None, 3: "BUY-V2"}
 
 
 def test_stream_validated_ingest_maintains_zonemap(spark, tmp_path):
@@ -1266,238 +1062,6 @@ def test_stream_index_ingest_parquet_feed(spark, tmp_path):
     assert wh.read("ix__postings").count() == base + 30
 
 
-@pytest.mark.slow
-def test_stream_neardup_ingest_suppresses_near_copies(spark, tmp_path):
-    """Streaming NEAR-dup gate: exact re-deliveries drop via the digest
-    index, near-copies of indexed docs drop via the band index,
-    in-batch near-pairs keep only the smallest id, genuinely new text
-    lands — and only survivors fold into both indexes."""
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        build_digest_index,
-        build_lsh_index,
-    )
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_neardup_ingest,
-    )
-
-    in_dir = tmp_path / "nin"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "nwh"))
-    ckpt = str(tmp_path / "nckpt")
-
-    base_text = "the quick brown fox jumps over the lazy dog again and again"
-    hist = spark.createDataFrame(
-        [(1, "2023-01-01 10:00:00", base_text, 1.0)],
-        "event_id long, ts string, event_type string, value double",
-    )
-    build_digest_index(wh, hist, ["event_type"], "nd")
-    build_lsh_index(wh, hist, "event_id", "event_type", "nd")
-
-    fresh_a = "completely different subject matter with zero shared shingles one"
-    fresh_b = fresh_a + " tail"   # near-copy of fresh_a, larger id
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    _write_csv(
-        in_dir / "b1.csv",
-        [
-            (10, "2024-01-01 10:00:00", base_text, 5.0),            # exact dup
-            (11, "2024-01-01 10:01:00", base_text + " zz", 6.0),    # near-copy of indexed
-            (12, "2024-01-01 10:02:00", fresh_a, 7.0),              # new -> keep
-            (13, "2024-01-01 10:03:00", fresh_b, 8.0),              # near-copy of 12 -> drop
-        ],
-    )
-    q = stream_neardup_ingest(
-        spark, str(in_dir), schema, "event_id", "event_type", "ts",
-        wh, "NDOCS", "nd", ckpt,
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"] for r in wh.read("NDOCS").collect()}
-    assert got == {12}
-    # index grew by the single survivor only
-    assert wh.read("nd__digests").distinct().count() == 2
-    assert (
-        wh.read("nd__bands").select("event_id").distinct().count() == 2
-    )
-
-    # next run: a near-copy of the batch-1 SURVIVOR (now indexed) must
-    # drop even though batch 1's state is long gone; new content lands
-    _write_csv(
-        in_dir / "b2.csv",
-        [
-            (20, "2024-03-01 10:00:00", fresh_a + " coda", 9.0),
-            (21, "2024-03-01 10:01:00",
-             "yet another wholly novel document body two", 2.0),
-        ],
-    )
-    q2 = stream_neardup_ingest(
-        spark, str(in_dir), schema, "event_id", "event_type", "ts",
-        wh, "NDOCS", "nd", ckpt,
-    )
-    q2.awaitTermination(120)
-    got2 = {r["event_id"] for r in wh.read("NDOCS").collect()}
-    assert got2 == {12, 21}
-
-
-@pytest.mark.slow
-def test_stream_neardup_ingest_full_replay_is_noop(spark, tmp_path):
-    """Checkpoint loss + full feed replay: the digest index (the replay
-    ledger) drops every already-ingested row BEFORE band matching, so
-    nothing duplicates — band matching alone could not self-suppress
-    (same-id pairs are filtered by the pair operator)."""
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        build_digest_index,
-        build_lsh_index,
-    )
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_neardup_ingest,
-    )
-
-    in_dir = tmp_path / "rnin"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "rnwh"))
-    empty = spark.createDataFrame(
-        [], "event_id long, ts string, event_type string, value double"
-    )
-    build_digest_index(wh, empty, ["event_type"], "nd")
-    build_lsh_index(wh, empty, "event_id", "event_type", "nd")
-
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    _write_csv(
-        in_dir / "b1.csv",
-        [
-            (30, "2024-01-01 10:00:00",
-             "document alpha beta gamma delta epsilon zeta", 1.0),
-            (31, "2024-01-01 10:01:00",
-             "unrelated words entirely separate content here", 2.0),
-        ],
-    )
-    q = stream_neardup_ingest(
-        spark, str(in_dir), schema, "event_id", "event_type", "ts",
-        wh, "RNDOCS", "nd", str(tmp_path / "ck1"),
-    )
-    q.awaitTermination(120)
-    assert wh.read("RNDOCS").count() == 2
-
-    # fresh checkpoint -> the file source re-reads EVERYTHING
-    q2 = stream_neardup_ingest(
-        spark, str(in_dir), schema, "event_id", "event_type", "ts",
-        wh, "RNDOCS", "nd", str(tmp_path / "ck2"),
-    )
-    q2.awaitTermination(120)
-    assert wh.read("RNDOCS").count() == 2
-
-
-def test_stream_neardup_ingest_jsonl_feed(spark, tmp_path):
-    """The JSONL feed path: same gates, document-corpus format; a torn
-    JSON line must not crash the stream or land in the table."""
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        build_digest_index,
-        build_lsh_index,
-    )
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_neardup_ingest,
-    )
-
-    in_dir = tmp_path / "jnin"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "jnwh"))
-    base_text = "the quick brown fox jumps over the lazy dog again and again"
-    hist = spark.createDataFrame(
-        [(1, "2023-01-01 10:00:00", base_text, 1.0)],
-        "event_id long, ts string, event_type string, value double",
-    )
-    build_digest_index(wh, hist, ["event_type"], "jnd")
-    build_lsh_index(wh, hist, "event_id", "event_type", "jnd")
-
-    fresh = "entirely novel jsonl document body with plenty of words one"
-    (in_dir / "b1.jsonl").write_text(
-        '{"event_id": 10, "ts": "2024-01-01T10:00:00", '
-        f'"event_type": "{base_text} zz", "value": 5.0}}\n'  # near-copy
-        '{"event_id": 11, "ts": "2024-01-01T10:01:00", '
-        f'"event_type": "{fresh}", "value": 6.0}}\n'
-        "{torn json line\n"
-    )
-    q = stream_neardup_ingest(
-        spark, str(in_dir), 
-        "event_id long, ts timestamp, event_type string, value double",
-        "event_id", "event_type", "ts", wh, "JDOCS", "jnd",
-        str(tmp_path / "jck"), feed_format="jsonl",
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"] for r in wh.read("JDOCS").collect()}
-    assert got == {11}
-
-
-def _write_score_csv(path, rows):
-    path.write_text(
-        "doc_id,score,label\n" + "\n".join(",".join(map(str, r)) for r in rows)
-    )
-
-
-def test_stream_quality_monitor_matches_batch_and_replays_safely(
-    spark, tmp_path
-):
-    """The streamed cumulative state read through
-    quality_summary_from_state equals the one-shot batch summary over
-    everything streamed so far; a restart folds only new files; the
-    report has one row per batch."""
-    from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
-        calibration_state,
-        quality_summary_from_state,
-    )
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_quality_monitor,
-    )
-
-    in_dir = tmp_path / "qin"
-    in_dir.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "qwh"))
-    schema = "doc_id long, score double, label boolean"
-
-    rows1 = [(i, round(0.05 + (i % 10) / 10.0, 2), i % 3 == 0) for i in range(60)]
-    rows2 = [(100 + i, round((i % 5) / 5.0, 2), i % 2 == 0) for i in range(40)]
-    _write_score_csv(in_dir / "f1.csv", rows1)
-    _write_score_csv(in_dir / "f2.csv", rows2)
-    ckpt = str(tmp_path / "qckpt")
-
-    def run():
-        q = stream_quality_monitor(
-            spark, str(in_dir), schema, "score", "label",
-            wh, "Q_STATE", "Q_REPORT", ckpt,
-            n_bins=10, max_files_per_trigger=1,
-        )
-        q.awaitTermination(120)
-
-    run()
-    all_rows = spark.createDataFrame(rows1 + rows2, schema)
-    want = quality_summary_from_state(
-        calibration_state(all_rows, "score", "label", 10)
-    ).first()
-    report = wh.read("Q_REPORT").orderBy("batch_id").collect()
-    assert len(report) == 2
-    last = report[-1]
-    assert (last["n"], last["n_pos"]) == (100, want["n_pos"])
-    assert last["ece_micro"] == want["ece_micro"]
-    assert last["auc_binned_micro"] == want["auc_binned_micro"]
-
-    # restart: only the new file folds in
-    rows3 = [(200 + i, 0.9, True) for i in range(20)]
-    _write_score_csv(in_dir / "f3.csv", rows3)
-    run()
-    assert wh.read("Q_STATE").agg(F.sum("n")).first()[0] == 120
-    rep3 = wh.read("Q_REPORT").orderBy("batch_id").collect()[-1]
-    all3 = spark.createDataFrame(rows1 + rows2 + rows3, schema)
-    want3 = quality_summary_from_state(
-        calibration_state(all3, "score", "label", 10)
-    ).first()
-    assert (rep3["n"], rep3["auc_binned_micro"]) == (120, want3["auc_binned_micro"])
-
-    # idle restart: nothing new, state and report untouched
-    n_rep = wh.read("Q_REPORT").count()
-    run()
-    assert wh.read("Q_STATE").agg(F.sum("n")).first()[0] == 120
-    assert wh.read("Q_REPORT").count() == n_rep
-
-
 def test_stream_match_ingest_reshapes_and_replays_safely(spark, tmp_path):
     """Streaming distribution matching: the persisted profile state
     equals the batch groupBy over everything delivered; the LAST
@@ -1697,3 +1261,249 @@ def test_stream_dsir_ingest_rejects_score_column_clash(spark, tmp_path):
             "doc_id", "text", target, 0.0, wh, "OUT", "STATE",
             str(tmp_path / "ck"),
         )
+
+
+_QUAKE_SCHEMA = (
+    "id string, time timestamp, mag double, type string, place string, "
+    "depth double"
+)
+_QUAKE_TYPES = ["earthquake", "quarry blast", "explosion", "ice quake"]
+
+
+def _quake_round(rng, r, n_new, prev_clean):
+    """One landed file of the quake feed: `n_new` events from round r's
+    own 10-minute window, ~3% breaking a rule (NULL or out-of-range
+    magnitude, unknown type), plus ~30% re-sends of the previous
+    round's clean rows."""
+    import datetime as dt
+
+    start = dt.datetime(2024, 5, 20) + dt.timedelta(minutes=10 * r)
+    rows = []
+    for i in range(n_new):
+        t = start + dt.timedelta(milliseconds=rng.randrange(600_000))
+        row = [
+            f"r{r}e{i}", t.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3],
+            f"{rng.uniform(0.5, 6.5):.2f}", rng.choice(_QUAKE_TYPES),
+            f"{rng.randrange(1, 90)} km N of Town {rng.randrange(50)}",
+            f"{rng.uniform(0, 300):.2f}",
+        ]
+        if rng.random() < 0.03:
+            kind = rng.randrange(3)
+            if kind == 0:
+                row[2] = ""
+            elif kind == 1:
+                row[2] = f"{rng.uniform(10.5, 15.0):.2f}"
+            else:
+                row[3] = "meteor"
+        rows.append(row)
+    rows += [list(x) for x in prev_clean if rng.random() < 0.3]
+    rng.shuffle(rows)
+    return rows
+
+
+def _quake_rules():
+    from gcp_data_pipeline_fyp_spark.operators.expectations import (
+        accepted_values,
+        in_range,
+        not_null,
+        unique,
+    )
+
+    return [
+        not_null("mag"),
+        in_range("mag", -1.0, 10.0),
+        accepted_values("type", _QUAKE_TYPES),
+        unique("id"),
+    ]
+
+
+def test_steady_validated_round_runs_at_most_15_jobs(spark, tmp_path):
+    """Structural pin on the benchmarked streaming path: after a first
+    round has created the tables, one steady `stream_validated_ingest`
+    round (a 4k-event file with violators and re-sends, merged into
+    the existing table) runs at most 15 Spark jobs on local[4] with 4
+    shuffle partitions — 15 measured. The stream runs its jobs in its
+    own thread, under the query's run id as job group."""
+    import csv
+    import random
+
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
+        stream_validated_ingest,
+    )
+
+    assert spark.sparkContext.master == "local[4]"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    rules = _quake_rules()
+    rng = random.Random(3)
+    prev_clean, clean_ids = [], set()
+    for r in range(2):
+        rows = _quake_round(rng, r, 4000, prev_clean)
+        with open(in_dir / f"round_{r}.csv", "w", newline="") as fh:
+            w = csv.writer(fh)
+            w.writerow(["id", "time", "mag", "type", "place", "depth"])
+            w.writerows(rows)
+        prev_clean = [
+            x for x in rows
+            if x[2] and -1.0 <= float(x[2]) <= 10.0 and x[3] in _QUAKE_TYPES
+        ]
+        clean_ids |= {x[0] for x in prev_clean}
+        q = stream_validated_ingest(
+            spark, str(in_dir), _QUAKE_SCHEMA, ["id"], "time", wh, "EVENTS",
+            str(tmp_path / "ckpt"), rules=rules, quarantine_table="QUARANTINE",
+            report_table="EXPECTATIONS_LOG",
+        )
+        q.awaitTermination(120)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 15, len(jobs)
+    assert wh.read("EVENTS").count() == len(clean_ids)
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+def _crash_once(mp, method, table, nth=1, before=False):
+    """Make `Warehouse.<method>` raise on its `nth` call for `table` —
+    after that call's write has landed, or before it with `before`."""
+    real = getattr(Warehouse, method)
+    calls = [0]
+
+    def patched(self, *args, **kw):
+        hit = args[1] == table
+        calls[0] += hit
+        fire = hit and calls[0] == nth
+        if fire and before:
+            raise _InjectedCrash(f"before {method} {table}")
+        out = real(self, *args, **kw)
+        if fire:
+            raise _InjectedCrash(f"after {method} {table}")
+        return out
+
+    mp.setattr(Warehouse, method, patched)
+
+
+def _rows(wh, table, drop=()):
+    return sorted(map(tuple, wh.read(table).drop(*drop).collect()), key=repr)
+
+
+def test_validated_ingest_crash_at_each_step_replays_exactly(
+    spark, tmp_path, monkeypatch
+):
+    """Kill the second batch's fold at each write step, restart from the
+    same checkpoint: table, quarantine and report equal an
+    uninterrupted run's — no row lost or doubled."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from gcp_data_pipeline_fyp_spark.operators.expectations import (
+        in_range,
+        not_null,
+    )
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
+        stream_validated_ingest,
+    )
+
+    files = [
+        [(1, "2024-01-01 10:00:00", "click", 1.0),
+         (2, "2024-01-01 10:01:00", "view", 99.0),
+         (3, "2024-01-01 10:02:00", "", 2.0)],
+        [(1, "2024-01-01 10:00:00", "click", 1.0),  # re-send: dropped
+         (4, "2024-01-01 11:00:00", "view", 4.0),
+         (5, "2024-01-01 11:01:00", "view", -3.0),
+         (6, "2024-01-01 11:02:00", "", 5.0)],
+    ]
+
+    def run(tag, crash=None):
+        in_dir = tmp_path / f"in_{tag}"
+        in_dir.mkdir()
+        wh = Warehouse(spark, str(tmp_path / f"wh_{tag}"))
+
+        def ingest():
+            stream_validated_ingest(
+                spark, str(in_dir), SCHEMA, ["event_id"], "ts", wh, "ev",
+                str(tmp_path / f"ckpt_{tag}"),
+                rules=[not_null("event_type"), in_range("value", 0, 10)],
+                quarantine_table="Q", report_table="LOG",
+            ).awaitTermination(120)
+
+        for i, rows in enumerate(files):
+            _write_csv(in_dir / f"b{i}.csv", rows)
+            if crash is not None and i == 1:
+                with monkeypatch.context() as mp:
+                    _crash_once(mp, *crash)
+                    with pytest.raises(StreamingQueryException, match="crash"):
+                        ingest()
+            ingest()
+        return [_rows(wh, t) for t in ("ev", "Q", "LOG")]
+
+    want = run("clean")
+    assert [len(t) for t in want] == [2, 4, 4]
+    for n, crash in enumerate([
+        ("append", "Q"),
+        ("append", "LOG", 1, True),
+        ("append", "LOG"),
+        ("swap", "ev"),
+    ]):
+        assert run(f"crash{n}", crash) == want, crash
+
+
+@pytest.mark.slow
+def test_drift_state_fold_crash_at_each_step_replays_exactly(
+    spark, tmp_path, monkeypatch
+):
+    """The replay-guarded state fold, killed in its second batch after
+    the staging write, after the swap and after the report append:
+    a restart from the same checkpoint leaves state and report equal
+    to an uninterrupted run's — no count doubled, no report row lost."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from gcp_data_pipeline_fyp_spark.operators.profile import fit_psi_profile
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
+        stream_drift_monitor,
+    )
+
+    base = spark.createDataFrame(
+        [(i, "2024-01-01 00:00:00", "ab"[i % 2], float(i % 20)) for i in range(200)],
+        "event_id long, ts string, event_type string, value double",
+    )
+    profile = fit_psi_profile(base, "value", ["event_type"], 10)
+
+    def run(tag, crash=None):
+        in_dir = tmp_path / f"in_{tag}"
+        in_dir.mkdir()
+        _write_csv(in_dir / "f1.csv", [
+            (1000 + i, "2024-01-02 00:00:00", "ab"[i % 2], float(i % 10))
+            for i in range(50)
+        ])
+        _write_csv(in_dir / "f2.csv", [
+            (2000 + i, "2024-01-03 00:00:00", "ab"[i % 2], 15.0 + i % 5)
+            for i in range(50)
+        ])
+        wh = Warehouse(spark, str(tmp_path / f"wh_{tag}"))
+        wh.overwrite(profile, "PROFILE")
+
+        def monitor():
+            stream_drift_monitor(
+                spark, str(in_dir), SCHEMA, "value", ["event_type"], wh,
+                "PROFILE", "STATE", "REPORT", str(tmp_path / f"ckpt_{tag}"),
+                max_files_per_trigger=1,
+            ).awaitTermination(120)
+
+        if crash is not None:
+            with monkeypatch.context() as mp:
+                _crash_once(mp, *crash)
+                with pytest.raises(StreamingQueryException, match="crash"):
+                    monitor()
+        monitor()
+        return _rows(wh, "STATE", drop=["__stream_id"]), _rows(wh, "REPORT")
+
+    want = run("clean")
+    assert len(want[1]) == 4  # 2 batches x 2 groups
+    for n, crash in enumerate([
+        ("overwrite", "STATE__staging", 2),
+        ("swap", "STATE", 2),
+        ("append", "REPORT", 2),
+    ]):
+        assert run(f"crash{n}", crash) == want, crash
