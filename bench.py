@@ -229,8 +229,8 @@ AUX_LEGS = [
 # the set's median, while ambient machine drift moves the whole set
 # together. Only update a pin when its plan intentionally changes.
 #
-# r12 protocol re-base: the original pins (kept below as
-# R01_CALIBRATION_FIRSTPASS) were SINGLE first-in-bench-pass timings;
+# r12 protocol re-base: the original pins were SINGLE
+# first-in-bench-pass timings;
 # the first pass runs ~1.2-5x the warm repeats (measured per leg:
 # simhash 1.42 s first vs 0.28 s warm) and that warm-up factor
 # DIFFERS per leg, so median-of-3 timings can never cohere against
@@ -269,19 +269,6 @@ R01_CALIBRATION = {
     "bpe_pair_counts": 0.623,
     "epoch_shuffle_order": 0.831,
     "url_host_stats": 0.648,
-}
-
-# audit trail: the original single-first-pass pins (protocol retired
-# r12; see the re-base note above)
-R01_CALIBRATION_FIRSTPASS = {
-    "pricing_summary": 1.866,
-    "top_revenue_orders": 1.349,
-    "region_nation_revenue": 1.691,
-    "order_priority_count": 0.972,
-    "running_customer_spend": 0.984,
-    "sessionize_events": 0.641,
-    "text_quality": 0.751,
-    "simhash": 0.802,
 }
 
 

@@ -11,7 +11,6 @@ from gcp_data_pipeline_fyp_spark.functions.cleaning import (  # noqa: F401
     null_coerce,
     safe_double,
     safe_long,
-    stringify_all,
 )
 from gcp_data_pipeline_fyp_spark.functions.banding import (  # noqa: F401
     depth_band,

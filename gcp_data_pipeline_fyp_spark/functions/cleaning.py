@@ -10,8 +10,6 @@ Reference semantics being preserved (see SURVEY.md §1 "Null semantics"):
   -> NULL (`Full Load Scripts/ods_full_load2.py:51-64`). Expressed with
   `try_cast` so ANSI mode never throws; `safe_long` goes through double
   first because the reference does `int(float(v))`.
-- `stringify_all`: every staging value stored stringly
-  (`stg_full_load.py:103`).
 - `audit_columns`: insertion/update timestamps + job id + source file
   (`stg_full_load.py:95-100`, job-id stamp P6 in 8 of 10 pipelines).
   A single driver-captured literal timestamp is used instead of
@@ -22,7 +20,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -55,11 +53,6 @@ def safe_long(col: Column | str) -> Column:
     double->long truncates in Spark (non-ANSI semantics via try_cast).
     """
     return _cleaned(col).try_cast("double").try_cast("long")
-
-
-def stringify_all(df: DataFrame) -> DataFrame:
-    """Cast every column to string (staging is stringly-typed)."""
-    return df.select(*[F.col(c).cast("string").alias(c) for c in df.columns])
 
 
 def audit_columns(

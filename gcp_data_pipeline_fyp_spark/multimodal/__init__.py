@@ -1,9 +1,6 @@
 """Multimodal (binary) column support."""
 
 from gcp_data_pipeline_fyp_spark.multimodal.binary_ops import (  # noqa: F401
-    MEDIA_SCHEMA,
     byte_features,
-    decode_image,
-    plan_frame_offsets,
     with_media_column,
 )

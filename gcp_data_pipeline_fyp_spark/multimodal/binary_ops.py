@@ -1,13 +1,12 @@
 """Opaque binary media columns with typed metadata + Pandas-UDF plumbing.
 
 Design (per the training-data-pipeline brief): image/audio/video
-payloads travel as `binary` columns beside a typed metadata struct;
-decode/feature-extract run as Arrow-batched `mapInPandas` so the bytes
-cross to Python once per batch, not once per row. The actual codec
-step is STUBBED — this container ships no PIL/libav — behind an
-import-try + `NotImplementedError`; everything Spark-side (schema,
-batch iteration, partitioning, output shape) is real and tested via
-the deterministic `byte_features` extractor.
+payloads travel as `binary` columns beside their id; feature
+extraction runs as Arrow-batched `mapInPandas` so the bytes cross to
+Python once per batch, not once per row. No codec is used: the
+extractors (`byte_features`, `phash64`) read raw bytes, and everything
+Spark-side (schema, batch iteration, partitioning, output shape) is
+the same as a decoding extractor's.
 
 At 100 TB: binary payloads dominate row size — keep them OUT of
 shuffle keys, repartition by a small id before `mapInPandas`, and
@@ -23,26 +22,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image | audio | video
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-        StructField("payload", BinaryType()),
-    ]
-)
 
 _FEATURE_SCHEMA = (
     "media_id long, n_bytes long, n_space_bytes long, content_md5 string"
@@ -98,160 +77,6 @@ def byte_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(extract, schema=_FEATURE_SCHEMA)
 
 
-def decode_image(df: DataFrame) -> DataFrame:
-    """Decode image payloads to (width, height, mode) — requires PIL.
-
-    The Spark plumbing is identical to `byte_features`; only the codec
-    is environment-gated.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:  # pragma: no cover - PIL absent in this container
-        raise NotImplementedError(
-            "image decode needs pillow; this environment ships no codecs. "
-            "The mapInPandas plumbing is exercised via byte_features()."
-        ) from e
-
-    import io
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        from PIL import Image
-
-        for pdf in batches:
-            ims = pdf["payload"].map(lambda b: Image.open(io.BytesIO(bytes(b))))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": ims.map(lambda i: i.width),
-                    "height": ims.map(lambda i: i.height),
-                    "mode": ims.map(lambda i: i.mode),
-                }
-            )
-
-    return df.mapInPandas(decode, schema="media_id long, width int, height int, mode string")
-
-
-def plan_frame_offsets(
-    df: DataFrame, every_ms: int = 1000, max_frames: int = 16
-) -> DataFrame:
-    """Frame-sampling plan for video rows: offsets to decode, no codec needed.
-
-    Pure column arithmetic (real, not stubbed): evenly spaced offsets
-    within duration_ms, capped at max_frames.
-    """
-    n = F.least(
-        F.greatest((F.col("duration_ms") / every_ms).cast("int"), F.lit(1)),
-        F.lit(max_frames),
-    )
-    return df.filter(F.col("media_type") == "video").select(
-        "media_id",
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: (i * F.col("duration_ms") / n).cast("int"),
-        ).alias("frame_offsets_ms"),
-    )
-
-
-def plan_audio_chunks(
-    df: DataFrame,
-    chunk_ms: int = 30_000,
-    overlap_ms: int = 1_000,
-) -> DataFrame:
-    """Chunking plan for audio rows: (start_ms, end_ms) windows with
-    overlap — the audio analog of `plan_frame_offsets`. Pure column
-    arithmetic over duration metadata (real, not stubbed); only the
-    waveform decode inside each chunk is codec-dependent. Overlapping
-    windows are the standard ASR/feature-extraction shape so no speech
-    is lost at chunk boundaries.
-    """
-    stride = chunk_ms - overlap_ms
-    n = F.greatest(
-        F.ceil((F.col("duration_ms") - F.lit(overlap_ms)) / F.lit(stride)).cast(
-            "int"
-        ),
-        F.lit(1),
-    )
-    return df.filter(F.col("media_type") == "audio").select(
-        "media_id",
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.struct(
-                (i * stride).cast("int").alias("start_ms"),
-                F.least(
-                    i * stride + chunk_ms, F.col("duration_ms")
-                ).cast("int").alias("end_ms"),
-            ),
-        ).alias("chunks"),
-    )
-
-
-def resize_dims(
-    df: DataFrame, max_dim: int = 256
-) -> DataFrame:
-    """Aspect-preserving resize targets — pure column arithmetic, no codec.
-
-    The Spark-side half of a resize stage: given (width, height)
-    metadata, compute the target box so the longer side is `max_dim`
-    (never upscale). The pixel resample itself is the only
-    codec-dependent step (`resize_image`); everything a planner or
-    shard-size estimator needs is computable at scan speed here.
-    """
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_dim)
-        / F.greatest(F.col("width"), F.col("height")).cast("double"),
-    )
-    tw = F.greatest(F.round(F.col("width") * scale).cast("int"), F.lit(1))
-    th = F.greatest(F.round(F.col("height") * scale).cast("int"), F.lit(1))
-    return df.select(
-        "media_id",
-        "width",
-        "height",
-        F.when(F.col("width").isNotNull() & F.col("height").isNotNull(), tw)
-        .alias("target_width"),
-        F.when(F.col("width").isNotNull() & F.col("height").isNotNull(), th)
-        .alias("target_height"),
-    )
-
-
-def resize_image(df: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Decode + aspect-preserving resample to `max_dim` — requires PIL.
-
-    Same Arrow-batched mapInPandas shape as `decode_image`; the
-    environment gate covers only the codec."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:  # pragma: no cover - PIL absent in this container
-        raise NotImplementedError(
-            "image resize needs pillow; this environment ships no codecs. "
-            "Target-box arithmetic is exercised codec-free via resize_dims()."
-        ) from e
-
-    import io
-
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        from PIL import Image
-
-        def one(b):
-            im = Image.open(io.BytesIO(bytes(b)))
-            im.thumbnail((max_dim, max_dim))  # aspect-preserving, no upscale
-            out = io.BytesIO()
-            im.save(out, format=im.format or "PNG")
-            return out.getvalue()
-
-        for pdf in batches:
-            resized = pdf["payload"].map(lambda b: None if b is None else one(b))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": resized,
-                    "n_bytes": resized.map(lambda b: None if b is None else len(b)),
-                }
-            )
-
-    return df.mapInPandas(resample, schema="media_id long, payload binary, n_bytes long")
-
-
 _PHASH_SCHEMA = "media_id long, phash long"
 
 
@@ -261,8 +86,8 @@ def phash64(df: DataFrame) -> DataFrame:
     per-chunk byte-sum profile, bit d = profile[d] > median(profile).
     This is the DCT-free skeleton of a real pHash — identical batch
     plumbing, identical output shape; swap the chunk-sum profile for
-    DCT coefficients of the decoded image when a codec is present
-    (`decode_image`'s gate). Locality: a local byte edit perturbs one
+    DCT coefficients of the decoded image when a codec is present.
+    Locality: a local byte edit perturbs one
     chunk, flipping at most a few bits, so near-identical payloads
     land within a small Hamming distance. NULL payloads yield NULL
     hashes. The hash lands in int64 with the sign bit used (bit 0 of

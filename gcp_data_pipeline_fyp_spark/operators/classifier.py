@@ -47,8 +47,8 @@ DEFAULT_BUCKETS = 1 << 18
 
 
 def ngram_features_of_toks(toks: Column, bigrams: bool = True) -> Column:
-    """`ngram_features` over an ALREADY-MATERIALIZED filtered
-    token-array column — the bigram lambda's element_at calls
+    """Unigram (+ bigram) feature strings of an ALREADY-MATERIALIZED
+    filtered token-array column — the bigram lambda's element_at calls
     re-evaluate an inline token expression per position (no CSE
     across higher-order functions; the measured O(tokens^2) trap,
     same class as operators/dsir.py:feature_buckets_of_toks), so
@@ -71,15 +71,6 @@ def _filtered_toks(text_col: Column | str) -> Column:
     """Non-empty whitespace tokens; NULL text -> [] (engine convention)."""
     t = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.filter(_coalesce_toks(tokens(t)), lambda x: x != "")
-
-
-def ngram_features(text_col: Column | str, bigrams: bool = True) -> Column:
-    """array<string> of hashed-classifier features: non-empty whitespace
-    tokens plus (optionally) `left_right` joined bigrams. NULL text
-    featurizes like an empty document ([]), the engine-wide convention.
-    Single-expression convenience form — frame-level consumers go
-    through `_feature_rows` (see `ngram_features_of_toks`)."""
-    return ngram_features_of_toks(_filtered_toks(text_col), bigrams)
 
 
 def feature_bucket(feat: Column, n_buckets: int, seed: int = 0) -> Column:
@@ -131,26 +122,6 @@ def bucketed_features(
 
 
 _META_COLS = ("meta_n_buckets", "meta_seed", "meta_bigrams")
-
-
-def weights_meta(weights: DataFrame) -> tuple[int, int, bool]:
-    """(n_buckets, seed, bigrams) read from a stored weight table's
-    constant metadata columns. The feature-space geometry MUST travel
-    with the model: scoring with a mismatched n_buckets/seed/bigrams
-    silently misroutes every bucket and returns plausible-looking
-    garbage — the same failure class pq.py's _codebook_geometry guards.
-    One 1-row `first()` on a ≤ n_buckets-row table (the A4 pattern)."""
-    missing = [c for c in _META_COLS if c not in weights.columns]
-    if missing:
-        raise ValueError(
-            f"weight table lacks metadata columns {missing}; retrain with "
-            "train_linear_classifier (round-5+ format) or pass "
-            "n_buckets/seed/bigrams explicitly"
-        )
-    row = weights.select(*_META_COLS).first()
-    if row is None:
-        raise ValueError("empty weight table")
-    return int(row[0]), int(row[1]), bool(row[2])
 
 
 def _resolve_meta(
@@ -330,23 +301,4 @@ def score_from_buckets(
             "score_micro",
             F.coalesce("label", F.lit("empty")).alias("label"),
         )
-    )
-
-
-def classifier_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    weights: DataFrame,
-    n_buckets: int | None = None,
-    bigrams: bool | None = None,
-    seed: int | None = None,
-    threshold_micro: int = 0,
-) -> DataFrame:
-    """Corpus filtered to docs the classifier keeps (score > threshold)."""
-    scored = score_documents(
-        df, id_col, text_col, weights, n_buckets, bigrams, seed, threshold_micro
-    )
-    return df.join(
-        scored.filter(F.col("label") == "keep").select(id_col), id_col, "left_semi"
     )

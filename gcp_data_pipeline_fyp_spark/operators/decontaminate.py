@@ -341,21 +341,3 @@ def semantic_contamination_report(
     return top.filter(F.col("max_cosine_micro") >= F.lit(thr)).select(
         "corpus_id", "bench_id", "max_cosine_micro"
     )
-
-
-def semantic_decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Corpus minus rows semantically too close to the benchmark —
-    the scrub built on `semantic_contamination_report`. The anti join
-    keys on `id_col` only; the flagged-id set is bounded by the
-    contaminated count (small by construction), so AQE broadcasts it."""
-    bad = semantic_contamination_report(
-        corpus, benchmark, id_col, vec_col, threshold, broadcast
-    ).select(F.col("corpus_id").alias(id_col))
-    return corpus.join(bad, id_col, "left_anti")

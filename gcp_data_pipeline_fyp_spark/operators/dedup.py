@@ -588,67 +588,6 @@ def exact_substring_filter(
     return df.join(keep.union(no_windows).distinct(), id_col, "left_semi")
 
 
-# ------------------------------------------------ persisted digest index
-def build_digest_index(wh, corpus: DataFrame, key_cols: Sequence[str], name: str) -> None:
-    """Materialize the corpus's DISTINCT content digests as a compact
-    warehouse table (16 bytes/doc) — the build-once half of indexed
-    incremental dedup.
-
-    At 100 TB the daily-ingest anti-join should read this index, not
-    re-scan the corpus: the index is ~1/10^4 of the corpus bytes (16
-    bytes vs multi-KB documents), turning the dedup gate's base side
-    from a corpus scan into a small parquet read. Same amortization
-    pattern as the persisted IVF index (operators/similarity.py).
-    """
-    wh.overwrite(
-        corpus.select(_content_digest(key_cols).alias("digest")).distinct(),
-        f"{name}__digests",
-    )
-
-
-def incremental_dedup_indexed(
-    wh,
-    batch: DataFrame,
-    key_cols: Sequence[str],
-    name: str,
-    id_col: str | None = None,
-    update_index: bool = True,
-) -> DataFrame:
-    """Batch rows whose content digest is absent from the persisted
-    index (`build_digest_index`); optionally fold the surviving rows'
-    digests back into the index so the next batch dedups against
-    base ∪ batch without ever rebuilding.
-
-    The returned frame is materialized (localCheckpoint) when
-    `update_index` is set: the index append must not lazily re-read
-    the index it is appending to (write-into-own-source), and the
-    caller's frame must not re-run the anti-join against the now-grown
-    index (which would wrongly drop every row).
-    """
-    try:
-        digests = wh.read(f"{name}__digests")
-    except Exception:
-        # cold start: same contract as the band index below — a
-        # missing/unreadable digest table is an empty index
-        digests = batch.select(
-            _content_digest(key_cols).alias("digest")
-        ).limit(0)
-    out = batch.join(
-        digests,
-        _content_digest(key_cols) == digests["digest"],
-        "left_anti",
-    )
-    if id_col is not None:
-        out = exact_dedup(out, key_cols, id_col)
-    if update_index:
-        out = out.localCheckpoint()
-        wh.append(
-            out.select(_content_digest(key_cols).alias("digest")).distinct(),
-            f"{name}__digests",
-        )
-    return out
-
-
 def _lsh_band_rows(
     df: DataFrame,
     id_col: str,

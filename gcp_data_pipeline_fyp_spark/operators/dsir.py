@@ -66,8 +66,8 @@ def feature_buckets_of_toks(
     n_buckets: int = DEFAULT_BUCKETS,
     bigrams: bool = True,
 ) -> Column:
-    """`feature_buckets` over an ALREADY-MATERIALIZED token-array
-    column. Performance-load-bearing split: when the token array is
+    """Hashed n-gram feature buckets of an ALREADY-MATERIALIZED
+    token-array column. Performance-load-bearing split: when the token array is
     inlined as `split(trim(text))` inside this expression tree, the
     bigram lambda's element_at calls re-evaluate the split PER
     POSITION (no common-subexpression elimination across higher-order
@@ -94,29 +94,6 @@ def feature_buckets_of_toks(
         feats,
         lambda f: F.conv(F.substring(F.md5(f), 1, 8), 16, 10).cast("long")
         % n_buckets,
-    )
-
-
-def feature_buckets(
-    text_col: Column | str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bigrams: bool = True,
-) -> Column:
-    """array<bigint> of hashed n-gram feature buckets for one text:
-    one entry per unigram occurrence plus (optionally) one per bigram
-    occurrence — occurrences, not distinct features, because the DSIR
-    weight multiplies the log-ratio by the occurrence count c_f(x).
-
-    bucket(f) = first-8-hex-chars of md5(f) as int, mod n_buckets —
-    the engine's standard cross-engine hash (functions/text.py
-    minhash base hash uses the identical chain).
-
-    Single-expression convenience form — fine for one-off column use,
-    but frame-level consumers must go through `_exploded_buckets` (see
-    `feature_buckets_of_toks` for the measured O(tokens^2) trap this
-    form carries inside an explode)."""
-    return feature_buckets_of_toks(
-        _coalesce_toks(tokens(text_col)), n_buckets, bigrams
     )
 
 
@@ -461,12 +438,10 @@ def dsir_budget_select(
 
 # ---------------------------------------------------------------------
 # Persisted profiles — the build-once/reuse discipline every other
-# index family has (build_ivf_index, build_lsh_index,
-# build_digest_index). Measured motivation (BASELINE.md): at sf0.1 the
-# per-run profile FIT costs 5.9 s vs 2.1 s for frozen-profile scoring —
-# at 100 TB the target profile never changes per batch and the raw
-# profile folds incrementally (the merge is distributive: plain count
-# sums, proven by the streaming form), so steady-state selection should
+# index family has (build_ivf_index, build_lsh_index). Measured
+# motivation (BASELINE.md): at sf0.1 the per-run profile FIT costs
+# 5.9 s vs 2.1 s for frozen-profile scoring — at 100 TB the target
+# profile never changes per batch, so steady-state selection should
 # pay only the scoring half.
 
 
@@ -571,33 +546,6 @@ def build_dsir_profiles(
         ),
         f"{name}__meta",
     )
-
-
-def fold_dsir_raw_profile(
-    wh, batch: DataFrame, name: str, text_col: str = "text"
-) -> None:
-    """Fold one batch's feature counts into the persisted raw profile
-    (staging + rename-swap, so a reader never sees a half-written
-    profile). Count sums are distributive — the same merge the
-    streaming form (`stream_dsir_ingest`) maintains under its replay
-    guard. This batch helper is NOT replay-guarded: the caller owns
-    at-most-once delivery (folding the same batch twice double-counts
-    its features; use the streaming ingest when replays are possible).
-
-    The target profile never folds — the target is a curated corpus;
-    re-run `build_dsir_profiles` when IT changes."""
-    nb, bg = _dsir_meta_checked(wh, name)
-    table = f"{name}__raw_profile"
-    bc = bucket_profile(batch, text_col, nb, bg)
-    merged = (
-        wh.read(table)
-        .unionByName(bc)
-        .groupBy("bucket")
-        .agg(F.sum("c").alias("c"))
-    )
-    staging = f"{table}__fold_staging"
-    wh.overwrite(merged, staging)
-    wh.swap(staging, table)
 
 
 def dsir_logweights_indexed(

@@ -143,7 +143,7 @@ def roc_auc(
     return _finalize_auc(agg, [])
 
 
-def calibration_state(
+def calibration_report(
     df: DataFrame,
     score_col: str,
     label_col: str,
@@ -151,14 +151,13 @@ def calibration_state(
     lo: float = 0.0,
     hi: float = 1.0,
 ) -> DataFrame:
-    """Mergeable calibration partial state: (bin, n, __sv, __np) per
-    fixed-width score bin over [lo, hi] — counts and an exact-decimal
-    score sum, so states from any partitioning/any number of
-    increments fold by re-summing (the rollup_state discipline; this
-    is what the streaming quality monitor persists). Scores outside
-    [lo, hi] clamp into the edge bins (a calibrated probability
-    should not leave [0,1]; clamping keeps stray values visible in
-    the edge rows instead of silently dropping them)."""
+    """One-shot reliability diagram: (bin, n, mean_score_micro,
+    pos_rate_micro, gap_micro) per fixed-width score bin over [lo, hi]
+    (one scan, |bins| shuffle groups; the score sum is exact decimal).
+    ECE = sum(n * gap) / sum(n) — computable from this report. Scores
+    outside [lo, hi] clamp into the edge bins (a calibrated
+    probability should not leave [0,1]; clamping keeps stray values
+    visible in the edge rows instead of silently dropping them)."""
     if n_bins <= 0:
         raise ValueError("n_bins must be positive")
     if not hi > lo:
@@ -178,30 +177,11 @@ def calibration_state(
             F.lit(0), F.floor((v - F.lit(lo)) / F.lit(hi - lo) * n_bins)
         ),
     ).cast("int")
-    return base.groupBy(b.alias("bin")).agg(
+    state = base.groupBy(b.alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(v.cast("decimal(18,6)")).cast("decimal(38,6)").alias("__sv"),
         F.sum(lab.cast("long")).alias("__np"),
     )
-
-
-def merge_calibration_states(states: list[DataFrame]) -> DataFrame:
-    """Fold calibration states across increments (counts/sums add)."""
-    it = iter(states)
-    u = next(it)
-    for s in it:
-        u = u.unionByName(s)
-    return u.groupBy("bin").agg(
-        F.sum("n").alias("n"),
-        F.sum("__sv").cast("decimal(38,6)").alias("__sv"),
-        F.sum("__np").alias("__np"),
-    )
-
-
-def calibration_from_state(state: DataFrame) -> DataFrame:
-    """(bin, n, mean_score_micro, pos_rate_micro, gap_micro) rows —
-    the reliability diagram read off a (merged) state.
-    ECE = sum(n * gap) / sum(n) — computable from this report."""
     mean_score = F.col("__sv").cast("double") / F.col("n").cast("double")
     pos_rate = F.col("__np").cast("double") / F.col("n").cast("double")
     return state.select(
@@ -210,68 +190,6 @@ def calibration_from_state(state: DataFrame) -> DataFrame:
         micro6(mean_score).alias("mean_score_micro"),
         micro6(pos_rate).alias("pos_rate_micro"),
         micro6(F.abs(mean_score - pos_rate)).alias("gap_micro"),
-    )
-
-
-def calibration_report(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    n_bins: int = 10,
-    lo: float = 0.0,
-    hi: float = 1.0,
-) -> DataFrame:
-    """One-shot reliability diagram: `calibration_state` read through
-    `calibration_from_state` (one scan, |bins| shuffle groups)."""
-    return calibration_from_state(
-        calibration_state(df, score_col, label_col, n_bins, lo, hi)
-    )
-
-
-def quality_summary_from_state(state: DataFrame) -> DataFrame:
-    """One row (n, n_pos, ece_micro, auc_binned_micro) off a
-    calibration state — the streaming monitor's per-batch report.
-
-    `auc_binned` is the tie-aware AUC treating the BIN as the score:
-    within-bin order is lost, so it understates |AUC - 0.5| by at
-    most the mass-weighted within-bin mixing (the same bounded-
-    underestimate contract as ks_binned_report, tightened by n_bins).
-    Exact integer rank-sum over the <=n_bins state rows; the only
-    window is over those rows."""
-    w = Window.orderBy(F.col("bin").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = state.select(
-        "bin",
-        "n",
-        "__sv",
-        "__np",
-        F.coalesce(F.sum("n").over(w), F.lit(0)).cast("decimal(19,0)").alias("__cb"),
-    )
-    two_s_pos = _two_s_pos(F.col("__np"), F.col("n"), F.col("__cb"))
-    gap = F.abs(
-        F.col("__sv").cast("double") / F.col("n").cast("double")
-        - F.col("__np").cast("double") / F.col("n").cast("double")
-    )
-    agg = cum.agg(
-        F.sum("n").alias("n"),
-        F.sum("__np").alias("n_pos"),
-        F.sum(two_s_pos).alias("__2sp"),
-        F.sum(gap * F.col("n").cast("double")).alias("__wgap"),
-    )
-    p_tot = F.col("n_pos").cast("decimal(19,0)")
-    n_neg = F.col("n") - F.col("n_pos")
-    num = (
-        F.col("__2sp") - (p_tot * (p_tot + F.lit(1))).cast("decimal(38,0)")
-    ).cast("double")
-    den = 2.0 * F.col("n_pos").cast("double") * n_neg.cast("double")
-    auc = F.when((F.col("n_pos") > 0) & (n_neg > 0), num / den)
-    ece = F.col("__wgap") / F.col("n").cast("double")
-    return agg.select(
-        "n",
-        "n_pos",
-        micro6(ece).alias("ece_micro"),
-        micro6(auc).alias("auc_binned_micro"),
     )
 
 

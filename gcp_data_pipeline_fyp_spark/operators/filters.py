@@ -5,7 +5,6 @@ A filter chain is an ordered list of ``(name, predicate Column)`` pairs
 RefinedWeb all describe their cleaning as exactly such a cascade).
 Three entry points, all one scan each:
 
-- `apply_filter_chain`: rows passing every predicate (NULL == fail).
 - `first_fail_label`: which filter would drop each row first (or
   ``_kept``) — CASE-expression attribution, the report every curation
   paper publishes.
@@ -25,7 +24,6 @@ corpus scan — the same price as counting rows.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,13 +49,6 @@ def _validate(filters: FilterChain) -> None:
         raise ValueError(f"duplicate filter names: {sorted(dupes)}")
     if KEPT_LABEL in names:
         raise ValueError(f"filter name {KEPT_LABEL!r} is reserved for the kept bucket")
-
-
-def apply_filter_chain(df: DataFrame, filters: FilterChain) -> DataFrame:
-    """Rows passing every predicate in the chain (empty chain keeps all)."""
-    _validate(filters)
-    keep = reduce(lambda a, b: a & b, [_safe(p) for _, p in filters], F.lit(True))
-    return df.filter(keep)
 
 
 def first_fail_label(filters: FilterChain) -> Column:

@@ -41,27 +41,25 @@ from pyspark.sql import functions as F
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 
-def _walk_data_files(root: str, ext: str) -> dict[str, int]:
-    """{relative_dir: bytes} over data files; '' = table root. `ext`
-    comes from the warehouse format (Warehouse.compact's own rule) so
-    orc warehouses census correctly too."""
+def _walk_data_files(root: str) -> dict[str, int]:
+    """{relative_dir: bytes} over parquet data files; '' = table root."""
     out: dict[str, int] = {}
     for dirpath, _dirs, files in os.walk(root):
         rel = os.path.relpath(dirpath, root)
         rel = "" if rel == "." else rel
         for f in files:
-            if f.endswith(ext):
+            if f.endswith(".parquet"):
                 out.setdefault(rel, 0)
                 out[rel] += os.path.getsize(os.path.join(dirpath, f))
     return out
 
 
-def _count_files(root: str, ext: str) -> int:
+def _count_files(root: str) -> int:
     return sum(
         1
         for dirpath, _d, files in os.walk(root)
         for f in files
-        if f.endswith(ext)
+        if f.endswith(".parquet")
     )
 
 
@@ -71,13 +69,12 @@ def table_file_stats(
     """Driver-side file census: the measurement that decides whether
     compaction pays. O(files) listing, no Spark job."""
     root = wh.path(table)
-    ext = f".{wh.fmt}"
     n_files = 0
     total = 0
     n_small = 0
     for dirpath, _d, files in os.walk(root):
         for f in files:
-            if f.endswith(ext):
+            if f.endswith(".parquet"):
                 sz = os.path.getsize(os.path.join(dirpath, f))
                 n_files += 1
                 total += sz
@@ -120,13 +117,12 @@ def compact_table(
     should use `Warehouse.compact` instead.
     """
     root = wh.path(table)
-    ext = f".{wh.fmt}"
-    before = _count_files(root, ext)
+    before = _count_files(root)
     if not partition_cols:
         wh.compact(table, target_file_bytes=target_file_bytes)
         return {
             "n_files_before": before,
-            "n_files_after": _count_files(root, ext),
+            "n_files_after": _count_files(root),
             "n_partitions_rewritten": 0,
         }
     from gcp_data_pipeline_fyp_spark.operators.zonemap import (
@@ -135,13 +131,13 @@ def compact_table(
     )
 
     zm_cols = zonemap_cols_of(wh, table)
-    sizes = _walk_data_files(root, ext)
+    sizes = _walk_data_files(root)
     rewritten = 0
     for rel, nbytes in sorted(sizes.items()):
         if not rel:
             continue
         part_dir = os.path.join(root, rel)
-        n_cur = _count_files(part_dir, ext)
+        n_cur = _count_files(part_dir)
         n_target = max(1, math.ceil(nbytes / target_file_bytes))
         if n_cur <= n_target:
             continue
@@ -163,6 +159,6 @@ def compact_table(
         build_zonemap(wh, table, zm_cols)
     return {
         "n_files_before": before,
-        "n_files_after": _count_files(root, ext),
+        "n_files_after": _count_files(root),
         "n_partitions_rewritten": rewritten,
     }

@@ -21,10 +21,10 @@ Spark-first shape:
   per subspace (broadcast centroids, corpus scan).
 - **Scoring** broadcasts the per-batch LUT (|Q| * m * n_codes rows)
   against the corpus code stream and does ONE id-keyed aggregation.
-- **Persistence** (`build_pq_index` / `pq_topk_indexed` /
-  `append_pq_index`) stores codebooks + codes as warehouse tables —
-  the build-once / query-many / append-daily lifecycle of the digest,
-  LSH-band, and IVF indexes (operators/dedup.py, similarity.py).
+- **Persistence** (`build_ivfpq_index` / `ivfpq_topk_indexed`) stores
+  the coarse codebook, PQ codebooks and codes as warehouse tables —
+  the build-once / query-many lifecycle of the LSH-band and IVF
+  indexes (operators/similarity.py).
 
 Cross-engine exactness: vectors are unit-normalized and rounded to
 6 dp before training (identical doubles in any engine), k-means is the
@@ -73,9 +73,8 @@ def _sub(col: F.Column, mi: int, sub_dim: int) -> F.Column:
 def _check_geometry(dim: int, m: int) -> int:
     """sub_dim, or ValueError when `dim % m != 0` — a non-dividing m
     would silently drop the trailing dim % m components from training,
-    encoding AND scoring (F.slice never reads past m*sub_dim), and
-    _codebook_geometry would faithfully reconstruct the truncated dim,
-    so the precision loss could never surface downstream. Same
+    encoding AND scoring (F.slice never reads past m*sub_dim), so the
+    precision loss could never surface downstream. Same
     defensive posture as the malformed-codebooks check."""
     if m <= 0 or dim <= 0:
         raise ValueError(f"PQ geometry must be positive: dim={dim}, m={m}")
@@ -370,84 +369,23 @@ def pq_topk(
     return _pq_score_topk(codes, lut, k)
 
 
-# ------------------------------------------------ persisted PQ index
-def build_pq_index(
-    wh,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-    m: int = 4,
-    n_codes: int = 8,
-    iters: int = 3,
-    dim: int = 64,
-    checkpoint_dir: str | None = None,
-    train_sample_frac: float | None = None,
-) -> None:
-    """Persist codebooks + codes as warehouse tables — the build-once
-    half. The codes table is m rows of 3 small ints per vector; at
-    100 TB this is the table queries scan INSTEAD of the raw vectors
-    (~100x fewer bytes at m=4 over 64-dim float64)."""
-    books = fit_pq_codebooks(
-        corpus, id_col, vec_col, m, n_codes, iters, dim, checkpoint_dir,
-        train_sample_frac,
-    )
-    wh.overwrite(books, f"{name}__codebooks")
-    codes = pq_encode(
-        corpus, id_col, vec_col, wh.read(f"{name}__codebooks"), m, dim
-    )
-    wh.overwrite(
-        codes.select(F.col(id_col).alias("corpus_id"), "subspace", "cluster_id"),
-        f"{name}__codes",
-    )
-
-
 def _codebook_meta(books: DataFrame) -> tuple[int, int, bool]:
     """(m, dim, residual) read off the persisted codebooks in ONE
     driver action — the stored layout is the source of truth, so a
-    caller can NEVER query or append with a geometry or code
-    interpretation that disagrees with the build (a mismatched slice
-    would NULL every LUT dot; scoring residual codes as plain returns
-    garbage top-k with no error). Tables written before the
-    `meta_residual` column existed (plain PQ indexes) read as
-    residual=False."""
-    aggs = [
+    caller can NEVER query with a geometry or code interpretation that
+    disagrees with the build (a mismatched slice would NULL every LUT
+    dot; scoring residual codes as plain returns garbage top-k with no
+    error)."""
+    row = books.agg(
         F.max("subspace").alias("mx"),
         F.min(F.size("centroid")).alias("lo"),
         F.max(F.size("centroid")).alias("hi"),
-    ]
-    has_res = "meta_residual" in books.columns
-    if has_res:
-        aggs.append(F.max("meta_residual").alias("res"))
-    row = books.agg(*aggs).first()
+        F.max("meta_residual").alias("res"),
+    ).first()
     if row["mx"] is None or row["lo"] != row["hi"]:
         raise ValueError(f"malformed PQ codebooks: {row}")
     m = int(row["mx"]) + 1
-    return m, m * int(row["lo"]), bool(row["res"]) if has_res else False
-
-
-def _codebook_geometry(books: DataFrame) -> tuple[int, int]:
-    """(m, dim) — see `_codebook_meta`."""
-    m, dim, _residual = _codebook_meta(books)
-    return m, dim
-
-
-def pq_topk_indexed(
-    wh,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-    k: int = 10,
-) -> DataFrame:
-    """ADC top-k against a persisted PQ index: read codebooks (tiny),
-    build the query-batch LUT, stream the codes table once. Subspace
-    count and dimensionality come from the stored codebooks."""
-    books = wh.read(f"{name}__codebooks")
-    m, dim = _codebook_geometry(books)
-    codes = wh.read(f"{name}__codes")
-    lut = _pq_lut(queries, id_col, vec_col, books, m, dim)
-    return _pq_score_topk(codes, lut, k)
+    return m, m * int(row["lo"]), bool(row["res"])
 
 
 # ----------------------------------------------- IVF-PQ composition
@@ -670,7 +608,7 @@ def build_ivfpq_index(
     `residual=True` stores RESIDUAL codes (see `ivfpq_residual_topk`).
     The choice is persisted as a constant `meta_residual` column on
     the codebooks table — the stored index, not the caller, decides
-    how queries and appends interpret the codes (the same
+    how queries interpret the codes (the same
     self-describing-model discipline as the classifier weight
     tables): scoring residual codes as plain codes would return
     plausible-looking garbage with no error."""
@@ -774,76 +712,6 @@ def ivfpq_topk_indexed(
     return _ivfpq_score_topk(codes, probes, lut, k)
 
 
-def append_ivfpq_index(
-    wh,
-    batch: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-) -> None:
-    """Fold a new vector batch into a persisted IVF-PQ index: assign
-    against the EXISTING coarse centroids, encode against the EXISTING
-    codebooks — residuals first when the index says so
-    (`meta_residual`) — append only the touched centroid partitions.
-    Neither quantizer refits (rerun determinism; drift handled by
-    periodic rebuild — the same cadence discipline as the IVF and PQ
-    indexes)."""
-    books = wh.read(f"{name}__codebooks")
-    m, dim, residual = _codebook_meta(books)
-    cent = wh.read(f"{name}__centroids").select(
-        "centroid_id", F.col("centroid").alias("__centroid")
-    )
-    cu = _unit6_side(batch, id_col, vec_col, "corpus_id", "__cv")
-    assigned = _assign(cu, cent)
-    if residual:
-        res = assigned.join(F.broadcast(cent), "centroid_id").select(
-            F.col("corpus_id").alias("__id"),
-            F.zip_with(
-                F.col("__cv"), F.col("__centroid"), lambda x, y: x - y
-            ).alias("__u"),
-            "centroid_id",
-        )
-        codes = _encode_on(
-            res.select("__id", "__u"),
-            books.select("subspace", "cluster_id", "centroid"),
-            m,
-            dim,
-        ).join(res.select("__id", "centroid_id"), "__id").select(
-            F.col("__id").alias("corpus_id"), "subspace", "cluster_id",
-            "centroid_id",
-        )
-    else:
-        codes = pq_encode(
-            batch, id_col, vec_col,
-            books.select("subspace", "cluster_id", "centroid"), m, dim,
-        ).select(
-            F.col(id_col).alias("corpus_id"), "subspace", "cluster_id"
-        ).join(assigned.select("corpus_id", "centroid_id"), "corpus_id")
-    wh.append(codes, f"{name}__codes", partition_cols=["centroid_id"])
-
-
-def append_pq_index(
-    wh,
-    batch: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-) -> None:
-    """Fold a new vector batch into a persisted PQ index: encode
-    against the EXISTING codebooks (geometry read off the index) and
-    append — batch-sized, queries see new vectors immediately.
-    Codebooks are deliberately not refit (rerun determinism; drift
-    handled by periodic rebuild, the same cadence discipline as the
-    IVF index)."""
-    books = wh.read(f"{name}__codebooks")
-    m, dim = _codebook_geometry(books)
-    codes = pq_encode(batch, id_col, vec_col, books, m, dim)
-    wh.append(
-        codes.select(F.col(id_col).alias("corpus_id"), "subspace", "cluster_id"),
-        f"{name}__codes",
-    )
-
-
 def delete_from_ivfpq_index(
     wh,
     ids: DataFrame,
@@ -926,23 +794,3 @@ def delete_from_ivfpq_index(
         sorted({str(a) for a in affected} - kept_parts),
     )
     return len(affected)
-
-
-def delete_from_pq_index(
-    wh,
-    ids: DataFrame,
-    id_col: str,
-    name: str,
-) -> None:
-    """Remove vectors from a persisted (unpartitioned) PQ index: one
-    anti-join rewrite of the codes table through a staging table +
-    rename promotion (`swap` — a reader never sees a half-written
-    table). The flat codes table has no list structure to scope the
-    rewrite to; for partition-scoped deletes use the IVF-PQ index."""
-    codes = wh.read(f"{name}__codes")
-    victims = ids.select(F.col(id_col).alias("corpus_id")).distinct()
-    staging = f"{name}__codes__delete_staging"
-    wh.overwrite(
-        codes.join(F.broadcast(victims), "corpus_id", "left_anti"), staging
-    )
-    wh.swap(staging, f"{name}__codes")

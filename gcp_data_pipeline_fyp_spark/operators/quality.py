@@ -64,18 +64,3 @@ def quality_split(
     rejected = df.filter(predicate)
     accepted = df.filter(~F.coalesce(predicate, F.lit(False)))
     return accepted, rejected
-
-
-def with_counters(df: DataFrame, name: str, predicate: Column) -> DataFrame:
-    """Attach rows_in / rows_flagged counters (reference A6, Beam
-    Metrics.counter — `ods_delta_load2.py:53,142-150`).
-
-    Spark rendering: `df.observe` — metrics ride the action that
-    consumes the frame (no extra pass, unlike a count()), retrievable
-    from the QueryExecutionListener or `Observation` object.
-    """
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.coalesce(predicate, F.lit(False)).cast("long")).alias("rows_flagged"),
-    )

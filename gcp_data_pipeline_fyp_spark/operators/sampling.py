@@ -500,10 +500,10 @@ def distribution_match_rates(
 def match_rates_from_counts(src: DataFrame, ref: DataFrame) -> DataFrame:
     """`distribution_match_rates` from PRE-AGGREGATED counts: `src` is
     (bucket, n_src), `ref` is (bucket, n_ref) — the mergeable-state
-    entry point (streaming/ingest.py:stream_match_ingest folds a
-    persisted per-bucket count state through this every micro-batch).
-    Same exact integer algebra, NULL-bucket handling, and argmin
-    tie-break contract as the frame-level form, which delegates here.
+    entry point (a persisted per-bucket count state can fold through
+    this per delivery). Same exact integer algebra, NULL-bucket
+    handling, and argmin tie-break contract as the frame-level form,
+    which delegates here.
     """
     ref = ref.select(F.col("bucket").alias("__rb"), "n_ref")
     # null-safe: a NULL bucket is a real slice on BOTH sides (the

@@ -485,14 +485,13 @@ def build_ivf_index(
     `ivf_topk_indexed` detects the layout from the postings schema.
 
     Also persists `{name}__train_mix` — the TRAINING-TIME per-centroid
-    assignment counts (n_centroids rows). The retrain monitors
-    (`ivf_retrain_decision_indexed`, `stream_retrain_monitor`) PSI
-    against this frozen snapshot, NOT against live postings counts:
-    `append_ivf_index`/`stream_index_ingest` fold every new batch into
-    the postings, so a postings-derived baseline would progressively
-    absorb the drifted data and damp the PSI the longer the stream
-    runs — the trigger would fire latest exactly when drift has run
-    longest. The snapshot is only rewritten by the rebuild itself.
+    assignment counts (n_centroids rows). The retrain monitor
+    (`ivf_retrain_decision_indexed`) PSIs against this frozen snapshot,
+    NOT against live postings counts: were new batches folded into the
+    postings, a postings-derived baseline would progressively absorb
+    the drifted data and damp the PSI — the trigger would fire latest
+    exactly when drift has run longest. The snapshot is only rewritten
+    by the rebuild itself.
     """
     c = corpus.select(
         F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")
@@ -612,57 +611,6 @@ def ivf_topk_indexed(
             micro6(cosine(F.col("__qv"), F.col("vec"))).alias("cosine_micro"),
         )
     return _topk_per_query(pairs, k)
-
-
-def append_ivf_index(
-    wh,
-    batch: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-) -> None:
-    """Fold a new vector batch into a persisted IVF index: assign each
-    vector to its nearest EXISTING centroid and append to the postings
-    table — the daily-ingest shape, matching the incremental digest and
-    LSH-band indexes (operators/dedup.py).
-
-    Centroids are deliberately not refit, and `{name}__train_mix` is
-    deliberately not updated: the snapshot is the retrain monitors'
-    fixed baseline — folding appended (possibly drifted) batches into
-    it would damp the very PSI signal that decides when to rebuild.
-    An append is batch-sized
-    (one broadcast-assign pass + a partitioned append that touches only
-    the centroid directories present in the batch), and queries see the
-    new vectors immediately. The stored-index paths (this append + the
-    drift monitor below) count the stored codebook (one tiny-table
-    count) and pass the size to `_assign`, so an index BUILT with more
-    centroids than `_ASSIGN_FOLD_MAX_CENTROIDS` assigns with the
-    shuffle form, as its build did. Drift is handled by periodically
-    rebuilding with `build_ivf_index` (same cadence discipline as
-    compaction) — incremental Lloyd updates would make the index
-    depend on ingest order, breaking rerun determinism.
-
-    The append matches the index's stored layout: an SQ8 index
-    (build_ivf_index quantize=True) gets quantized rows, a raw index
-    gets raw vectors — mixing the two schemas in one postings table
-    would silently NULL one side out of every query.
-    """
-    cent = wh.read(f"{name}__centroids").select(
-        "centroid_id", F.col("centroid").alias("__centroid")
-    )
-    b = batch.select(
-        F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")
-    )
-    assigned = _assign(b, cent, cent.count())
-    if "codes" in wh.read(f"{name}__postings").columns:
-        rows = with_sq8_columns(
-            assigned.withColumnRenamed("__cv", "vec"), "vec"
-        ).select("corpus_id", "codes", "maxu", "centroid_id")
-    else:
-        rows = assigned.select(
-            "corpus_id", F.col("__cv").alias("vec"), "centroid_id"
-        )
-    wh.append(rows, f"{name}__postings", partition_cols=["centroid_id"])
 
 
 # ------------------------------------------------ scalar quantization
@@ -1159,44 +1107,6 @@ def bitext_margin_pairs(
     )
 
 
-def dedup_index_postings(wh, name: str) -> None:
-    """Heal duplicate postings rows (one corpus_id, several identical
-    rows) left by a crash in `stream_index_ingest`'s
-    postings-then-ledger window: rewrite each affected centroid
-    partition with a corpus_id-distinct frame. Partition-scoped — only
-    centroid directories that actually contain duplicates are
-    rewritten (the same touch-what-changed discipline as
-    `Warehouse.compact`); a clean index is a no-op beyond the
-    duplicate scan.
-
-    The heal key is (centroid_id, corpus_id) — the SAME key the dup
-    scan groups by. Healing on corpus_id alone would also collapse a
-    corpus_id legitimately present under two different centroids (an
-    id re-ingested with an updated embedding lands in a new partition
-    while the old row persists), dropping one of the two
-    nondeterministically; that cross-centroid shape is a re-ingest
-    artifact for `build_ivf_index`'s rebuild cadence to resolve, not
-    a crash dup for this heal to guess at."""
-    postings = wh.read(f"{name}__postings")
-    dup_parts = (
-        postings.groupBy("centroid_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .select("centroid_id")
-        .distinct()
-    )
-    parts = [int(r["centroid_id"]) for r in dup_parts.collect()]
-    if not parts:
-        return
-    healed = (
-        postings.filter(F.col("centroid_id").isin(parts))
-        .dropDuplicates(["centroid_id", "corpus_id"])
-    )
-    wh.overwrite_partitions(
-        healed, f"{name}__postings", partition_cols=["centroid_id"]
-    )
-
-
 def ivf_retrain_decision_indexed(
     wh,
     batch: DataFrame,
@@ -1215,12 +1125,11 @@ def ivf_retrain_decision_indexed(
     `ivf_retrain_decision`. One row:
     (n_base, n_cur, n_cats, psi_micro, retrain).
 
-    Why the snapshot and not live postings counts: the ingest loop
-    (`append_ivf_index` / `stream_index_ingest`) folds every new
-    batch into the postings, so a live-counted baseline progressively
-    absorbs the drifted data — PSI damps toward zero the longer the
-    stream runs, delaying the trigger exactly when drift has
-    accumulated most. For a legacy index persisted before the
+    Why the snapshot and not live postings counts: an ingest loop
+    that folds every new batch into the postings would make a
+    live-counted baseline progressively absorb the drifted data — PSI
+    damps toward zero the longer the stream runs, delaying the trigger
+    exactly when drift has accumulated most. For a legacy index persisted before the
     snapshot existed, the live postings counts remain the fallback
     (stated caveat: rebuild once to pin the baseline).
 

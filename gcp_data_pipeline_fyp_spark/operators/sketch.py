@@ -46,11 +46,6 @@ def _h60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def h60_sql(expr: str) -> str:
-    """DuckDB mirror of `_h60`."""
-    return f"cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"
-
-
 # ------------------------------------------------------------- count-min
 def cms_state(
     df: DataFrame, col: str, depth: int = 4, width: int = 1024

@@ -194,43 +194,6 @@ def topk_plan_decision(
     )
 
 
-def adaptive_topk_per_group(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    id_col: str,
-    k: int,
-    buckets: int = 32,
-    descending: bool = True,
-    skew_threshold_micro: int = 5_000_000,
-) -> DataFrame:
-    """Top-k per group with the plan CHOSEN by measurement
-    (`topk_plan_decision`): plain window when the key is balanced,
-    `salted_topk_per_group` when one key dominates. Both plans return
-    the identical row set (the salted plan is exact — pigeonhole, see
-    salted_topk_per_group), so the choice is purely a cost call and
-    this wrapper makes it from evidence instead of a config guess.
-
-    The decision costs one |keys|-sized aggregation and a one-row
-    collect before the real job — at 100 TB that pre-pass is noise
-    next to a mis-planned shuffle, and it is exactly what DEPLOY.md
-    prescribes doing manually."""
-    from pyspark.sql import Window
-
-    decision = topk_plan_decision(df, keys, skew_threshold_micro).first()
-    if decision is not None and decision["use_salted"]:
-        return salted_topk_per_group(
-            df, keys, order_col, id_col, k, buckets, descending
-        )
-    oc = F.col(order_col).desc() if descending else F.col(order_col).asc()
-    w = Window.partitionBy(*list(keys)).orderBy(oc, F.col(id_col).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .withColumnRenamed("__rn", "rank_in_group")
-    )
-
-
 def salted_topk_per_group(
     df: DataFrame,
     keys: Sequence[str],

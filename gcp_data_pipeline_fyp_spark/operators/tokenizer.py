@@ -147,52 +147,6 @@ def _apply_merge(syms: F.Column, left: str, right: str) -> F.Column:
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int = 10,
-    checkpoint_every: int = 3,
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Byte-pair-encoding merge training as DataFrame ops (Sennrich et
-    al. 2016, the distributed rendering).
-
-    Returns (merges, final_vocab): `merges` is the learned merge table
-    [(rank, left, right, pair_count)], `final_vocab` the (word, n,
-    symbols) frame after all merges.
-
-    Per round: one vocabulary-sized pair aggregation, a 1-row argmax
-    snapshot to the driver (the A4 MAX pattern — never the data), and
-    one column rewrite applying the merge. The corpus is touched ONCE
-    (the initial vocabulary collapse); every round after is
-    vocabulary-sized, which is what makes corpus-scale BPE training
-    tractable — plus per-few-rounds lineage truncation, since each
-    merge nests a fold expression over the previous round's.
-
-    Tie-break on (count desc, left, right) so the learned merge table
-    is deterministic on any partitioning.
-    """
-    vocab = word_counts(df, text_col).select(
-        "word", "n", F.split(F.col("word"), "").alias("__syms")
-    )
-    vocab = vocab.localCheckpoint(eager=True)
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(n_merges):
-        best = (
-            _symbol_pair_counts(vocab)
-            .orderBy(F.col("pair_count").desc(), "left", "right")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["pair_count"] < 1:
-            break
-        left, right, cnt = best[0]["left"], best[0]["right"], best[0]["pair_count"]
-        merges.append((rank, left, right, cnt))
-        vocab = vocab.withColumn("__syms", _apply_merge(F.col("__syms"), left, right))
-        if (rank + 1) % max(checkpoint_every, 1) == 0:
-            vocab = vocab.localCheckpoint(eager=True)
-    return merges, vocab.select("word", "n", F.col("__syms").alias("symbols"))
-
-
 def bpe_segment(
     df: DataFrame,
     text_col: str,
@@ -200,8 +154,8 @@ def bpe_segment(
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Segment text with a learned merge table: per word, apply the
-    merges in rank order (each a greedy left-to-right merge — exactly
-    the trainer's semantics), then flatten. Adds `out_col`
+    merges in rank order (each a greedy left-to-right merge, as a BPE
+    trainer applies it), then flatten. Adds `out_col`
     (array<string>) and `{out_col}_count` — the custom-vocab token
     count a data-mix or packing stage budgets with.
 
@@ -223,8 +177,7 @@ def bpe_segment(
     ' leftright ' preserves the invariant, and Java's left-to-right
     non-overlapping replace IS the greedy fold. Degenerate merge
     symbols that would break the rendering (empty, or containing a
-    space — unreachable from `bpe_train`, whose symbols come from
-    whitespace-split words) fall back to the fold form.
+    space) fall back to the fold form.
     """
     pairs = [(m[-3], m[-2]) if len(m) == 4 else (m[0], m[1]) for m in merges]
     renderable = all(

@@ -12,7 +12,7 @@ the same design as Delta Lake / Iceberg data skipping:
   (projection-pruned; `_metadata.file_path` is free) and stores one
   row per data file — row count plus min/max/null-count per column —
   under `<table>/_zonemap`. Underscore-prefixed, so root readers
-  never see it as data (same convention as the `_v{N}` snapshots).
+  never see it as data.
 - `read_pruned` evaluates interval predicates against the map IN
   EXECUTORS (the map is a DataFrame; the census joins it
   distributed), and the driver collects only the SURVIVING path list
@@ -28,8 +28,7 @@ the same design as Delta Lake / Iceberg data skipping:
 - Staleness is handled conservatively: data files NOT present in the
   map (e.g. appended after the last build) are always read;
   map entries whose file vanished (compaction, overwrite) are
-  ignored. `refresh_zonemap` stats only the unmapped files — an
-  incremental append to the map, not a rebuild.
+  ignored. Rebuild with `build_zonemap` to map new files.
 
 Pairing: `overwrite_range_layout(ts)` + zonemap on ts => a time-scoped
 query reads |range|/|table| of the files; zorder layout + zonemap on
@@ -120,25 +119,11 @@ def _census_df(wh: Warehouse, table: str) -> DataFrame:
     return out
 
 
-def _stats_for_files(
-    wh: Warehouse,
-    table: str,
-    files: Sequence[str] | None,
-    cols: Sequence[str],
-) -> DataFrame:
-    """One projection-pruned scan -> one stats row per file. With
-    `files=None` the whole table root is scanned (the full-build
-    path — no per-file list ever reaches the driver; Spark's own
+def _stats_for_files(wh: Warehouse, table: str, cols: Sequence[str]) -> DataFrame:
+    """One projection-pruned scan of the whole table root -> one stats
+    row per file. No per-file list ever reaches the driver: Spark's own
     file index does the listing and `_metadata.file_path` names the
-    groups)."""
-    if files is None:
-        df = wh.read(table)
-    else:
-        df = (
-            wh.spark.read.format(wh.fmt)
-            .option("basePath", wh.path(table))
-            .load(list(files))
-        )
+    groups."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"{c}__min"))
@@ -147,7 +132,8 @@ def _stats_for_files(
             F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls")
         )
     return (
-        df.select(F.col("_metadata.file_path").alias(_FILE), *cols)
+        wh.read(table)
+        .select(F.col("_metadata.file_path").alias(_FILE), *cols)
         .groupBy(_FILE)
         .agg(*aggs)
     )
@@ -156,8 +142,8 @@ def _stats_for_files(
 def build_zonemap(wh: Warehouse, table: str, cols: Sequence[str]) -> None:
     """(Re)build the zone map for `table` over `cols` — one scan of
     the whole table root; no file list is materialized anywhere."""
-    stats = _stats_for_files(wh, table, None, cols)
-    stats.coalesce(1).write.mode("overwrite").format(wh.fmt).save(
+    stats = _stats_for_files(wh, table, cols)
+    stats.coalesce(1).write.mode("overwrite").parquet(
         _zonemap_path(wh, table)
     )
 
@@ -170,44 +156,9 @@ def zonemap_cols_of(wh: Warehouse, table: str) -> list[str]:
         return []
     return [
         c[: -len("__min")]
-        for c in wh.spark.read.format(wh.fmt).load(zp).columns
+        for c in wh.spark.read.parquet(zp).columns
         if c.endswith("__min")
     ]
-
-
-def refresh_zonemap(wh: Warehouse, table: str, cols: Sequence[str]) -> int:
-    """Incrementally stat files appended since the last build; returns
-    the number of newly mapped files. Stale entries (vanished files)
-    are left in place — `read_pruned` ignores them."""
-    zp = _zonemap_path(wh, table)
-    if not os.path.exists(zp):
-        build_zonemap(wh, table, cols)
-        return _census_df(wh, table).count()
-    # mapped files never need to reach the driver: the DISTRIBUTED
-    # census anti-joins the map's path column and collects only the
-    # NEW paths
-    census = _census_df(wh, table).select(
-        F.col(_FILE), _norm_expr(F.col(_FILE)).alias("__path")
-    )
-    mapped = (
-        wh.spark.read.format(wh.fmt)
-        .load(zp)
-        .select(_norm_expr(F.col(_FILE)).alias("__path"))
-    )
-    new = sorted(
-        r[_FILE]
-        for r in census.join(mapped, "__path", "left_anti")
-        .select(_FILE)
-        .collect()
-    )
-    if not new:
-        return 0
-    _stats_for_files(wh, table, new, cols).coalesce(1).write.mode(
-        "append"
-    ).format(
-        wh.fmt
-    ).save(zp)
-    return len(new)
 
 
 def _norm(path: str) -> str:
@@ -275,7 +226,7 @@ def prune_files(
         files = sorted(r[_FILE] for r in census.collect())
         return files, len(files)
     total = census.count()
-    zm = wh.spark.read.format(wh.fmt).load(zp)
+    zm = wh.spark.read.parquet(zp)
     cond = F.lit(True)
     for c, (lo, hi) in intervals.items():
         if f"{c}__min" not in zm.columns:
@@ -298,9 +249,8 @@ def read_pruned(
     files, _total = prune_files(wh, table, intervals)
     if files:
         df = (
-            wh.spark.read.format(wh.fmt)
-            .option("basePath", wh.path(table))
-            .load(files)
+            wh.spark.read.option("basePath", wh.path(table))
+            .parquet(*files)
         )
     else:
         df = wh.read(table).limit(0)  # everything pruned: typed empty
@@ -387,7 +337,7 @@ def build_bucket_index(
         )
         .distinct()
     )
-    idx.coalesce(1).write.mode("overwrite").format(wh.fmt).save(
+    idx.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(wh.path(table), f"_bucketindex_{col}")
     )
 
@@ -410,8 +360,7 @@ def read_point_lookup(
         return wh.read(table).filter(F.col(col).isin(*values))
     probe_buckets = {_bucket_of(v, n_buckets) for v in values}
     verdicts = (
-        wh.spark.read.format(wh.fmt)
-        .load(ixp)
+        wh.spark.read.parquet(ixp)
         .groupBy(_FILE)
         .agg(
             F.max(
@@ -422,9 +371,8 @@ def read_point_lookup(
     files = _surviving_files(wh, _census_df(wh, table), verdicts)
     if files:
         df = (
-            wh.spark.read.format(wh.fmt)
-            .option("basePath", wh.path(table))
-            .load(files)
+            wh.spark.read.option("basePath", wh.path(table))
+            .parquet(*files)
         )
     else:
         df = wh.read(table).limit(0)

@@ -11,7 +11,4 @@ from gcp_data_pipeline_fyp_spark.plans.ods import stage_ods  # noqa: F401
 from gcp_data_pipeline_fyp_spark.plans.geo_stage import stage_geo  # noqa: F401
 from gcp_data_pipeline_fyp_spark.plans.dw import stage_dw_full  # noqa: F401
 from gcp_data_pipeline_fyp_spark.plans.delta import stage_dw_delta  # noqa: F401
-from gcp_data_pipeline_fyp_spark.plans.pipeline import (  # noqa: F401
-    choose_mode,
-    run_pipeline,
-)
+from gcp_data_pipeline_fyp_spark.plans.pipeline import run_pipeline  # noqa: F401

@@ -72,13 +72,6 @@ def totals_by_type(star: DataFrame) -> DataFrame:
     )
 
 
-def total_by_type(star: DataFrame, type_literal: str) -> DataFrame:
-    return (
-        star.filter(F.col("LB_type") == type_literal)
-        .agg(F.count("*").alias("total_events"))
-    )
-
-
 def total_seismic_events(star: DataFrame, by: Sequence[str] | None = None) -> DataFrame:
     """Q12: COUNT(*) over fact (:68)."""
     return _agg(star, F.count("*").alias("total_seismic_events"), by)

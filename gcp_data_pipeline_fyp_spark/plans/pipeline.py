@@ -2,11 +2,11 @@
 
 The reference needs a Cloud Function + Airflow DAG + five Dataflow
 submissions per run; here the control plane is ordinary Python —
-`choose_mode` is the calendar trigger (`cloud_function.py:12-31`),
-`branch_for_filename` the DAG's filename-prefix branch
-(`load_controller_DAG.py:6-13`), `run_pipeline` the five-stage chain
-(`:187-188`). The 120s eventual-consistency sleep (O5) has no Spark
-equivalent and is dropped.
+the calendar trigger (`cloud_function.py:12-31`) is
+`sources/files.feed_request_for`, `branch_for_filename` the DAG's
+filename-prefix branch (`load_controller_DAG.py:6-13`), `run_pipeline`
+the five-stage chain (`:187-188`). The 120s eventual-consistency sleep
+(O5) has no Spark equivalent and is dropped.
 """
 
 from __future__ import annotations
@@ -24,11 +24,6 @@ from gcp_data_pipeline_fyp_spark.plans.ods import stage_ods
 from gcp_data_pipeline_fyp_spark.plans.staging import stage_staging
 from gcp_data_pipeline_fyp_spark.sources.files import archive_file, read_raw_csv
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-
-def choose_mode(run_date: _dt.date) -> str:
-    """Day 1 of month -> full (previous month), else daily delta (O1)."""
-    return "full" if run_date.day == 1 else "delta"
 
 
 def branch_for_filename(filename: str) -> str:

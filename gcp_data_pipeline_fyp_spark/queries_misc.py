@@ -1139,8 +1139,7 @@ def q_skew_plan_choice(spark: SparkSession, sf: str) -> DataFrame:
     plain_window) and a banded hot key concentrating ~95% of rows
     (ratio ~8 → salted_two_phase) — so BOTH branches of the decision
     are driver-certified, threshold 5x mean (Spark AQE's
-    skewedPartitionFactor). `adaptive_topk_per_group` dispatches on
-    this same row; its plan-equivalence is pinned in pytest."""
+    skewedPartitionFactor)."""
     from gcp_data_pipeline_fyp_spark.operators.skew import (
         topk_plan_decision,
     )

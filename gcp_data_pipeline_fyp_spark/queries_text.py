@@ -5166,7 +5166,7 @@ def q_dsir_indexed(spark: SparkSession, sf: str) -> DataFrame:
     2.1 s frozen-profile scoring at sf0.1 (BASELINE.md), and the fit
     is exactly what the index amortizes away (the same
     build-once/reuse discipline as build_ivf_index /
-    build_lsh_index / build_digest_index)."""
+    build_lsh_index)."""
     from gcp_data_pipeline_fyp_spark.operators.dsir import (
         build_dsir_profiles,
         dsir_logweights_indexed,

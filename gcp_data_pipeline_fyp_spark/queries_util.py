@@ -78,12 +78,6 @@ def scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
     )
 
 
-def dec_sum(col: Column | str, alias: str) -> Column:
-    """Order-independent double sum: exact decimal(18,2) sum cast back to double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("decimal(18,2)")).cast("double").alias(alias)
-
-
 def dec_avg(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Deterministic average: exact decimal sum / count, rounded
     (cross-engine-safe `roundn`, paired with `dec_avg_sql`)."""
@@ -155,10 +149,6 @@ def micro6(col: Column | str) -> Column:
 def micro6_sql(expr: str) -> str:
     """DuckDB mirror of `micro6` (same scale-then-round-once chain)."""
     return f"CAST(round(({expr}) * 1000000.0) AS BIGINT)"
-
-
-def dec_sum_sql(expr: str, alias: str) -> str:
-    return f"cast(sum(cast({expr} as decimal(18,2))) as double) as {alias}"
 
 
 def dec_avg_sql(expr: str, alias: str, scale: int = 6) -> str:

@@ -2,7 +2,6 @@
 
 from gcp_data_pipeline_fyp_spark.sources.files import (  # noqa: F401
     archive_file,
-    latest_matching_file,
     read_raw_csv,
     write_rejected,
 )

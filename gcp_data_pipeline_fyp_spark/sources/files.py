@@ -10,7 +10,6 @@ mode, and short-row padding semantics (`stg_full_load.py:53-67`).
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 import shutil
@@ -27,14 +26,6 @@ RAW_EVENT_COLUMNS = [
     "horizontalError", "depthError", "magError", "magNst", "status",
     "locationSource", "magSource",
 ]
-
-
-def latest_matching_file(pattern: str) -> str | None:
-    """Glob + max(mtime) file pick (stg_full_load.py:37-48)."""
-    matches = _glob.glob(pattern)
-    if not matches:
-        return None
-    return max(matches, key=os.path.getmtime)
 
 
 def read_raw_csv(

@@ -18,7 +18,7 @@ surface and back out.
   as the CSV staging gate, reference parity S10).
 - **Compression on write.** gzip per the public-corpus convention
   (zstd when the cluster has it); one file per shard bounded by
-  `maxRecordsPerFile` — same knobs as the parquet shard export.
+  `maxRecordsPerFile`.
 """
 
 from __future__ import annotations

@@ -63,16 +63,9 @@ def zorder_value(
 
 
 class Warehouse:
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        """`fmt`: any columnar format Spark ships a native reader for
-        ("parquet" default, "orc" supported out of the box). Every
-        table operation — including the rename-promotion, compaction,
-        and layout helpers, which are path-based — works unchanged;
-        projection/filter pushdown and min/max skipping apply to both
-        formats."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
         os.makedirs(root, exist_ok=True)
 
     def path(self, table: str) -> str:
@@ -82,7 +75,7 @@ class Warehouse:
         return os.path.exists(self.path(table))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path(table))
+        return self.spark.read.parquet(self.path(table))
 
     def read_evolved(self, table: str) -> DataFrame:
         """Schema-evolution-aware read: the schema is the UNION of
@@ -97,8 +90,7 @@ class Warehouse:
         additive evolution only; widen via a rewrite."""
         return (
             self.spark.read.option("mergeSchema", True)
-            .format(self.fmt)
-            .load(self.path(table))
+            .parquet(self.path(table))
         )
 
     def overwrite(
@@ -107,7 +99,7 @@ class Warehouse:
         w = df.write.mode("overwrite")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
-        w.format(self.fmt).save(self.path(table))
+        w.parquet(self.path(table))
 
     def append(
         self, df: DataFrame, table: str, partition_cols: Sequence[str] | None = None
@@ -115,7 +107,7 @@ class Warehouse:
         w = df.write.mode("append")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
-        w.format(self.fmt).save(self.path(table))
+        w.parquet(self.path(table))
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_cols: Sequence[str]
@@ -125,7 +117,7 @@ class Warehouse:
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
-            .format(self.fmt).save(self.path(table))
+            .parquet(self.path(table))
         )
 
     def drop(self, table: str) -> None:
@@ -133,45 +125,11 @@ class Warehouse:
         if os.path.exists(p):
             shutil.rmtree(p)
 
-    def overwrite_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: Sequence[str],
-        n_buckets: int = 32,
-        sort_cols: Sequence[str] | None = None,
-    ) -> None:
-        """Bucketed managed table (catalog): co-located joins/aggs.
-
-        Two tables bucketed by the same key and count join WITHOUT a
-        shuffle exchange on either side — at 100 TB this is the
-        difference between an in-place merge join and re-shuffling the
-        fact table every query. Bucketed writes must go through
-        `saveAsTable` (the catalog records bucketing metadata).
-        """
-        w = (
-            df.write.mode("overwrite")
-            .format(self.fmt)
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(table)
-
-    def read_table(self, table: str) -> DataFrame:
-        return self.spark.table(table)
-
-    def swap(self, staging_table: str, table: str) -> None:
-        """Promote a staging table to final via rename-with-backup.
-
-        The old table is renamed aside BEFORE the staging table moves
-        into place, so a crash at any point leaves either the old or
-        the new data recoverable on disk — never a window with no
-        table (each os.rename is atomic on local/HDFS filesystems;
-        object stores should use the copy path instead).
-        """
-        final = self.path(table)
-        staged = self.path(staging_table)
+    @staticmethod
+    def _promote(staged: str, final: str) -> None:
+        """Rename directory `staged` to `final`, keeping the old `final`
+        as `final.__backup` until the new one is in place (rolled back
+        if the rename fails)."""
         backup = final + ".__backup"
         if os.path.exists(backup):
             shutil.rmtree(backup)
@@ -186,6 +144,17 @@ class Warehouse:
             raise
         if had_old:
             shutil.rmtree(backup)
+
+    def swap(self, staging_table: str, table: str) -> None:
+        """Promote a staging table to final via rename-with-backup.
+
+        The old table is renamed aside BEFORE the staging table moves
+        into place, so a crash at any point leaves either the old or
+        the new data recoverable on disk — never a window with no
+        table (each os.rename is atomic on local/HDFS filesystems;
+        object stores should use the copy path instead).
+        """
+        self._promote(self.path(staging_table), self.path(table))
 
     def swap_partitions(self, staging_table: str, table: str, partition_col: str) -> None:
         """Promote only the partition dirs present in staging into `table`.
@@ -203,21 +172,7 @@ class Warehouse:
             staged = os.path.join(staged_root, entry)
             if not entry.startswith(prefix) or not os.path.isdir(staged):
                 continue  # _SUCCESS and friends
-            final = os.path.join(final_root, entry)
-            backup = final + ".__backup"
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            had_old = os.path.exists(final)
-            if had_old:
-                os.rename(final, backup)
-            try:
-                os.rename(staged, final)
-            except OSError:
-                if had_old:
-                    os.rename(backup, final)  # roll back
-                raise
-            if had_old:
-                shutil.rmtree(backup)
+            self._promote(staged, os.path.join(final_root, entry))
         self.drop(staging_table)
 
     def drop_partitions(
@@ -256,7 +211,7 @@ class Warehouse:
         root = self.path(table)
         staging = table + "__compacting"
 
-        ext = f".{self.fmt}"
+        ext = ".parquet"
 
         def _bytes(d: str) -> int:
             return sum(
@@ -320,7 +275,7 @@ class Warehouse:
             .sortWithinPartitions("__z")
             .drop("__z")
             .write.mode("overwrite")
-            .format(self.fmt).save(self.path(table))
+            .parquet(self.path(table))
         )
 
     def overwrite_range_layout(
@@ -344,93 +299,5 @@ class Warehouse:
             df.repartitionByRange(n, *order_cols)
             .sortWithinPartitions(*order_cols)
             .write.mode("overwrite")
-            .format(self.fmt).save(self.path(table))
+            .parquet(self.path(table))
         )
-
-    # ----------------------------------------- versioned tables (time travel)
-    def _version_dirs(self, table: str) -> list[int]:
-        root = self.path(table)
-        if not os.path.exists(root):
-            return []
-        return sorted(
-            int(e[2:])
-            for e in os.listdir(root)
-            if e.startswith("_v") and e[2:].isdigit()
-            and os.path.isdir(os.path.join(root, e))
-        )
-
-    def current_version(self, table: str) -> int | None:
-        ptr = os.path.join(self.path(table), "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return int(fh.read().strip())
-
-    def _set_current(self, table: str, version: int) -> None:
-        # write-then-replace: readers see the old pointer or the new
-        # one, never a torn file (os.replace is atomic)
-        ptr = os.path.join(self.path(table), "_CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, ptr)
-
-    def overwrite_versioned(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_cols: Sequence[str] | None = None,
-        keep_versions: int = 3,
-    ) -> int:
-        """Snapshot-isolated overwrite: write a NEW immutable version
-        directory, then flip a one-line pointer file. Returns the new
-        version number.
-
-        Plain `overwrite` deletes the old files before the new ones
-        commit — at 100 TB a long-running reader mid-scan of the old
-        snapshot dies, and a crashed write leaves no table at all.
-        Here every version dir is immutable once written (readers that
-        resolved the pointer keep reading intact files for as long as
-        they like), the flip is one atomic rename, a crashed write
-        leaves an orphan `_v` dir the next vacuum removes — and
-        `rollback` is a pointer flip, not a data rewrite. Version dirs
-        are underscore-prefixed, so a path reader pointed at the table
-        ROOT sees no data files at all rather than a mix of snapshots
-        — versioned tables are read via `read_versioned` only.
-
-        The last `keep_versions` versions are retained (the new one
-        included); older dirs are vacuumed unless the pointer still
-        references them.
-        """
-        versions = self._version_dirs(table)
-        new_v = (versions[-1] + 1) if versions else 1
-        vpath = os.path.join(self.path(table), f"_v{new_v}")
-        w = df.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.format(self.fmt).save(vpath)
-        self._set_current(table, new_v)
-        for old in self._version_dirs(table)[:-keep_versions]:
-            if old != new_v and old != self.current_version(table):
-                shutil.rmtree(os.path.join(self.path(table), f"_v{old}"))
-        return new_v
-
-    def read_versioned(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the pointed-to snapshot (default) or a pinned older
-        `version` that vacuum still retains."""
-        v = version if version is not None else self.current_version(table)
-        if v is None:
-            raise ValueError(f"{table} has no versions")
-        vpath = os.path.join(self.path(table), f"_v{v}")
-        if not os.path.isdir(vpath):
-            raise ValueError(f"{table} version {v} does not exist (vacuumed?)")
-        return self.spark.read.format(self.fmt).load(vpath)
-
-    def rollback(self, table: str, version: int) -> None:
-        """Flip the pointer back to a retained older version — an O(1)
-        metadata operation, no data rewrite. The rolled-past version
-        dirs stay on disk until a later overwrite's vacuum."""
-        vpath = os.path.join(self.path(table), f"_v{version}")
-        if not os.path.isdir(vpath):
-            raise ValueError(f"{table} version {version} does not exist")
-        self._set_current(table, version)

@@ -9,6 +9,5 @@ same stages driven by a file-source stream with
 """
 
 from gcp_data_pipeline_fyp_spark.streaming.ingest import (  # noqa: F401
-    stream_ingest_available_now,
     windowed_event_counts,
 )

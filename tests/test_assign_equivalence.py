@@ -287,18 +287,14 @@ def test_assign_agg_fallback_matches_fold_dense(spark):
 def test_stored_index_paths_take_agg_form_above_the_ceiling(
     spark, tmp_path, monkeypatch
 ):
-    """The stored-index assignments — `append_ivf_index`, the indexed
-    retrain decision and `stream_retrain_monitor` — size `_assign` by
-    the stored codebook: with the ceiling below a 4-centroid index all
-    three take `_assign_agg`, and their outputs equal the fold run's."""
+    """The stored-index assignment of the indexed retrain decision sizes
+    `_assign` by the stored codebook: with the ceiling below a
+    4-centroid index it takes `_assign_agg`, and its output equals the
+    fold run's."""
     import random
-    import shutil
 
     from gcp_data_pipeline_fyp_spark.operators import similarity as sim
     from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_retrain_monitor,
-    )
 
     rng = random.Random(5)
     centers = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(4)]
@@ -308,20 +304,11 @@ def test_stored_index_paths_take_agg_form_above_the_ceiling(
 
     schema = "vec_id long, embedding array<double>"
     corpus = spark.createDataFrame([(i, vec(i % 4)) for i in range(80)], schema)
-    new_rows = [(1000 + i, vec(i % 3)) for i in range(30)]
-    batch = spark.createDataFrame(new_rows, schema)
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    (feed / "b.csv").write_text(
-        "vec_id,emb\n"
-        + "\n".join(f"{i},{'|'.join(map(str, v))}" for i, v in new_rows)
-        + "\n"
+    batch = spark.createDataFrame(
+        [(1000 + i, vec(i % 3)) for i in range(30)], schema
     )
-    built = str(tmp_path / "built")
-    sim.build_ivf_index(
-        Warehouse(spark, built), corpus, "vec_id", "embedding", "ix",
-        n_centroids=4,
-    )
+    wh = Warehouse(spark, str(tmp_path / "built"))
+    sim.build_ivf_index(wh, corpus, "vec_id", "embedding", "ix", n_centroids=4)
 
     agg_calls = []
     real_agg = sim._assign_agg
@@ -332,34 +319,17 @@ def test_stored_index_paths_take_agg_form_above_the_ceiling(
 
     monkeypatch.setattr(sim, "_assign_agg", counting_agg)
 
-    def run(tag):
-        root = str(tmp_path / tag)
-        shutil.copytree(built, root)
-        wh = Warehouse(spark, root)
-        calls = []
+    def run():
         del agg_calls[:]
-        sim.append_ivf_index(wh, batch, "vec_id", "embedding", "ix")
-        appended = sorted(
-            (r.corpus_id, r.centroid_id)
-            for r in wh.read("ix__postings").filter("corpus_id >= 1000").collect()
-        )
-        calls.append(len(agg_calls))
         decision = sim.ivf_retrain_decision_indexed(
             wh, batch, "vec_id", "embedding", "ix"
         ).first().asDict()
-        calls.append(len(agg_calls) - sum(calls))
-        stream_retrain_monitor(
-            spark, str(feed), "vec_id long, emb string", "vec_id", "emb", wh,
-            "ix", "STATE", "REPORT", str(tmp_path / f"{tag}_ckpt"),
-        ).awaitTermination(120)
-        report = [r.asDict() for r in wh.read("REPORT").collect()]
-        calls.append(len(agg_calls) - sum(calls))
-        return (appended, decision, report), calls
+        return decision, len(agg_calls)
 
-    fold_out, fold_calls = run("fold")
-    assert fold_calls == [0, 0, 0]
+    fold_out, fold_calls = run()
+    assert fold_calls == 0
     monkeypatch.setattr(sim, "_ASSIGN_FOLD_MAX_CENTROIDS", 3)
-    agg_out, agg_calls_per_path = run("agg")
-    assert all(n >= 1 for n in agg_calls_per_path), agg_calls_per_path
+    agg_out, agg_calls_n = run()
+    assert agg_calls_n >= 1
     assert agg_out == fold_out
-    assert len(fold_out[0]) == 30 and len(fold_out[2]) == 1
+    assert fold_out["n_cur"] == 30

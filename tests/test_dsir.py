@@ -12,10 +12,17 @@ from gcp_data_pipeline_fyp_spark.operators.dsir import (
     dsir_log_ratios,
     dsir_logweights,
     dsir_sample,
-    feature_buckets,
+    feature_buckets_of_toks,
 )
+from gcp_data_pipeline_fyp_spark.functions.text import _coalesce_toks, tokens
 
 B = 256
+
+
+def _text_buckets(text, n_buckets, bigrams=True):
+    """The hashed features of raw text, as the profile builders derive
+    them: NULL text tokenizes like an empty document."""
+    return feature_buckets_of_toks(_coalesce_toks(tokens(text)), n_buckets, bigrams)
 
 
 def _docs(spark, rows):
@@ -24,7 +31,7 @@ def _docs(spark, rows):
 
 def test_feature_buckets_counts_and_range(spark):
     df = spark.range(1).select(
-        feature_buckets(F.lit("a b c d"), n_buckets=B).alias("f")
+        _text_buckets(F.lit("a b c d"), n_buckets=B).alias("f")
     )
     feats = df.first()["f"]
     # 4 unigrams + 3 bigrams, every bucket in [0, B)
@@ -32,7 +39,7 @@ def test_feature_buckets_counts_and_range(spark):
     assert all(0 <= b < B for b in feats)
     # unigram-only: no bigram features
     df1 = spark.range(1).select(
-        feature_buckets(F.lit("a b c d"), n_buckets=B, bigrams=False).alias("f")
+        _text_buckets(F.lit("a b c d"), n_buckets=B, bigrams=False).alias("f")
     )
     assert len(df1.first()["f"]) == 4
 
@@ -40,7 +47,7 @@ def test_feature_buckets_counts_and_range(spark):
 def test_feature_buckets_degenerate_text(spark):
     out = spark.createDataFrame(
         [(1, None), (2, "solo")], "id bigint, text string"
-    ).select("id", feature_buckets("text", n_buckets=B).alias("f"))
+    ).select("id", _text_buckets("text", n_buckets=B).alias("f"))
     rows = {r["id"]: r["f"] for r in out.collect()}
     assert rows[1] == []  # NULL text -> no features
     assert len(rows[2]) == 1  # one token, no bigram
@@ -376,38 +383,6 @@ def test_persisted_profiles_match_direct_path(spark, tmp_path):
     indexed = {
         (r["id"], r["logw"], r["n_feats"])
         for r in dsir_logweights_indexed(wh, raw, "id", "DS").collect()
-    }
-    assert indexed == direct
-
-
-def test_fold_raw_profile_equals_full_refit(spark, tmp_path):
-    """Folding a batch into the persisted raw profile == refitting on
-    raw UNION batch (the distributive-merge property the streaming
-    form relies on), so indexed scoring after the fold == direct
-    scoring with raw=union."""
-    from gcp_data_pipeline_fyp_spark.operators.dsir import (
-        build_dsir_profiles,
-        dsir_logweights_indexed,
-        fold_dsir_raw_profile,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    base = _docs(spark, [(1, "x y"), (2, "p q p")])
-    batch = _docs(spark, [(3, "x x q"), (4, "y p")])
-    target = _docs(spark, [(10, "x y")])
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    build_dsir_profiles(wh, base, target, "DS", n_buckets=B)
-    fold_dsir_raw_profile(wh, batch, "DS")
-    union = base.unionByName(batch)
-    direct = {
-        (r["id"], r["logw"], r["n_feats"])
-        for r in dsir_logweights(
-            batch, "id", target, n_buckets=B, raw=union
-        ).collect()
-    }
-    indexed = {
-        (r["id"], r["logw"], r["n_feats"])
-        for r in dsir_logweights_indexed(wh, batch, "id", "DS").collect()
     }
     assert indexed == direct
 

@@ -103,62 +103,13 @@ def test_calibration_validation(spark):
         calibration_report(df, "score", "label", lo=1.0, hi=0.0)
 
 
-def test_calibration_state_merge_equals_oneshot(spark):
-    from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
-        calibration_from_state,
-        calibration_state,
-        merge_calibration_states,
-    )
-
-    rows1 = [(0.1 * (i % 10), i % 2 == 0) for i in range(50)]
-    rows2 = [(0.1 * (i % 7), i % 3 == 0) for i in range(30)]
-    d1 = spark.createDataFrame(rows1, "score: double, label: boolean")
-    d2 = spark.createDataFrame(rows2, "score: double, label: boolean")
-    both = spark.createDataFrame(rows1 + rows2, "score: double, label: boolean")
-    merged = merge_calibration_states(
-        [calibration_state(d1, "score", "label"), calibration_state(d2, "score", "label")]
-    )
-    got = {r["bin"]: tuple(r) for r in calibration_from_state(merged).collect()}
-    want = {r["bin"]: tuple(r) for r in calibration_report(both, "score", "label").collect()}
-    assert got == want
-
-
-def test_binned_auc_tracks_exact_auc(spark):
-    import random
-
-    from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
-        calibration_state,
-        quality_summary_from_state,
-    )
-
-    rnd = random.Random(3)
-    # separable-ish scores: positives skew high
-    pairs = [
-        (min(0.999, max(0.0, rnd.gauss(0.7 if y else 0.3, 0.15))), y)
-        for y in (rnd.random() < 0.4 for _ in range(600))
-    ]
-    df = spark.createDataFrame(pairs, "score: double, label: boolean")
-    exact = roc_auc(df, "score", "label").first()["auc_micro"]
-    binned = quality_summary_from_state(
-        calibration_state(df, "score", "label", n_bins=20)
-    ).first()["auc_binned_micro"]
-    # binned AUC understates |AUC-0.5| by at most within-bin mixing;
-    # at 20 bins over this spread it stays within a few points
-    assert abs(binned - exact) < 30_000
-    assert binned <= exact  # understates toward 0.5 for AUC > 0.5
-
-
 def test_nan_scores_excluded_everywhere(spark):
-    from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
-        calibration_state,
-    )
-
     rows = [(0.9, True), (0.1, False), (float("nan"), True)]
     df = spark.createDataFrame(rows, "score: double, label: boolean")
     r = roc_auc(df, "score", "label").first()
     assert (r["n_pos"], r["n_neg"]) == (1, 1)
-    st = calibration_state(df, "score", "label")
-    assert st.agg(F.sum("n")).first()[0] == 2
+    cal = calibration_report(df, "score", "label")
+    assert cal.agg(F.sum("n")).first()[0] == 2
 
 
 def test_grouped_auc_matches_per_group_naive(spark):

@@ -1,25 +1,14 @@
-"""File-utility units: glob+latest pick, archive naming (S3, S11, P19)."""
+"""File-utility units: archive naming and moves, the feed calendar and
+warehouse reads (S11, P19)."""
 
 from __future__ import annotations
 
 import os
-import time
 
 from gcp_data_pipeline_fyp_spark.sources.files import (
     archive_date_from_filename,
     archive_file,
-    latest_matching_file,
 )
-
-
-def test_latest_matching_file(tmp_path):
-    a = tmp_path / "whole_month_202401.csv"
-    b = tmp_path / "whole_month_202402.csv"
-    a.write_text("x")
-    time.sleep(0.05)
-    b.write_text("y")
-    assert latest_matching_file(str(tmp_path / "whole_month_*.csv")) == str(b)
-    assert latest_matching_file(str(tmp_path / "all_day_*.csv")) is None
 
 
 def test_archive_date_extract():
@@ -57,36 +46,6 @@ def test_feed_request_calendar():
     assert mode == "delta"
     assert name == "all_day_20240415-133045.csv"
     assert url.endswith("all_day.csv")
-
-
-def test_training_shard_export_deterministic(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from gcp_data_pipeline_fyp_spark.sources.export import write_training_shards
-
-    df = spark.range(0, 300).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("t"), F.col("id")).alias("text")
-    )
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_training_shards(df, p1, ["doc_id"], n_shards=4, max_records_per_file=20)
-    # different input partitioning -> identical shard membership + order
-    write_training_shards(df.repartition(7), p2, ["doc_id"], n_shards=4)
-    r1 = spark.read.parquet(p1)
-    r2 = spark.read.parquet(p2)
-    assert r1.count() == 300
-    shards = sorted(
-        r["shard"] for r in r1.select("shard").distinct().collect()
-    )
-    assert shards == [0, 1, 2, 3]
-    a = {(r["shard"], r["doc_id"]) for r in r1.collect()}
-    b = {(r["shard"], r["doc_id"]) for r in r2.collect()}
-    assert a == b
-    # record cap respected: every file holds <= 20 rows
-    for f in glob.glob(p1 + "/shard=*/part-*.parquet"):
-        n = spark.read.parquet(f).count()
-        assert n <= 20, f
 
 
 # ------------------------------------------------ JSONL source/sink
@@ -144,138 +103,6 @@ def test_jsonl_read_is_single_pass_no_inference(spark, tmp_path):
         spark, str(src), "doc_id long, text string", keep_corrupt=False
     )
     assert df.schema.simpleString() == "struct<doc_id:bigint,text:string>"
-
-
-def test_warehouse_orc_format(spark, tmp_path):
-    """The warehouse is format-parametric: an ORC-backed instance
-    round-trips overwrite/append/partitioned writes, the rename-based
-    staging swap (path-level, format-agnostic) still promotes, and
-    partition pruning reaches the ORC scan."""
-    from pyspark.sql import functions as F
-
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), fmt="orc")
-    df = spark.createDataFrame(
-        [(1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2")],
-        "id long, v string, part string",
-    )
-    wh.overwrite(df, "t", partition_cols=["part"])
-    assert sorted(r["id"] for r in wh.read("t").collect()) == [1, 2, 3]
-    wh.append(
-        spark.createDataFrame([(4, "d", "p2")], "id long, v string, part string"),
-        "t",
-        partition_cols=["part"],
-    )
-    assert wh.read("t").count() == 4
-    # files on disk really are ORC
-    import glob
-
-    files = glob.glob(str(tmp_path / "wh" / "t" / "part=p1" / "*"))
-    assert any(f.endswith(".orc") for f in files), files
-    # partition pruning reaches the scan
-    plan = (
-        wh.read("t").filter(F.col("part") == "p1")._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    assert "PartitionFilters: [" in plan and "part" in plan
-    # staging swap is path-based and format-agnostic
-    wh.overwrite(df.withColumn("v", F.lit("swapped")), "t__staging")
-    wh.swap("t__staging", "t")
-    assert {r["v"] for r in wh.read("t").collect()} == {"swapped"}
-
-
-def test_shard_manifest_write_and_verify(spark, tmp_path):
-    """The shard integrity contract: manifest matches the written
-    tree, verification is layout-independent (a recomputation over a
-    different session sees identical fingerprints), and corruption —
-    a deleted shard file — is detected and attributed."""
-    import os
-    import shutil
-
-    from gcp_data_pipeline_fyp_spark.sources.export import (
-        verify_shards,
-        write_shard_manifest,
-        write_training_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc text {i}") for i in range(200)], "doc_id long, text string"
-    )
-    p = str(tmp_path / "shards")
-    write_training_shards(df, p, ["doc_id"], n_shards=4, max_records_per_file=20)
-    manifest = write_shard_manifest(spark, p)
-    assert manifest["total_rows"] == 200
-    assert manifest["n_shards"] == 4
-    assert manifest["columns"] == ["doc_id", "text"]
-    assert verify_shards(spark, p) == []
-
-    # corruption: drop one parquet file from one shard dir
-    shard_dirs = sorted(
-        d for d in os.listdir(p) if d.startswith("shard=")
-    )
-    victim_dir = os.path.join(p, shard_dirs[0])
-    victim_file = sorted(
-        f for f in os.listdir(victim_dir) if f.endswith(".parquet")
-    )[0]
-    os.remove(os.path.join(victim_dir, victim_file))
-    problems = verify_shards(spark, p)
-    assert len(problems) == 1 and problems[0].startswith(
-        f"shard {shard_dirs[0].split('=')[1]}: n_rows"
-    )
-
-    # a fully missing shard is reported as missing
-    shutil.rmtree(victim_dir)
-    assert any("missing on disk" in s for s in verify_shards(spark, p))
-
-    # schema drift is attributed ONCE, not as per-shard fingerprint noise
-    import json
-
-    mpath = os.path.join(p, "_MANIFEST.json")
-    with open(mpath) as fh:
-        m = json.load(fh)
-    m["columns"] = ["doc_id", "renamed_text"]
-    with open(mpath, "w") as fh:
-        json.dump(m, fh)
-    problems = verify_shards(spark, p)
-    assert len(problems) == 1 and problems[0].startswith("schema mismatch")
-
-
-def test_versioned_overwrite_time_travel_rollback_vacuum(spark, tmp_path):
-    """Versioned tables: each overwrite lands in a new immutable _v dir
-    + pointer flip; old snapshots stay readable (time travel), rollback
-    is a pointer flip, vacuum retains keep_versions, and a reader
-    pointed at the table ROOT sees no data files (underscore dirs)."""
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    v1 = wh.overwrite_versioned(
-        spark.range(5).withColumnRenamed("id", "k"), "t", keep_versions=2
-    )
-    v2 = wh.overwrite_versioned(
-        spark.range(9).withColumnRenamed("id", "k"), "t", keep_versions=2
-    )
-    assert (v1, v2) == (1, 2)
-    assert wh.current_version("t") == 2
-    assert wh.read_versioned("t").count() == 9
-    assert wh.read_versioned("t", version=1).count() == 5  # time travel
-
-    wh.rollback("t", 1)
-    assert wh.read_versioned("t").count() == 5
-    wh.rollback("t", 2)
-
-    v3 = wh.overwrite_versioned(
-        spark.range(3).withColumnRenamed("id", "k"), "t", keep_versions=2
-    )
-    assert v3 == 3
-    assert wh._version_dirs("t") == [2, 3]  # v1 vacuumed
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        wh.read_versioned("t", version=1)
-    with _pytest.raises(ValueError):
-        wh.rollback("t", 1)
-
 
 
 def test_read_evolved_unions_footers(spark, tmp_path):

@@ -85,40 +85,6 @@ def test_stable_event_id_deterministic(spark):
     assert 0 <= id1 < 2**60
 
 
-def test_stable_event_id_sha1_reference_parity(spark):
-    """The sha1 variant reproduces the reference delta-load id
-    bit-for-bit (`ods_delta_load2.py:21-24`):
-    int(sha1(f"{t}_{lat}_{lon}").hexdigest()[:16], 16) & 0x7FF...F.
-    Pins the engine's P12 contract: md5-60-bit is the standard
-    (oracle-replicable), sha1 is the reference-parity opt-in."""
-    import hashlib
-
-    from gcp_data_pipeline_fyp_spark.functions.ids import (
-        stable_event_id_sha1,
-    )
-
-    rows = [
-        ("2024-01-01 10:00:00", "1.5", "2.5"),
-        ("2024-03-07 23:59:59", "-38.16", "176.3"),
-        ("1970-01-01 00:00:00", "0.0", "0.0"),
-    ]
-    df = spark.createDataFrame(rows, "t string, a string, b string")
-    got = [
-        r["i"]
-        for r in df.select(
-            stable_event_id_sha1("t", "a", "b").alias("i")
-        ).collect()
-    ]
-    exp = [
-        int(
-            hashlib.sha1(f"{t}_{a}_{b}".encode()).hexdigest()[:16], 16
-        )
-        & 0x7FFFFFFFFFFFFFFF
-        for t, a, b in rows
-    ]
-    assert got == exp
-
-
 def test_utc_to_local_dst(spark):
     # P11 — Europe/Bucharest is EET (+2) in winter, EEST (+3) in summer;
     # the reference's fixed +3h full-load variant is intentionally NOT

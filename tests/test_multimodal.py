@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 
 from gcp_data_pipeline_fyp_spark.multimodal.binary_ops import (
     byte_features,
-    decode_image,
-    plan_frame_offsets,
     with_media_column,
 )
 
@@ -27,101 +25,6 @@ def test_byte_features_roundtrip(spark):
     assert out[1]["n_space_bytes"] == 1
     assert out[1]["content_md5"] == hashlib.md5(b"hello world").hexdigest()
     assert out[2]["n_space_bytes"] == 2
-
-
-def test_decode_image_is_gated(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    media = with_media_column(df, "text", "doc_id")
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("pillow present; decode path live")
-    except ImportError:
-        with pytest.raises(NotImplementedError):
-            decode_image(media)
-
-
-def test_frame_offset_plan(spark):
-    df = spark.createDataFrame(
-        [(1, "video", None, None, None, 4000, bytearray(b"vv"))],
-        "media_id long, media_type string, mime string, width int, height int,"
-        " duration_ms int, payload binary",
-    )
-    out = plan_frame_offsets(df, every_ms=1000, max_frames=16).collect()
-    assert list(out[0]["frame_offsets_ms"]) == [0, 1000, 2000, 3000]
-
-
-def test_resize_dims_plan(spark):
-    from gcp_data_pipeline_fyp_spark.multimodal.binary_ops import resize_dims
-
-    df = spark.createDataFrame(
-        [
-            (1, 1024, 768),     # downscale, landscape
-            (2, 100, 200),      # no upscale needed? 200 < 256 -> keep
-            (3, 256, 256),      # exactly max -> keep
-            (4, None, None),    # no metadata -> NULL targets
-            (5, 4000, 1000),    # extreme aspect
-        ],
-        "media_id long, width int, height int",
-    )
-    got = {
-        r["media_id"]: (r["target_width"], r["target_height"])
-        for r in resize_dims(df, max_dim=256).collect()
-    }
-    assert got[1] == (256, 192)
-    assert got[2] == (100, 200)  # never upscale
-    assert got[3] == (256, 256)
-    assert got[4] == (None, None)
-    assert got[5] == (256, 64)
-
-
-def test_resize_image_is_gated(spark):
-    import pytest
-
-    from gcp_data_pipeline_fyp_spark.multimodal.binary_ops import (
-        resize_image,
-        with_media_column,
-    )
-
-    df = with_media_column(
-        spark.createDataFrame([(1, "x")], "doc_id long, text string"),
-        "text",
-        "doc_id",
-    )
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        with pytest.raises(NotImplementedError):
-            resize_image(df)
-
-
-def test_audio_chunk_plan(spark):
-    from gcp_data_pipeline_fyp_spark.multimodal.binary_ops import (
-        plan_audio_chunks,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "audio", None, None, None, 65_000, bytearray(b"aa")),
-            (2, "audio", None, None, None, 10_000, bytearray(b"bb")),  # < 1 chunk
-            (3, "video", None, None, None, 65_000, bytearray(b"vv")),  # filtered
-        ],
-        "media_id long, media_type string, mime string, width int, height int,"
-        " duration_ms int, payload binary",
-    )
-    out = {
-        r["media_id"]: [(c["start_ms"], c["end_ms"]) for c in r["chunks"]]
-        for r in plan_audio_chunks(df, chunk_ms=30_000, overlap_ms=1_000).collect()
-    }
-    # 65s: stride 29s -> 3 chunks, overlapping by 1s, last clipped to end
-    assert out[1] == [(0, 30_000), (29_000, 59_000), (58_000, 65_000)]
-    # shorter than one chunk -> single clipped window
-    assert out[2] == [(0, 10_000)]
-    assert 3 not in out  # video rows not in the audio plan
 
 
 def test_phash64_locality_and_neardup_banding(spark):

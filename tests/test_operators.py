@@ -392,8 +392,6 @@ def test_observe_counters(spark):
     # A6 — rows_in / rows_flagged ride the consuming action (one pass)
     from pyspark.sql import Observation
 
-    from gcp_data_pipeline_fyp_spark.operators.quality import with_counters
-
     df = spark.createDataFrame(
         [("earthquake", "0.5"), ("earthquake", "10"), ("explosion", "0.5")],
         "type string, depth string",
@@ -409,9 +407,6 @@ def test_observe_counters(spark):
     )
     out.collect()
     assert obs.get == {"rows_in": 3, "rows_flagged": 1}
-    # the operator helper builds the same observation by name
-    named = with_counters(df, "gate2", pred)
-    named.collect()
 
 
 def test_merge_upsert_null_keys(spark):
@@ -894,17 +889,22 @@ def _fc_chain():
     ]
 
 
-def test_filter_chain_keeps_passing_rows_and_null_fails(spark):
-    from gcp_data_pipeline_fyp_spark.operators.filters import apply_filter_chain
+def _fc_kept(df, chain):
+    from gcp_data_pipeline_fyp_spark.operators.filters import (
+        KEPT_LABEL,
+        first_fail_label,
+    )
 
-    kept = apply_filter_chain(_fc_docs(spark), _fc_chain())
+    return df.filter(first_fail_label(chain) == KEPT_LABEL)
+
+
+def test_filter_chain_keeps_passing_rows_and_null_fails(spark):
+    kept = _fc_kept(_fc_docs(spark), _fc_chain())
     assert [r["doc_id"] for r in kept.collect()] == [1]
 
 
 def test_filter_chain_empty_chain_keeps_everything(spark):
-    from gcp_data_pipeline_fyp_spark.operators.filters import apply_filter_chain
-
-    assert apply_filter_chain(_fc_docs(spark), []).count() == 4
+    assert _fc_kept(_fc_docs(spark), []).count() == 4
 
 
 def test_filter_chain_report_first_fail_and_zero_rows(spark):
@@ -933,15 +933,15 @@ def test_filter_chain_rejects_duplicate_and_reserved_names(spark):
 
     from gcp_data_pipeline_fyp_spark.operators.filters import (
         KEPT_LABEL,
-        apply_filter_chain,
         filter_chain_report,
+        first_fail_label,
     )
 
     dup = [("a", F.lit(True)), ("a", F.lit(False))]
     with pytest.raises(ValueError, match="duplicate"):
         filter_chain_report(_fc_docs(spark), dup)
     with pytest.raises(ValueError, match="reserved"):
-        apply_filter_chain(_fc_docs(spark), [(KEPT_LABEL, F.lit(True))])
+        first_fail_label([(KEPT_LABEL, F.lit(True))])
 
 
 # ---------------------------- incremental exact dedup (operators/dedup.py)
@@ -1065,62 +1065,6 @@ def test_exact_substring_filter_keeps_null_text_docs(spark):
         ).collect()
     }
     assert kept == {1, 2, 3}
-
-
-# ------------------- persisted digest index (indexed incremental dedup)
-@pytest.mark.slow
-def test_digest_index_three_batch_parity(spark, tmp_path):
-    """Three daily batches through the persisted index == re-running
-    plain incremental_exact_dedup against the accumulated corpus."""
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        build_digest_index,
-        incremental_dedup_indexed,
-        incremental_exact_dedup,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    build_digest_index(wh, base, ["text"], "corpus")
-
-    batches = [
-        [(10, "alpha"), (11, "gamma"), (12, "gamma")],   # dup-of-base, new, in-batch dup
-        [(20, "gamma"), (21, "delta")],                  # dup of batch-1 survivor, new
-        [(30, "delta"), (31, "epsilon"), (32, "beta")],  # dups of batch-2/base, new
-    ]
-    acc = base
-    for i, rows in enumerate(batches):
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        got = incremental_dedup_indexed(wh, b, ["text"], "corpus", id_col="doc_id")
-        want = incremental_exact_dedup(b, acc, ["text"], id_col="doc_id")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        ), f"batch {i}"
-        acc = acc.unionByName(want)
-
-    # the index holds exactly the accumulated distinct digests
-    n_index = wh.read("corpus__digests").distinct().count()
-    assert n_index == acc.select("text").distinct().count()
-
-
-def test_digest_index_no_update_leaves_index_unchanged(spark, tmp_path):
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        build_digest_index,
-        incremental_dedup_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    base = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    build_digest_index(wh, base, ["text"], "c2")
-    b = spark.createDataFrame([(5, "b")], "doc_id long, text string")
-    out = incremental_dedup_indexed(
-        wh, b, ["text"], "c2", update_index=False
-    )
-    assert out.count() == 1
-    assert wh.read("c2__digests").count() == 1  # untouched
 
 
 def test_lsh_index_incremental_parity_with_full_rerun(spark, tmp_path):
@@ -1445,75 +1389,19 @@ def test_rules_from_spec_round_trip(spark):
         rules_from_spec([{"kind": "nope"}])
 
 
-def test_bpe_train_matches_reference_implementation(spark):
-    """10 merge rounds on a small corpus == a pure-Python BPE trainer
-    (greedy left-to-right merge application, count-desc/lexicographic
-    tie-break) — merge table AND final vocabulary symbols."""
-    from collections import Counter
-
-    from gcp_data_pipeline_fyp_spark.operators.tokenizer import bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new",
-        "wide wider widest low",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges, vocab = bpe_train(df, "text", n_merges=10, checkpoint_every=2)
-
-    # pure-Python reference
-    words = Counter(w for t in texts for w in t.split())
-    syms = {w: list(w) for w in words}
-    ref_merges = []
-    for rank in range(10):
-        counts = Counter()
-        for w, n in words.items():
-            s = syms[w]
-            for a, b in zip(s, s[1:]):
-                counts[(a, b)] += n
-        if not counts:
-            break
-        (left, right), cnt = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        ref_merges.append((rank, left, right, cnt))
-        for w in syms:
-            s, out = syms[w], []
-            for x in s:
-                if out and out[-1] == left and x == right:
-                    out[-1] = left + right
-                else:
-                    out.append(x)
-            syms[w] = out
-
-    assert merges == ref_merges
-    got_vocab = {r["word"]: r["symbols"] for r in vocab.collect()}
-    assert got_vocab == syms
-
-
 def test_bpe_segment_applies_merge_table(spark):
-    """Segmentation with the learned merges reproduces the trainer's
-    final vocabulary symbols on seen words and composes merges in rank
-    order on unseen ones."""
-    from gcp_data_pipeline_fyp_spark.operators.tokenizer import (
-        bpe_segment,
-        bpe_train,
-    )
+    """Segmentation applies a (rank, left, right, count) merge table in
+    rank order: seen words come out as their merged symbols, and unseen
+    words compose the merges in rank order."""
+    from gcp_data_pipeline_fyp_spark.operators.tokenizer import bpe_segment
 
     df = spark.createDataFrame(
         [(0, "low low low lower")], "doc_id long, text string"
     )
-    merges, vocab = bpe_train(df, "text", n_merges=3)
-    seg = bpe_segment(df, "text", merges)
-    row = seg.first()
-    want_low = {r["word"]: r["symbols"] for r in vocab.collect()}
-    # the text is 3x 'low' + 'lower'; flattened segments must equal the
-    # per-word trained symbols in order
-    expect = (
-        want_low["low"] * 3 + want_low["lower"]
-    )
+    merges = [(0, "l", "o", 4), (1, "lo", "w", 4), (2, "e", "r", 1)]
+    row = bpe_segment(df, "text", merges).first()
+    # the text is 3x 'low' + 'lower'; flattened segments in order
+    expect = ["low"] * 3 + ["low", "er"]
     assert row["bpe_tokens"] == expect
     assert row["bpe_tokens_count"] == len(expect)
     # unseen word: merges still apply in rank order
@@ -1598,7 +1486,6 @@ def test_classifier_separates_planted_vocab(spark):
     threshold; docs with no features report label 'empty' (never
     silently dropped)."""
     from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        classifier_filter,
         score_documents,
         train_linear_classifier,
     )
@@ -1631,8 +1518,6 @@ def test_classifier_separates_planted_vocab(spark):
     assert got[1001][0] == "drop" and got[1001][2] < 0
     assert got[1002] == ("empty", 0, None)
     assert got[1003] == ("empty", 0, None)
-    kept = classifier_filter(corpus, "doc_id", "text", w, n_buckets=512)
-    assert [r["doc_id"] for r in kept.collect()] == [1000]
 
 
 def test_classifier_scores_partition_invariant(spark):
@@ -1676,7 +1561,6 @@ def test_classifier_model_is_self_describing(spark):
     from gcp_data_pipeline_fyp_spark.operators.classifier import (
         score_documents,
         train_linear_classifier,
-        weights_meta,
     )
 
     seed = spark.createDataFrame(
@@ -1686,7 +1570,8 @@ def test_classifier_model_is_self_describing(spark):
     w = train_linear_classifier(
         seed, "doc_id", "text", "lbl", n_buckets=128, bigrams=False, seed=7
     )
-    assert weights_meta(w) == (128, 7, False)
+    meta = w.select("meta_n_buckets", "meta_seed", "meta_bigrams").distinct()
+    assert [tuple(r) for r in meta.collect()] == [(128, 7, False)]
 
     corpus = spark.createDataFrame(
         [(10, "alpha beta")], "doc_id long, text string"
@@ -3054,11 +2939,10 @@ def test_minhash_recall_eval_sensitivity(spark):
 def test_semantic_contamination_flags_and_scrubs(spark):
     """Exact copies flag at cosine 1.0 with the NEAREST bench id
     (ties -> smallest); orthogonal rows never flag; zero vectors are
-    skipped (undefined cosine); the scrub drops exactly the flagged
-    ids."""
+    skipped (undefined cosine), so a scrub by this report drops exactly
+    the flagged ids."""
     from gcp_data_pipeline_fyp_spark.operators.decontaminate import (
         semantic_contamination_report,
-        semantic_decontaminate,
     )
 
     bench = spark.createDataFrame(
@@ -3082,13 +2966,6 @@ def test_semantic_contamination_flags_and_scrubs(spark):
         ).collect()
     }
     assert got == {1: (100, 1_000_000), 5: (200, 1_000_000)}
-    kept = sorted(
-        r["vid"]
-        for r in semantic_decontaminate(
-            corpus, bench, "vid", "vec", threshold=0.95
-        ).collect()
-    )
-    assert kept == [2, 3, 4]
 
 
 def test_semantic_contamination_tie_breaks_to_smallest_bench_id(spark):
@@ -3345,27 +3222,6 @@ def test_semantic_contamination_string_ids_tie_break(spark):
     assert [(r["corpus_id"], r["bench_id"]) for r in rows] == [
         ("doc-x", "doc-a")
     ]
-
-
-def test_incremental_dedup_indexed_cold_start(spark, tmp_path):
-    """A missing digest table is an empty index (same contract as the
-    band index) — the first batch passes through and, with
-    update_index, seeds the table."""
-    from gcp_data_pipeline_fyp_spark.operators.dedup import (
-        incremental_dedup_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "cdwh"))
-    batch = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    out = incremental_dedup_indexed(wh, batch, ["text"], "cold")
-    assert {r["doc_id"] for r in out.collect()} == {1, 2}
-    assert wh.read("cold__digests").count() == 2
-    # second identical batch now drops entirely via the seeded index
-    again = incremental_dedup_indexed(wh, batch, ["text"], "cold")
-    assert again.count() == 0
 
 
 def test_elect_canonical_quality_and_singletons(spark):

@@ -8,9 +8,9 @@ import pytest
 
 from gcp_data_pipeline_fyp_spark.plans.pipeline import (
     branch_for_filename,
-    choose_mode,
     run_pipeline,
 )
+from gcp_data_pipeline_fyp_spark.sources.files import feed_request_for
 from gcp_data_pipeline_fyp_spark.sources.states import states_df
 
 COLS = (
@@ -52,8 +52,8 @@ def warehouse(tmp_path, spark):
 
 
 def test_mode_selection():
-    assert choose_mode(datetime.date(2024, 4, 1)) == "full"
-    assert choose_mode(datetime.date(2024, 4, 15)) == "delta"
+    assert feed_request_for(datetime.datetime(2024, 4, 1))[2] == "full"
+    assert feed_request_for(datetime.datetime(2024, 4, 15))[2] == "delta"
     assert branch_for_filename("whole_month_2403.csv") == "full"
     assert branch_for_filename("all_day_20240401_120000.csv") == "delta"
     with pytest.raises(ValueError):
@@ -140,24 +140,3 @@ def test_delta_merge_rewrites_only_affected_partitions(warehouse, spark):
     # partition pruning works on the stored layout
     march = t2["T_FACT_Events"].filter("_PT_month = 202403")
     assert march.count() == 2
-
-
-def test_view_layer_answers_dax_sql(warehouse, spark):
-    # E3: the V_* view indirection answers the DAX measures as spark.sql
-    from gcp_data_pipeline_fyp_spark.plans.views import register_views
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    _, wh_root, tables = warehouse
-    created = register_views(spark, Warehouse(spark, wh_root))
-    assert "V_FACT_Event" in created
-    total = spark.sql("SELECT COUNT(*) AS n FROM V_FACT_Event").first()["n"]
-    assert total == tables["T_FACT_Events"].count()
-    avg_mag = spark.sql(
-        """
-        SELECT AVG(f.VL_n_mag) AS m
-        FROM V_FACT_Event f
-        JOIN V_DIM_Seismic_Activity_Type t ON f.ID_type_ID = t.ID_type_ID
-        WHERE t.LB_type = 'earthquake'
-        """
-    ).first()["m"]
-    assert abs(avg_mag - 4.3) < 0.001  # (3.55 + 5.05) / 2

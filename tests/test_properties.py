@@ -11,8 +11,11 @@ from hypothesis import example, given, settings, strategies as st
 
 from gcp_data_pipeline_fyp_spark.functions.text import minhash_params
 from gcp_data_pipeline_fyp_spark.operators.similarity import make_hyperplanes
-from gcp_data_pipeline_fyp_spark.sources.files import archive_date_from_filename
-from gcp_data_pipeline_fyp_spark.plans.pipeline import branch_for_filename, choose_mode
+from gcp_data_pipeline_fyp_spark.sources.files import (
+    archive_date_from_filename,
+    feed_request_for,
+)
+from gcp_data_pipeline_fyp_spark.plans.pipeline import branch_for_filename
 import pytest
 
 
@@ -36,12 +39,11 @@ def test_hyperplanes_deterministic(planes, dim):
 
 
 @given(st.dates(min_value=datetime.date(2000, 1, 2), max_value=datetime.date(2030, 12, 31)))
-def test_choose_mode_total(d):
-    mode = choose_mode(d)
+def test_feed_request_mode_total(d):
+    _url, name, mode = feed_request_for(datetime.datetime.combine(d, datetime.time(12)))
     assert mode == ("full" if d.day == 1 else "delta")
-    # branch_for_filename agrees with the filenames the ingest produces
-    if mode == "delta":
-        assert branch_for_filename(f"all_day_{d:%Y%m%d}-120000.csv") == "delta"
+    # branch_for_filename routes the file the ingest lands to the same mode
+    assert branch_for_filename(name) == mode
 
 
 @given(st.text(alphabet="abcdefghij_0123456789.", max_size=30))

@@ -287,47 +287,6 @@ def test_ivf_sampled_training_recall(spark):
     )
 
 
-@pytest.mark.slow
-def test_append_ivf_index_matches_full_rebuild(spark, tmp_path):
-    """Appending a batch to a persisted IVF index == rebuilding the
-    postings against the SAME centroids: queries return identical
-    results, and only batch-touched centroid partitions gain files."""
-    from gcp_data_pipeline_fyp_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    blobs = _blob_vectors(spark)
-    base = blobs.filter(F.col("vec_id") % 3 != 0)
-    batch = blobs.filter((F.col("vec_id") % 3 == 0) & (F.col("vec_id") >= 5))
-    q = blobs.filter(F.col("vec_id") < 5)
-
-    build_ivf_index(wh, base, "vec_id", "embedding", "idx", n_centroids=4)
-    append_ivf_index(wh, batch, "vec_id", "embedding", "idx")
-    got = ivf_topk_indexed(wh, q, "vec_id", "embedding", "idx", k=5, nprobe=2)
-
-    # rebuild postings from the union against the same centroid count /
-    # seed rule is NOT guaranteed identical centroids (different seed
-    # vectors), so compare against direct assignment over the union:
-    build_ivf_index(
-        wh, base.unionByName(batch), "vec_id", "embedding", "idx2", n_centroids=4
-    )
-    # appended index must contain every vector exactly once
-    post = spark.read.parquet(str(tmp_path / "wh" / "idx__postings"))
-    want_ids = {r["vec_id"] for r in base.unionByName(batch).collect()}
-    got_ids = [r["corpus_id"] for r in post.collect()]
-    assert len(got_ids) == len(want_ids)
-    assert set(got_ids) == want_ids
-    # and the indexed query actually surfaces appended vectors
-    appended_hits = {
-        r["corpus_id"] for r in got.collect()
-    } & {r["vec_id"] for r in batch.collect()}
-    assert appended_hits, "no appended vector ever surfaced in top-k"
-
-
 def test_sq8_recall_and_score_error(spark):
     """SQ8 quantization must preserve cosine ranking. Measured recall
     is 0.88 on this blob corpus — within-blob neighbors differ by less
@@ -397,27 +356,6 @@ def test_ivf_sq8_index_recall_and_layout(spark, tmp_path):
     a = {(r["query_id"], r["corpus_id"]) for r in quant.collect()}
     assert len(e & a) / len(e) >= 0.8
 
-    # appends must match the stored layout: a batch folded into the SQ8
-    # index is written quantized (a raw append would mix schemas and
-    # silently NULL one side out of every query)
-    from gcp_data_pipeline_fyp_spark.operators.similarity import append_ivf_index
-
-    batch = df.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.col("vec_id") + 7000
-    )
-    append_ivf_index(wh, batch, "vec_id", "embedding", "sq8")
-    post2 = wh.read("sq8__postings")
-    assert set(post2.columns) == {"corpus_id", "codes", "maxu", "centroid_id"}
-    appended = post2.filter(F.col("corpus_id") == 7000).collect()
-    assert len(appended) == 1 and appended[0]["codes"] is not None
-    hits = ivf_topk_indexed(
-        wh, q.filter(F.col("vec_id") == 0), "vec_id", "embedding", "sq8",
-        k=200, nprobe=3,
-    ).collect()
-    scores = {r["corpus_id"]: r["cosine_micro"] for r in hits}
-    assert 7000 in scores and scores[7000] == max(
-        v for v in scores.values() if v is not None
-    )
     # quantization error stays bounded on returned pairs
     vecs = {r["vec_id"]: r["embedding"] for r in df.collect()}
     for r in quant.collect():
@@ -460,51 +398,6 @@ def test_pq_recall_and_determinism(spark):
     ).collect()
     key = lambda r: (r["query_id"], r["corpus_id"], r["cosine_micro"])  # noqa: E731
     assert sorted(map(key, rows)) == sorted(map(key, again))
-
-
-@pytest.mark.slow
-def test_pq_index_persist_matches_direct_and_appends(spark, tmp_path):
-    """The persisted PQ index must return exactly what the direct
-    train+encode+score path returns (encoding against final centroids
-    reproduces the training assignments), and appending a batch makes
-    its vectors immediately searchable without refitting codebooks."""
-    from gcp_data_pipeline_fyp_spark.operators.pq import (
-        append_pq_index,
-        build_pq_index,
-        pq_topk,
-        pq_topk_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    df = _blob_vectors(spark, n=200)
-    q = df.filter(F.col("vec_id") < 3)
-    c = df.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 150))
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    build_pq_index(
-        wh, c, "vec_id", "embedding", "pq", m=4, n_codes=8, iters=3, dim=DIM
-    )
-    direct = pq_topk(
-        q, c, "vec_id", "embedding", k=5, m=4, n_codes=8, iters=3, dim=DIM
-    )
-    indexed = pq_topk_indexed(wh, q, "vec_id", "embedding", "pq", k=5)
-    key = lambda r: (r["query_id"], r["corpus_id"], r["cosine_micro"])  # noqa: E731
-    assert sorted(map(key, direct.collect())) == sorted(map(key, indexed.collect()))
-
-    # append: an exact copy of query 0's vector becomes searchable and
-    # carries the maximal ADC score for that query (it may TIE with
-    # same-code blob members — codes quantize away within-cell detail —
-    # and ties break on the lower corpus id, so top-1 isn't guaranteed)
-    batch = df.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.col("vec_id") + 9000
-    )
-    append_pq_index(wh, batch, "vec_id", "embedding", "pq")
-    after = pq_topk_indexed(
-        wh, q.filter(F.col("vec_id") == 0), "vec_id", "embedding", "pq",
-        k=200,
-    ).collect()
-    scores = {r["corpus_id"]: r["cosine_micro"] for r in after}
-    assert 9000 in scores
-    assert scores[9000] == max(scores.values())
 
 
 # --------------------------------------------------- IVF-PQ (r6)
@@ -567,13 +460,10 @@ def test_ivfpq_recall_and_determinism(spark):
 def test_ivfpq_index_persist_matches_direct_and_layout(spark, tmp_path):
     """The persisted IVF-PQ index returns exactly what the one-shot
     path returns, the codes table is laid out as centroid_id=*
-    partition directories (the file-level pruning unit at 100 TB), and
-    an appended batch becomes searchable without refitting either
-    quantizer."""
+    partition directories (the file-level pruning unit at 100 TB)."""
     import os
 
     from gcp_data_pipeline_fyp_spark.operators.pq import (
-        append_ivfpq_index,
         build_ivfpq_index,
         ivfpq_topk,
         ivfpq_topk_indexed,
@@ -603,18 +493,6 @@ def test_ivfpq_index_persist_matches_direct_and_layout(spark, tmp_path):
         if d.startswith("centroid_id=")
     ]
     assert len(parts) >= 2, parts
-
-    batch = df.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.col("vec_id") + 9000
-    )
-    append_ivfpq_index(wh, batch, "vec_id", "embedding", "ivfpq")
-    after = ivfpq_topk_indexed(
-        wh, q.filter(F.col("vec_id") == 0), "vec_id", "embedding", "ivfpq",
-        k=200, nprobe=8,
-    ).collect()
-    scores = {r["corpus_id"]: r["cosine_micro"] for r in after}
-    assert 9000 in scores
-    assert scores[9000] == max(scores.values())
 
 
 def test_pq_sampled_training_deterministic(spark):
@@ -723,13 +601,11 @@ def test_ivfpq_residual_scores_closer_to_exact(spark):
 @pytest.mark.slow
 def test_ivfpq_residual_index_self_describing(spark, tmp_path):
     """A residual-built IVF-PQ index must (a) return exactly what the
-    one-shot residual path returns, (b) carry its interpretation in
-    the stored codebooks (meta_residual) so the query and append paths
-    never need — or trust — a caller flag, and (c) make appended
-    batches searchable with residual encoding applied automatically."""
+    one-shot residual path returns, and (b) carry its interpretation in
+    the stored codebooks (meta_residual) so the query path never needs
+    — or trusts — a caller flag."""
     from gcp_data_pipeline_fyp_spark.operators.pq import (
         _codebook_meta,
-        append_ivfpq_index,
         build_ivfpq_index,
         ivfpq_residual_topk,
         ivfpq_topk_indexed,
@@ -755,18 +631,6 @@ def test_ivfpq_residual_index_self_describing(spark, tmp_path):
     )
     key = lambda r: (r["query_id"], r["corpus_id"], r["cosine_micro"])  # noqa: E731
     assert sorted(map(key, direct.collect())) == sorted(map(key, indexed.collect()))
-
-    batch = df.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.col("vec_id") + 9000
-    )
-    append_ivfpq_index(wh, batch, "vec_id", "embedding", "ridx")
-    after = ivfpq_topk_indexed(
-        wh, q.filter(F.col("vec_id") == 0), "vec_id", "embedding", "ridx",
-        k=200, nprobe=8,
-    ).collect()
-    scores = {r["corpus_id"]: r["cosine_micro"] for r in after}
-    assert 9000 in scores
-    assert scores[9000] == max(scores.values())
 
 
 @pytest.mark.slow
@@ -932,27 +796,6 @@ def test_ivfpq_index_delete_partition_scoped_and_idempotent(spark, tmp_path):
     assert "corpus_id" in emptied.columns
     # and idempotent on the empty table
     assert delete_from_ivfpq_index(wh, victims, "vec_id", "ivfpq") == 0
-
-
-def test_pq_index_delete_rewrites_flat_table(spark, tmp_path):
-    from gcp_data_pipeline_fyp_spark.operators.pq import (
-        build_pq_index,
-        delete_from_pq_index,
-        pq_topk_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    df = _blob_vectors(spark, n=80)
-    q = df.filter(F.col("vec_id") < 2)
-    c = df.filter(F.col("vec_id") >= 2)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    build_pq_index(wh, c, "vec_id", "embedding", "pq", m=4, n_codes=8, iters=2, dim=DIM)
-    victims = spark.createDataFrame([(2,), (3,)], "vec_id long")
-    delete_from_pq_index(wh, victims, "vec_id", "pq")
-    left = {r.corpus_id for r in wh.read("pq__codes").select("corpus_id").distinct().collect()}
-    assert left == {int(v) for v in range(4, 80)}
-    hits = pq_topk_indexed(wh, q, "vec_id", "embedding", "pq", k=100).collect()
-    assert not ({r.corpus_id for r in hits} & {2, 3})
 
 
 def test_topk_overlap_report_identity_miss_and_rank(spark):
@@ -1136,24 +979,9 @@ def test_ivf_retrain_decision_indexed_postings_layout(spark, tmp_path):
     ).collect()[0]
     assert r2["retrain"] is True
     assert r2["psi_micro"] > r["psi_micro"]
-    # the baseline is the build-time snapshot ({name}__train_mix), not
-    # live postings: ingesting the drifted batch into the index must
-    # NOT damp the trigger — the verdict on the same batch is
-    # bit-identical after the append (a live-counted baseline would
-    # absorb the drift and lower the PSI)
-    from gcp_data_pipeline_fyp_spark.operators.similarity import (
-        append_ivf_index,
-    )
-
+    # the baseline is the build-time snapshot ({name}__train_mix)
     mix = wh.read("ix__train_mix")
     assert mix.agg(F.sum("n")).collect()[0][0] == 240
-    append_ivf_index(wh, drifted, "vec_id", "embedding", "ix")
-    r3 = ivf_retrain_decision_indexed(
-        wh, drifted, "vec_id", "embedding", "ix"
-    ).collect()[0]
-    assert r3 == r2
-    # and the snapshot itself is untouched by the append
-    assert wh.read("ix__train_mix").agg(F.sum("n")).collect()[0][0] == 240
 
 
 def test_jl_project_preserves_distances(spark):

@@ -1,9 +1,6 @@
-"""Skew salting equivalence + bucketed-table shuffle elimination."""
+"""Skew salting equivalence, the top-k plan decision and compaction."""
 
 from __future__ import annotations
-
-import contextlib
-import io
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,30 +41,6 @@ def test_salted_join_equals_plain(spark):
         for r in salted_join(left, right, ["k"], salt_from="id", buckets=8, how="left").collect()
     )
     assert salted == plain
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    a = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    wh.overwrite_bucketed(a, "bk_a", ["k"], n_buckets=8, sort_cols=["k"])
-    wh.overwrite_bucketed(b, "bk_b", ["k"], n_buckets=8, sort_cols=["k"])
-    try:
-        joined = wh.read_table("bk_a").join(wh.read_table("bk_b"), "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # co-located: no shuffle exchange on either side of the join
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
 
 
 def test_salted_agg_rejects_key_salt(spark):
@@ -246,18 +219,10 @@ def test_salted_topk_equals_naive_window(spark):
 
 
 def test_adaptive_topk_measures_then_chooses(spark):
-    """The measure-then-choose wrapper: topk_plan_decision flags the
+    """The measure-then-choose decision: topk_plan_decision flags the
     hot-key frame salted and the balanced frame plain (threshold 5x
-    mean, the AQE skewedPartitionFactor), and adaptive_topk_per_group
-    returns the naive window's exact rows under BOTH decisions — the
-    plan choice is a cost call, never a semantics change."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gcp_data_pipeline_fyp_spark.operators.skew import (
-        adaptive_topk_per_group,
-        topk_plan_decision,
-    )
+    mean, the AQE skewedPartitionFactor)."""
+    from gcp_data_pipeline_fyp_spark.operators.skew import topk_plan_decision
 
     hot_rows = [("hot", i, float(i % 97)) for i in range(900)]
     hot_rows += [(f"c{j}", 10_000 + j, float(j)) for j in range(10)]
@@ -270,26 +235,6 @@ def test_adaptive_topk_measures_then_chooses(spark):
     d_flat = topk_plan_decision(flat, ["grp"]).first()
     assert d_hot["use_salted"] is True and d_hot["plan"] == "salted_two_phase"
     assert d_flat["use_salted"] is False and d_flat["plan"] == "plain_window"
-
-    def naive(frame, k):
-        w = Window.partitionBy("grp").orderBy(
-            F.col("v").desc(), F.col("id").asc()
-        )
-        return sorted(
-            (r["grp"], r["id"], r["rn"])
-            for r in frame.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .collect()
-        )
-
-    for frame in (hot, flat):
-        got = sorted(
-            (r["grp"], r["id"], r["rank_in_group"])
-            for r in adaptive_topk_per_group(
-                frame, ["grp"], "v", "id", k=4
-            ).collect()
-        )
-        assert got == naive(frame, 4)
 
 
 def test_salted_join_right_and_full_equal_plain(spark):

@@ -1,4 +1,4 @@
-"""Zone-map data skipping: build/refresh lifecycle, file-level pruning
+"""Zone-map data skipping: build/rebuild lifecycle, file-level pruning
 effectiveness, and exact equality with an unpruned scan."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from gcp_data_pipeline_fyp_spark.operators.zonemap import (
     build_zonemap,
     prune_files,
     read_pruned,
-    refresh_zonemap,
 )
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
@@ -61,9 +60,8 @@ def test_unmapped_appends_are_read_conservatively(spark, wh):
         read_pruned(wh, "EV", {"value": (100.0, 200.0)}).count()
         == before + n_extra
     )
-    # refresh stats ONLY the new file, and pruning still matches
-    assert refresh_zonemap(wh, "EV", ["value"]) == 1
-    assert refresh_zonemap(wh, "EV", ["value"]) == 0  # idempotent
+    # a rebuild maps the new file, and pruning still matches
+    build_zonemap(wh, "EV", ["value"])
     files, total = prune_files(wh, "EV", {"value": (100.0, 200.0)})
     assert total == 9 and len(files) < total
     assert (

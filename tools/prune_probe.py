@@ -172,7 +172,7 @@ def main() -> None:
                 F.lit(int(1e15) + 1).alias("user_id__max"),
                 F.lit(0).cast("long").alias("user_id__nulls"),
             )
-            fake_map.coalesce(4).write.mode("append").format(wh.fmt).save(zp)
+            fake_map.coalesce(4).write.mode("append").parquet(zp)
         sec, (surv, tot) = _timed(
             lambda: prune_files(wh, "EVP", {"user_id": (lo, hi)})
         )
