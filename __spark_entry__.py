@@ -120,325 +120,6 @@ _CHECK_FIRST = [
     # (kanon_report .. winsorized_values).
 ]
 
-# ---- retired r12 window (kept for the audit trail) ----------------
-# ROUND-12 WINDOW, composition (6 + 11 + 33 = 50), in priority order —
-# births outrank code-changes outrank re-certs (a probe with NO driver
-# row is the worst evidence class; a probe whose CODE changed must
-# re-certify the changed code):
-#   0. the 6 r12 births (unimax_epoch_mix_docs — UniMax max_epochs=2
-#      made real end-to-end: epoch expansion with tail strata emitting
-#      REPEATED docs, full second epochs at sf0.01 / partial at sf0.1;
-#      dsir_indexed — the persisted-profile DSIR path certifying
-#      index-path == direct-path; corpus_prep_v3 — the composed
-#      pipeline with the SemDeDup stage post-LSH/pre-split;
-#      pii_scan_report + pii_redact_docs — the anonymization stage as
-#      pure codegen regex, planted-PII corpus, email-before-IP
-#      redaction order certified end-to-end; chunk_docs — token-window
-#      split-to-context-length chunking with stable (doc, chunk_ix)
-#      keys, zero shuffles);
-#   1. the 11 probes whose code changed this round: the DSIR Gumbel
-#      consumers (dsir_sample_docs, dsir_budget_docs,
-#      dsir_selection_shift — u clamped below 1.0 in engine + both
-#      oracles), the 4 zonemap consumers (zonemap_pruned_scan,
-#      dynamic_pruned_join, zonemap_zorder_box_scan,
-#      bucket_index_lookup — census listing distributed), the 3
-#      semdedup probes (semdedup_docs, semdedup_recall_eval,
-#      semdedup_recall_multiprobe — n_centroids='auto' default; the
-#      probes still pin 16 explicitly), and corpus_prep_v2 (chain
-#      extracted into the shared _corpus_prep_canon helper; oracle
-#      byte-identical);
-#   2. nothing red in r11 (all 50 green);
-#   3. the first 33 of the 44 r06-evidence rows, alphabetical
-#      (brand_revenue .. returnflag_correlation). The remaining 11
-#      (running_customer_spend .. tz_convert) head the r13 window —
-#      the birth +
-#      code-change load this round displaced them under the stated
-#      priority; compensating control: the builder's full-registry
-#      mirror sweep (tools/check_correctness.py) is green at both SFs
-#      including every displaced row.
-#
-# Late-round note: the token-array projection refactor (the measured
-# O(tokens^2) higher-order-lambda fix) also changed the PLANS (values
-# identical) of several shingle/feature consumers. In-window already:
-# the dsir/semdedup/corpus_prep_v2+v3 priority rows plus corpus_prep,
-# corpus_prep_full, minhash_lsh_pairs, dedupe_corpus, dup_clusters,
-# canonical_docs. Out-of-window changed-plan probes
-# (minhash_signature, dsir_logweights, decontaminate_corpus,
-# contamination_report, bloom_decontaminate,
-# quality_classifier_scores, split_leakage_report,
-# incremental_neardup, doc_repetition_report, quality_canonical_docs,
-# substring-incremental) were each mirror-verified green at sf0.01
-# after the refactor — and the post-refactor FULL sweeps (275/275 at
-# both SFs) re-cover every probe — they queue for the r13 window
-# behind the displaced rows.
-_R12_WINDOW = [
-    # -- 0. new this round (r12)
-    "unimax_epoch_mix_docs",
-    "dsir_indexed",
-    "corpus_prep_v3",
-    "pii_scan_report",
-    "pii_redact_docs",
-    "chunk_docs",
-    # -- 1. code changed this round
-    "dsir_sample_docs",
-    "dsir_budget_docs",
-    "dsir_selection_shift",
-    "zonemap_pruned_scan",
-    "dynamic_pruned_join",
-    "zonemap_zorder_box_scan",
-    "bucket_index_lookup",
-    "semdedup_docs",
-    "semdedup_recall_eval",
-    "semdedup_recall_multiprobe",
-    "corpus_prep_v2",
-    # -- 3. the r06-evidence tail, alphabetical (34 of 44)
-    "brand_revenue",
-    "canonical_docs",
-    "clean_text_docs",
-    "corpus_prep",
-    "corpus_prep_full",
-    "cube_type_day",
-    "customer_distribution",
-    "customer_order_stats",
-    "date_dim",
-    "dedup_exact_rows",
-    "dedup_exact_stats",
-    "dedupe_corpus",
-    "dormant_rich_customers",
-    "dup_clusters",
-    "event_id_hash",
-    "gopher_filter",
-    "kcore_docs",
-    "large_orders",
-    "mad_outlier_events",
-    "merge_upsert",
-    "merge_upsert_partitioned",
-    "minhash_lsh_pairs",
-    "ods_typed_banding",
-    "order_priority_count",
-    "order_value_ranks",
-    "paragraph_dedup",
-    "part_metrics_unpivot",
-    "place_parse",
-    "pricing_summary",
-    "quality_gate_accepted",
-    "quality_gate_rejected",
-    "region_nation_revenue",
-    "returnflag_correlation",
-    # next round (r13), in priority order: (0) any new r13 probes;
-    # (1) anything red in r12; (2) the 11 displaced r06-evidence rows
-    # (rollup_type_day, running_customer_spend, sessionize_events,
-    # source_capped_sample,
-    # stg_null_coerce, surrogate_keys, surrogate_keys_incremental,
-    # top_revenue_orders, top_suppliers, triangle_counts, tz_convert —
-    # the last three displaced by the late PII/chunking births); (3) the
-    # projection-refactor changed-plan probes listed in the note
-    # above; (4) the r07-green tail on rotation, alphabetical.
-]
-
-# ---- retired r11 window (kept for the audit trail) ----------------
-# ROUND-11 WINDOW, composition (10 + 10 + 24 + 6 = 50), in priority
-# order — births outrank code-changes outrank re-certs, because a
-# probe with NO driver row is the worst evidence class:
-#   0. the 10 r11 births (hybrid_rerank_topk — BM25 + dense -> RRF ->
-#      MMR as one certified composition; semdedup_docs — SemDeDup
-#      semantic near-dup pruning on the deterministic IVF fit;
-#      semdedup_recall_eval — its measured detection-quality row,
-#      eps-graded planted near-dups incl. the cluster-straddle
-#      blind spot; semdedup_recall_multiprobe — the n_assign=2
-#      mitigation, measured: L1 recall 0.73 -> 0.96; and the
-#      session-4 DSIR triple: dsir_logweights — hashed-ngram
-#      importance log-weights, Xie et al. 2023; dsir_sample_docs —
-#      Gumbel top-k selection; dsir_selection_shift — the measured
-#      target-shift quality row, en 44% of corpus -> 74% of sample;
-#      dsir_budget_docs — budget-constrained selection, the two-level
-#      no-global-sort Gumbel-order prefix charged by n_chars; and
-#      unimax_alloc_report — UniMax water-fill budget allocation,
-#      Chung et al. 2023, exact integer flag+tau closed form, the
-#      mixed capped/uncapped branch exercised at sf0.01; and
-#      unimax_mix_docs — the allocation CONSUMED by token_budget_mix
-#      as one certified allocate-then-enforce chain);
-#   1. the 10 probes whose code or oracle changed this round:
-#      rank_blend_scores + blend_floor_docs (fused single-pass
-#      multi-scorer midrank), length_match_sample +
-#      length_match_by_lang (argmin NULL tie-break pin; sample oracle
-#      LEFT JOIN ON TRUE), rrf_hybrid_search (unpartitioned-cap
-#      guard), the 4 zonemap consumers (zonemap_pruned_scan,
-#      dynamic_pruned_join, zonemap_zorder_box_scan,
-#      bucket_index_lookup — distributed census prune + build-side
-#      localCheckpoint), and token_budget_mix (session-4 review fix:
-#      eager NULL-budget-key raise);
-#   2. nothing red in r10 (all 50 green);
-#   3. the 24 r05-evidence rows (lsh_recall_report .. wow_growth —
-#      VERDICT r10 ask #1: after this window the oldest driver
-#      evidence anywhere is r6);
-#   4. the first 6 of the 50 r06-evidence rows, alphabetical
-#      (ann_ivfpq_rerank_topk .. boilerplate_docs); the remaining
-#      44 head the r12 window — the rotation is now pure steady-state.
-_R11_WINDOW = [
-    # -- 0. new this round (r11)
-    "hybrid_rerank_topk",
-    "semdedup_docs",
-    "semdedup_recall_eval",
-    "semdedup_recall_multiprobe",
-    "dsir_logweights",
-    "dsir_sample_docs",
-    "dsir_selection_shift",
-    "dsir_budget_docs",
-    "unimax_alloc_report",
-    "unimax_mix_docs",
-    # -- 1. code/oracle changed this round
-    "rank_blend_scores",
-    "blend_floor_docs",
-    "length_match_sample",
-    "length_match_by_lang",
-    "rrf_hybrid_search",
-    "zonemap_pruned_scan",
-    "dynamic_pruned_join",
-    "zonemap_zorder_box_scan",
-    "bucket_index_lookup",
-    "token_budget_mix",
-    # -- 3. the r05-evidence tail (VERDICT r10 ask #1)
-    "lsh_recall_report",
-    "numeric_profile",
-    "outlier_events",
-    "pack_sequences",
-    "pagerank_sim_graph",
-    "quality_classifier_scores",
-    "quantile_rollup",
-    "repetition_metrics",
-    "resample_ffill",
-    "retention_cohorts",
-    "rfm_segments",
-    "rolling_anomaly",
-    "rollup_incremental",
-    "schema_contract",
-    "ship_lag_by_priority",
-    "split_leakage_report",
-    "sql_interface",
-    "star_schema_fact",
-    "stratified_sample",
-    "tfidf_top_terms",
-    "token_budget_sample",
-    "train_val_test_split",
-    "unigram_logprob_score",
-    "wow_growth",
-    # -- 4. r06-evidence tail, alphabetical (6 of 50)
-    "ann_ivfpq_rerank_topk",
-    "ann_ivfpq_residual_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_topk_sampled",
-    "anti_join_dedup",
-    "boilerplate_docs",
-    # next round (r12), in priority order: (0) any new r12 probes;
-    # (1) anything red in r11; (2) the remaining 44 r06-evidence rows
-    # (brand_revenue, canonical_docs, clean_text_docs, corpus_prep,
-    # corpus_prep_full, cube_type_day, customer_distribution,
-    # customer_order_stats, date_dim, dedup_exact_rows,
-    # dedup_exact_stats, dedupe_corpus, dormant_rich_customers,
-    # dup_clusters, event_id_hash, gopher_filter, kcore_docs,
-    # large_orders, mad_outlier_events, merge_upsert,
-    # merge_upsert_partitioned, minhash_lsh_pairs, ods_typed_banding,
-    # order_priority_count, order_value_ranks, paragraph_dedup,
-    # part_metrics_unpivot, place_parse, pricing_summary,
-    # quality_gate_accepted, quality_gate_rejected,
-    # region_nation_revenue, returnflag_correlation, rollup_type_day,
-    # running_customer_spend, sessionize_events, source_capped_sample,
-    # stg_null_coerce, surrogate_keys, surrogate_keys_incremental,
-    # top_revenue_orders, top_suppliers, triangle_counts, tz_convert);
-    # (3) the r07-green tail on rotation, alphabetical.
-]
-
-# ---- retired r10 window (kept for the audit trail) ----------------
-# ROUND-10 WINDOW, composition (10 + 6 + 6 + 2 + 26 = 50), in priority
-# order — births outrank code-changes outrank re-certs, because a
-# probe with NO driver row is the worst evidence class:
-#   0. the 10 r10 births (bloom_decontaminate, adaptive_floor_sketch,
-#      rrf_hybrid_search, threshold_sweep, length_match_sample,
-#      rank_blend_scores, blend_floor_docs, ann_ivf_ndcg_eval,
-#      dynamic_pruned_join, length_match_by_lang);
-#   1. the 6 probes whose code or oracle changed this round (bloom
-#      join type-cast fix + persist removal; MMR per-round checkpoint;
-#      classifier_auc oracle NaN/degenerate guards; host cap adaptive
-#      plan choice; orc scratch-path race fix) — all r9-green, but
-#      the r10 rows must certify the CHANGED code;
-#   2. the 6 r04-evidence rows displaced from the r9 window (VERDICT
-#      r9 ask #1);
-#   3. the 2 probes whose code changed in r9 with driver rows still
-#      r8 (minhash_recall_eval, bitext_margin_pairs);
-#   4. the first 26 of the 50 r05-evidence rows, alphabetical
-#      (ann_pq_topk .. interval_attribution); the remaining 24
-#      (lsh_recall_report .. wow_growth) head the r11 window.
-_R10_WINDOW = [
-    # -- 0. new this round (r10)
-    "bloom_decontaminate",
-    "adaptive_floor_sketch",
-    "rrf_hybrid_search",
-    "threshold_sweep",
-    "length_match_sample",
-    "rank_blend_scores",
-    "blend_floor_docs",
-    "ann_ivf_ndcg_eval",
-    "dynamic_pruned_join",
-    "length_match_by_lang",
-    # -- 1. code/oracle changed this round
-    "bloom_semi_revenue",
-    "bloom_anti_customers",
-    "mmr_rerank_topk",
-    "classifier_auc",
-    "host_capped_docs",
-    "orc_roundtrip",
-    # -- 2. the r04-evidence tail (VERDICT r9 ask #1)
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "measure_sliced_by_day",
-    "measure_total_events",
-    "measure_max_depth",
-    "char_entropy",
-    # -- 3. r9 code-changes whose driver rows are r8
-    "minhash_recall_eval",
-    "bitext_margin_pairs",
-    # -- 4. r05-evidence tail, alphabetical (26 of 50)
-    "ann_pq_topk",
-    "ann_sq8_topk",
-    "bigram_logprob_score",
-    "bm25_search",
-    "bpe_pair_counts",
-    "bpe_segment_counts",
-    "cdc_snapshot",
-    "clean_html_docs",
-    "contamination_report",
-    "corpus_mix_report",
-    "corpus_prep_v2",
-    "daily_p95_sliding",
-    "dax_q12_total",
-    "dax_q1_latest_update",
-    "dax_q2_avg_mag",
-    "dax_q3_max_depth",
-    "dax_q4_max_mag",
-    "dax_q5_11_totals",
-    "decontaminate_corpus",
-    "embedding_pool",
-    "event_transitions",
-    "expectations_report",
-    "funnel_conversion",
-    "hard_negatives",
-    "heavy_hitter_tokens",
-    "interval_attribution",
-    # next round (r11), in priority order: (0) any new r11 probes;
-    # (1) anything red in r10; (2) the remaining 24 r05-evidence rows
-    # (lsh_recall_report, numeric_profile, outlier_events,
-    # pack_sequences, pagerank_sim_graph,
-    # quality_classifier_scores, quantile_rollup, repetition_metrics,
-    # resample_ffill, retention_cohorts, rfm_segments, rolling_anomaly,
-    # rollup_incremental, schema_contract, ship_lag_by_priority,
-    # split_leakage_report, sql_interface, star_schema_fact,
-    # stratified_sample, tfidf_top_terms, token_budget_sample,
-    # train_val_test_split, unigram_logprob_score, wow_growth);
-    # (3) the r06-green tail on rotation, alphabetical — the backlog
-    # is then a pure rotation.
-]
-
 
 def _ordered(items: dict) -> dict:
     head = {n: items[n] for n in _CHECK_FIRST if n in items}

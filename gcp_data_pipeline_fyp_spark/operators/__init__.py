@@ -1,10 +1,5 @@
 """Relational + data-pipeline operators built on DataFrame primitives."""
 
-from gcp_data_pipeline_fyp_spark.operators.keys import (  # noqa: F401
-    assign_surrogate_keys,
-    assign_surrogate_keys_multi,
-    incremental_surrogate_keys,
-    max_existing_id,
-)
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows  # noqa: F401
 from gcp_data_pipeline_fyp_spark.operators.merge import merge_upsert  # noqa: F401
 from gcp_data_pipeline_fyp_spark.operators.quality import quality_split  # noqa: F401

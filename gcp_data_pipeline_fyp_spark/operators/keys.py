@@ -1,138 +1,115 @@
-"""Surrogate-key assignment for dimension builds (reference A1-A5).
+"""Surrogate keys for dimension upkeep (reference A1-A5, J4).
 
-The reference collects every distinct dimension value to one worker
-(`beam.Distinct() | ToList`, `Full Load Scripts/dw_full_load2.py:104-105`)
-and enumerates `sorted(values)` from 1 (`:37-39`); the delta load
-enumerates from `max_id+1` after a MAX snapshot
-(`Delta Load Scripts/dw2_delta_load2.py:32-34,70-73,139-143`).
+The reference numbers every dimension the same way: the sorted distinct
+natural keys are enumerated from 1 on a full load (`beam.Distinct() |
+ToList`, `Full Load Scripts/dw_full_load2.py:37-39,104-105`) and from
+MAX(id)+1 on a delta load, after a MAX snapshot and an anti-join
+against the stored rows (`Delta Load Scripts/dw2_delta_load2.py:32-34,
+70-73,139-143`).
 
-Spark rendering: `row_number()` over a window ordered by the natural
-key. A global `row_number` forces a single-partition sort — acceptable
-here ONLY because it runs on the post-`distinct` dimension values,
-which are tiny (dozens-to-thousands of rows) even when the fact input
-is 100 TB; the distinct itself is a normal shuffled aggregation.
-NULL ordering pinned asc_nulls_first (SURVEY.md §7). Never
-`monotonically_increasing_id` — ids must be dense and rerun-stable so
-the DuckDB oracle agrees.
+`new_dimension_rows` is that rule, once, for any number of dimensions:
+the full load (no stored rows), the delta load and the key probes all
+call it. One query melts the input's natural keys into (dimension,
+key) rows, unions every stored dimension's (key, id) rows and groups
+by (dimension, key): a key only the input has is new — the anti-join,
+null-safe because grouping treats NULL as an ordinary key. A second
+grouping per dimension gives its MAX(id) snapshot beside its new keys.
+One collect brings the new keys to the driver (like the reference's
+`ToList`, they are post-distinct dimension values: dozens to thousands
+even when the input is huge), plain Python numbers them from max+1 in
+asc_nulls_first key order (SURVEY.md §7; Python's str order is Spark's
+binary UTF-8 order), and each dimension's rows come back as one JSON
+literal parsed and inlined on the JVM — one partition, no Python-side
+RDD. Ids are dense and rerun-stable, so the DuckDB oracle agrees.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+from collections.abc import Mapping, Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 
-def assign_surrogate_keys(
+def new_dimension_rows(
     df: DataFrame,
-    natural_keys: Sequence[str],
-    id_col: str,
-    start: int = 1,
-) -> DataFrame:
-    """distinct(natural_keys) -> dense ids from `start`, ordered by key."""
-    order = [F.col(k).asc_nulls_first() for k in natural_keys]
-    w = Window.orderBy(*order)
-    return (
-        df.select(*natural_keys)
-        .distinct()
-        .withColumn(id_col, (F.row_number().over(w) + F.lit(start - 1)).cast("long"))
-        .select(id_col, *natural_keys)
-    )
-
-
-def assign_surrogate_keys_multi(
-    df: DataFrame,
-    specs: dict[str, tuple[str, str]],
-    start: int = 1,
-    barrier: bool = True,
+    dims: Mapping[str, tuple[Sequence[str], str | None]],
+    stored: Mapping[str, DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
-    """Several single-column dims from ONE pass over `df`.
+    """Each dimension's rows for the natural keys of `df` it lacks.
 
-    `specs`: dim name -> (natural key column, surrogate id column).
-    Per-dim output is IDENTICAL to `assign_surrogate_keys(df, [key],
-    id_col, start)` (same distinct set, same asc_nulls_first dense
-    numbering) — pinned by a differential test. What changes is the
-    input cost: N separate dims each re-scan and re-aggregate the
-    corpus (N column scans + N distinct shuffles at 100 TB); here the
-    key columns melt into (dim, value) pairs in one projection, ONE
-    partially-aggregated shuffle computes every dim's distinct set,
-    and the per-dim windows run over the tiny post-distinct values
-    (guide §1.2: fewer passes; §2.4: shared exchange).
+    `dims`: name -> (natural-key columns of `df`, surrogate id column).
+    The keys must be strings: they are numbered in string order. An id
+    column of None marks a dimension keyed by its own id (a yyyymmdd
+    date): its new keys come back unnumbered, and a NULL key is no row.
 
-    Single-column string dims only — exactly the fan-out shape of the
-    reference's dimension builds (dw_full_load2.py:104-105 does one
-    Distinct per dim over the same ODS rows).
+    `stored`: name -> the dimension's stored rows, carrying the same key
+    columns (cast to string to match) and id column. A dimension with
+    stored rows gets (id, *keys) rows for the keys they lack, ids from
+    their MAX(id)+1, and is left out when it gains none. A dimension
+    without stored rows always comes back — its whole key set, ids from
+    1, possibly empty — so writing it replaces the dimension.
 
-    `barrier` (default True) lazily localCheckpoints the shared
-    distinct set so the melt computes once under the N dim consumers;
-    False keeps the raw plan visible — used by the plan test that
-    pins the melt's column pruning (the barrier hides the subtree
-    behind a Scan ExistingRDD).
+    One query and one collect per call, whatever the number of
+    dimensions.
     """
-    for name, (key, _id) in specs.items():
-        if dict(df.dtypes).get(key) != "string":
-            raise ValueError(
-                f"assign_surrogate_keys_multi needs string keys; "
-                f"{name}.{key} is {dict(df.dtypes).get(key)!r}"
-            )
-    melted = df.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(name).alias("__dim"),
-                    F.col(key).alias("__val"),
+    stored = stored or {}
+    types = dict(df.dtypes)
+    for name, (keys, _id) in dims.items():
+        for k in keys:
+            if types.get(k) != "string":
+                raise ValueError(
+                    f"new_dimension_rows needs string keys; {name}.{k} is {types.get(k)!r}"
                 )
-                for name, (key, _id) in specs.items()
-            ])
-        ).alias("__e")
-    ).select(F.col("__e.__dim").alias("__dim"), F.col("__e.__val").alias("__val"))
-    distinct_vals = melted.distinct()
-    if barrier:
-        distinct_vals = distinct_vals.localCheckpoint(eager=False)
-    out: dict[str, DataFrame] = {}
-    for name, (key, id_col) in specs.items():
-        w = Window.orderBy(F.col(key).asc_nulls_first())
-        out[name] = (
-            distinct_vals.filter(F.col("__dim") == name)
-            .select(F.col("__val").alias(key))
-            .withColumn(
-                id_col,
-                (F.row_number().over(w) + F.lit(start - 1)).cast("long"),
-            )
-            .select(id_col, key)
+    slots = [f"__k{i}" for i in range(max(len(keys) for keys, _id in dims.values()))]
+
+    def melt_keys(keys: Sequence[str]) -> list:
+        padded = [F.col(k) for k in keys] + [F.lit(None)] * (len(slots) - len(keys))
+        return [c.cast("string").alias(s) for c, s in zip(padded, slots)]
+
+    melt = [F.struct(F.lit(n).alias("__dim"), *melt_keys(keys)) for n, (keys, _id) in dims.items()]
+    found = df.select(F.explode(F.array(*melt)).alias("__e")).select(
+        "__e.*", F.lit(None).cast("long").alias("__id"), F.lit(False).alias("__old")
+    )
+    self_keyed = [n for n, (_keys, id_col) in dims.items() if id_col is None]
+    if self_keyed:
+        found = found.where(~F.col("__dim").isin(*self_keyed) | F.col("__k0").isNotNull())
+    known = [
+        rows.select(
+            F.lit(n).alias("__dim"), *melt_keys(dims[n][0]),
+            (F.col(dims[n][1]) if dims[n][1] else F.lit(None)).cast("long").alias("__id"),
+            F.lit(True).alias("__old"),
         )
+        for n, rows in stored.items()
+    ]
+    per_key = (
+        reduce(DataFrame.unionByName, known, found)
+        .groupBy("__dim", *slots)
+        .agg(F.max("__old").alias("__old"), F.max("__id").alias("__id"))
+    )
+    per_dim = per_key.groupBy("__dim").agg(
+        F.max("__id").alias("__max_id"),
+        F.collect_list(F.when(~F.col("__old"), F.struct(*slots))).alias("__new"),
+    )
+    new = {r["__dim"]: (r["__max_id"] or 0, r["__new"]) for r in per_dim.collect()}
+
+    out = {}
+    for name, (keys, id_col) in dims.items():
+        max_id, found_keys = new.get(name, (0, []))
+        if name in stored and not found_keys:
+            continue
+        ordered = sorted(
+            (tuple(k)[: len(keys)] for k in found_keys),
+            key=lambda k: [(v is not None, v or "") for v in k],
+        )
+        fields = [StructField(k, StringType()) for k in keys]
+        records = [dict(zip(keys, k)) for k in ordered]
+        if id_col is not None:
+            fields.insert(0, StructField(id_col, LongType()))
+            records = [{id_col: max_id + i, **r} for i, r in enumerate(records, 1)]
+        literal = F.from_json(F.lit(json.dumps(records)), ArrayType(StructType(fields)))
+        out[name] = df.sparkSession.range(0, 1, 1, 1).select(F.inline(literal))
     return out
-
-
-def max_existing_id(existing_dim: DataFrame, id_col: str) -> int:
-    """SELECT MAX(id) snapshot (dw2_delta_load2.py:70-73); 0 when empty."""
-    row = existing_dim.agg(F.max(F.col(id_col)).alias("m")).first()
-    return int(row["m"]) if row and row["m"] is not None else 0
-
-
-def incremental_surrogate_keys(
-    new_values: DataFrame,
-    existing_dim: DataFrame,
-    natural_keys: Sequence[str],
-    id_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta-dim build: (new_rows, full_dim).
-
-    new_values' distinct natural keys are anti-joined against the
-    existing dim (reference J4), enumerated from max_id+1 (A3 with
-    offset), and unioned back (A5). The anti join is null-safe on the
-    natural keys (the reference's `v not in dict` treats None as an
-    ordinary key).
-    """
-    start = max_existing_id(existing_dim, id_col) + 1
-    cond = None
-    new_d = new_values.select(*natural_keys).distinct().alias("n")
-    ex = existing_dim.alias("e")
-    for k in natural_keys:
-        c = F.col(f"n.{k}").eqNullSafe(F.col(f"e.{k}"))
-        cond = c if cond is None else (cond & c)
-    fresh = new_d.join(ex, cond, "left_anti")
-    new_rows = assign_surrogate_keys(fresh, list(natural_keys), id_col, start=start)
-    full = existing_dim.select(id_col, *natural_keys).unionByName(new_rows)
-    return new_rows, full

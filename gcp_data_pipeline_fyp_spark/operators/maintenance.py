@@ -38,29 +38,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-
-def _walk_data_files(root: str) -> dict[str, int]:
-    """{relative_dir: bytes} over parquet data files; '' = table root."""
-    out: dict[str, int] = {}
-    for dirpath, _dirs, files in os.walk(root):
-        rel = os.path.relpath(dirpath, root)
-        rel = "" if rel == "." else rel
-        for f in files:
-            if f.endswith(".parquet"):
-                out.setdefault(rel, 0)
-                out[rel] += os.path.getsize(os.path.join(dirpath, f))
-    return out
-
-
-def _count_files(root: str) -> int:
-    return sum(
-        1
-        for dirpath, _d, files in os.walk(root)
-        for f in files
-        if f.endswith(".parquet")
-    )
+from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse, parquet_files
 
 
 def table_file_stats(
@@ -68,22 +46,11 @@ def table_file_stats(
 ) -> dict:
     """Driver-side file census: the measurement that decides whether
     compaction pays. O(files) listing, no Spark job."""
-    root = wh.path(table)
-    n_files = 0
-    total = 0
-    n_small = 0
-    for dirpath, _d, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                sz = os.path.getsize(os.path.join(dirpath, f))
-                n_files += 1
-                total += sz
-                if sz < small_file_bytes:
-                    n_small += 1
+    sizes = parquet_files(wh.path(table)).values()
     return {
-        "n_files": n_files,
-        "total_bytes": total,
-        "n_small_files": n_small,
+        "n_files": len(sizes),
+        "total_bytes": sum(sizes),
+        "n_small_files": sum(1 for sz in sizes if sz < small_file_bytes),
     }
 
 
@@ -103,8 +70,7 @@ def compact_table(
     not a second implementation.
 
     What this adds is the partitioned path (`partition_cols`, in the
-    table's partitionBy order): `Warehouse.compact(partition_col=...)`
-    rewrites the WHOLE table; here only partitions whose current file
+    table's partitionBy order): only partitions whose current file
     count exceeds `ceil(partition_bytes / target)` are rewritten, each
     through dynamic partition overwrite — a streaming table with 3
     hot date partitions rewrites 3 partitions, not 10,000. Zone maps
@@ -112,17 +78,17 @@ def compact_table(
     stats columns), so the compacted layout stays skippable.
 
     Hive-dir parsing caveat: partition VALUES are compared as their
-    directory-encoded strings — tables partitioned on values needing
-    URL escapes (spaces, '=') or NULL (__HIVE_DEFAULT_PARTITION__)
-    should use `Warehouse.compact` instead.
+    directory-encoded strings — a partition whose value needs URL
+    escapes (spaces, '=') or is NULL (__HIVE_DEFAULT_PARTITION__)
+    matches no rows, and the dynamic overwrite leaves it uncompacted.
     """
     root = wh.path(table)
-    before = _count_files(root)
+    before = len(parquet_files(root))
     if not partition_cols:
         wh.compact(table, target_file_bytes=target_file_bytes)
         return {
             "n_files_before": before,
-            "n_files_after": _count_files(root),
+            "n_files_after": len(parquet_files(root)),
             "n_partitions_rewritten": 0,
         }
     from gcp_data_pipeline_fyp_spark.operators.zonemap import (
@@ -131,15 +97,16 @@ def compact_table(
     )
 
     zm_cols = zonemap_cols_of(wh, table)
-    sizes = _walk_data_files(root)
+    # partition directory (relative to the table root) -> its file sizes
+    sizes: dict[str, list[int]] = {}
+    for path, nbytes in parquet_files(root).items():
+        sizes.setdefault(os.path.relpath(os.path.dirname(path), root), []).append(nbytes)
     rewritten = 0
-    for rel, nbytes in sorted(sizes.items()):
-        if not rel:
+    for rel, files in sorted(sizes.items()):
+        if rel == ".":
             continue
-        part_dir = os.path.join(root, rel)
-        n_cur = _count_files(part_dir)
-        n_target = max(1, math.ceil(nbytes / target_file_bytes))
-        if n_cur <= n_target:
+        n_target = max(1, math.ceil(sum(files) / target_file_bytes))
+        if len(files) <= n_target:
             continue
         # hive-style dir name -> literal filter values
         df = wh.read(table)
@@ -159,6 +126,6 @@ def compact_table(
         build_zonemap(wh, table, zm_cols)
     return {
         "n_files_before": before,
-        "n_files_after": _count_files(root),
+        "n_files_after": len(parquet_files(root)),
         "n_partitions_rewritten": rewritten,
     }

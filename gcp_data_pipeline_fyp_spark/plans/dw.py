@@ -1,11 +1,14 @@
 """DW full-load stage: T_ODS -> 6 dims + fact (reference dw_full_load2.py).
 
 The reference reads ODS once and fans out to 7 sinks
-(`dw_full_load2.py:97-238`); Beam shares the PCollection, Spark must
-persist — the ODS frame is cached across the 7 actions. Surrogate keys
-are dense `row_number` ids over the tiny post-distinct dim values
-(operators/keys.py); fact enrichment is 5 broadcast left joins (J5) —
-never a shuffle of the fact side — plus the derived yyyymmdd date FK.
+(`dw_full_load2.py:97-238`). Here the six dimensions are one key query
+over T_ODS (`new_dim_rows`, the surrogate-key rule of operators/keys.py
+with nothing stored: dense ids from 1 in asc_nulls_first key order)
+whose rows come back as small driver-built frames; each is written,
+then the fact reads T_ODS a second time for its 5 broadcast left joins
+(J5) against those same frames — never a shuffle of the fact side —
+plus the derived yyyymmdd date FK. The delta load (plans/delta.py)
+runs the same `new_dim_rows` against the stored dimensions.
 
 Category-default quirk preserved: the fact's lookup key coalesces a
 NULL band to 'Shallow' / 'Not Felt' (`dw_full_load2.py:195-218`), while
@@ -16,7 +19,6 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -26,7 +28,7 @@ from gcp_data_pipeline_fyp_spark.functions.banding import (
 )
 from gcp_data_pipeline_fyp_spark.functions.cleaning import audit_columns
 from gcp_data_pipeline_fyp_spark.functions.timeops import date_dim_columns
-from gcp_data_pipeline_fyp_spark.operators.keys import assign_surrogate_keys
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 # T_FACT_Events is stored hive-partitioned by month (ID_date_ID div 100,
@@ -47,43 +49,49 @@ def with_fact_partition(fact: DataFrame) -> DataFrame:
     return fact.withColumn(FACT_PARTITION_COL, F.expr("ID_date_ID div 100").cast("int"))
 
 
-DIM_SPECS = {
-    # table -> (natural keys in ODS, surrogate id column)
-    "T_DIM_Network": (["LB_net"], "ID_Network_ID"),
+# table -> (natural-key columns as the dimension names them, surrogate id
+# column); the date dimension is keyed by its own yyyymmdd id
+DIM_KEYS = {
+    "T_DIM_Network": (["LB_NetworkSymbol"], "ID_Network_ID"),
     "T_DIM_RegionCountry": (["LB_Region", "LB_Country"], "ID_RegionCountry_ID"),
     "T_DIM_Seismic_Activity_Type": (["LB_type"], "ID_type_ID"),
-    "T_DIM_magCategory": (["LB_magCategory"], "ID_magCategory_ID"),
-    "T_DIM_depthCategory": (["LB_depthCategory"], "ID_depthCategory_ID"),
+    "T_DIM_magCategory": (["LB_magCategoryName"], "ID_magCategory_ID"),
+    "T_DIM_depthCategory": (["LB_depthCategoryName"], "ID_depthCategory_ID"),
+    "T_DIM_date": (["ID_date_ID"], None),
 }
 
 
-def _finalize_dim(table: str, dim: DataFrame) -> DataFrame:
-    """Rename natural keys to their DW names + add static descriptions (P17)."""
-    if table == "T_DIM_Network":
-        return dim.withColumnRenamed("LB_net", "LB_NetworkSymbol")
-    if table == "T_DIM_magCategory":
-        return dim.select(
-            "ID_magCategory_ID",
-            F.col("LB_magCategory").alias("LB_magCategoryName"),
-            mag_band_description("LB_magCategory").alias("LB_magCategoryDescription"),
-        )
-    if table == "T_DIM_depthCategory":
-        return dim.select(
-            "ID_depthCategory_ID",
-            F.col("LB_depthCategory").alias("LB_depthCategoryName"),
-            depth_band_description("LB_depthCategory").alias(
-                "LB_depthCategoryDescription"
-            ),
-        )
-    return dim
-
-
-def build_date_dim(ods: DataFrame, time_col: str = "DT_time") -> DataFrame:
-    dates = ods.select(F.col(time_col).cast("date").alias("d")).distinct()
-    cols = date_dim_columns("d")
-    return dates.select(*[expr.alias(name) for name, expr in cols.items()]).where(
-        F.col("ID_date_ID").isNotNull()
+def new_dim_rows(
+    ods: DataFrame, stored: dict[str, DataFrame] | None = None
+) -> dict[str, DataFrame]:
+    """The dimension rows for the natural keys of `ods` that `stored`
+    lacks (all six dimensions when nothing is stored), as the tables
+    hold them: static descriptions added (P17), dates expanded (P16)."""
+    keys = ods.select(
+        F.col("LB_net").alias("LB_NetworkSymbol"),
+        "LB_Region",
+        "LB_Country",
+        "LB_type",
+        F.col("LB_magCategory").alias("LB_magCategoryName"),
+        F.col("LB_depthCategory").alias("LB_depthCategoryName"),
+        # an event without a time adds no date
+        date_dim_columns("DT_time")["ID_date_ID"].cast("string").alias("ID_date_ID"),
     )
+    out = {}
+    for table, rows in new_dimension_rows(keys, DIM_KEYS, stored).items():
+        if table == "T_DIM_date":
+            day = F.to_date("ID_date_ID", "yyyyMMdd")
+            rows = rows.select(*[e.alias(n) for n, e in date_dim_columns(day).items()])
+        elif table == "T_DIM_magCategory":
+            rows = rows.withColumn(
+                "LB_magCategoryDescription", mag_band_description("LB_magCategoryName")
+            )
+        elif table == "T_DIM_depthCategory":
+            rows = rows.withColumn(
+                "LB_depthCategoryDescription", depth_band_description("LB_depthCategoryName")
+            )
+        out[table] = rows
+    return out
 
 
 def enrich_fact(ods: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -158,32 +166,14 @@ def stage_dw_full(
     run_ts: _dt.datetime,
     clamp_writes: bool = False,
 ) -> dict[str, DataFrame]:
-    from concurrent.futures import ThreadPoolExecutor
-
-    ods = t_ods.persist(StorageLevel.MEMORY_AND_DISK)
-    # populate the cache before fanning out: concurrent dim jobs would
-    # otherwise race to compute the same partitions
-    ods.count()
     audit = audit_columns(job_id, data_source, run_ts)
-
-    def _build(table: str) -> tuple[str, DataFrame]:
-        if table == "T_DIM_date":
-            dim = build_date_dim(ods)
-        else:
-            nat_keys, id_col = DIM_SPECS[table]
-            dim = _finalize_dim(table, assign_surrogate_keys(ods, nat_keys, id_col))
-        wh.overwrite(dim, table)
-        return table, wh.read(table)
-
-    # the 6 dim builds touch disjoint tables and read only the cached
-    # ODS frame — submit them as concurrent Spark jobs (driver-side
-    # threads; the standard fan-out for many small independent sinks,
-    # where each job alone underutilizes the cluster)
-    tables = [*DIM_SPECS, "T_DIM_date"]
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        dims = dict(pool.map(_build, tables))
+    # every dimension is rewritten, an empty one too, so a reload of
+    # fewer rows drops the keys it no longer has
+    dims = new_dim_rows(t_ods)
+    for table, rows in dims.items():
+        wh.overwrite(rows, table)
     fact = with_fact_partition(
-        enrich_fact(ods, dims).withColumns(
+        enrich_fact(t_ods, dims).withColumns(
             {
                 "_DT_insertion_date": audit["_DT_insertion_date"],
                 "_LB_job_execution_id": audit["_LB_job_execution_id"],
@@ -191,13 +181,12 @@ def stage_dw_full(
         )
     )
     # clamp_writes (guide §6, plans/pipeline.py): without it the fact's
-    # partitionBy(month) write lands one file per CACHED-ODS partition
+    # partitionBy(month) write lands one file per ODS scan partition
     # per month (cores-sized); rebalancing by the partition column
     # gives data-sized files per month directory at any scale
     if clamp_writes:
         fact = fact.hint("rebalance", FACT_PARTITION_COL)
     wh.overwrite(fact, "T_FACT_Events", partition_cols=[FACT_PARTITION_COL])
-    ods.unpersist()
     out = dict(dims)
     out["T_FACT_Events"] = wh.read("T_FACT_Events")
     return out

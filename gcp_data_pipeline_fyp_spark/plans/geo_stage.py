@@ -21,9 +21,9 @@ def stage_geo(
     states: DataFrame,
     wh: Warehouse,
     mode: str,
-    table: str = "T_ODS_earthquake",
     clamp_writes: bool = False,
 ) -> DataFrame:
+    table = "T_ODS_earthquake"
     lookup = build_states_lookup(states)
     parsed = parse_place(ods.drop("LB_Region", "LB_Country"), lookup)
     # restore the reference's ODS column order (Region/Country live

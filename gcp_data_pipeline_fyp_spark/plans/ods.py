@@ -80,7 +80,6 @@ def stage_ods(
     job_id: str,
     data_source: str,
     run_ts: _dt.datetime,
-    table: str = "ODS_earthquake",
     clamp_writes: bool = False,
 ) -> DataFrame:
     """Land the delivery's ODS rows; return the rows this call added.
@@ -95,6 +94,7 @@ def stage_ods(
     that read the table path, and the re-planned anti-join against the
     grown table comes back empty.
     """
+    table = "ODS_earthquake"
     projected = ods_projection(staged, job_id, data_source, run_ts)
     # clamp_writes: REBALANCE on small inputs so the table's file count
     # follows data size, not the per-core split count (plans/pipeline.py)

@@ -102,7 +102,7 @@ def run_pipeline(
     try:
         return _run_pipeline_stages(
             spark, raw_path, states, wh, mode, job_id, data_source, run_ts,
-            warehouse_root, archive, clamp_writes,
+            archive, clamp_writes,
         )
     finally:
         # restore the session-wide split size and open cost — leaving
@@ -127,45 +127,29 @@ def _run_pipeline_stages(
     job_id: str,
     data_source: str,
     run_ts: _dt.datetime,
-    warehouse_root: str,
     archive: bool,
     clamp_writes: bool = False,
 ) -> dict[str, DataFrame]:
     raw = read_raw_csv(spark, raw_path)
     staged = stage_staging(
-        raw, wh, mode, job_id, data_source, run_ts,
-        rejected_root=warehouse_root, clamp_writes=clamp_writes,
+        raw, wh, mode, job_id, data_source, run_ts, clamp_writes=clamp_writes
     )
-    if mode == "full":
-        ods = stage_ods(
-            staged, wh, mode, job_id, data_source, run_ts,
-            clamp_writes=clamp_writes,
-        )
-        t_ods = stage_geo(ods, states, wh, mode, clamp_writes=clamp_writes)
-        tables = stage_dw_full(
+    # a delta hands each stage only the rows this delivery added: the
+    # new ODS rows are computed once (stage_ods snapshots them) and flow
+    # through geo into the dimension and fact upkeep, instead of being
+    # re-derived from the grown ODS/T_ODS tables. A full load, and a
+    # first delivery (no ODS yet), land and hand on every row.
+    ods = stage_ods(staged, wh, mode, job_id, data_source, run_ts, clamp_writes=clamp_writes)
+    t_ods = stage_geo(ods, states, wh, mode, clamp_writes=clamp_writes)
+    if mode == "delta" and wh.exists("T_FACT_Events"):
+        tables = stage_dw_delta(
             t_ods, wh, job_id, data_source, run_ts, clamp_writes=clamp_writes
         )
     else:
-        # each stage hands the next only the rows this delivery added:
-        # the new ODS rows are computed once (stage_ods snapshots them)
-        # and flow through geo into the dimension and fact upkeep,
-        # instead of being re-derived from the grown ODS/T_ODS tables.
-        # A first delivery (no ODS yet) lands, and hands on, every row.
-        new_ods = stage_ods(
-            staged, wh, mode, job_id, data_source, run_ts,
+        tables = stage_dw_full(
+            wh.read("T_ODS_earthquake"), wh, job_id, data_source, run_ts,
             clamp_writes=clamp_writes,
         )
-        new_t_ods = stage_geo(new_ods, states, wh, mode, clamp_writes=clamp_writes)
-        if wh.exists("T_FACT_Events"):
-            tables = stage_dw_delta(
-                new_t_ods, wh, job_id, data_source, run_ts,
-                clamp_writes=clamp_writes,
-            )
-        else:
-            tables = stage_dw_full(
-                wh.read("T_ODS_earthquake"), wh, job_id, data_source, run_ts,
-                clamp_writes=clamp_writes,
-            )
     if archive:
-        archive_file(raw_path, warehouse_root, mode)
+        archive_file(raw_path, wh.root, mode)
     return tables

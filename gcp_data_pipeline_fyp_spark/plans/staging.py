@@ -31,8 +31,6 @@ def stage_staging(
     job_id: str,
     data_source: str,
     run_ts: _dt.datetime,
-    rejected_root: str | None = None,
-    table: str = "T_STG_earthquake",
     clamp_writes: bool = False,
 ) -> DataFrame:
     """raw (22 string cols + original_csv_line) -> staging table; returns accepted."""
@@ -58,8 +56,7 @@ def stage_staging(
     # clamp_writes (guide §6, set by run_pipeline for small inputs):
     # REBALANCE so the file count follows data size, not the parse's
     # per-core split count — see plans/pipeline.py.
-    wh.overwrite(staged.hint("rebalance") if clamp_writes else staged, table)
-    if rejected_root is not None:
-        write_rejected(rejected.select("original_csv_line"), rejected_root, job_id)
+    wh.overwrite(staged.hint("rebalance") if clamp_writes else staged, "T_STG_earthquake")
+    write_rejected(rejected.select("original_csv_line"), wh.root, job_id)
     coerced.unpersist()
-    return wh.read(table)
+    return wh.read("T_STG_earthquake")

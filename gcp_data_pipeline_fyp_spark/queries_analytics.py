@@ -20,10 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gcp_data_pipeline_fyp_spark.functions.banding import depth_band, mag_band
-from gcp_data_pipeline_fyp_spark.operators.keys import (
-    assign_surrogate_keys,
-    assign_surrogate_keys_multi,
-)
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
 from gcp_data_pipeline_fyp_spark.queries_util import (
     dec_avg,
     roundn,
@@ -54,17 +51,16 @@ def q_star_schema_fact(spark: SparkSession, sf: str) -> DataFrame:
         depth_band(F.col("value")).alias("LB_depthCategory"),
         F.col("ts").alias("DT_time"),
     )
-    # one melted pass computes all 4 dims' distinct sets (r12: the
-    # separate builds each re-scanned events — 4 extra corpus scans +
-    # 4 distinct shuffles at scale; per-dim output is identical, see
-    # operators/keys.py:assign_surrogate_keys_multi)
-    dims = assign_surrogate_keys_multi(
+    # one key query numbers all 4 dims (operators/keys.py, the rule the
+    # pipeline's dimension upkeep runs); the dims come back as small
+    # driver-built frames, so the final plan scans events once
+    dims = new_dimension_rows(
         ods,
         {
-            "type": ("LB_type", "ID_type_ID"),
-            "net": ("LB_net", "ID_Network_ID"),
-            "mag": ("LB_magCategory", "ID_magCategory_ID"),
-            "depth": ("LB_depthCategory", "ID_depthCategory_ID"),
+            "type": (["LB_type"], "ID_type_ID"),
+            "net": (["LB_net"], "ID_Network_ID"),
+            "mag": (["LB_magCategory"], "ID_magCategory_ID"),
+            "depth": (["LB_depthCategory"], "ID_depthCategory_ID"),
         },
     )
     dim_type, dim_net, dim_mag, dim_depth = (

@@ -585,13 +585,11 @@ def q_salted_join_events(spark: SparkSession, sf: str) -> DataFrame:
     plain-SQL rendering. Window is r4-queue."""
     from pyspark.sql import functions as F
 
-    from gcp_data_pipeline_fyp_spark.operators.keys import (
-        assign_surrogate_keys,
-    )
+    from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
     from gcp_data_pipeline_fyp_spark.operators.skew import salted_join
 
     ev = load(spark, sf, "events").select("event_id", "event_type")
-    dim = assign_surrogate_keys(ev, ["event_type"], "id_type")
+    dim = new_dimension_rows(ev, {"type": (["event_type"], "id_type")})["type"]
     joined = salted_join(ev, dim, ["event_type"], salt_from="event_id")
     return (
         joined.groupBy("id_type")

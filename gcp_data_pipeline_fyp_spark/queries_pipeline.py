@@ -13,6 +13,8 @@ magError.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,10 +31,7 @@ from gcp_data_pipeline_fyp_spark.functions.timeops import (
     date_dim_columns,
     utc_to_local_string,
 )
-from gcp_data_pipeline_fyp_spark.operators.keys import (
-    assign_surrogate_keys,
-    incremental_surrogate_keys,
-)
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
 from gcp_data_pipeline_fyp_spark.operators.merge import merge_upsert
 from gcp_data_pipeline_fyp_spark.operators.quality import quality_split
 from gcp_data_pipeline_fyp_spark.queries_util import dec_avg, dec_avg_sql, load
@@ -243,9 +242,12 @@ FROM j
 
 
 # ------------------------------------------------------------- A1-A3
+_TYPE_DIM = {"type": (["event_type"], "id_type")}
+
+
 def q_surrogate_keys(spark: SparkSession, sf: str) -> DataFrame:
     ev = _events(spark, sf)
-    return assign_surrogate_keys(ev, ["event_type"], "id_type").withColumnRenamed(
+    return new_dimension_rows(ev, _TYPE_DIM)["type"].withColumnRenamed(
         "event_type", "lb_type"
     )
 
@@ -260,8 +262,10 @@ FROM (SELECT DISTINCT event_type FROM events)
 def q_surrogate_keys_incremental(spark: SparkSession, sf: str) -> DataFrame:
     ev = _events(spark, sf)
     seed = ev.filter(F.col("event_type").isin("click", "error"))
-    existing = assign_surrogate_keys(seed, ["event_type"], "id_type")
-    _new, full = incremental_surrogate_keys(ev, existing, ["event_type"], "id_type")
+    existing = new_dimension_rows(seed, _TYPE_DIM)["type"]
+    # left out when the delivery brings no new type
+    new = new_dimension_rows(ev, _TYPE_DIM, {"type": existing})
+    full = reduce(DataFrame.unionByName, new.values(), existing)
     return full.withColumnRenamed("event_type", "lb_type")
 
 

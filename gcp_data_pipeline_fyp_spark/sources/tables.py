@@ -62,6 +62,17 @@ def zorder_value(
     return reduce(lambda a, b: a.bitwiseOR(b), parts)
 
 
+def parquet_files(root: str) -> dict[str, int]:
+    """path -> bytes of every parquet data file under `root`: the one
+    driver-side file census (O(files) listing, no Spark job)."""
+    return {
+        os.path.join(dp, f): os.path.getsize(os.path.join(dp, f))
+        for dp, _dns, fns in os.walk(root)
+        for f in fns
+        if f.endswith(".parquet")
+    }
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -189,37 +200,19 @@ class Warehouse:
             if os.path.exists(d):
                 shutil.rmtree(d)
 
-    def compact(
-        self,
-        table: str,
-        target_file_bytes: int = 128 << 20,
-        partition_col: str | None = None,
-    ) -> int:
+    def compact(self, table: str, target_file_bytes: int = 128 << 20) -> int:
         """Small-file compaction: rewrite `table` into ~target-sized files.
 
         Append-heavy tables (delta loads, streaming foreachBatch) decay
         into thousands of tiny files; at 100 TB the scan's task-per-file
         overhead and the NameNode/listing pressure dominate. Compaction
-        coalesces to ceil(bytes/target) files — per partition directory
-        when `partition_col` is given (each month compacts
-        independently; the job can run partition-at-a-time forever) —
-        and promotes via the same crash-safe rename used by the delta
-        path. Returns the file count after compaction.
+        coalesces to ceil(bytes/target) files (no shuffle) and promotes
+        via the same crash-safe rename used by the delta path. A
+        partitioned table compacts per partition, only where needed,
+        through `operators/maintenance.compact_table`. Returns the file
+        count after compaction.
         """
         import math
-
-        root = self.path(table)
-        staging = table + "__compacting"
-
-        ext = ".parquet"
-
-        def _bytes(d: str) -> int:
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _dns, fns in os.walk(d)
-                for f in fns
-                if f.endswith(ext)
-            )
 
         # a zone map (operators/zonemap.py) lives inside the table dir
         # and dies with the swap; remember its stat columns so the
@@ -229,29 +222,15 @@ class Warehouse:
             zonemap_cols_of,
         )
 
+        root = self.path(table)
+        staging = table + "__compacting"
         zm_cols = zonemap_cols_of(self, table)
-        n_out = max(1, math.ceil(_bytes(root) / target_file_bytes))
-        df = self.read(table)
-        if partition_col is None:
-            self.overwrite(df.coalesce(n_out), staging)
-            self.swap(staging, table)
-        else:
-            # repartition by the partition column so each directory gets
-            # its own ~target-sized output files
-            self.overwrite(
-                df.repartition(n_out, partition_col),
-                staging,
-                partition_cols=[partition_col],
-            )
-            self.swap_partitions(staging, table, partition_col)
+        n_out = max(1, math.ceil(sum(parquet_files(root).values()) / target_file_bytes))
+        self.overwrite(self.read(table).coalesce(n_out), staging)
+        self.swap(staging, table)
         if zm_cols:
             build_zonemap(self, table, zm_cols)
-        return sum(
-            1
-            for _dp, _dns, fns in os.walk(root)
-            for f in fns
-            if f.endswith(ext)
-        )
+        return len(parquet_files(root))
 
     def overwrite_zorder_layout(
         self,

@@ -156,10 +156,10 @@ def _fold_state(
     checkpoint_dir: str,
     batch_id: int,
     part: DataFrame,
-    merge: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> bool:
-    """Fold one batch's partial state `part` into the persisted state
-    `table` as `merge(prior, part)`, at most once per batch. Returns
+    """Fold one batch's partial counts `part` into the persisted count
+    state `table`, at most once per batch: the last column of `part` is
+    the count, summed per key, the columns before it the key. Returns
     False when the state already held the batch (a replay).
 
     Count/sum merges are distributive but NOT idempotent — replaying a
@@ -199,7 +199,13 @@ def _fold_state(
             )
         if mark["m"] is not None and batch_id <= mark["m"]:
             return False
-        part = merge(prior.drop("__stream_id", "__last_batch_id"), part)
+        *keys, count = part.columns
+        part = (
+            prior.select(*part.columns)
+            .unionByName(part)
+            .groupBy(*keys)
+            .agg(F.sum(count).alias(count))
+        )
     staging = f"{table}__staging"
     wh.overwrite(
         part.withColumn("__stream_id", F.lit(sid)).withColumn(
@@ -347,20 +353,6 @@ def windowed_event_counts(
     )
 
 
-def _sum_counts(keys: list[str], count_col: str):
-    """The merge of count states keyed by `keys`: sum `count_col`."""
-
-    def merge(prior: DataFrame, part: DataFrame) -> DataFrame:
-        return (
-            prior.select(*keys, count_col)
-            .unionByName(part)
-            .groupBy(*keys)
-            .agg(F.sum(count_col).alias(count_col))
-        )
-
-    return merge
-
-
 def stream_drift_monitor(
     spark: SparkSession,
     input_dir: str,
@@ -408,10 +400,7 @@ def stream_drift_monitor(
     def _fold(batch: DataFrame, batch_id: int) -> None:
         profile = wh.read(profile_table)
         part = bin_against_profile(batch, profile, value_col, group_cols, n_bins)
-        merged = _fold_state(
-            wh, state_table, checkpoint_dir, batch_id, part,
-            _sum_counts([*group_cols, "bin"], "cur_cnt"),
-        )
+        merged = _fold_state(wh, state_table, checkpoint_dir, batch_id, part)
         if not merged and batch_already_appended(wh, report_table, batch_id):
             return
         report = psi_from_profile(

@@ -1,8 +1,8 @@
 """Delta loads in the fast tier: a full load, two daily deliveries and an
 idempotent re-run, pinned row for row (surrogate ids included), plus the
 structural promises of the delta path — a delivery with no new dimension
-key writes no dimension file, and a steady delivery stays within a job
-budget."""
+key writes no dimension file, and a full load and a steady delivery each
+stay within a job budget."""
 
 from __future__ import annotations
 
@@ -34,6 +34,9 @@ FACT_COLS = [
 # a steady delivery's Spark jobs; the per-dimension chains this path
 # replaced ran 77 on the benchmark's deliveries
 STEADY_DELIVERY_MAX_JOBS = 60
+# a full load's Spark jobs, its six dimensions numbered by one key query;
+# six window-numbered dimension builds on threads ran 46
+FULL_LOAD_MAX_JOBS = 40
 
 
 def _row(t, lat, lon, depth, mag, typ="earthquake", place="10km NE of Anza, CA", net="us"):
@@ -96,12 +99,27 @@ def test_delta_loads_pin_ids_facts_files_and_jobs(spark, tmp_path):
         # the split clamp's scan settings are restored after every load
         assert [spark.conf.get(k, None) for k in scan_confs] == confs_before
 
-    load(_feed(
+    sc = spark.sparkContext
+
+    def jobs_of(group, path, run_ts):
+        """Load `path` under a job group and return the group's job ids."""
+        loose = set(sc.statusTracker().getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            load(path, run_ts)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # no job escaped the group (a job submitted from another thread would)
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) == loose
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    jobs = jobs_of("full-load", _feed(
         raw / "whole_month_202403.csv",
         _row("2024-03-05T10:00:00.000Z", 35.1, -117.2, 15.2, 5.0),
         _row("2024-03-06T11:00:00.000Z", 36.0, -118.0, 80.0, 3.5, net="ci",
              place="Kermadec Islands, New Zealand"),
     ), datetime.datetime(2024, 4, 1, 3, 0))
+    assert 0 < len(jobs) <= FULL_LOAD_MAX_JOBS, len(jobs)
 
     # delivery 1: a re-send, a new type and a new Region/Country, and an
     # event with NULL network, type and place (NULL natural keys, which
@@ -145,16 +163,7 @@ def test_delta_loads_pin_ids_facts_files_and_jobs(spark, tmp_path):
              typ="volcanic eruption", place="Crete, Greece"),
         _row("2024-04-01T11:00:00.000Z", 42.0, 22.0, 15.0, 5.2, place="Crete, Greece"),
     )
-    sc = spark.sparkContext
-    loose = set(sc.statusTracker().getJobIdsForGroup(None))
-    sc.setJobGroup("steady-delivery", "delta load with no new dimension key")
-    try:
-        load(d2, datetime.datetime(2024, 4, 3, 3, 0))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("steady-delivery")
-    # no job escaped the group (a job submitted from another thread would)
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == loose
+    jobs = jobs_of("steady-delivery", d2, datetime.datetime(2024, 4, 3, 3, 0))
     assert 0 < len(jobs) <= STEADY_DELIVERY_MAX_JOBS, len(jobs)
     assert _dim_files(wh) == files_before
     assert _dims(wh) == dims_before

@@ -13,10 +13,7 @@ from gcp_data_pipeline_fyp_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_groups,
 )
-from gcp_data_pipeline_fyp_spark.operators.keys import (
-    assign_surrogate_keys,
-    incremental_surrogate_keys,
-)
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
 from gcp_data_pipeline_fyp_spark.operators.merge import merge_upsert
 from gcp_data_pipeline_fyp_spark.operators.quality import quality_split, reject_predicate
 from gcp_data_pipeline_fyp_spark.sources.states import states_df
@@ -65,61 +62,123 @@ def test_place_multiple_of(spark):
 
 def test_surrogate_keys_dense_and_ordered(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",), ("a",), (None,)], "k string")
-    dim = assign_surrogate_keys(df, ["k"], "id").collect()
+    dim = new_dimension_rows(df, {"d": (["k"], "id")})["d"].collect()
     got = {r["k"]: r["id"] for r in dim}
     # NULLS FIRST pinned (SURVEY.md §7): None=1, then a,b,c
     assert got == {None: 1, "a": 2, "b": 3, "c": 4}
 
 
 def test_surrogate_keys_multi_matches_single(spark):
-    """The one-pass melted dim build must reproduce each per-dim
-    `assign_surrogate_keys` output exactly (distinct set, NULLS-FIRST
-    dense numbering), including NULL keys and values shared across
-    dims."""
-    from gcp_data_pipeline_fyp_spark.operators.keys import (
-        assign_surrogate_keys_multi,
-    )
-
+    """Several dimensions numbered by one call must equal each dimension
+    numbered alone (distinct set, NULLS-FIRST dense numbering, schema),
+    including NULL keys and values shared across dims."""
     df = spark.createDataFrame(
         [("b", "x"), ("a", None), ("c", "x"), ("a", "y"), (None, "b")],
         "k1 string, k2 string",
     )
-    multi = assign_surrogate_keys_multi(
-        df, {"d1": ("k1", "id1"), "d2": ("k2", "id2")}
-    )
-    for name, (key, id_col) in {
-        "d1": ("k1", "id1"), "d2": ("k2", "id2")
-    }.items():
-        single = assign_surrogate_keys(df, [key], id_col)
-        got = sorted(
-            ((r[id_col], r[key]) for r in multi[name].collect()),
-            key=repr,
-        )
-        want = sorted(
-            ((r[id_col], r[key]) for r in single.collect()), key=repr
-        )
-        assert got == want, name
+    dims = {"d1": (["k1"], "id1"), "d2": (["k2"], "id2")}
+    multi = new_dimension_rows(df, dims)
+    for name, spec in dims.items():
+        single = new_dimension_rows(df, {name: spec})[name]
+        assert sorted(map(tuple, multi[name].collect()), key=repr) == sorted(
+            map(tuple, single.collect()), key=repr
+        ), name
         assert multi[name].schema == single.schema, name
 
 
 def test_surrogate_keys_multi_rejects_non_string(spark):
-    import pytest as _pytest
-
-    from gcp_data_pipeline_fyp_spark.operators.keys import (
-        assign_surrogate_keys_multi,
-    )
-
     df = spark.createDataFrame([(1, "a")], "k1 long, k2 string")
-    with _pytest.raises(ValueError, match="string keys"):
-        assign_surrogate_keys_multi(df, {"d1": ("k1", "id1")})
+    with pytest.raises(ValueError, match="string keys"):
+        new_dimension_rows(df, {"d1": (["k1"], "id1"), "d2": (["k2"], "id2")})
 
 
 def test_incremental_surrogate_keys(spark):
     existing = spark.createDataFrame([(1, "a"), (2, "b")], "id long, k string")
     new = spark.createDataFrame([("b",), ("c",), ("d",)], "k string")
-    new_rows, full = incremental_surrogate_keys(new, existing, ["k"], "id")
+    new_rows = new_dimension_rows(new, {"d": (["k"], "id")}, {"d": existing})["d"]
     assert {(r["id"], r["k"]) for r in new_rows.collect()} == {(3, "c"), (4, "d")}
-    assert full.count() == 4
+    assert existing.unionByName(new_rows).count() == 4
+
+
+def _key_rule(rows, dims, stored):
+    """The surrogate-key rule in plain Python: per dimension, the distinct
+    keys its stored rows lack, numbered from their MAX(id)+1 (1 when
+    nothing is stored) with NULL first and strings in code-point order;
+    a key-is-id dimension (id None) skips NULL keys and is not numbered;
+    a stored dimension that gains nothing is left out."""
+    out = {}
+    for name, (keys, id_col) in dims.items():
+        have = stored.get(name)
+        seen = {tuple(r[k] for k in keys) for r in rows}
+        if id_col is None:
+            seen = {k for k in seen if k[0] is not None}
+        old = {tuple(r[k] for k in keys) for r in have or []}
+        new = sorted(seen - old, key=lambda k: [(v is not None, v or "") for v in k])
+        if have is not None and not new:
+            continue
+        if id_col is None:
+            out[name] = new
+        else:
+            start = max((r[id_col] for r in have or []), default=0)
+            out[name] = [(start + i, *k) for i, k in enumerate(new, 1)]
+    return out
+
+
+def test_new_dimension_rows_match_the_python_rule(spark):
+    """One differential check of the one surrogate-key function: NULL
+    keys, a two-column key, stored ids with a gap, a key-is-id
+    dimension, a stored dimension with nothing new, empty input, and
+    non-string keys refused. The rows are built on the JVM (no
+    Python-side RDD in their plans)."""
+    df = spark.createDataFrame(
+        [
+            ("b", "x", "p", "20240102"),
+            ("a", None, "q", "20240101"),
+            (None, "x", "p", None),
+            ("é", "y", "q", "20240103"),
+            ("a", None, "p", "20240101"),
+            ("Z", "x", None, "20240102"),
+        ],
+        "k1 string, k2 string, k3 string, day string",
+    )
+    dims = {
+        "one": (["k1"], "id_one"),
+        "two": (["k1", "k2"], "id_two"),
+        "three": (["k3"], "id_three"),
+        "date": (["day"], None),
+    }
+    stored_rows = {
+        "two": [(1, "a", None), (7, "b", "x")],  # ids 2..6 are a gap
+        "three": [(1, None), (2, "p"), (3, "q")],  # holds every key
+        "date": [("20240101",)],
+    }
+    stored = {
+        "two": spark.createDataFrame(stored_rows["two"], "id_two long, k1 string, k2 string"),
+        "three": spark.createDataFrame(stored_rows["three"], "id_three long, k3 string"),
+        "date": spark.createDataFrame(stored_rows["date"], "day string"),
+    }
+    stored_dicts = {
+        n: [dict(zip(stored[n].columns, r)) for r in rows] for n, rows in stored_rows.items()
+    }
+    rows = [r.asDict() for r in df.collect()]
+    for given in ({}, stored):
+        got = new_dimension_rows(df, dims, given)
+        want = _key_rule(rows, dims, stored_dicts if given else {})
+        assert {n: [tuple(r) for r in f.collect()] for n, f in got.items()} == want
+        for f in got.values():
+            assert "ExistingRDD" not in f._jdf.queryExecution().executedPlan().toString()
+    # NULL sorts first; numbering continues past the stored MAX(id)
+    assert want["two"][0] == (8, None, "x")
+    assert new_dimension_rows(df, dims)["one"].collect()[0] == (1, None)
+
+    empty = new_dimension_rows(df.limit(0), dims, {"two": stored["two"]})
+    assert set(empty) == {"one", "three", "date"}
+    assert [f.count() for f in empty.values()] == [0, 0, 0]
+    assert empty["one"].dtypes == [("id_one", "bigint"), ("k1", "string")]
+    assert empty["date"].dtypes == [("day", "string")]
+
+    with pytest.raises(ValueError, match="string keys"):
+        new_dimension_rows(df.selectExpr("1L AS n"), {"d": (["n"], "id")})
 
 
 def test_merge_upsert_semantics(spark):
@@ -2663,9 +2722,10 @@ def test_text_index_build_query_append_matches_direct_bm25(spark, tmp_path):
 
 
 def test_text_index_postings_compact_after_appends(spark, tmp_path):
-    """Append-heavy postings decay into small files; Warehouse.compact
-    with partition_col='term_bucket' coalesces per bucket dir and the
-    compacted index answers queries byte-identically."""
+    """Append-heavy postings decay into small files; compact_table
+    with partition_cols=['term_bucket'] rewrites each fragmented bucket
+    dir and the compacted index answers queries byte-identically."""
+    from gcp_data_pipeline_fyp_spark.operators.maintenance import compact_table
     from gcp_data_pipeline_fyp_spark.operators.search import (
         append_text_index,
         build_text_index,
@@ -2704,7 +2764,7 @@ def test_text_index_postings_compact_after_appends(spark, tmp_path):
         )
 
     n_before = _nfiles()
-    wh.compact("ix__postings", partition_col="term_bucket")
+    compact_table(wh, "ix__postings", partition_cols=["term_bucket"])
     assert _nfiles() < n_before  # the 3-generation small files merged
     after = [tuple(r) for r in query_text_index(wh, spark, terms, "ix").collect()]
     assert after == before

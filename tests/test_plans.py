@@ -99,38 +99,53 @@ def test_cdc_snapshot_single_shuffle(spark):
     assert "WindowGroupLimit" in p  # rn==1 pruned per partition
 
 
-def test_star_fact_dim_scans_column_pruned(spark):
-    """r12 melted-dims invariant (assign_surrogate_keys_multi): the 4
-    dim builds share ONE melted distinct pass behind a lazy barrier,
-    so the final plan scans parquet exactly once (the fact side) and
-    each dim window reads the tiny shared ExistingRDD — the pre-r12
-    form paid 4 extra per-dim parquet scans. Guards against a refactor
-    that reintroduces per-dim scans."""
+def _key_query_plans(spark, monkeypatch) -> list[str]:
+    """Record the formatted plan of every DataFrame.collect — the
+    surrogate-key query (operators/keys.py) runs its one collect while
+    the dimension frames are built."""
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    plans: list[str] = []
+    collect = frame.collect
+
+    def recording(self):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            self.explain("formatted")
+        plans.append(buf.getvalue())
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", recording)
+    return plans
+
+
+def test_star_fact_dim_scans_column_pruned(spark, monkeypatch):
+    """The star build's 4 dims come from ONE key query that reads only
+    their key columns, and come back as driver-built rows (no scan, no
+    Python-side RDD), so the final plan scans parquet exactly once —
+    the fact side. Guards against a refactor that reintroduces per-dim
+    scans."""
     import re
 
+    plans = _key_query_plans(spark, monkeypatch)
     p = _plan(spark, "star_schema_fact")
+    assert len(plans) == 1, len(plans)  # one key query for all 4 dims
+    (key_scan,) = re.findall(r"ReadSchema: struct<([^>]*)>", plans[0])
+    # LB_type, LB_net, LB_magCategory and LB_depthCategory derive from these
+    assert {c.split(":")[0] for c in key_scan.split(",")} == {"event_type", "user_id", "value"}
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
     assert len(schemas) == 1, schemas  # only the fact side reads parquet
-    # 4 dim windows over the shared melt (detail-section headers only:
-    # formatted explain prints each node in the tree AND its detail)
-    assert len(re.findall(r"\(\d+\) Scan ExistingRDD", p)) == 4
+    assert "ExistingRDD" not in p
 
 
-def test_surrogate_multi_melt_prunes_columns(spark, tmp_path):
-    """The melted distinct pass itself must prune its scan to the dim
-    key columns (the whole point of the one-pass build: N dims cost
-    one read of their source columns, never the full row). Checked
-    with barrier=False so the melt subtree stays visible in the
-    plan."""
-    import io as _io
-    import contextlib as _ctx
+def test_surrogate_multi_melt_prunes_columns(spark, tmp_path, monkeypatch):
+    """The key query's melt must prune its scan to the dim key columns
+    (N dims cost one read of their source columns, never the full
+    row), with or without stored rows to anti-join."""
     import re
 
     from pyspark.sql import functions as F
 
-    from gcp_data_pipeline_fyp_spark.operators.keys import (
-        assign_surrogate_keys_multi,
-    )
+    from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows
 
     path = str(tmp_path / "wide")
     spark.range(100).select(
@@ -141,17 +156,14 @@ def test_surrogate_multi_melt_prunes_columns(spark, tmp_path):
         F.rand(7).alias("fat2"),
     ).write.mode("overwrite").parquet(path)
     wide = spark.read.parquet(path)
-    dims = assign_surrogate_keys_multi(
-        wide, {"d1": ("k1", "id1"), "d2": ("k2", "id2")}, barrier=False
-    )
-    buf = _io.StringIO()
-    with _ctx.redirect_stdout(buf):
-        dims["d1"].explain("formatted")
-    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", buf.getvalue())
-    assert schemas, buf.getvalue()
-    for s in schemas:
-        cols = {c.split(":")[0] for c in s.split(",") if c}
-        assert cols <= {"k1", "k2"}, s
+    dims = {"d1": (["k1"], "id1"), "d2": (["k2"], "id2")}
+    plans = _key_query_plans(spark, monkeypatch)
+    first = new_dimension_rows(wide, dims)
+    new_dimension_rows(wide, dims, first)
+    assert len(plans) == 2
+    for plan in plans:
+        (scan,) = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+        assert {c.split(":")[0] for c in scan.split(",")} == {"k1", "k2"}, scan
 
 
 def test_expectations_single_scan_regardless_of_rule_count(spark):

@@ -104,19 +104,21 @@ def test_compact_reduces_files_preserves_data(spark, tmp_path):
 def test_compact_partitioned_keeps_layout(spark, tmp_path):
     from pyspark.sql import functions as F
 
+    from gcp_data_pipeline_fyp_spark.operators.maintenance import compact_table
     from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh2"))
     df = spark.range(0, 1000).withColumn("p", (F.col("id") % 3).cast("int"))
     for _ in range(5):
         wh.append(df.repartition(6), "t", partition_cols=["p"])
-    got = wh.compact("t", target_file_bytes=1 << 30, partition_col="p")
+    got = compact_table(wh, "t", target_file_bytes=1 << 30, partition_cols=["p"])
     import os
 
     dirs = [d for d in os.listdir(wh.path("t")) if d.startswith("p=")]
     assert sorted(dirs) == ["p=0", "p=1", "p=2"]
     assert wh.read("t").count() == 5000
-    assert got <= 6  # at most a couple files per partition dir
+    assert got["n_partitions_rewritten"] == 3
+    assert got["n_files_after"] <= 6  # at most a couple files per partition dir
 
 
 def test_zorder_layout_compact_2d_regions(spark, tmp_path):

@@ -431,10 +431,7 @@ def test_fold_state_skips_replays_and_refuses_a_foreign_lineage(spark, tmp_path)
     it was."""
     import json
 
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        _fold_state,
-        _sum_counts,
-    )
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import _fold_state
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
 
@@ -448,7 +445,7 @@ def test_fold_state_skips_replays_and_refuses_a_foreign_lineage(spark, tmp_path)
 
     def fold(ckpt, batch_id, rows):
         part = spark.createDataFrame(rows, "k string, n long")
-        return _fold_state(wh, "S", ckpt, batch_id, part, _sum_counts(["k"], "n"))
+        return _fold_state(wh, "S", ckpt, batch_id, part)
 
     def state():
         return sorted((r["k"], r["n"]) for r in wh.read("S").collect())

@@ -27,7 +27,7 @@ from gcp_data_pipeline_fyp_spark.operators.dedup import (  # noqa: E402
     exact_dup_stats,
     minhash_lsh_candidates,
 )
-from gcp_data_pipeline_fyp_spark.operators.keys import assign_surrogate_keys  # noqa: E402
+from gcp_data_pipeline_fyp_spark.operators.keys import new_dimension_rows  # noqa: E402
 from gcp_data_pipeline_fyp_spark.queries_util import load  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -60,7 +60,7 @@ def main() -> None:
         t["groupby_agg"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        dim = assign_surrogate_keys(ev, ["event_type"], "id_type")
+        dim = new_dimension_rows(ev, {"type": (["event_type"], "id_type")})["type"]
         ev.join(F.broadcast(dim), "event_type").write.mode("overwrite").format(
             "noop"
         ).save()

@@ -7,7 +7,8 @@ costs. Warm protocol: each probe callable runs `reps` times after one
 untimed warm pass of the session; reported value is the median.
 
 Usage: python3 tools/stage_probe.py <probe> [reps]
-Probes: ivfpq, pq, sq8, semdedup, v2, v3, pipeline, jobcount
+Probes: ivfpq, pq, sq8, semdedup, v2, v3
+(the pipeline's per-stage breakdown comes from `perfbench/run.py --trace 1`)
 """
 
 from __future__ import annotations
@@ -206,52 +207,6 @@ def probe_v2(spark, reps):
     )
 
 
-def probe_pipeline(spark, reps):
-    """Stage-level breakdown of pipeline_full_load (one reps is one
-    fresh warehouse build; per-stage timers inside)."""
-    import datetime
-    import shutil
-    import tempfile
-
-    from bench import _usgs_csv_from_events
-    from gcp_data_pipeline_fyp_spark.plans.delta import stage_dw_delta  # noqa
-    from gcp_data_pipeline_fyp_spark.plans.dw import stage_dw_full
-    from gcp_data_pipeline_fyp_spark.plans.geo_stage import stage_geo
-    from gcp_data_pipeline_fyp_spark.plans.ods import stage_ods
-    from gcp_data_pipeline_fyp_spark.plans.staging import stage_staging
-    from gcp_data_pipeline_fyp_spark.sources.files import read_raw_csv
-    from gcp_data_pipeline_fyp_spark.sources.states import states_df
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    for rep in range(reps):
-        work = tempfile.mkdtemp(prefix="probe_pipeline_")
-        try:
-            full_csv = os.path.join(work, "whole_month_202401.csv")
-            _usgs_csv_from_events(spark, SF, full_csv)
-            states = states_df(spark)
-            wh = Warehouse(spark, os.path.join(work, "wh"))
-            run_ts = datetime.datetime(2024, 2, 1, 3, 0)
-            t0 = time.perf_counter()
-            raw = read_raw_csv(spark, full_csv)
-            staged = stage_staging(
-                raw, wh, "full", "jid", "src", run_ts,
-                rejected_root=os.path.join(work, "wh"),
-            )
-            t1 = time.perf_counter()
-            ods = stage_ods(staged, wh, "full", "jid", "src", run_ts)
-            t2 = time.perf_counter()
-            t_ods = stage_geo(ods, states, wh, "full")
-            t3 = time.perf_counter()
-            stage_dw_full(t_ods, wh, "jid", "src", run_ts)
-            t4 = time.perf_counter()
-            print(
-                f"  rep{rep}: staging {t1-t0:.2f}  ods {t2-t1:.2f}  "
-                f"geo {t3-t2:.2f}  dw {t4-t3:.2f}  total {t4-t0:.2f}"
-            )
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-
-
 PROBES = {
     "ivfpq": probe_ivfpq,
     "pq": probe_pq,
@@ -259,7 +214,6 @@ PROBES = {
     "semdedup": probe_semdedup,
     "v3": probe_v3,
     "v2": probe_v2,
-    "pipeline": probe_pipeline,
 }
 
 
