@@ -12,14 +12,37 @@ Scripts/parse_country_ods_full_load2.py:36-76` and delta twin):
 The Beam version does this with an `AsDict` side-input lookup; here the
 states lookup is a **broadcast left join** (the Spark-native rendering
 of a side input) plus pure column expressions — no UDF. The lookup
-build (P15: one row per state name AND per abbreviation) is a union of
-two selects.
+build (P15: one row per state name AND per abbreviation) is one inline
+VALUES table, so its broadcast is built on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def string_table(
+    spark: SparkSession, rows: Sequence[Sequence[str | None]], names: Sequence[str]
+) -> DataFrame:
+    """`rows` (at least one) as one inline VALUES table of string
+    columns `names`.
+
+    It plans as a LocalRelation: the driver holds the rows, so reading
+    or broadcasting it runs no job and no Python worker, unlike
+    `createDataFrame(list)` (a `Scan ExistingRDD` over a Python RDD).
+    """
+
+    def lit(v: str | None) -> str:
+        if v is None:
+            return "CAST(NULL AS STRING)"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    cols = ", ".join(f"`{n}`" for n in names)
+    values = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
 
 
 def build_states_lookup(
@@ -28,15 +51,16 @@ def build_states_lookup(
     """(State->State) ∪ (Abbreviation->State), columns (__state_key, __state_name).
 
     Mirrors parse_country_ods_full_load2.py:92-101 where each states row
-    emits two KV pairs for the side-input dict.
+    emits two KV pairs for the side-input dict. The pairs are built on
+    the driver from the states' rows (collecting an inline table such as
+    `sources/states.states_df` runs no job) into one inline table.
     """
-    by_name = states.select(
-        F.col(name_col).alias("__state_key"), F.col(name_col).alias("__state_name")
+    pairs = states.select(name_col, abbrev_col).collect()
+    return string_table(
+        states.sparkSession,
+        [(n, n) for n, _a in pairs] + [(a, n) for n, a in pairs],
+        ["__state_key", "__state_name"],
     )
-    by_abbrev = states.select(
-        F.col(abbrev_col).alias("__state_key"), F.col(name_col).alias("__state_name")
-    )
-    return by_name.unionByName(by_abbrev)
 
 
 def place_parts(place: Column | str) -> tuple[Column, Column, Column]:

@@ -18,14 +18,23 @@ stable key prefix (e.g. ID_date_ID) so the rewrite touches only
 affected partitions; `merge_upsert_partitioned` narrows the rewrite to
 partitions present in the updates (classic dynamic-partition-overwrite
 upsert).
+
+`upsert` is the table-level MERGE the delta fact load and the streaming
+ingest both call. When no update key is stored yet — the steady case:
+the delta chain's ODS keeps only events whose id is new, and a stream
+drops re-sends within its watermark — the MERGE is a pure INSERT, so it
+appends the updates instead of joining and rewriting what holds them.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 
 def merge_upsert(base: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -71,6 +80,85 @@ def merge_upsert_partitioned(
     parts = updates.select(partition_col).distinct()
     scoped = base.join(F.broadcast(parts), [partition_col], "left_semi")
     return merge_upsert(scoped, updates, keys)
+
+
+def upsert(
+    wh: Warehouse,
+    table: str,
+    updates: DataFrame,
+    keys: Sequence[str],
+    partition_col: str | None = None,
+) -> bool:
+    """MERGE `updates` into the stored `table` by `keys`, writing only
+    what changed. Returns True when the updates were appended.
+
+    One probe query asks whether any update key is already stored: a
+    null-safe semi join of the table's keys against the broadcast
+    update keys. On a table partitioned by `partition_col` it reads
+    only the partitions the updates touch: their partition values come
+    to the driver first, which is also the job that computes the
+    update rows. The rows are kept (a local checkpoint) for the probe
+    and the write, so they are computed once.
+
+    - No key stored: the updates are appended — no shuffle of the
+      table, no staged rewrite, no swap. A missing table is created
+      the same way.
+    - Some key stored: the rewrite path — `merge_upsert`, or
+      `merge_upsert_partitioned` on a partitioned table (a key never
+      changes partition), lands in `{table}__staging`, then `swap` or
+      `swap_partitions` promotes it.
+
+    What is written is rebalanced (by `partition_col` when given): AQE
+    sizes the write partitions by bytes, so the file count follows data
+    size, not the batch's split count or `spark.sql.shuffle.partitions`
+    (guide §6).
+
+    Replays stay idempotent without a ledger: when a crash follows the
+    append, the replayed updates find their keys stored and take the
+    rewrite path, which replaces the appended rows by the same rows.
+    """
+    parts = [partition_col] if partition_col else []
+    if not wh.exists(table):
+        wh.append(updates.hint("rebalance", *parts), table, parts)
+        return True
+    base = wh.read(table)
+    # the rows as the table orders them, bound to the warehouse's session
+    # (a union takes its left side's): a foreachBatch frame's session runs
+    # with AQE off, which would leave the rebalance writing one file per
+    # shuffle partition. The lazy local checkpoint plans the rows, and
+    # their rebalance, now and keeps them at the first action.
+    rows = (
+        base.limit(0)
+        .unionByName(updates.select(*base.columns))
+        .hint("rebalance", *parts)
+        .localCheckpoint(eager=False)
+    )
+    stored = base
+    if partition_col:
+        touched = {r[0] for r in rows.select(partition_col).collect()}
+        known = [v for v in touched if v is not None]
+        scope = F.col(partition_col).isin(known) if known else F.lit(False)
+        if None in touched:
+            scope = scope | F.col(partition_col).isNull()
+        stored = base.where(scope)
+    new_keys = rows.select(*[F.col(k).alias(f"__u_{k}") for k in keys])
+    same_key = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"__u_{k}")) for k in keys],
+    )
+    hit = stored.select(*keys).join(F.broadcast(new_keys), same_key, "left_semi")
+    if not hit.collect():
+        wh.append(rows, table, parts)
+        return True
+    staging = f"{table}__staging"
+    if partition_col:
+        merged = merge_upsert_partitioned(base, rows, keys, partition_col)
+        wh.overwrite(merged.hint("rebalance", *parts), staging, parts)
+        wh.swap_partitions(staging, table, partition_col)
+    else:
+        wh.overwrite(merge_upsert(base, rows, keys).hint("rebalance"), staging)
+        wh.swap(staging, table)
+    return False
 
 
 def table_diff(

@@ -1,15 +1,17 @@
 """Geo stage: ODS place -> Region/Country (reference parse_country_ods_*_load2.py).
 
 Full mode rewrites T_ODS wholesale. Delta mode is handed only the rows
-this delivery added to ODS (plans/ods.py), parses those, appends them
-and returns them; T_ODS is only ever written from rows just added to
+this delivery added to ODS (plans/ods.py), parses those once into a
+persisted frame, appends it and returns it for the DW stage, whose
+caller releases it; T_ODS is only ever written from rows just added to
 ODS, so they cannot already be in T_ODS and need no anti-join (the
-reference's J3). The states lookup rides a broadcast join (J1) — the
-fact-sized side never shuffles.
+reference's J3). The states lookup is an inline table riding a
+broadcast join (J1) — the fact-sized side never shuffles.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from gcp_data_pipeline_fyp_spark.functions.geo import build_states_lookup, parse_place
@@ -37,6 +39,8 @@ def stage_geo(
             parsed.hint("rebalance") if clamp_writes else parsed, table
         )
         return wh.read(table)
-    # a delta's rows come from stage_ods' snapshot, already rebalanced
+    # a delta's rows come from stage_ods' snapshot, already rebalanced;
+    # the append computes them into the cache the DW stage reads
+    parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
     wh.append(parsed, table)
     return parsed

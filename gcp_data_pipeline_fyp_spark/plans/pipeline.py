@@ -142,14 +142,13 @@ def _run_pipeline_stages(
     ods = stage_ods(staged, wh, mode, job_id, data_source, run_ts, clamp_writes=clamp_writes)
     t_ods = stage_geo(ods, states, wh, mode, clamp_writes=clamp_writes)
     if mode == "delta" and wh.exists("T_FACT_Events"):
-        tables = stage_dw_delta(
-            t_ods, wh, job_id, data_source, run_ts, clamp_writes=clamp_writes
-        )
+        tables = stage_dw_delta(t_ods, wh, job_id, data_source, run_ts)
     else:
         tables = stage_dw_full(
             wh.read("T_ODS_earthquake"), wh, job_id, data_source, run_ts,
             clamp_writes=clamp_writes,
         )
+    t_ods.unpersist()  # a delivery's parsed rows, persisted by stage_geo
     if archive:
         archive_file(raw_path, wh.root, mode)
     return tables

@@ -4,12 +4,14 @@ The reference reads this from a pre-loaded BigQuery table
 (`Full Load Scripts/parse_country_ods_full_load2.py:92-96`); the data
 itself is public knowledge, embedded here so the engine is
 self-contained. `states_df` returns the same (State, Abbreviation)
-shape (FIXTURES.md §2).
+shape (FIXTURES.md §2), as an inline VALUES table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gcp_data_pipeline_fyp_spark.functions.geo import string_table
 
 US_STATES: list[tuple[str, str]] = [
     ("Alabama", "AL"), ("Alaska", "AK"), ("Arizona", "AZ"), ("Arkansas", "AR"),
@@ -32,4 +34,4 @@ US_STATES: list[tuple[str, str]] = [
 
 
 def states_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(US_STATES, ["State", "Abbreviation"])
+    return string_table(spark, US_STATES, ["State", "Abbreviation"])

@@ -10,6 +10,14 @@ table under a root directory:
   which is what the reference hand-coded with SQL-shaped source reads;
 - the staging-table lifecycle (S12) is a plain table dir create/drop.
 
+Every write that creates or replaces a table also records the table's
+read-back schema (data columns, then partition columns) in
+`_schema.json` inside the table directory; `read` hands it to the
+parquet reader, so reading a table launches no footer-inference job.
+Parquet readers skip `_`-prefixed files, and appends leave the file
+alone. `recover` finishes or undoes a rename promotion that a crash
+interrupted; `exists` and `read` run it first.
+
 Fact-sized tables are written partitioned (`partition_cols`) so a
 1000-executor cluster gets partition pruning on date-scoped queries and
 the partitioned upsert only rewrites affected partitions.
@@ -17,13 +25,18 @@ the partitioned upsert only rewrites affected partitions.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
+_BACKUP = ".__backup"
 
 
 def zorder_value(
@@ -83,52 +96,91 @@ class Warehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
+        self.recover(table)
         return os.path.exists(self.path(table))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """The table as a DataFrame. With the table's `_schema.json` the
+        reader is given that schema and runs no job; without it (a table
+        written by something other than this class) Spark infers the
+        schema from one file footer, a one-task job."""
+        self.recover(table)
+        reader = self.spark.read
+        try:
+            with open(os.path.join(self.path(table), SCHEMA_FILE)) as fh:
+                reader = reader.schema(StructType.fromJson(json.load(fh)))
+        except FileNotFoundError:
+            pass
+        return reader.parquet(self.path(table))
 
     def read_evolved(self, table: str) -> DataFrame:
         """Schema-evolution-aware read: the schema is the UNION of
         every file footer's columns (`mergeSchema`), so columns added
         by later appends read back as NULL for pre-existing files —
         the additive-evolution contract (Delta/Iceberg's default)
-        without a metastore. Plain `read` samples ONE footer and may
-        miss late columns, which is also why it is the default: at
-        100 TB mergeSchema reads every footer up front, a listing-
-        scale cost you opt into only on evolved tables. Incompatible
-        type changes across files (int -> string) still fail loudly —
-        additive evolution only; widen via a rewrite."""
+        without a metastore. Plain `read` takes the schema recorded by
+        the table's last create or replace, which appends never
+        change, so it misses late columns; that is also why it is the
+        default: at 100 TB mergeSchema reads every footer up front, a
+        listing-scale cost you opt into only on evolved tables.
+        Incompatible type changes across files (int -> string) still
+        fail loudly — additive evolution only; widen via a rewrite."""
         return (
             self.spark.read.option("mergeSchema", True)
             .parquet(self.path(table))
         )
 
+    def _save(
+        self,
+        w: DataFrameWriter,
+        df: DataFrame,
+        table: str,
+        partition_cols: Sequence[str] | None,
+        creates: bool,
+    ) -> None:
+        """Run the parquet write `w` of `df` into `table`; when it
+        creates or replaces the table, record the read-back schema.
+
+        The data columns are `df`'s; the partition columns, and their
+        types, are what the reader infers from the directories just
+        written — a listing, no job. The file lands under a temporary
+        name and is renamed into place, so a reader never sees half of
+        it; a crash before the rename leaves no file (the table's
+        replacement deleted the old one), and `read` infers instead."""
+        path = self.path(table)
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
+        w.parquet(path)
+        if not creates:
+            return
+        parts = set(partition_cols or ())
+        data = StructType([f for f in df.schema.fields if f.name not in parts])
+        schema = self.spark.read.schema(data).parquet(path).schema
+        final = os.path.join(path, SCHEMA_FILE)
+        with open(final + ".tmp", "w") as fh:
+            fh.write(schema.json())
+        os.replace(final + ".tmp", final)
+
     def overwrite(
         self, df: DataFrame, table: str, partition_cols: Sequence[str] | None = None
     ) -> None:
-        w = df.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(self.path(table))
+        self._save(df.write.mode("overwrite"), df, table, partition_cols, True)
 
     def append(
         self, df: DataFrame, table: str, partition_cols: Sequence[str] | None = None
     ) -> None:
-        w = df.write.mode("append")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(self.path(table))
+        """Append `df`; an append that creates the table records its
+        schema, one into an existing table leaves the record alone."""
+        creates = not self.exists(table)
+        self._save(df.write.mode("append"), df, table, partition_cols, creates)
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_cols: Sequence[str]
     ) -> None:
         """Dynamic partition overwrite: only partitions present in df are replaced."""
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(self.path(table))
+        self._save(
+            df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic"),
+            df, table, partition_cols, True,
         )
 
     def drop(self, table: str) -> None:
@@ -136,14 +188,41 @@ class Warehouse:
         if os.path.exists(p):
             shutil.rmtree(p)
 
+    def recover(self, table: str) -> None:
+        """Settle what a crash inside `swap` or `swap_partitions` left:
+        for the table directory and each of its `col=v` partition
+        directories, a missing directory whose `.__backup` exists gets
+        the backup back (the crash came between the two renames of
+        `_promote`: the old data is the only copy), and a backup beside
+        a present directory is dropped (the crash came after the new
+        data was in place). Idempotent, and cheap when there is nothing
+        to settle: one listing of the table directory."""
+        final = self.path(table)
+        self._settle(final)
+        if os.path.isdir(final):
+            for entry in os.listdir(final):
+                if entry.endswith(_BACKUP):
+                    self._settle(os.path.join(final, entry[: -len(_BACKUP)]))
+
     @staticmethod
-    def _promote(staged: str, final: str) -> None:
+    def _settle(final: str) -> None:
+        backup = final + _BACKUP
+        if not os.path.exists(backup):
+            return
+        if os.path.exists(final):
+            shutil.rmtree(backup)
+        else:
+            os.rename(backup, final)
+
+    @classmethod
+    def _promote(cls, staged: str, final: str) -> None:
         """Rename directory `staged` to `final`, keeping the old `final`
         as `final.__backup` until the new one is in place (rolled back
-        if the rename fails)."""
-        backup = final + ".__backup"
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        if the rename fails). A backup left by an earlier crash is
+        settled first, so it is restored, never deleted, when it is
+        the only copy."""
+        cls._settle(final)
+        backup = final + _BACKUP
         had_old = os.path.exists(final)
         if had_old:
             os.rename(final, backup)
@@ -161,9 +240,10 @@ class Warehouse:
 
         The old table is renamed aside BEFORE the staging table moves
         into place, so a crash at any point leaves either the old or
-        the new data recoverable on disk — never a window with no
-        table (each os.rename is atomic on local/HDFS filesystems;
-        object stores should use the copy path instead).
+        the new data recoverable on disk, and `recover` puts it back
+        (each os.rename is atomic on local/HDFS filesystems; object
+        stores should use the copy path instead). The staging table's
+        `_schema.json` moves with its directory.
         """
         self._promote(self.path(staging_table), self.path(table))
 
@@ -174,7 +254,8 @@ class Warehouse:
         the staging table replaces its counterpart in the final table
         via the same rename-with-backup discipline; partitions absent
         from staging are never touched (their files keep their inodes —
-        asserted by tests). The staging dir is dropped afterwards.
+        asserted by tests). The staging dir, its schema file with it,
+        is dropped afterwards; the table keeps its own.
         """
         staged_root = self.path(staging_table)
         final_root = self.path(table)
@@ -248,14 +329,13 @@ class Warehouse:
         stored table (stats on the data columns do the skipping).
         """
         n = n_files or df.sparkSession.sparkContext.defaultParallelism
-        tmp = df.withColumn("__z", zcol)
-        (
-            tmp.repartitionByRange(n, "__z")
+        laid = (
+            df.withColumn("__z", zcol)
+            .repartitionByRange(n, "__z")
             .sortWithinPartitions("__z")
             .drop("__z")
-            .write.mode("overwrite")
-            .parquet(self.path(table))
         )
+        self.overwrite(laid, table)
 
     def overwrite_range_layout(
         self,
@@ -274,9 +354,6 @@ class Warehouse:
         of the table instead of all of it.
         """
         n = n_files or df.sparkSession.sparkContext.defaultParallelism
-        (
-            df.repartitionByRange(n, *order_cols)
-            .sortWithinPartitions(*order_cols)
-            .write.mode("overwrite")
-            .parquet(self.path(table))
+        self.overwrite(
+            df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols), table
         )

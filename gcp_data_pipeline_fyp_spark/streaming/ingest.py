@@ -4,11 +4,15 @@
 reference's delta chain (SURVEY.md §2.5): CSV files landing in a
 directory are discovered by the file source, deduplicated by event id
 within the watermark, validated against a declarative rule suite, and
-merged into the warehouse table via `foreachBatch` -> `merge_upsert` —
-the anti-join + MERGE semantics of
+merged into the warehouse table via `foreachBatch` ->
+`operators/merge.upsert` — the anti-join + MERGE semantics of
 `Delta Load Scripts/ods_delta_load2.py:140-190` /
 `dw2_delta_load2.py:101-131`, but incremental per micro-batch and
-restartable from the checkpoint. `stream_drift_monitor` folds each
+restartable from the checkpoint. A batch whose ids the table does not
+hold yet (the steady case: re-sends die in the watermark dedup) is
+appended; only a batch with a stored id (a replay after a crash that
+followed the append, or a re-send older than the watermark) rewrites
+the table through staging + `Warehouse.swap`. `stream_drift_monitor` folds each
 batch into a persisted PSI state against a fitted base profile.
 
 Both run one batch operator per micro-batch on three shared helpers:
@@ -34,8 +38,10 @@ two execution modes, which is the point of Structured Streaming.
 
 Scale notes: the file source scales by listing (use
 `maxFilesPerTrigger` to bound batch size); dedup state is bounded by
-the watermark horizon; `foreachBatch` runs the merge as a normal batch
-join so all the batch-side partitioning applies.
+the watermark horizon; the merge's probe scans the table's key column
+against the broadcast batch keys, and a rewrite is a normal batch join
+so all the batch-side partitioning applies. Appends grow the table by
+about one file per batch; `maintain --compact` packs them.
 """
 
 from __future__ import annotations
@@ -46,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from gcp_data_pipeline_fyp_spark.operators.merge import merge_upsert
+from gcp_data_pipeline_fyp_spark.operators.merge import upsert
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 def checkpoint_stream_id(checkpoint_dir: str) -> str:
@@ -217,34 +223,6 @@ def _fold_state(
     return True
 
 
-def _merge_into(
-    wh: Warehouse, table: str, batch: DataFrame, event_id_cols: list[str]
-) -> None:
-    """MERGE one (already in-batch-deduplicated) micro-batch into `table`.
-
-    Every write below carries a REBALANCE hint (guide §6 / §2.2): the
-    merge output's partition count otherwise inherits
-    `spark.sql.shuffle.partitions` (sized to CORES), so each batch of a
-    32-core run wrote 4x the files of an 8-core run for identical data
-    — measured r13 as genuine inverse scaling of this leg (32-core
-    1.97x slower; dropping the partition count recovered ~90% of it).
-    REBALANCE makes AQE size the write partitions by bytes
-    (advisoryPartitionSizeInBytes), so file count follows DATA SIZE at
-    any scale: one file per small micro-batch locally, never one file
-    per core."""
-    if wh.exists(table):
-        # land the merge in a staging dir, then promote by RENAME —
-        # never a read-back-rewrite of the base (which would double
-        # the write volume and race the lazy base scan)
-        staging = f"{table}__staging"
-        base = wh.read(table)
-        merged = merge_upsert(base, batch.select(*base.columns), event_id_cols)
-        wh.overwrite(merged.hint("rebalance"), staging)
-        wh.swap(staging, table)
-    else:
-        wh.overwrite(batch.hint("rebalance"), table)
-
-
 def stream_validated_ingest(
     spark: SparkSession,
     input_dir: str,
@@ -320,7 +298,7 @@ def stream_validated_ingest(
                 "batch_id", F.lit(batch_id).cast("long")
             )
             wh.append(report, report_table)
-        _merge_into(wh, table, clean, event_id_cols)
+        upsert(wh, table, clean, event_id_cols)
 
     return _run_available_now(
         feed, _validate_and_merge, checkpoint_dir, event_id_cols

@@ -2,7 +2,9 @@
 idempotent re-run, pinned row for row (surrogate ids included), plus the
 structural promises of the delta path — a delivery with no new dimension
 key writes no dimension file, and a full load and a steady delivery each
-stay within a job budget."""
+stay within a job budget — and of the warehouse: every table it wrote
+reads through its `_schema.json` without a Spark job, equal to Spark's
+footer-inferring read."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import os
 
 from gcp_data_pipeline_fyp_spark.plans.pipeline import run_pipeline
 from gcp_data_pipeline_fyp_spark.sources.states import states_df
-from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
+from gcp_data_pipeline_fyp_spark.sources.tables import SCHEMA_FILE, Warehouse
 
 COLS = (
     "time,latitude,longitude,depth,mag,magType,nst,gap,dmin,rms,net,id,updated,"
@@ -31,12 +33,14 @@ FACT_COLS = [
     "ID_magCategory_ID", "ID_depthCategory_ID", "ID_date_ID", "VL_n_mag",
     "VL_n_depth", "LB_place",
 ]
-# a steady delivery's Spark jobs; the per-dimension chains this path
-# replaced ran 77 on the benchmark's deliveries
-STEADY_DELIVERY_MAX_JOBS = 60
+# a steady delivery's Spark jobs, its fact rows appended and no table
+# read inferring its schema; 38 when the fact MERGE rewrote the touched
+# months and every read ran a footer job, 77 with per-dimension chains
+STEADY_DELIVERY_MAX_JOBS = 25
 # a full load's Spark jobs, its six dimensions numbered by one key query;
-# six window-numbered dimension builds on threads ran 46
-FULL_LOAD_MAX_JOBS = 40
+# 30 when every read ran a footer job, 46 with six window-numbered
+# dimension builds on threads
+FULL_LOAD_MAX_JOBS = 25
 
 
 def _row(t, lat, lon, depth, mag, typ="earthquake", place="10km NE of Anza, CA", net="us"):
@@ -182,3 +186,83 @@ def test_delta_loads_pin_ids_facts_files_and_jobs(spark, tmp_path):
     load(d2, datetime.datetime(2024, 4, 4, 3, 0))
     assert {t: _table_rows(wh, t) for t in tables} == before
     assert _dim_files(wh) == files_before
+
+
+def test_schema_file_reads_run_no_job_and_equal_inferred_reads(spark, tmp_path):
+    """Every table of a full load, two deliveries and two stream rounds
+    (the second a rewrite: it updates a stored id) carries its schema
+    file; `Warehouse.read` of it runs no Spark job and equals
+    `spark.read.parquet` in schema (names, types, order) and rows."""
+    from gcp_data_pipeline_fyp_spark.operators.expectations import in_range, not_null
+    from gcp_data_pipeline_fyp_spark.streaming.ingest import stream_validated_ingest
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    root = str(tmp_path / "wh")
+    states = states_df(spark)
+    for name, rows, run_ts in [
+        ("whole_month_202403.csv", [
+            _row("2024-03-05T10:00:00.000Z", 35.1, -117.2, 15.2, 5.0),
+            _row("2024-03-06T11:00:00.000Z", 36.0, -118.0, 80.0, 3.5, net="ci",
+                 place="Kermadec Islands, New Zealand"),
+        ], datetime.datetime(2024, 4, 1, 3, 0)),
+        ("all_day_20240401_120000.csv", [
+            _row("2024-04-01T09:30:00.000Z", 40.0, 20.0, 200.0, 6.5,
+                 typ="volcanic eruption", place="Crete, Greece"),
+            _row("2024-04-01T10:15:00.000Z", 41.0, 21.0, 12.0, 2.0, typ="", place="", net=""),
+        ], datetime.datetime(2024, 4, 2, 3, 0)),
+        ("all_day_20240402_120000.csv", [
+            _row("2024-04-01T11:00:00.000Z", 42.0, 22.0, 15.0, 5.2, place="Crete, Greece"),
+        ], datetime.datetime(2024, 4, 3, 3, 0)),
+    ]:
+        run_pipeline(spark, _feed(raw / name, *rows), states, root, run_ts=run_ts)
+
+    wh = Warehouse(spark, root)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    rounds = [
+        [(1, "2024-01-01 10:00:00", "click", 1.0), (2, "2024-01-01 10:01:00", "", 2.0)],
+        [(3, "2024-01-01 11:00:00", "view", 3.0)],
+    ]
+    for i, rows in enumerate(rounds):
+        (in_dir / f"r{i}.csv").write_text(
+            "event_id,ts,event_type,value\n"
+            + "\n".join(",".join(map(str, r)) for r in rows)
+        )
+        if i == 1:  # id 3 from another load path: round 1 updates it
+            wh.append(
+                wh.read("EVENTS").selectExpr(
+                    "3L AS event_id", "ts", "event_type", "9.0D AS value"
+                ),
+                "EVENTS",
+            )
+        stream_validated_ingest(
+            spark, str(in_dir), "event_id long, ts timestamp, event_type string, value double",
+            ["event_id"], "ts", wh, "EVENTS", str(tmp_path / "ckpt"),
+            rules=[not_null("event_type"), in_range("value", 0, 10)],
+            quarantine_table="QUARANTINE", report_table="EXPECTATIONS_LOG",
+        ).awaitTermination(120)
+    assert sorted(map(tuple, wh.read("EVENTS").select("event_id", "value").collect())) == [
+        (1, 1.0), (3, 3.0)
+    ]
+
+    tables = sorted(e for e in os.listdir(root) if e != "REJECTED")
+    assert set(tables) == {
+        "T_STG_earthquake", "ODS_earthquake", "T_ODS_earthquake", *DIMS, "T_FACT_Events",
+        "EVENTS", "QUARANTINE", "EXPECTATIONS_LOG",
+    }
+    sc = spark.sparkContext
+    for t in tables:
+        assert os.path.exists(os.path.join(wh.path(t), SCHEMA_FILE)), t
+        sc.setJobGroup(f"read-{t}", t)
+        try:
+            df = wh.read(t)
+            fields = [(f.name, f.dataType) for f in df.schema]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"read-{t}") == [], t
+        inferred = spark.read.parquet(wh.path(t))
+        assert fields == [(f.name, f.dataType) for f in inferred.schema], t
+        assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+            map(tuple, inferred.collect()), key=repr
+        ), t

@@ -26,6 +26,30 @@ def _place(spark, place):
     return (r["LB_Region"], r["LB_Country"])
 
 
+def test_states_lookup_is_an_inline_table(spark):
+    """The states and their lookup plan as LocalRelations — no Python
+    RDD scan, no job to build or collect them — and the lookup maps
+    each name and each abbreviation to the name; quotes and
+    backslashes survive the inline table's literals."""
+    from gcp_data_pipeline_fyp_spark.functions.geo import string_table
+    from gcp_data_pipeline_fyp_spark.sources.states import US_STATES
+
+    sc = spark.sparkContext
+    sc.setJobGroup("states-lookup", "states-lookup")
+    try:
+        lookup = build_states_lookup(states_df(spark))
+        got = {(r["__state_key"], r["__state_name"]) for r in lookup.collect()}
+        odd = [tuple(r) for r in string_table(spark, [("O'Hare \\ x", None)], ["a", "b"]).collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("states-lookup") == []
+    for df in (states_df(spark), lookup):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+    assert got == {(n, n) for n, _a in US_STATES} | {(a, n) for n, a in US_STATES}
+    assert odd == [("O'Hare \\ x", None)]
+
+
 def test_place_no_comma(spark):
     # parse_country_ods_full_load2.py:36-76 case grid
     assert _place(spark, "southern Mid-Atlantic Ridge") == (
