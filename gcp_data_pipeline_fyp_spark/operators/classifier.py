@@ -121,93 +121,19 @@ def bucketed_features(
     )
 
 
-_META_COLS = ("meta_n_buckets", "meta_seed", "meta_bigrams")
-
-
-def _resolve_meta(
-    weights: DataFrame,
-    n_buckets: int | None,
-    bigrams: bool | None,
-    seed: int | None,
-) -> tuple[int, bool, int]:
-    """Feature-space params for scoring: stored model metadata wins;
-    caller-supplied values are only honored when the table predates the
-    metadata columns, and a caller value CONFLICTING with stored
-    metadata raises instead of silently misrouting buckets.
-
-    ONE driver action total: the empty-table probe and the metadata
-    read share a single `first()` on the ≤ n_buckets-row table (the r5
-    form ran two — an extra Spark job per score_documents call)."""
-    if all(c in weights.columns for c in _META_COLS):
-        row = weights.select(*_META_COLS).first()
-        if row is None:
-            # EMPTY weight table (e.g. an all-empty seed set trained
-            # zero buckets): scoring is geometry-independent — every
-            # bucket misses and coalesces to 0 — so fall through to the
-            # caller/default path instead of failing the whole scan
-            return (
-                DEFAULT_BUCKETS if n_buckets is None else n_buckets,
-                True if bigrams is None else bigrams,
-                0 if seed is None else seed,
-            )
-        m_buckets, m_seed, m_bigrams = int(row[0]), int(row[1]), bool(row[2])
-        for name, given, stored in (
-            ("n_buckets", n_buckets, m_buckets),
-            ("bigrams", bigrams, m_bigrams),
-            ("seed", seed, m_seed),
-        ):
-            if given is not None and given != stored:
-                raise ValueError(
-                    f"{name}={given} conflicts with the weight table's "
-                    f"stored {name}={stored}; drop the argument — the "
-                    "model knows its own feature space"
-                )
-        return m_buckets, m_bigrams, m_seed
-    # legacy (pre-metadata) weight table: trust the caller, old behavior
-    return (
-        DEFAULT_BUCKETS if n_buckets is None else n_buckets,
-        True if bigrams is None else bigrams,
-        0 if seed is None else seed,
-    )
-
-
-def train_linear_classifier(
-    labeled: DataFrame,
-    id_col: str,
-    text_col: str,
-    label_col: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bigrams: bool = True,
-    seed: int = 0,
-) -> DataFrame:
-    """One-pass training over a labeled seed set ->
-    (bucket, w_milli, meta_n_buckets, meta_seed, meta_bigrams).
-
-    `label_col` is boolean (True = positive/keep). The output has at
-    most `n_buckets` rows — broadcastable by construction — and only
-    buckets observed in the seed set appear (absent buckets score 0 via
-    the scoring join's coalesce). The constant meta_* columns persist
-    the feature-space geometry with the model (cheap: parquet RLE), so
-    a weight table written to the warehouse is self-describing and
-    scoring never trusts caller-remembered parameters.
-    """
-    rows = bucketed_features(
-        labeled, [label_col], text_col, n_buckets, bigrams, seed
-    )
-    return train_from_buckets(rows, label_col, n_buckets, bigrams, seed)
-
-
 def train_from_buckets(
     rows: DataFrame,
     label_col: str,
     n_buckets: int = DEFAULT_BUCKETS,
-    bigrams: bool = True,
-    seed: int = 0,
 ) -> DataFrame:
-    """Weight table from pre-featurized (label, __b) rows — see
-    `bucketed_features` for when to use the split form. `bigrams`/`seed`
-    must state how `rows` was featurized; they are persisted as model
-    metadata, not used in the math."""
+    """One-pass training over pre-featurized (label, __b) rows (see
+    `bucketed_features`) -> (bucket, w_milli).
+
+    `label_col` is boolean (True = positive/keep); `n_buckets` must be
+    the bucket space `rows` was hashed into (it sets the add-one
+    smoothing). The output has at most `n_buckets` rows — broadcastable
+    by construction — and only buckets observed in the seed set appear
+    (absent buckets score 0 via the scoring join's coalesce)."""
     counts = rows.groupBy("__b").agg(
         F.sum(F.when(F.col(label_col), 1).otherwise(0)).alias("n_pos"),
         F.sum(F.when(F.col(label_col), 0).otherwise(1)).alias("n_neg"),
@@ -224,43 +150,6 @@ def train_from_buckets(
     return counts.crossJoin(totals).select(
         F.col("__b").alias("bucket"),
         F.round(w * 1000.0, 0).cast("bigint").alias("w_milli"),
-        F.lit(n_buckets).cast("int").alias("meta_n_buckets"),
-        F.lit(seed).cast("int").alias("meta_seed"),
-        F.lit(bool(bigrams)).alias("meta_bigrams"),
-    )
-
-
-def score_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    weights: DataFrame,
-    n_buckets: int | None = None,
-    bigrams: bool | None = None,
-    seed: int | None = None,
-    threshold_micro: int = 0,
-) -> DataFrame:
-    """Score every document with a trained weight table ->
-    (id_col, n_features, score_micro, label).
-
-    The feature-space geometry (n_buckets/seed/bigrams) is read from
-    the weight table's own metadata columns — the stored model, not the
-    caller, is the source of truth; explicit arguments are validated
-    against it (legacy metadata-less tables still honor them).
-
-    `score_micro` is the mean feature weight in micro-units (exact
-    integer arithmetic until one final correctly-rounded division);
-    `label` is 'keep' when score_micro > threshold_micro, 'drop'
-    otherwise, and 'empty' for docs with no features (score NULL) —
-    the report is complete over the input, nothing silently vanishes.
-
-    The weight table broadcasts (≤ n_buckets rows); the corpus side is
-    scan + explode + one id-keyed aggregation.
-    """
-    n_buckets, bigrams, seed = _resolve_meta(weights, n_buckets, bigrams, seed)
-    feats = bucketed_features(df, [id_col], text_col, n_buckets, bigrams, seed)
-    return score_from_buckets(
-        feats, id_col, weights, df.select(id_col), threshold_micro
     )
 
 
@@ -271,13 +160,22 @@ def score_from_buckets(
     all_ids: DataFrame,
     threshold_micro: int = 0,
 ) -> DataFrame:
-    """Score pre-featurized (id, __b) rows — see `bucketed_features`.
-    `all_ids` anchors report completeness (featureless docs emit no
-    bucket rows but must still report label 'empty')."""
-    w_slim = weights.select("bucket", "w_milli")  # meta cols pruned pre-broadcast
+    """Score pre-featurized (id, __b) rows (see `bucketed_features`)
+    with a `train_from_buckets` weight table ->
+    (id_col, n_features, score_micro, label).
+
+    `score_micro` is the mean feature weight in micro-units (exact
+    integer arithmetic until one final correctly-rounded division);
+    `label` is 'keep' when score_micro > threshold_micro, 'drop'
+    otherwise, and 'empty' for docs with no features (score NULL).
+    `all_ids` anchors that completeness: featureless docs emit no
+    bucket rows but must still report label 'empty'.
+
+    The weight table broadcasts (≤ n_buckets rows); the corpus side is
+    scan + explode + one id-keyed aggregation."""
     per_doc = (
         feats.join(
-            F.broadcast(w_slim), feats["__b"] == w_slim["bucket"], "left"
+            F.broadcast(weights), feats["__b"] == weights["bucket"], "left"
         )
         .groupBy(id_col)
         .agg(

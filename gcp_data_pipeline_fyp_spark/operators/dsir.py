@@ -438,7 +438,7 @@ def dsir_budget_select(
 
 # ---------------------------------------------------------------------
 # Persisted profiles — the build-once/reuse discipline every other
-# index family has (build_ivf_index, build_lsh_index). Measured
+# index family has (build_ivfpq_index, build_lsh_index). Measured
 # motivation (BASELINE.md): at sf0.1 the per-run profile FIT costs
 # 5.9 s vs 2.1 s for frozen-profile scoring — at 100 TB the target
 # profile never changes per batch, so steady-state selection should

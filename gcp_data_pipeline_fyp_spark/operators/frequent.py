@@ -16,15 +16,15 @@ The final output is EXACT and partitioning-independent (the sketch
 only affects which non-hitters get discarded early), so it
 oracle-checks against a plain GROUP BY ... HAVING in DuckDB.
 
-Crossover (measured, tools/shuffle_probe.py): with a SMALL vocabulary
-the plain groupBy shuffles less — the sketch pass is an extra scan
-with its own aggregation, and the sf0.1 synthetic corpus has a few
-thousand types, so sketch+verify moved ~2.9x the bytes of the direct
-agg there. The design pays off when the item universe is large
-relative to the hitter set (web-scale token streams: 10^8+ Zipfian
-types vs a bounded candidate list) — that is the 100 TB shape; the
-wall-clock scale probe (flat at 16x data) shows the same story. For
-known-small universes, use the direct groupBy.
+Crossover (measured, BASELINE.md heavy-hitters scaling row): with a
+SMALL vocabulary the plain groupBy shuffles less — the sketch pass is
+an extra scan with its own aggregation, and the sf0.1 synthetic
+corpus has a few thousand types, so sketch+verify moved ~2.9x the
+bytes of the direct agg there. The design pays off when the item
+universe is large relative to the hitter set (web-scale token
+streams: 10^8+ Zipfian types vs a bounded candidate list) — that is
+the 100 TB shape; the wall-clock scale row (flat at 16x data) shows
+the same story. For known-small universes, use the direct groupBy.
 """
 
 from __future__ import annotations

@@ -23,8 +23,8 @@ Spark-first shape:
   against the corpus code stream and does ONE id-keyed aggregation.
 - **Persistence** (`build_ivfpq_index` / `ivfpq_topk_indexed`) stores
   the coarse codebook, PQ codebooks and codes as warehouse tables —
-  the build-once / query-many lifecycle of the LSH-band and IVF
-  indexes (operators/similarity.py).
+  the build-once / query-many lifecycle of the LSH-band index
+  (operators/dedup.py:build_lsh_index).
 
 Cross-engine exactness: vectors are unit-normalized and rounded to
 6 dp before training (identical doubles in any engine), k-means is the
@@ -608,10 +608,17 @@ def build_ivfpq_index(
     `residual=True` stores RESIDUAL codes (see `ivfpq_residual_topk`).
     The choice is persisted as a constant `meta_residual` column on
     the codebooks table — the stored index, not the caller, decides
-    how queries interpret the codes (the same
-    self-describing-model discipline as the classifier weight
-    tables): scoring residual codes as plain codes would return
-    plausible-looking garbage with no error."""
+    how queries interpret the codes: scoring residual codes as plain
+    codes would return plausible-looking garbage with no error.
+
+    Also persists `name__train_mix` — the TRAINING-TIME per-centroid
+    assignment counts (n_centroids rows). The retrain monitor
+    (`similarity.ivf_retrain_decision_indexed`) PSIs against this
+    frozen snapshot, NOT against live codes counts: were new batches
+    folded into the codes, a codes-derived baseline would
+    progressively absorb the drifted data and damp the PSI — the
+    trigger would fire latest exactly when drift has run longest. The
+    snapshot is only rewritten by the rebuild itself."""
     cu = _unit6_side(corpus, id_col, vec_col, "corpus_id", "__cv")
     cent = fit_ivf_centroids(cu, n_centroids, refine_iters, train_sample_frac)
     wh.overwrite(
@@ -672,9 +679,7 @@ def build_ivfpq_index(
     wh.overwrite(codes, f"{name}__codes", partition_cols=["centroid_id"])
     # training-mix snapshot (one row per coarse centroid, counted from
     # the subspace-0 view of the just-written codes = one row per
-    # vector): the frozen baseline the retrain monitors PSI against —
-    # live codes counts would absorb appended drift and damp the
-    # trigger (see similarity.build_ivf_index for the full rationale)
+    # vector; no second assignment pass)
     wh.overwrite(
         wh.read(f"{name}__codes")
         .filter(F.col("subspace") == 0)

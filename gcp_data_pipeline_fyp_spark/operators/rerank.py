@@ -20,10 +20,10 @@ to the retrieval stage that produced the candidates, at any corpus
 scale. No driver-side loops over data: the Python `for` builds the
 PLAN. Each round's `selected` frame is localCheckpoint'ed: it feeds
 TWO joins in the next round, so a lazy unroll doubles the plan per
-round (2^k branches — measured driver OOM at k=10, tools/
-mmr_probe.py); the per-round checkpoint materializes a |Q| x r frame
-(trivial) and keeps the plan CONSTANT-size per round, making cost
-linear in k as the round structure claims.
+round (2^k branches — measured driver OOM at k=10, BASELINE.md
+round-10 MMR rows); the per-round checkpoint materializes a |Q| x r
+frame (trivial) and keeps the plan CONSTANT-size per round, making
+cost linear in k as the round structure claims.
 
 Determinism / certification: relevance and pair similarities live in
 the engine's `cosine_micro` integer domain, the MMR score is the

@@ -162,8 +162,8 @@ def build_text_index(
     """Build-once inverted index for BM25: postings PARTITIONED BY a
     term-hash bucket, plus a doc-length table and a 1-row stats table.
 
-    The 100 TB lever is the same as the IVF index family
-    (`similarity.py:build_ivf_index`): the build (one explode + one
+    The 100 TB lever is the same as the IVF-PQ index
+    (`pq.py:build_ivfpq_index`): the build (one explode + one
     (doc, term) aggregation) is amortized across every subsequent
     query, and `query_text_index` reads ONLY the term buckets its
     query terms hash to — ~|query terms|/n_buckets of the postings

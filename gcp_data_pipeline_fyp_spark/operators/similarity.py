@@ -457,162 +457,6 @@ def _assign(
     )
 
 
-# ------------------------------------------------- persisted IVF index
-def build_ivf_index(
-    wh,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-    n_centroids: int = 16,
-    refine_iters: int = 1,
-    quantize: bool = False,
-) -> None:
-    """Build-once IVF index: centroids + a postings table PARTITIONED
-    BY centroid_id in the warehouse.
-
-    At 100 TB the index build (one Lloyd fit + one assignment pass) is
-    amortized across every subsequent query batch: `ivf_topk_indexed`
-    reads only the probed centroid partitions (partition pruning at the
-    parquet scan), i.e. ~nprobe/n_centroids of the corpus per batch,
-    instead of re-fitting and re-scanning everything per query set.
-
-    `quantize=True` stores SQ8 postings — (codes array<int>, maxu)
-    instead of the raw vector (`quantize_sq8`): the IVF-SQ8 layout,
-    ~8x smaller probed-partition reads on top of the pruning.
-    Centroid assignment still uses full-precision vectors (assignment
-    quality is the recall lever; storage is the cost lever).
-    `ivf_topk_indexed` detects the layout from the postings schema.
-
-    Also persists `{name}__train_mix` — the TRAINING-TIME per-centroid
-    assignment counts (n_centroids rows). The retrain monitor
-    (`ivf_retrain_decision_indexed`) PSIs against this frozen snapshot,
-    NOT against live postings counts: were new batches folded into the
-    postings, a postings-derived baseline would progressively absorb
-    the drifted data and damp the PSI — the trigger would fire latest
-    exactly when drift has run longest. The snapshot is only rewritten
-    by the rebuild itself.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")
-    )
-    cent = fit_ivf_centroids(c, n_centroids, refine_iters)
-    assigned = _assign(c, cent, n_centroids)
-    wh.overwrite(
-        cent.select("centroid_id", F.col("__centroid").alias("centroid")),
-        f"{name}__centroids",
-    )
-    if quantize:
-        # codes/maxu are pure column expressions — compute them ON the
-        # assigned frame (no corpus-wide join/shuffle to re-attach
-        # centroid_id). Zero vectors keep a row with NULL codes, the
-        # same row set as the raw layout (they score NULL, rank last).
-        rows = with_sq8_columns(
-            assigned.withColumnRenamed("__cv", "vec"), "vec"
-        )
-        wh.overwrite(
-            rows.select("corpus_id", "codes", "maxu", "centroid_id"),
-            f"{name}__postings",
-            partition_cols=["centroid_id"],
-        )
-    else:
-        wh.overwrite(
-            assigned.select("corpus_id", F.col("__cv").alias("vec"), "centroid_id"),
-            f"{name}__postings",
-            partition_cols=["centroid_id"],
-        )
-    # training-mix snapshot, counted from the just-written postings
-    # (no second assignment pass; the scan touches the partition
-    # column only) — the retrain monitors' frozen baseline
-    wh.overwrite(
-        wh.read(f"{name}__postings")
-        .groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("n")),
-        f"{name}__train_mix",
-    )
-
-
-def ivf_topk_indexed(
-    wh,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    name: str,
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """ANN top-k against a persisted IVF index (`build_ivf_index`).
-
-    The distinct probed centroid ids are collected driver-side (bounded
-    by n_centroids — a scalar snapshot, not a data collect) and pushed
-    into the postings scan as a static `IN` filter, so partition
-    pruning skips every unprobed centroid directory.
-    """
-    cent = wh.read(f"{name}__centroids").select(
-        "centroid_id", F.col("centroid").alias("__centroid")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("__qv")
-    )
-    qc = q.crossJoin(F.broadcast(cent)).select(
-        "query_id",
-        "__qv",
-        "centroid_id",
-        dot(F.col("__qv"), F.col("__centroid")).alias("__score"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qv", "centroid_id")
-    )
-    probed = [r[0] for r in probes.select("centroid_id").distinct().collect()]
-    postings = wh.read(f"{name}__postings").filter(
-        F.col("centroid_id").isin(probed)
-    )
-    if "codes" in postings.columns:
-        # SQ8 layout (build_ivf_index quantize=True): quantize the query
-        # batch the same way and score integer-exact — the probed
-        # partitions stream ~8x fewer bytes than raw vectors
-        qq = quantize_sq8(
-            probes.select(
-                F.col("query_id"), F.col("__qv").alias("vec"), "centroid_id"
-            ).dropDuplicates(["query_id"]),
-            "query_id",
-            "vec",
-        ).select(
-            F.col("query_id"),
-            F.col("codes").alias("__qc"),
-            F.col("maxu").alias("__qm"),
-        )
-        # broadcast the (query-batch-sized) probe side: the window over
-        # the crossJoin defeats size estimation and the planner would
-        # otherwise SortMergeJoin — shuffling the probed postings by a
-        # key with only nprobe-or-so distinct values (guide §3.1)
-        pairs = (
-            F.broadcast(probes.select("query_id", "centroid_id").join(qq, "query_id"))
-            .join(postings, "centroid_id")
-            .select(
-                "query_id",
-                "corpus_id",
-                micro6(
-                    _sq8_pair_score(
-                        F.col("__qc"), F.col("codes"), F.col("__qm"), F.col("maxu")
-                    )
-                ).alias("cosine_micro"),
-            )
-        )
-    else:
-        pairs = F.broadcast(probes).join(postings, "centroid_id").select(
-            "query_id",
-            "corpus_id",
-            micro6(cosine(F.col("__qv"), F.col("vec"))).alias("cosine_micro"),
-        )
-    return _topk_per_query(pairs, k)
-
-
 # ------------------------------------------------ scalar quantization
 def _sq8_um(vec_col) -> F.Column:
     """Unit vector in integer micro-units (the proven micro6 chain:
@@ -623,37 +467,6 @@ def _sq8_um(vec_col) -> F.Column:
     return F.transform(
         u, lambda x: F.round(x * 1000000.0, 0).cast("long")
     )
-
-
-def with_sq8_columns(df: DataFrame, vec_col: str) -> DataFrame:
-    """Append SQ8 `codes`/`maxu` columns WITHOUT dropping any row or
-    shuffling: zero/NULL vectors get NULL codes (they score NULL and
-    rank last, the same convention as the raw cosine path). Use this
-    when the quantized columns must ride along existing columns —
-    e.g. attaching codes to an already-assigned IVF postings frame.
-
-    Catalyst trap (the BASELINE.md MinHash lesson, round 2): the codes
-    lambda must NOT reference the __um/__mx COLUMNS — CollapseProject
-    inlines a referenced column's full expression into the lambda BODY,
-    re-evaluating the O(dim^2) unit-vector chain once PER ELEMENT
-    (O(dim^3) per row — measured 26 ms/row vs ~1 ms). `zip_with` over
-    `array_repeat(mx, size)` keeps every expensive expression in
-    lambda ARGUMENTS, which evaluate once per row after any inlining.
-    """
-    d = df.withColumn("__um", _sq8_um(F.col(vec_col)))
-    mx = F.array_max(F.transform(F.col("__um"), lambda m: F.abs(m)))
-    d = d.withColumn("__mx", F.when(mx > 0, mx))
-    codes = F.when(
-        F.col("__mx").isNotNull(),
-        F.zip_with(
-            F.col("__um"),
-            F.array_repeat(F.col("__mx"), F.size(F.col("__um")).cast("int")),
-            lambda m, s: F.round(m * 127.0 / s).cast("int"),
-        ),
-    )
-    return d.withColumn("codes", codes).withColumn(
-        "maxu", F.col("__mx")
-    ).drop("__um", "__mx")
 
 
 def quantize_sq8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -674,9 +487,29 @@ def quantize_sq8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     inputs via one correctly-rounded divide and reproduce bit-for-bit
     in any engine. Zero vectors are dropped: they are meaningless under
     cosine and have no quantization scale.
+
+    Catalyst trap (the BASELINE.md MinHash lesson, round 2): the codes
+    lambda must NOT reference the __um/__mx COLUMNS — CollapseProject
+    inlines a referenced column's full expression into the lambda BODY,
+    re-evaluating the O(dim^2) unit-vector chain once PER ELEMENT
+    (O(dim^3) per row — measured 26 ms/row vs ~1 ms). `zip_with` over
+    `array_repeat(mx, size)` keeps every expensive expression in
+    lambda ARGUMENTS, which evaluate once per row after any inlining.
     """
+    d = df.select(id_col, vec_col).withColumn("__um", _sq8_um(F.col(vec_col)))
+    mx = F.array_max(F.transform(F.col("__um"), lambda m: F.abs(m)))
+    d = d.withColumn("__mx", F.when(mx > 0, mx))
+    codes = F.when(
+        F.col("__mx").isNotNull(),
+        F.zip_with(
+            F.col("__um"),
+            F.array_repeat(F.col("__mx"), F.size(F.col("__um")).cast("int")),
+            lambda m, s: F.round(m * 127.0 / s).cast("int"),
+        ),
+    )
     return (
-        with_sq8_columns(df.select(id_col, vec_col), vec_col)
+        d.withColumn("codes", codes)
+        .withColumn("maxu", F.col("__mx"))
         .filter(F.col("codes").isNotNull())
         .select(id_col, "codes", "maxu")
     )
@@ -1118,7 +951,7 @@ def ivf_retrain_decision_indexed(
     """Retrain check against a PERSISTED index, no refit (the
     operational cadence DEPLOY.md prescribes): the base distribution
     is the index's TRAINING-TIME assignment mix (`{name}__train_mix`,
-    snapshotted by `build_ivf_index`/`build_ivfpq_index` and never
+    snapshotted by `build_ivfpq_index` and never
     touched by appends), the current distribution is the new batch
     assigned against the stored codebook (one broadcast-assign pass),
     and the verdict is the same smoothed centroid-mix PSI as
@@ -1130,16 +963,12 @@ def ivf_retrain_decision_indexed(
     live-counted baseline progressively absorb the drifted data — PSI
     damps toward zero the longer the stream runs, delaying the trigger
     exactly when drift has accumulated most. For a legacy index persisted before the
-    snapshot existed, the live postings counts remain the fallback
-    (stated caveat: rebuild once to pin the baseline).
-
-    Works against both persisted layouts sharing the
-    `{name}__centroids` codebook: the raw/SQ8 IVF index
-    (`{name}__postings`, one row per vector) and the IVF-PQ index
-    (`{name}__codes`, m rows per vector — subspace 0 taken as the
-    one-row-per-vector view). Assignment by max dot is invariant
-    under the positive per-vector scaling the PQ path's unit
-    normalization applies, so the mixes are comparable."""
+    snapshot existed, the live counts of `{name}__codes` (m rows per
+    vector — subspace 0 taken as the one-row-per-vector view) remain
+    the fallback (stated caveat: rebuild once to pin the baseline).
+    Assignment by max dot is invariant under the positive per-vector
+    scaling the PQ path's unit normalization applies, so the batch mix
+    and the stored mix are comparable."""
     from gcp_data_pipeline_fyp_spark.operators.profile import (
         psi_from_joint_counts,
     )
@@ -1152,12 +981,11 @@ def ivf_retrain_decision_indexed(
             "centroid_id", F.col("n").alias("__cb")
         )
     else:
-        if wh.exists(f"{name}__postings"):
-            stored = wh.read(f"{name}__postings")
-        else:
-            stored = wh.read(f"{name}__codes").filter(F.col("subspace") == 0)
-        base_counts = stored.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("__cb")
+        base_counts = (
+            wh.read(f"{name}__codes")
+            .filter(F.col("subspace") == 0)
+            .groupBy("centroid_id")
+            .agg(F.count(F.lit(1)).alias("__cb"))
         )
     b = batch.select(
         F.col(id_col).alias("corpus_id"), as_double_vec(vec_col).alias("__cv")

@@ -20,8 +20,8 @@ the same design as Delta Lake / Iceberg data skipping:
   too (`_census_df`: the driver lists only the root's immediate
   entries, executors walk the subtrees), so at a 1e6-file table the
   driver holds |top-level dirs| + |survivors| strings — never
-  per-file stat rows and never the full path list (see
-  tools/scale_probe.py's inflated-census row in BASELINE.md).
+  per-file stat rows and never the full path list (see the
+  inflated-census rows in BASELINE.md, rounds 11 and 12).
   The predicate is re-applied to the rows, so pruning is
   purely an I/O optimization and the result is byte-equal to a full
   scan + filter regardless of layout or map staleness.

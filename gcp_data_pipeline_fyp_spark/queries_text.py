@@ -9,6 +9,8 @@ planted pairs (plus any real ones).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2678,7 +2680,7 @@ def q_quality_classifier_scores(spark: SparkSession, sf: str) -> DataFrame:
     feats = bucketed_features(
         labeled, ["doc_id", "__lbl"], "text", n_buckets=4096, seed=11
     ).localCheckpoint(eager=False)
-    weights = train_from_buckets(feats, "__lbl", n_buckets=4096, seed=11)
+    weights = train_from_buckets(feats, "__lbl", n_buckets=4096)
     out = score_from_buckets(
         feats.select("doc_id", "__b"), "doc_id", weights, d.select("doc_id")
     )
@@ -2998,7 +3000,7 @@ def _corpus_prep_canon(
     feats = bucketed_features(
         labeled, ["doc_id", "__lbl"], "text", n_buckets=4096, seed=11
     ).localCheckpoint(eager=False)
-    w = train_from_buckets(feats, "__lbl", n_buckets=4096, seed=11)
+    w = train_from_buckets(feats, "__lbl", n_buckets=4096)
     scored = score_from_buckets(
         feats.select("doc_id", "__b"), "doc_id", w, d.select("doc_id")
     )
@@ -3179,7 +3181,15 @@ _SQL_SEM_CANON = (
     "FROM canon c JOIN embeddings e ON c.doc_id = e.vec_id"
 )
 
-SQL_CORPUS_PREP_V3 = f"""
+# Every non-recursive CTE is declared AS MATERIALIZED, in this string
+# only: DuckDB inlines a CTE at each reference, and across this
+# 43-CTE chain the inlined plan runs out of memory (12.5 GiB at
+# sf0.01); materialized, it runs in 0.2 s. The shared pieces stay as
+# they are for the oracles they also serve.
+SQL_CORPUS_PREP_V3 = re.sub(
+    r"(?m)^((?:WITH RECURSIVE )?\w+) AS \(",
+    r"\1 AS MATERIALIZED (",
+    f"""
 {_SQL_CORPUS_PREP_CHAIN},
 {_semdedup_ctes(_SQL_SEM_CANON, 350_000, prefix="sd")},
 fin AS (SELECT canon.doc_id, canon.lang FROM canon
@@ -3187,7 +3197,8 @@ fin AS (SELECT canon.doc_id, canon.lang FROM canon
   WHERE sddrp.corpus_id IS NULL)
 {_SQL_SPLIT_TAIL}
 FROM fin
-"""
+""",
+)
 
 TEXT_QUERIES["corpus_prep_v3"] = (q_corpus_prep_v3, SQL_CORPUS_PREP_V3)
 
@@ -3533,7 +3544,7 @@ def q_classifier_reliability(spark: SparkSession, sf: str) -> DataFrame:
     feats = bucketed_features(
         labeled, ["doc_id", "__lbl"], "text", n_buckets=4096, seed=11
     ).localCheckpoint(eager=False)
-    weights = train_from_buckets(feats, "__lbl", n_buckets=4096, seed=11)
+    weights = train_from_buckets(feats, "__lbl", n_buckets=4096)
     scored = score_from_buckets(
         feats.select("doc_id", "__b"), "doc_id", weights, d.select("doc_id")
     ).filter(F.col("label") != "empty")
@@ -5165,7 +5176,7 @@ def q_dsir_indexed(spark: SparkSession, sf: str) -> DataFrame:
     shape at 100 TB: the measured per-run split is 5.9 s fit vs
     2.1 s frozen-profile scoring at sf0.1 (BASELINE.md), and the fit
     is exactly what the index amortizes away (the same
-    build-once/reuse discipline as build_ivf_index /
+    build-once/reuse discipline as build_ivfpq_index /
     build_lsh_index)."""
     from gcp_data_pipeline_fyp_spark.operators.dsir import (
         build_dsir_profiles,

@@ -294,6 +294,7 @@ def test_stored_index_paths_take_agg_form_above_the_ceiling(
     import random
 
     from gcp_data_pipeline_fyp_spark.operators import similarity as sim
+    from gcp_data_pipeline_fyp_spark.operators.pq import build_ivfpq_index
     from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
     rng = random.Random(5)
@@ -308,7 +309,10 @@ def test_stored_index_paths_take_agg_form_above_the_ceiling(
         [(1000 + i, vec(i % 3)) for i in range(30)], schema
     )
     wh = Warehouse(spark, str(tmp_path / "built"))
-    sim.build_ivf_index(wh, corpus, "vec_id", "embedding", "ix", n_centroids=4)
+    build_ivfpq_index(
+        wh, corpus, "vec_id", "embedding", "ix", m=2, n_codes=4, dim=8,
+        n_centroids=4,
+    )
 
     agg_calls = []
     real_agg = sim._assign_agg

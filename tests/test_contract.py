@@ -95,3 +95,49 @@ def test_type_parity_gate_flags_cross_engine_render_divergence():
     assert not cc.type_parity(
         pd.DataFrame({"x": [1]}), pd.DataFrame({"x": [2]})
     )
+
+
+def test_plan_violations_flag_cartesian_and_row_udf_only():
+    """The gate fails a probe whose executed plan pairs full frames
+    (CartesianProduct) or runs a row-at-a-time Python UDF
+    (BatchEvalPython); the broadcast cross-join idiom passes."""
+    import tools.check_correctness as cc
+
+    cartesian = "*(3) Project\n+- CartesianProduct\n   :- *(1) Scan parquet"
+    row_udf = "*(2) Project\n+- BatchEvalPython [f(text#1)], [pythonUDF0#9]"
+    broadcast = (
+        "*(2) BroadcastNestedLoopJoin BuildRight, Cross\n"
+        ":- *(2) Scan parquet\n+- BroadcastExchange IdentityBroadcastMode"
+    )
+    assert cc.plan_violations(cartesian) == ["plan holds CartesianProduct"]
+    assert cc.plan_violations(row_udf) == ["plan holds BatchEvalPython"]
+    assert cc.plan_violations(broadcast) == []
+
+
+def test_ab_summary_medians_quartiles_and_pairs_won():
+    """tools/ab.py's summary: per-arm median [q1, q3] over usable runs,
+    and pairs the change won; a run that is incorrect or failed an
+    operation stays out of the medians and its pair out of the count."""
+    import tools.ab as ab
+
+    def res(cpu, setup, correct=True, failed=0):
+        return {"correct": correct, "attempted": 3, "failed": failed,
+                "metrics": {"cpu_per_op_s": {"value": cpu, "unit": "s"},
+                            "setup_s": {"value": setup, "unit": "s"}}}
+
+    pairs = [
+        {"parent": res(10.0, 30.0), "change": res(9.0, 31.0)},
+        {"parent": res(12.0, 30.0), "change": res(11.0, 29.0)},
+        {"parent": res(14.0, 30.0), "change": res(15.0, 30.0)},
+        {"parent": res(16.0, 30.0), "change": res(1.0, 1.0, correct=False)},
+        {"parent": res(18.0, 30.0), "change": res(2.0, 2.0, failed=1)},
+    ]
+    metrics = [{"name": "cpu_per_op_s", "better": "lower"},
+               {"name": "setup_s", "better": "lower"}]
+    got = ab.summarize(pairs, metrics)
+    assert got["cpu_per_op_s"]["parent"] == (14.0, 12.0, 16.0)
+    assert got["cpu_per_op_s"]["change"] == (11.0, 10.0, 13.0)
+    assert (got["cpu_per_op_s"]["won"], got["cpu_per_op_s"]["pairs"]) == (2, 3)
+    # ties count for neither arm
+    assert got["setup_s"]["change"] == (30.0, 29.5, 30.5)
+    assert (got["setup_s"]["won"], got["setup_s"]["pairs"]) == (1, 3)

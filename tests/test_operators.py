@@ -1563,16 +1563,32 @@ def test_bpe_segment_string_form_matches_fold_twin(spark):
 
 
 # --------------------------- hashing-trick linear classifier
+def _classifier_weights(seed, n_buckets):
+    """Train on (doc_id, text, lbl) rows the way the probes do."""
+    from gcp_data_pipeline_fyp_spark.operators.classifier import (
+        bucketed_features,
+        train_from_buckets,
+    )
+
+    rows = bucketed_features(seed, ["lbl"], "text", n_buckets)
+    return train_from_buckets(rows, "lbl", n_buckets)
+
+
+def _classifier_scores(corpus, w, n_buckets):
+    from gcp_data_pipeline_fyp_spark.operators.classifier import (
+        bucketed_features,
+        score_from_buckets,
+    )
+
+    feats = bucketed_features(corpus, ["doc_id"], "text", n_buckets)
+    return score_from_buckets(feats, "doc_id", w, corpus.select("doc_id"))
+
+
 def test_classifier_separates_planted_vocab(spark):
     """Weights trained on a seed set with disjoint class vocabularies
     must score held-out docs of each class onto the right side of the
     threshold; docs with no features report label 'empty' (never
     silently dropped)."""
-    from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        score_documents,
-        train_linear_classifier,
-    )
-
     good = "science method evidence theory result"
     bad = "spam click buy now free"
     seed_rows = [(i, f"{good} {good}", True) for i in range(10)] + [
@@ -1581,7 +1597,7 @@ def test_classifier_separates_planted_vocab(spark):
     seed = spark.createDataFrame(
         seed_rows, "doc_id long, text string, lbl boolean"
     )
-    w = train_linear_classifier(seed, "doc_id", "text", "lbl", n_buckets=512)
+    w = _classifier_weights(seed, 512)
     corpus = spark.createDataFrame(
         [
             (1000, f"more {good} again"),
@@ -1593,9 +1609,7 @@ def test_classifier_separates_planted_vocab(spark):
     )
     got = {
         r["doc_id"]: (r["label"], r["n_features"], r["score_micro"])
-        for r in score_documents(
-            corpus, "doc_id", "text", w, n_buckets=512
-        ).collect()
+        for r in _classifier_scores(corpus, w, 512).collect()
     }
     assert got[1000][0] == "keep" and got[1000][2] > 0
     assert got[1001][0] == "drop" and got[1001][2] < 0
@@ -1606,83 +1620,22 @@ def test_classifier_separates_planted_vocab(spark):
 def test_classifier_scores_partition_invariant(spark):
     """Integer milli-weight sums make scores independent of input
     partitioning (the float-sum order hazard is designed out)."""
-    from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        score_documents,
-        train_linear_classifier,
-    )
-
     rows = [
         (i, f"tok{i % 7} tok{(i * 3) % 11} filler word number {i % 5}",
          i % 3 != 0)
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lbl boolean")
-    w = train_linear_classifier(df, "doc_id", "text", "lbl", n_buckets=256)
+    w = _classifier_weights(df, 256)
     a = {
         r["doc_id"]: (r["score_micro"], r["n_features"], r["label"])
-        for r in score_documents(
-            df.coalesce(1), "doc_id", "text", w, n_buckets=256
-        ).collect()
+        for r in _classifier_scores(df.coalesce(1), w, 256).collect()
     }
     b = {
         r["doc_id"]: (r["score_micro"], r["n_features"], r["label"])
-        for r in score_documents(
-            df.repartition(7), "doc_id", "text", w, n_buckets=256
-        ).collect()
+        for r in _classifier_scores(df.repartition(7), w, 256).collect()
     }
     assert a == b
-
-
-def test_classifier_model_is_self_describing(spark):
-    """The weight table persists its feature-space geometry
-    (n_buckets/seed/bigrams): scoring reads it from the stored model,
-    a CONFLICTING caller argument raises instead of silently misrouting
-    every bucket, and a legacy metadata-less table still honors caller
-    params (old behavior)."""
-    import pytest as _pt
-
-    from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        score_documents,
-        train_linear_classifier,
-    )
-
-    seed = spark.createDataFrame(
-        [(1, "alpha beta gamma", True), (2, "spam spam spam", False)],
-        "doc_id long, text string, lbl boolean",
-    )
-    w = train_linear_classifier(
-        seed, "doc_id", "text", "lbl", n_buckets=128, bigrams=False, seed=7
-    )
-    meta = w.select("meta_n_buckets", "meta_seed", "meta_bigrams").distinct()
-    assert [tuple(r) for r in meta.collect()] == [(128, 7, False)]
-
-    corpus = spark.createDataFrame(
-        [(10, "alpha beta")], "doc_id long, text string"
-    )
-    # no args: geometry comes from the model — scores land in the
-    # planted-positive region, proving the stored seed/bigrams were used
-    row = score_documents(corpus, "doc_id", "text", w).collect()[0]
-    assert row["label"] == "keep" and row["n_features"] == 2  # no bigrams
-    # matching explicit args validate silently
-    score_documents(
-        corpus, "doc_id", "text", w, n_buckets=128, bigrams=False, seed=7
-    ).collect()
-    # conflicting args are an error, never garbage scores
-    for bad in (
-        dict(n_buckets=512),
-        dict(seed=0),
-        dict(bigrams=True),
-    ):
-        with _pt.raises(ValueError, match="conflicts with"):
-            score_documents(corpus, "doc_id", "text", w, **bad)
-    # legacy metadata-less table: caller params trusted (old format)
-    legacy = w.select("bucket", "w_milli")
-    got = score_documents(
-        corpus, "doc_id", "text", legacy, n_buckets=128, bigrams=False, seed=7
-    ).collect()[0]
-    assert (got["score_micro"], got["n_features"]) == (
-        row["score_micro"], row["n_features"]
-    )
 
 
 def test_event_transitions_ignores_null_event_type(spark, tmp_path):

@@ -300,7 +300,7 @@ def _assert_no_expensive_lambda_inlining(df, max_agg: int = 1, max_len: int = 80
     higher-order-function lambda bodies, re-evaluating it once PER
     ELEMENT — the O(dim^3)-per-row class of regression hit twice (r2
     MinHash shingles, r4 SQ8 codes: 131 s vs 8 s on the same pass, see
-    operators/similarity.py:with_sq8_columns). Guard: no lambda body in
+    operators/similarity.py:quantize_sq8). Guard: no lambda body in
     the optimized plan may contain more than `max_agg` aggregate() folds
     (one is the legitimate O(dim) norm divide) or exceed `max_len`
     chars (the inlined unit chain is ~1.9k; honest bodies are <400)."""
@@ -318,7 +318,7 @@ def _assert_no_expensive_lambda_inlining(df, max_agg: int = 1, max_len: int = 80
 
 
 def test_sq8_quantize_lambda_not_inlined(spark):
-    """Fails on the pre-11b6e68 with_sq8_columns form (verified: that
+    """Fails on the pre-11b6e68 SQ8 codes form (verified: that
     plan carries a 1.9k-char codes lambda folding 4 aggregates)."""
     from gcp_data_pipeline_fyp_spark.operators.similarity import quantize_sq8
 
@@ -527,10 +527,10 @@ def test_q6_shape_pushes_all_predicates_to_scan(spark):
 
 def test_registry_sample_has_no_cartesian_or_row_udf(spark):
     """Registry-wide plan invariant, pinned on a fast cross-family
-    sample (the full 181-query sweep is tools/plan_audit.py, recorded
-    in PLANAUDIT.json): no CartesianProduct (a non-broadcast cross
-    join) and no BatchEvalPython (a row-at-a-time Python UDF) anywhere
-    in a probe's physical plan."""
+    sample (tools/check_correctness.py checks every probe): no
+    CartesianProduct (a non-broadcast cross join) and no
+    BatchEvalPython (a row-at-a-time Python UDF) anywhere in a probe's
+    physical plan."""
     import __spark_entry__ as entry
 
     qs = entry.queries()

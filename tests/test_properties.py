@@ -413,8 +413,9 @@ def test_classifier_fuzz_vs_python_reference(spark, rows):
     from decimal import Decimal, ROUND_HALF_UP
 
     from gcp_data_pipeline_fyp_spark.operators.classifier import (
-        score_documents,
-        train_linear_classifier,
+        bucketed_features,
+        score_from_buckets,
+        train_from_buckets,
     )
 
     B, SEED = 64, 0
@@ -422,10 +423,13 @@ def test_classifier_fuzz_vs_python_reference(spark, rows):
         [(i, t, l) for i, (t, l) in enumerate(rows)],
         "doc_id long, text string, lbl boolean",
     )
-    w = train_linear_classifier(df, "doc_id", "text", "lbl", n_buckets=B)
+    feats = bucketed_features(df, ["doc_id", "lbl"], "text", n_buckets=B)
+    w = train_from_buckets(feats, "lbl", n_buckets=B)
     got = {
         r["doc_id"]: (r["n_features"], r["score_micro"], r["label"])
-        for r in score_documents(df, "doc_id", "text", w, n_buckets=B).collect()
+        for r in score_from_buckets(
+            feats.select("doc_id", "__b"), "doc_id", w, df.select("doc_id")
+        ).collect()
     }
 
     def feats(t: str) -> list[str]:

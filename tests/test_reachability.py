@@ -1,10 +1,11 @@
 """Every package definition is reached from an entry point.
 
 Spark-free. An AST fixpoint over the package: the roots are the entry
-points (the driver contract, the bench, the CLI, the product benchmark
-and the probe tools) plus every module-level statement of the package
-that is not a ``def``, a class, a named assignment or an import (the
-``*_QUERIES.update(...)`` calls that fill the registries). A name is
+points (the driver contract, the bench, the CLI, the product benchmark,
+the oracle gate and the A/B tool) plus every module-level statement of
+the package that is not a ``def``, a class, a named assignment or an
+import (the ``*_QUERIES.update(...)`` calls that fill the registries).
+A name is
 used when it appears as a ``Name``, an ``Attribute`` or an
 identifier-shaped string constant in a root or in the body of a reached
 definition; a definition is reached when its name is used. Methods are
@@ -26,6 +27,15 @@ ALLOWED = {
     "operators.zonemap._norm": (
         "Python reference that test_norm_expr_mirrors_python_norm "
         "checks _norm_expr against"
+    ),
+    "operators.evalmetrics.blend_scores_sequential": (
+        "reference that test_blend_scores_fused_vs_sequential_differential "
+        "checks blend_scores against"
+    ),
+    "operators.evalmetrics.midrank_normalize": (
+        "per-scorer pass of blend_scores_sequential, the reference "
+        "test_blend_scores_fused_vs_sequential_differential checks "
+        "blend_scores against"
     ),
 }
 

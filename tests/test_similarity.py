@@ -239,31 +239,6 @@ def test_semantic_neardup_kmeans_finds_planted_copies(spark):
 
 
 @pytest.mark.slow
-def test_ivf_index_persist_matches_direct_and_prunes(spark, tmp_path):
-    from gcp_data_pipeline_fyp_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    df = _vectors(spark, n=400)
-    q = df.filter(F.col("vec_id") < 3)
-    c = df.filter(F.col("vec_id") >= 3)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    build_ivf_index(wh, c, "vec_id", "embedding", "emb", n_centroids=8)
-
-    direct = ivf_topk(q, c, "vec_id", "embedding", k=5, n_centroids=8, nprobe=3)
-    indexed = ivf_topk_indexed(wh, q, "vec_id", "embedding", "emb", k=5, nprobe=3)
-    key = lambda r: (r["query_id"], r["corpus_id"])  # noqa: E731
-    assert sorted(map(key, direct.collect())) == sorted(map(key, indexed.collect()))
-
-    # the probed-centroid IN filter must prune the postings scan
-    probed = ivf_topk_indexed(wh, q, "vec_id", "embedding", "emb", k=5, nprobe=3)
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan or "centroid_id IN" in plan, plan
-
-
-@pytest.mark.slow
 def test_ivf_sampled_training_recall(spark):
     """The 100 TB centroid-fit path: training on a ~30% content-keyed
     sample must keep recall at the pinned bar — the assignment pass
@@ -325,44 +300,6 @@ def test_sq8_codes_bounded_and_zero_vectors_dropped(spark):
     for r in out.values():
         assert all(-127 <= c <= 127 for c in r["codes"])
         assert max(abs(c) for c in r["codes"]) == 127
-
-
-@pytest.mark.slow
-def test_ivf_sq8_index_recall_and_layout(spark, tmp_path):
-    """IVF-SQ8 composition: quantized postings (codes + maxu, no raw
-    vector — the 8x-smaller 100 TB index layout) must keep recall vs
-    the full-precision indexed path, and partition pruning must
-    survive the layout change."""
-    from gcp_data_pipeline_fyp_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-    from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
-
-    df = _blob_vectors(spark, n=400)
-    q = df.filter(F.col("vec_id") < 5)
-    c = df.filter(F.col("vec_id") >= 5)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    build_ivf_index(wh, c, "vec_id", "embedding", "raw", n_centroids=8)
-    build_ivf_index(
-        wh, c, "vec_id", "embedding", "sq8", n_centroids=8, quantize=True
-    )
-    post = wh.read("sq8__postings")
-    assert set(post.columns) == {"corpus_id", "codes", "maxu", "centroid_id"}
-
-    full = ivf_topk_indexed(wh, q, "vec_id", "embedding", "raw", k=5, nprobe=3)
-    quant = ivf_topk_indexed(wh, q, "vec_id", "embedding", "sq8", k=5, nprobe=3)
-    e = {(r["query_id"], r["corpus_id"]) for r in full.collect()}
-    a = {(r["query_id"], r["corpus_id"]) for r in quant.collect()}
-    assert len(e & a) / len(e) >= 0.8
-
-    # quantization error stays bounded on returned pairs
-    vecs = {r["vec_id"]: r["embedding"] for r in df.collect()}
-    for r in quant.collect():
-        true = _exact_cosine(vecs[r["query_id"]], vecs[r["corpus_id"]])
-        assert abs(r["cosine_micro"] / 1e6 - true) < 0.02
-    plan = quant._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan or "centroid_id IN" in plan
 
 
 @pytest.mark.slow
@@ -950,13 +887,12 @@ def test_bitext_auto_centroid_sizing(spark):
     assert got_auto == got_pinned
 
 
-def test_ivf_retrain_decision_indexed_postings_layout(spark, tmp_path):
-    """The no-refit retrain check against the raw-postings IVF layout
-    (the CLI test covers the IVF-PQ codes layout): stable batch says
-    no, collapsed batch says yes, and the base distribution comes from
-    the persisted postings, not a refit."""
+def test_ivf_retrain_decision_indexed_vs_stored_index(spark, tmp_path):
+    """The no-refit retrain check against a stored IVF-PQ index:
+    stable batch says no, collapsed batch says yes, and the base
+    distribution comes from the persisted index, not a refit."""
+    from gcp_data_pipeline_fyp_spark.operators.pq import build_ivfpq_index
     from gcp_data_pipeline_fyp_spark.operators.similarity import (
-        build_ivf_index,
         ivf_retrain_decision_indexed,
     )
     from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
@@ -966,7 +902,9 @@ def test_ivf_retrain_decision_indexed_postings_layout(spark, tmp_path):
     # same centers, fresh noise draws — the iid continuation
     same = all_vecs.filter(F.col("vec_id") >= 240)
     wh = Warehouse(spark, str(tmp_path / "rwh"))
-    build_ivf_index(wh, blobs, "vec_id", "embedding", "ix", n_centroids=6)
+    build_ivfpq_index(
+        wh, blobs, "vec_id", "embedding", "ix", dim=DIM, n_centroids=6
+    )
     r = ivf_retrain_decision_indexed(
         wh, same, "vec_id", "embedding", "ix"
     ).collect()[0]

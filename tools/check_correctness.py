@@ -5,7 +5,8 @@ Runs every `queries()` entry on Spark and its `oracle_sql()` in DuckDB
 over the same parquet tables, then compares row count, column names,
 and order-insensitive values (rows sorted by all columns; floats
 compared exactly after normalization — queries are expected to be
-written deterministic, see queries_util.py).
+written deterministic, see queries_util.py). A probe whose executed
+plan holds a banned operator (`plan_violations`) fails as well.
 
 Usage: [SF_DIR=/root/testdata/sf0.01] python3 tools/check_correctness.py [name ...]
 """
@@ -23,10 +24,16 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+BANNED_PLAN_NODES = ("CartesianProduct", "BatchEvalPython")
+
+
+def plan_violations(plan: str) -> list[str]:
+    """Banned operators in an executed-plan string: `CartesianProduct`
+    (a non-broadcast cross join pairing full frames; the
+    `crossJoin(F.broadcast(...))` idiom plans as BroadcastNestedLoopJoin
+    and passes) and `BatchEvalPython` (a row-at-a-time Python UDF; the
+    Arrow paths plan as ArrowEvalPython / MapInPandas and pass)."""
+    return [f"plan holds {node}" for node in BANNED_PLAN_NODES if node in plan]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -187,6 +194,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 
 def main() -> int:
     import __spark_entry__ as entry_mod
+    from gcp_data_pipeline_fyp_spark.queries_util import TABLES
     from gcp_data_pipeline_fyp_spark.session import get_spark
 
     only = set(sys.argv[1:])
@@ -199,16 +207,25 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    ok = fail = skipped = empty = 0
+    ok = fail = skipped = empty = bad_plans = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            df = fn(spark, SF_DIR)
+            violations = plan_violations(
+                df._jdf.queryExecution().executedPlan().toString()
+            )
+            sdf = df.toPandas()
         except Exception:
             print(f"[FAIL] {name}: spark query raised")
             traceback.print_exc(limit=4)
             fail += 1
+            continue
+        if violations:
+            print(f"[FAIL] {name}: {', '.join(violations)}")
+            fail += 1
+            bad_plans += 1
             continue
         warns = render_risks(name, sdf)
         for w in warns:
@@ -243,7 +260,8 @@ def main() -> int:
         else:
             print(f"[OK] {name} ({len(sdf)} rows)")
             ok += 1
-    print(f"\n{ok} ok, {fail} fail, {skipped} rows-only, {empty} vacuous-empty")
+    print(f"\n{ok} ok, {fail} fail, {skipped} rows-only, {empty} vacuous-empty, "
+          f"{bad_plans} plan violations")
     spark.stop()
     return 1 if fail else 0
 
