@@ -8,10 +8,12 @@ measures), re-expressed Spark-first:
 - every Beam ParDo/Map becomes a native Catalyst column expression
   (zero row-at-a-time Python UDFs in the batch surface);
 - every Beam side-input lookup becomes a broadcast hash join;
-- the BigQuery MERGE becomes a pure-Spark upsert (full-outer rewrite)
-  behind a single interface;
-- Beam Distinct+ToList surrogate-key assignment becomes a
-  `row_number()` window over the (tiny) distinct dimension values;
+- the BigQuery MERGE becomes a pure-Spark upsert behind a single
+  interface: an append when no update key is stored yet, otherwise a
+  full-outer rewrite (of the touched partitions only, on a partitioned
+  table);
+- Beam Distinct+ToList surrogate-key assignment becomes one key query
+  whose (tiny) distinct dimension values are numbered on the driver;
 - the delta/full dual-cadence becomes incremental batch plus an
   optional Structured Streaming `Trigger.AvailableNow` ingest.
 

@@ -16,8 +16,9 @@ Scale note: this is a shuffle join on the merge key — the same cost
 MERGE INTO pays. For 100 TB facts, partition the stored fact by a
 stable key prefix (e.g. ID_date_ID) so the rewrite touches only
 affected partitions; `merge_upsert_partitioned` narrows the rewrite to
-partitions present in the updates (classic dynamic-partition-overwrite
-upsert).
+partitions present in the updates, and `upsert` stages those rows and
+renames each rewritten partition directory into place
+(`Warehouse.swap_partitions`).
 
 `upsert` is the table-level MERGE the delta fact load and the streaming
 ingest both call. When no update key is stored yet — the steady case:
@@ -72,8 +73,9 @@ def merge_upsert_partitioned(
 ) -> DataFrame:
     """Upsert where only base partitions present in `updates` are rewritten.
 
-    Returns rows for the AFFECTED partitions only (write them with
-    dynamic partitionOverwriteMode); untouched partitions stay on disk.
+    Returns rows for the AFFECTED partitions only (`upsert` writes them
+    to a staging table, then `Warehouse.swap_partitions` promotes
+    them); untouched partitions stay on disk.
     The partition filter is a broadcast semi join on the (small)
     distinct partition list, so the base scan prunes at the source.
     """

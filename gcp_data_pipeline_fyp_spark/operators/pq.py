@@ -41,6 +41,10 @@ from pyspark.sql import functions as F
 
 from gcp_data_pipeline_fyp_spark.functions.vectors import as_double_vec
 from gcp_data_pipeline_fyp_spark.functions.vectors import dot as vec_dot
+from gcp_data_pipeline_fyp_spark.operators.clustering import (
+    _argmin_cluster,
+    kmeans_grouped,
+)
 from gcp_data_pipeline_fyp_spark.operators.similarity import (
     _assign,
     _cent_array,
@@ -66,8 +70,23 @@ def unit6(vec_col) -> F.Column:
     return F.transform(u, lambda x: F.round(x * 1000000.0, 0) / 1000000.0)
 
 
-def _sub(col: F.Column, mi: int, sub_dim: int) -> F.Column:
-    return F.slice(col, mi * sub_dim + 1, sub_dim)
+def _subvectors(v: DataFrame, id_col: str, m: int, dim: int) -> DataFrame:
+    """(id_col, subspace, __s): `__u` of every row of `v` cut into its
+    m subvectors, one row each — the shape the codebook fit, the
+    encoder and the LUT all work on."""
+    sub_dim = _check_geometry(dim, m)
+    return v.select(
+        id_col,
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(mi).alias("subspace"),
+                    F.slice(F.col("__u"), mi * sub_dim + 1, sub_dim).alias("__s"),
+                )
+                for mi in range(m)
+            ])
+        ).alias("__e"),
+    ).select(id_col, F.col("__e.subspace").alias("subspace"), F.col("__e.__s").alias("__s"))
 
 
 def _check_geometry(dim: int, m: int) -> int:
@@ -101,15 +120,15 @@ def fit_pq_codebooks(
     """Train one k-means codebook per subspace -> (subspace, cluster_id,
     centroid). m * n_codes rows: always broadcastable.
 
-    All m subspaces train in ONE grouped Lloyd's loop
-    (operators/clustering.py:kmeans_grouped) — identical per-subspace
-    math to m sequential `kmeans` calls (same init, decimal means, tie
-    breaks; equivalence test-pinned), but one assignment + one update
-    pass per iteration for the whole codebook set instead of an
-    m-long sequential job chain (measured ~3x on the sf0.1 fit).
+    All m subspaces train in ONE grouped run of the Lloyd's loop
+    `kmeans` runs too (operators/clustering.py:kmeans_grouped, one
+    group per subspace): each codebook equals a `kmeans` fit of its
+    subspace alone (test-pinned), but one assignment + one update pass
+    per iteration serves the whole codebook set instead of an m-long
+    sequential job chain (measured ~3x on the sf0.1 fit).
 
     `train_sample_frac`: the 100 TB path, mirroring
-    `fit_ivf_centroids` (operators/similarity.py:138) — Lloyd's over
+    `fit_ivf_centroids` (operators/similarity.py) — Lloyd's over
     every corpus vector is the wrong default at scale (the r5 probe
     measured training 29->70 s across a 1x->16x corpus while scoring
     stayed scan-bound); codebook quality needs
@@ -138,28 +157,13 @@ def _fit_codebooks_on(
     """Codebook fit over a prepared (__id, __u) frame — shared by the
     unit6 path (`fit_pq_codebooks`) and the residual path
     (`ivfpq_topk(residual=True)`, which must NOT re-normalize)."""
-    from gcp_data_pipeline_fyp_spark.operators.clustering import kmeans_grouped
-
-    sub_dim = _check_geometry(dim, m)
     if train_sample_frac is not None:
         from gcp_data_pipeline_fyp_spark.operators.sampling import hash_sample
 
         c = hash_sample(c, ["__id"], train_sample_frac, seed=7)
-    pts = c.select(
-        "__id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(mi).alias("subspace"),
-                    _sub(F.col("__u"), mi, sub_dim).alias("__s"),
-                )
-                for mi in range(m)
-            ])
-        ).alias("__e"),
-    ).select(F.col("__e.subspace").alias("subspace"), "__id", F.col("__e.__s").alias("__s"))
     _assigned, cent = kmeans_grouped(
-        pts, "subspace", "__id", "__s", k=n_codes, max_iter=iters,
-        checkpoint_dir=checkpoint_dir,
+        _subvectors(c, "__id", m, dim), "subspace", "__id", "__s",
+        k=n_codes, max_iter=iters, checkpoint_dir=checkpoint_dir,
     )
     return cent.select("subspace", "cluster_id", "centroid")
 
@@ -190,31 +194,11 @@ def _encode_on(
 ) -> DataFrame:
     """Nearest-centroid encode over a prepared (__id, __u) frame —
     shared by the unit6 and residual paths (see `_fit_codebooks_on`)."""
-    sub_dim = _check_geometry(dim, m)
-    rows = v.select(
-        "__id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(mi).alias("subspace"),
-                    _sub(F.col("__u"), mi, sub_dim).alias("__s"),
-                )
-                for mi in range(m)
-            ])
-        ).alias("__e"),
-    ).select("__id", F.col("__e.subspace").alias("subspace"), F.col("__e.__s").alias("__s"))
-    # shuffle-free nearest-centroid: per-subspace codebooks ride along
-    # as one broadcast array each and the argmin is a per-row fold —
-    # the old row_number window shuffled |corpus| x m x n_codes scored
-    # rows by (__id, subspace) (guide §2.4). Order semantics identical:
-    # __d asc NULLS FIRST, ties to the lower cluster_id.
-    def _sqd(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
+    rows = _subvectors(v, "__id", m, dim)
+    # shuffle-free nearest-centroid (guide §2.4): per-subspace codebooks
+    # ride along as one broadcast array each and the argmin is the
+    # k-means fold, clustering._argmin_cluster (__d asc NULLS FIRST,
+    # ties to the lower cluster_id)
     cid_t = dict(codebooks.dtypes)["cluster_id"]
     # ONE row holding map<subspace, id-ascending books array>: a
     # global collect (Exchange SinglePartition over m x n_codes rows)
@@ -243,32 +227,12 @@ def _encode_on(
                         F.filter("__all", lambda x: x["subspace"] == sub),
                         lambda x: F.struct(
                             x["cluster_id"].alias("cluster_id"),
-                            x["centroid"].alias("centroid"),
+                            x["centroid"].alias("__centroid"),
                         ),
                     ).alias("value"),
                 ),
             )
         ).alias("__books_map")
-    )
-    sc = F.transform(
-        F.col("__books"),
-        lambda s: F.struct(
-            _sqd(F.col("__s"), s["centroid"]).alias("__d"),
-            s["cluster_id"].alias("cluster_id"),
-        ),
-    )
-    best = F.aggregate(
-        sc,
-        F.lit(None).cast(f"struct<__d:double,cluster_id:{cid_t}>"),
-        lambda acc, s: F.when(acc.isNull(), s)
-        .when(s["__d"].isNull() & acc["__d"].isNotNull(), s)
-        .when(
-            s["__d"].isNotNull()
-            & acc["__d"].isNotNull()
-            & (s["__d"] < acc["__d"]),
-            s,
-        )
-        .otherwise(acc),
     )
     # element_at on a missing subspace yields NULL books -> NULL fold
     # -> dropped by the isNotNull filter: same semantics as the old
@@ -283,7 +247,11 @@ def _encode_on(
                 "__books"
             ),
         )
-        .select("__id", "subspace", best.alias("__best"))
+        .select(
+            "__id",
+            "subspace",
+            _argmin_cluster(F.col("__s"), F.col("__books"), cid_t).alias("__best"),
+        )
         .filter(F.col("__best").isNotNull())
         .select("__id", "subspace", F.col("__best.cluster_id").alias("cluster_id"))
     )
@@ -300,27 +268,15 @@ def _pq_lut(
     """Per-query-batch ADC lookup table: (query_id, subspace,
     cluster_id, __lm) with __lm the micro-unit dot of the query
     subvector and the centroid. |Q| * m * n_codes rows — tiny."""
-    sub_dim = _check_geometry(dim, m)
     q = queries.select(
         F.col(id_col).alias("query_id"), unit6(vec_col).alias("__u")
     ).filter(F.col("__u").isNotNull())
-    qs = q.select(
-        "query_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(mi).alias("subspace"),
-                    _sub(F.col("__u"), mi, sub_dim).alias("__qs"),
-                )
-                for mi in range(m)
-            ])
-        ).alias("__e"),
-    ).select("query_id", F.col("__e.subspace").alias("subspace"), F.col("__e.__qs").alias("__qs"))
+    qs = _subvectors(q, "query_id", m, dim)
     return qs.join(F.broadcast(codebooks), "subspace").select(
         "query_id",
         "subspace",
         "cluster_id",
-        micro6(vec_dot(F.col("__qs"), F.col("centroid"))).alias("__lm"),
+        micro6(vec_dot(F.col("__s"), F.col("centroid"))).alias("__lm"),
     )
 
 
@@ -518,25 +474,42 @@ def ivfpq_residual_topk(
     every engine) and are deliberately NOT re-normalized."""
     cu = _unit6_side(corpus, id_col, vec_col, "corpus_id", "__cv")
     cent = fit_ivf_centroids(cu, n_centroids, refine_iters, train_sample_frac)
-    assigned = _assign(cu, cent, n_centroids)  # (corpus_id, __cv, centroid_id)
-    res = assigned.join(F.broadcast(cent), "centroid_id").select(
+    res = _residuals(_assign(cu, cent, n_centroids), cent)
+    books = _fit_codebooks_on(
+        res.select("__id", "__u"), m, n_codes, iters, dim,
+        checkpoint_dir, train_sample_frac,
+    )
+    codes = _residual_codes(res, books, m, dim)
+    qu = _unit6_side(queries, id_col, vec_col, "query_id", "__u")
+    probes = _coarse_probes_scored(qu, cent, nprobe)
+    lut = _pq_lut(queries, id_col, vec_col, books, m, dim)
+    return _ivfpq_residual_score_topk(codes, probes, lut, k)
+
+
+def _residuals(assigned: DataFrame, cent: DataFrame) -> DataFrame:
+    """(__id, __u, centroid_id): each assigned (corpus_id, __cv,
+    centroid_id) vector minus its coarse centroid — the residual PQ
+    input, deliberately not re-normalized."""
+    return assigned.join(F.broadcast(cent), "centroid_id").select(
         F.col("corpus_id").alias("__id"),
         F.zip_with(
             F.col("__cv"), F.col("__centroid"), lambda x, y: x - y
         ).alias("__u"),
         "centroid_id",
     )
-    books = _fit_codebooks_on(
-        res.select("__id", "__u"), m, n_codes, iters, dim,
-        checkpoint_dir, train_sample_frac,
+
+
+def _residual_codes(
+    res: DataFrame, books: DataFrame, m: int, dim: int
+) -> DataFrame:
+    """(corpus_id, subspace, cluster_id, centroid_id): `_residuals`
+    rows encoded against residual codebooks, tagged with their list."""
+    return _encode_on(res.select("__id", "__u"), books, m, dim).join(
+        res.select("__id", "centroid_id"), "__id"
+    ).select(
+        F.col("__id").alias("corpus_id"), "subspace", "cluster_id",
+        "centroid_id",
     )
-    codes = _encode_on(res.select("__id", "__u"), books, m, dim).join(
-        res.select(F.col("__id"), "centroid_id"), "__id"
-    ).select(F.col("__id").alias("corpus_id"), "subspace", "cluster_id", "centroid_id")
-    qu = _unit6_side(queries, id_col, vec_col, "query_id", "__u")
-    probes = _coarse_probes_scored(qu, cent, nprobe)
-    lut = _pq_lut(queries, id_col, vec_col, books, m, dim)
-    return _ivfpq_residual_score_topk(codes, probes, lut, k)
 
 
 def _coarse_probes_scored(
@@ -630,13 +603,7 @@ def build_ivfpq_index(
     )
     assigned = _assign(cu, stored_cent, n_centroids)
     if residual:
-        res = assigned.join(F.broadcast(stored_cent), "centroid_id").select(
-            F.col("corpus_id").alias("__id"),
-            F.zip_with(
-                F.col("__cv"), F.col("__centroid"), lambda x, y: x - y
-            ).alias("__u"),
-            "centroid_id",
-        )
+        res = _residuals(assigned, stored_cent)
         books = _fit_codebooks_on(
             res.select("__id", "__u"), m, n_codes, iters, dim,
             checkpoint_dir, train_sample_frac,
@@ -645,18 +612,13 @@ def build_ivfpq_index(
             books.withColumn("meta_residual", F.lit(True)),
             f"{name}__codebooks",
         )
-        codes = _encode_on(
-            res.select("__id", "__u"),
+        codes = _residual_codes(
+            res,
             wh.read(f"{name}__codebooks").select(
                 "subspace", "cluster_id", "centroid"
             ),
             m,
             dim,
-        ).join(
-            res.select("__id", "centroid_id"), "__id"
-        ).select(
-            F.col("__id").alias("corpus_id"), "subspace", "cluster_id",
-            "centroid_id",
         )
     else:
         books = fit_pq_codebooks(

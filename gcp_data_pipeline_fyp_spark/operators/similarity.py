@@ -33,6 +33,10 @@ from gcp_data_pipeline_fyp_spark.functions.vectors import (
     dot,
     lsh_sign_bucket,
 )
+from gcp_data_pipeline_fyp_spark.operators.clustering import (
+    centroid_means,
+    lowest_id_seeds,
+)
 from gcp_data_pipeline_fyp_spark.queries_util import micro6
 
 
@@ -186,9 +190,11 @@ def fit_ivf_centroids(
     train_sample_frac: float | None = None,
 ) -> DataFrame:
     """Deterministic IVF centroids: seeded with the `n_centroids`
-    smallest-id corpus vectors, refined with Lloyd iterations
-    (posexplode/groupBy means — no MLlib dependency, partitioning-
-    invariant). `c` must carry (`corpus_id`, `__cv`).
+    smallest-id corpus vectors, refined with `refine_iters` spherical
+    Lloyd iterations — dot-product assignment (`_assign`) and the
+    k-means update (operators/clustering.py:centroid_means; no MLlib
+    dependency, partitioning-invariant). `c` must carry (`corpus_id`,
+    `__cv`).
 
     `train_sample_frac`: the 100 TB path (DEPLOY.md) — fit on a
     deterministic content-keyed sample of the corpus instead of every
@@ -209,40 +215,9 @@ def fit_ivf_centroids(
         from gcp_data_pipeline_fyp_spark.operators.sampling import hash_sample
 
         c = hash_sample(c, ["corpus_id"], train_sample_frac, seed=7)
-    cent = (
-        c.orderBy("corpus_id")
-        .limit(n_centroids)
-        .select(
-            F.row_number().over(Window.orderBy("corpus_id")).alias("centroid_id"),
-            F.col("__cv").alias("__centroid"),
-        )
-    )
+    cent = lowest_id_seeds(c, "corpus_id", "__cv", n_centroids, "centroid_id")
     for _ in range(refine_iters):
-        assigned = _assign(c, cent, n_centroids)
-        cent = (
-            assigned.select(
-                "centroid_id", F.posexplode("__cv").alias("__pos", "__x")
-            )
-            .groupBy("centroid_id", "__pos")
-            # decimal-exact mean (not F.avg on double): partial-agg
-            # order independent, so centroids are bit-identical on any
-            # partitioning — and to the DuckDB oracle's same algebra
-            .agg(
-                (
-                    F.sum(F.col("__x").cast("decimal(28,12)")).cast("double")
-                    / F.count("__x")
-                ).alias("__m")
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("__pos"), F.col("__m")))
-                    ),
-                    lambda s: s["__m"],
-                ).alias("__centroid")
-            )
-        )
+        cent = centroid_means(_assign(c, cent, n_centroids), ("centroid_id",), "__cv")
     return cent.localCheckpoint(eager=False)
 
 

@@ -132,7 +132,7 @@ def _run_pipeline_stages(
 ) -> dict[str, DataFrame]:
     raw = read_raw_csv(spark, raw_path)
     staged = stage_staging(
-        raw, wh, mode, job_id, data_source, run_ts, clamp_writes=clamp_writes
+        raw, wh, job_id, data_source, run_ts, clamp_writes=clamp_writes
     )
     # a delta hands each stage only the rows this delivery added: the
     # new ODS rows are computed once (stage_ods snapshots them) and flow

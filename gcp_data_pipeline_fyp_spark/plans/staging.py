@@ -27,7 +27,6 @@ from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 def stage_staging(
     raw: DataFrame,
     wh: Warehouse,
-    mode: str,
     job_id: str,
     data_source: str,
     run_ts: _dt.datetime,

@@ -280,7 +280,9 @@ VECTOR_QUERIES["embedding_neardup_lsh"] = (
 def _kmeans_ctes(
     pts_sql: str, k: int, iters: int, dim: int = 64, prefix: str = ""
 ) -> str:
-    """Chained CTEs mirroring operators/clustering.py:kmeans exactly.
+    """Chained CTEs mirroring operators/clustering.py:kmeans exactly —
+    the Lloyd's loop (`_lloyd`) that `kmeans` and `kmeans_grouped`
+    share, on one group.
 
     Lloyd's with seeded init (k lowest ids) is deterministic, so a
     FIXED-iteration unroll certifies the iterative operator — the same

@@ -1,13 +1,16 @@
-"""Differential pins for the r12 shuffle-free assignment rewrites.
+"""Differential pins for the shuffle-free assignment forms.
 
-The r12 optimization round replaced the crossJoin + row_number-window
-nearest-centroid assignments (operators/similarity.py:_assign,
-operators/clustering.py:_assign_nearest/_assign_nearest_grouped,
-operators/pq.py:_encode_on, the ivf/coarse probe selectors, and
-semdedup's multi-assignment) with per-row argmin/argmax folds over a
-broadcast centroid array — zero shuffles, zero row explosion. These
-tests pin the new forms against inline window twins (the exact old
-code), INCLUDING the corner semantics the windows had:
+The nearest-centroid assignments are per-row argmin/argmax folds over a
+broadcast centroid array — zero shuffles, zero row explosion — not the
+crossJoin + row_number windows they replaced. Two folds serve every
+caller: the dot-product argmax (operators/similarity.py:_assign and its
+size-selected `_assign_agg` fallback, the probe selector
+`_topn_cent_struct`) and the squared-distance argmin
+(operators/clustering.py:_argmin_cluster, run by the k-means loop
+through `_assign_nearest_grouped` and by the PQ encoder
+operators/pq.py:_encode_on). These tests pin them against inline window
+twins (the exact old code), INCLUDING the corner semantics the windows
+had:
 
 - ties on score/distance break to the lower centroid/cluster id;
 - desc order (dot-product argmax) treats NULL as NULLS LAST;
@@ -24,7 +27,6 @@ from pyspark.sql import functions as F
 
 from gcp_data_pipeline_fyp_spark.functions.vectors import dot
 from gcp_data_pipeline_fyp_spark.operators.clustering import (
-    _assign_nearest,
     _assign_nearest_grouped,
     _sq_dist,
 )
@@ -116,33 +118,9 @@ def test_topn_cent_struct_matches_window_twin(spark):
         ), f"n={n}"
 
 
-def test_assign_nearest_matches_window_twin(spark):
-    pts = _mk_points(spark).select(
-        F.col("corpus_id").alias("__id"), F.col("__cv").alias("__v")
-    )
-    cent = _mk_cent(spark).select(
-        F.col("centroid_id").alias("cluster_id"), "__centroid"
-    )
-    scored = pts.crossJoin(F.broadcast(cent)).select(
-        "__id",
-        "cluster_id",
-        _sq_dist(F.col("__v"), F.col("__centroid")).alias("__d"),
-    )
-    w = Window.partitionBy("__id").orderBy(F.col("__d").asc(), F.col("cluster_id"))
-    old = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__id", "cluster_id")
-    )
-    new = _assign_nearest(pts, cent).select("__id", "cluster_id")
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-    # NULL distance wins under .asc() (NULLS FIRST): the NULL-vector row
-    # must land in cluster 1, the window's historical behaviour
-    got = {r["__id"]: r["cluster_id"] for r in new.collect()}
-    assert got[2] == 1
-
-
 def test_assign_nearest_grouped_matches_per_group(spark):
+    # group 3 is the shared point/centroid set: tied centroids 1 and 2,
+    # a NULL vector, a zero vector and a negative-best row
     pts = spark.createDataFrame(
         [
             (0, 1, [1.0, 0.0]),
@@ -152,6 +130,12 @@ def test_assign_nearest_grouped_matches_per_group(spark):
             (2, 5, [9.0, 9.0]),  # group with no centroids -> dropped
         ],
         "__g int, __id long, __v array<double>",
+    ).unionByName(
+        _mk_points(spark).select(
+            F.lit(3).alias("__g"),
+            F.col("corpus_id").alias("__id"),
+            F.col("__cv").alias("__v"),
+        )
     )
     cent = spark.createDataFrame(
         [
@@ -161,6 +145,12 @@ def test_assign_nearest_grouped_matches_per_group(spark):
             (1, 2, [-1.0, 0.0]),
         ],
         "__g int, cluster_id int, __centroid array<double>",
+    ).unionByName(
+        _mk_cent(spark).select(
+            F.lit(3).alias("__g"),
+            F.col("centroid_id").alias("cluster_id"),
+            "__centroid",
+        )
     )
     scored = pts.join(F.broadcast(cent), "__g").select(
         "__g",
@@ -178,6 +168,10 @@ def test_assign_nearest_grouped_matches_per_group(spark):
     )
     new = _assign_nearest_grouped(pts, cent).select("__g", "__id", "cluster_id")
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+    # NULL distance wins under .asc() (NULLS FIRST): the NULL-vector row
+    # of group 3 must land in cluster 1, the window's historical behaviour
+    got = {(r["__g"], r["__id"]): r["cluster_id"] for r in new.collect()}
+    assert got[(3, 2)] == 1
 
 
 def test_encode_on_matches_window_twin(spark):

@@ -238,6 +238,79 @@ def test_semantic_neardup_kmeans_finds_planted_copies(spark):
     assert planted <= pairs
 
 
+def test_semantic_neardup_kmeans_releases_points_cache(spark):
+    """The full-corpus fit caches its points evictably for the length of
+    the fit only: nothing stays cached once the pairs frame is built,
+    and the pairs still come out right."""
+    from gcp_data_pipeline_fyp_spark.operators.clustering import (
+        semantic_neardup_kmeans,
+    )
+
+    spark.catalog.clearCache()
+    df = _vectors(spark, n=100)
+    copies = df.filter(F.col("vec_id") % 10 == 0).withColumn(
+        "vec_id", F.col("vec_id") + 1000
+    )
+    out = semantic_neardup_kmeans(
+        df.unionByName(copies), "vec_id", "embedding", threshold=0.999, k=4,
+        max_iter=3,
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    assert pairs == {(i, i + 1000) for i in range(0, 100, 10)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _count_jobs(spark, group, action):
+    """Run `action` under job group `group`; return its job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kmeans_fit_job_count(spark):
+    """One `kmeans` fit (400 8-dim points, k=4, max_iter=5) runs 35
+    jobs: the seed is a sort + limit with no exchange of its own. The
+    same fit run through `kmeans_grouped` with one literal group runs
+    36: its window seed's exchange runs as an AQE map stage job."""
+    from gcp_data_pipeline_fyp_spark.operators.clustering import kmeans
+
+    rng = random.Random(11)
+    df = spark.createDataFrame(
+        [(i, [rng.gauss(i % 4, 1.0) for _ in range(8)]) for i in range(400)],
+        "vec_id long, embedding array<double>",
+    )
+    jobs = _count_jobs(
+        spark, "kmeans-fit-jobs",
+        lambda: kmeans(df, "vec_id", "embedding", k=4, max_iter=5),
+    )
+    assert jobs == 35
+
+
+def test_fit_pq_codebooks_job_count(spark):
+    """One `fit_pq_codebooks` fit (200 16-dim points, m=4, n_codes=4,
+    iters=3) runs 24 jobs: all subspaces train in one grouped Lloyd's
+    loop, not one job chain per subspace."""
+    from gcp_data_pipeline_fyp_spark.operators.pq import fit_pq_codebooks
+
+    rng = random.Random(12)
+    df = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(200)],
+        "vec_id long, embedding array<double>",
+    )
+    jobs = _count_jobs(
+        spark, "pq-fit-jobs",
+        lambda: fit_pq_codebooks(
+            df, "vec_id", "embedding", m=4, n_codes=4, iters=3, dim=16
+        ),
+    )
+    assert jobs == 24
+
+
 @pytest.mark.slow
 def test_ivf_sampled_training_recall(spark):
     """The 100 TB centroid-fit path: training on a ~30% content-keyed
