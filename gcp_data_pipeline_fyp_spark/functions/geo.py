@@ -13,7 +13,9 @@ The Beam version does this with an `AsDict` side-input lookup; here the
 states lookup is a **broadcast left join** (the Spark-native rendering
 of a side input) plus pure column expressions — no UDF. The lookup
 build (P15: one row per state name AND per abbreviation) is one inline
-VALUES table, so its broadcast is built on the driver.
+VALUES table, so building and collecting it runs no job; broadcasting
+it into the join still runs one small job (the broadcast exchange
+collects even a local table through a job).
 """
 
 from __future__ import annotations
@@ -31,8 +33,9 @@ def string_table(
     columns `names`.
 
     It plans as a LocalRelation: the driver holds the rows, so reading
-    or broadcasting it runs no job and no Python worker, unlike
-    `createDataFrame(list)` (a `Scan ExistingRDD` over a Python RDD).
+    it runs no job and no Python worker, unlike `createDataFrame(list)`
+    (a `Scan ExistingRDD` over a Python RDD). Broadcasting it into a
+    join still runs one job.
     """
 
     def lit(v: str | None) -> str:

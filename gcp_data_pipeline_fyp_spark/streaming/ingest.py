@@ -12,8 +12,11 @@ restartable from the checkpoint. A batch whose ids the table does not
 hold yet (the steady case: re-sends die in the watermark dedup) is
 appended; only a batch with a stored id (a replay after a crash that
 followed the append, or a re-send older than the watermark) rewrites
-the table through staging + `Warehouse.swap`. `stream_drift_monitor` folds each
-batch into a persisted PSI state against a fitted base profile.
+the table through staging + `Warehouse.swap`. A steady round is one
+micro-batch and 7 Spark jobs (local[4]): the report and quarantine
+ledgers are probed only for the batch a restart re-delivers.
+`stream_drift_monitor` folds each batch into a persisted PSI state
+against a fitted base profile.
 
 Both run one batch operator per micro-batch on three shared helpers:
 
@@ -22,14 +25,16 @@ Both run one batch operator per micro-batch on three shared helpers:
   `dropDuplicatesWithinWatermark`;
 - `_run_available_now` is the one `foreachBatch` +
   `Trigger.AvailableNow` site. It dedups and persists each batch once
-  for its fold and skips the data-less batch AvailableNow runs to
-  flush dedup state;
+  for its fold, skips empty batches, and runs no data-less batch
+  (dedup state is evicted at the end of the next data batch);
 - `_fold_state` is the replay guard for distributive-but-not-
   idempotent state (counts): it refuses a state table from a foreign
   checkpoint lineage, skips a batch the state already holds, and
   otherwise stamps `(__stream_id, __last_batch_id)` onto the merged
   state and promotes it by staging + `Warehouse.swap`. Plain appends
-  guard themselves with `batch_already_appended`.
+  guard themselves with `batch_already_appended`, probed only for a
+  batch a restart can re-deliver: one whose id the checkpoint's
+  offset log held before the run started (`last_logged_batch`).
 
 `windowed_event_counts` is the watermarked tumbling-window aggregation
 (the streaming measure layer); in batch mode the same function body
@@ -46,6 +51,8 @@ about one file per batch; `maintain --compact` packs them.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,11 +67,21 @@ def checkpoint_stream_id(checkpoint_dir: str) -> str:
     every replay-guarded ingest stamps into its state so a state
     table from a DIFFERENT checkpoint lineage (whose batch ids are
     not comparable) raises instead of silently double-counting."""
-    import json as _json
-    import os as _os
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return json.load(fh)["id"]
 
-    with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-        return _json.load(fh)["id"]
+
+def last_logged_batch(checkpoint_dir: str) -> int:
+    """The highest batch id in the checkpoint's offset log, -1 for a
+    fresh checkpoint: a plain listing, no job. Read before a query
+    starts, it bounds the one batch a restart can re-deliver (the last
+    logged one, when its commit never landed); every later batch id is
+    new to this checkpoint lineage."""
+    try:
+        names = os.listdir(os.path.join(checkpoint_dir, "offsets"))
+    except FileNotFoundError:
+        return -1
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def batch_already_appended(wh: Warehouse, table: str, batch_id: int) -> bool:
@@ -87,7 +104,12 @@ def batch_already_appended(wh: Warehouse, table: str, batch_id: int) -> bool:
     store, use a committer with atomic job commit (or a table format
     with a transaction log) and this probe is exact; do not run these
     ingests with FileOutputCommitter v2 (task-level visibility),
-    which widens that window to the whole write."""
+    which widens that window to the whole write.
+
+    Costs two jobs and two fresh generated classes per call (Spark
+    names each LIMIT's counter uniquely), so callers probe only a batch
+    that can be a replay: `batch_id <= last_logged_batch(...)` read
+    before the start, or a batch `_fold_state` found already merged."""
     return wh.exists(table) and (
         wh.read(table)
         .filter(F.col("batch_id") == batch_id)
@@ -133,10 +155,22 @@ def _run_available_now(
     The batch is deduplicated on `dedup_cols` (watermark dedup keeps
     the first arrival per key across batches; this drops in-batch
     repeats) and persisted, so a fold may read it several times for
-    one computation. Empty batches never reach the fold: AvailableNow
-    + stateful dedup runs a trailing data-less batch to flush state,
-    and folding it would append spurious all-zero report rows (and
-    trip row_count lower bounds) or rewrite a table for nothing."""
+    one computation. Empty batches never reach the fold: folding one
+    would append spurious all-zero report rows (and trip row_count
+    lower bounds) or rewrite a table for nothing.
+
+    No data-less batch runs. By default AvailableNow + stateful dedup
+    ends with one only to evict dedup state past the watermark (a
+    whole micro-batch and an emptiness check for nothing the fold
+    sees); the query starts with `noDataMicroBatches` off instead, so
+    that eviction happens at the end of the next data batch, under the
+    same watermark, as between consecutive batches of one run. Only
+    this query sees the setting: `.start()` clones the session, and the
+    caller's value is restored right after.
+
+    A replay is a batch a restart re-delivers: the last one in the
+    checkpoint's offset log when the run before crashed ahead of its
+    commit. `last_logged_batch`, read before the start, bounds it."""
 
     def _each(batch: DataFrame, batch_id: int) -> None:
         if dedup_cols:
@@ -148,12 +182,19 @@ def _run_available_now(
         finally:
             batch.unpersist()
 
-    return (
-        feed.writeStream.foreachBatch(_each)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    conf = feed.sparkSession.conf
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prior = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return (
+            feed.writeStream.foreachBatch(_each)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        conf.set(key, prior)
 
 
 def _fold_state(
@@ -253,6 +294,12 @@ def stream_validated_ingest(
 
     Aggregate-shaped rules (unique / row_count / referential) can't
     name individual rows; they gate via the report, not the split.
+
+    Report and quarantine rows are exactly-once per checkpoint lineage.
+    A deleted checkpoint re-delivers every file under new batch ids;
+    those batches are new to the fresh lineage, so their report and
+    quarantine rows append again (the merge stays idempotent).
+
     Scale: the report is rules-sized, the split is one filter over the
     batch, and the merge is the batch upsert path — nothing here holds
     streaming state beyond the dedup watermark.
@@ -267,6 +314,7 @@ def stream_validated_ingest(
         dedup_cols=event_id_cols,
     )
     violated = row_violation(rules)
+    replayable = last_logged_batch(checkpoint_dir)
 
     def _validate_and_merge(batch: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: on a replay after a mid-batch
@@ -275,12 +323,17 @@ def stream_validated_ingest(
         # (probe its batch_id before appending). Guarding quarantine
         # with the report ledger would leave a crash window between
         # the two appends that duplicates dead-letter rows on replay.
-        already_logged = batch_already_appended(wh, report_table, batch_id)
+        # Only a batch the offset log held before this run started can
+        # be a replay; a later one is new, so no run appended it yet.
+        replay = batch_id <= replayable
+
+        def appended(ledger: str) -> bool:
+            return replay and batch_already_appended(wh, ledger, batch_id)
+
+        already_logged = appended(report_table)
         clean = batch
         if violated is not None:
-            if quarantine_table is not None and not batch_already_appended(
-                wh, quarantine_table, batch_id
-            ):
+            if quarantine_table is not None and not appended(quarantine_table):
                 # rebalance: dead-letter appends are a (usually tiny)
                 # filtered slice of the batch — without the clamp each
                 # append lands one file PER PARTITION of the batch

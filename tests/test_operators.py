@@ -26,11 +26,13 @@ def _place(spark, place):
     return (r["LB_Region"], r["LB_Country"])
 
 
-def test_states_lookup_is_an_inline_table(spark):
+def test_states_lookup_is_an_inline_table(spark, tmp_path):
     """The states and their lookup plan as LocalRelations — no Python
     RDD scan, no job to build or collect them — and the lookup maps
     each name and each abbreviation to the name; quotes and
-    backslashes survive the inline table's literals."""
+    backslashes survive the inline table's literals. Broadcasting the
+    lookup is still a job: `parse_place` over a parquet scan runs one
+    more than the bare scan."""
     from gcp_data_pipeline_fyp_spark.functions.geo import string_table
     from gcp_data_pipeline_fyp_spark.sources.states import US_STATES
 
@@ -43,6 +45,21 @@ def test_states_lookup_is_an_inline_table(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("states-lookup") == []
+    places = str(tmp_path / "places")
+    spark.createDataFrame([("5km N of Anza, CA",), ("x",)], "LB_place string").write.parquet(places)
+    scan = spark.read.schema("LB_place string").parquet(places)
+    n_jobs = []
+    for group, frame in (("states-scan", scan), ("states-parse", parse_place(scan, lookup))):
+        sc.setJobGroup(group, group)
+        try:
+            parsed = frame.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert n_jobs == [1, 2]
+    assert sorted((r["LB_Region"], r["LB_Country"]) for r in parsed) == [
+        ("California", "USA"), ("x", None),
+    ]
     for df in (states_df(spark), lookup):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert plan.startswith("LocalRelation"), plan

@@ -291,63 +291,144 @@ def test_stream_validated_ingest_quarantines_and_logs(spark, tmp_path):
     assert all(r["n_violations"] == 0 for r in log2 if r["batch_id"] != log[0]["batch_id"])
 
 
-def test_stream_validated_ingest_replay_skips_duplicate_appends(spark, tmp_path):
+def test_stream_validated_ingest_replay_skips_duplicate_appends(
+    spark, tmp_path, monkeypatch
+):
     """foreachBatch is at-least-once, and each append-only table is its
-    OWN replay ledger (r8: guarding quarantine with the report ledger
-    left a crash window between the two appends that duplicated
-    dead-letter rows). Crash after BOTH appends: neither re-appends.
-    Crash BETWEEN them (quarantine landed, report did not): the report
-    row lands on replay and the quarantine rows do NOT duplicate. The
-    idempotent merge lands the clean rows in every scenario."""
+    OWN replay ledger (guarding quarantine with the report ledger left
+    a crash window between the two appends that duplicated dead-letter
+    rows). Both scenarios restart the same checkpoint, so Spark really
+    re-delivers batch 0. Crash after BOTH appends (the batch ran, its
+    commit never landed): neither re-appends. Crash BETWEEN them
+    (quarantine landed, report did not): the report row lands on
+    replay and the quarantine rows do NOT duplicate. The idempotent
+    merge lands the clean rows in every scenario."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
     from gcp_data_pipeline_fyp_spark.operators.expectations import in_range
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_validated_ingest,
-    )
 
-    rows = [
-        (1, "2024-01-01 10:00:00", "click", 1.0),
-        (2, "2024-01-01 10:01:00", "view", 99.0),  # violator
-    ]
-    seeded_log = spark.createDataFrame(
-        [("value_in_range", "in_range", "value", 1, False, 0)],
-        "rule string, kind string, target string, n_violations long, "
-        "passed boolean, batch_id long",
-    )
-    seeded_q = spark.createDataFrame(
-        [(2, "2024-01-01 10:01:00", "view", 99.0, 0)],
-        "event_id long, ts string, event_type string, value double, "
-        "batch_id long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def replay(tag, seed_log, seed_q):
+    def run(tag, crash=None):
         in_dir = tmp_path / f"in_{tag}"
         in_dir.mkdir()
+        ckpt = tmp_path / f"ckpt_{tag}"
         wh = Warehouse(spark, str(tmp_path / f"wh_{tag}"))
-        if seed_log:
-            wh.append(seeded_log, "LOG")
-        if seed_q:
-            wh.append(seeded_q, "Q")
-        _write_csv(in_dir / "b1.csv", rows)
-        q = stream_validated_ingest(
-            spark, str(in_dir), SCHEMA, ["event_id"], "ts", wh, "ev",
-            str(tmp_path / f"ckpt_{tag}"),
-            rules=[in_range("value", 0, 10)], quarantine_table="Q",
-            report_table="LOG",
-        )
+        _write_csv(in_dir / "b1.csv", [
+            (1, "2024-01-01 10:00:00", "click", 1.0),
+            (2, "2024-01-01 10:01:00", "view", 99.0),  # violator
+        ])
+
+        def ingest():
+            return stream_validated_ingest(
+                spark, str(in_dir), SCHEMA, ["event_id"], "ts", wh, "ev",
+                str(ckpt), rules=[in_range("value", 0, 10)],
+                quarantine_table="Q", report_table="LOG",
+            )
+
+        if crash is None:
+            ingest().awaitTermination(120)
+            # what a crash after the fold, before the commit, leaves
+            for name in ("0", ".0.crc"):
+                (ckpt / "commits" / name).unlink()
+        else:
+            with monkeypatch.context() as mp:
+                _crash_once(mp, *crash)
+                with pytest.raises(StreamingQueryException, match="InjectedCrash"):
+                    ingest().awaitTermination(120)
+        q = ingest()
         q.awaitTermination(120)
+        assert [p["batchId"] for p in q.recentProgress] == [0]  # the replay
         return wh
 
     # crash after BOTH appends: nothing re-appends
-    wh = replay("both", seed_log=True, seed_q=True)
+    wh = run("both")
     assert {r["event_id"] for r in wh.read("ev").collect()} == {1}
     assert wh.read("LOG").count() == 1
     assert wh.read("Q").count() == 1
     # crash BETWEEN the appends (quarantine landed, report did not):
     # replay must complete the report WITHOUT duplicating quarantine
-    wh = replay("between", seed_log=False, seed_q=True)
+    wh = run("between", crash=("append", "Q"))
     assert {r["event_id"] for r in wh.read("ev").collect()} == {1}
     assert wh.read("LOG").count() == 1
     assert wh.read("Q").count() == 1
+
+
+def test_ledger_probes_run_only_for_a_replayed_batch(spark, tmp_path, monkeypatch):
+    """`batch_already_appended` runs for no batch of a steady round (a
+    batch the offset log did not hold before the start is new) and
+    once per ledger for the batch a restart re-delivers."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from gcp_data_pipeline_fyp_spark.operators.expectations import in_range
+    from gcp_data_pipeline_fyp_spark.streaming import ingest as ingest_mod
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    probed = []
+    real = ingest_mod.batch_already_appended
+
+    def counted(wh, table, batch_id):
+        probed.append((table, batch_id))
+        return real(wh, table, batch_id)
+
+    monkeypatch.setattr(ingest_mod, "batch_already_appended", counted)
+
+    def ingest():
+        return stream_validated_ingest(
+            spark, str(in_dir), SCHEMA, ["event_id"], "ts", wh, "ev",
+            str(tmp_path / "ckpt"), rules=[in_range("value", 0, 10)],
+            quarantine_table="Q", report_table="LOG",
+        )
+
+    for i in range(3):
+        _write_csv(in_dir / f"b{i}.csv", [
+            (10 * i + 1, f"2024-01-01 1{i}:00:00", "click", 1.0),
+            (10 * i + 2, f"2024-01-01 1{i}:01:00", "view", 99.0),  # violator
+        ])
+        if i == 2:  # killed after the clean rows' append, before the commit
+            with monkeypatch.context() as mp:
+                _crash_once(mp, "append", "ev")
+                with pytest.raises(StreamingQueryException, match="InjectedCrash"):
+                    ingest().awaitTermination(120)
+        ingest().awaitTermination(120)
+    # batches 0, 1 and batch 2's first delivery: none; its replay: one each
+    assert probed == [("LOG", 2), ("Q", 2)]
+    assert wh.read("LOG").count() == 3 and wh.read("Q").count() == 3
+    assert {r["event_id"] for r in wh.read("ev").collect()} == {1, 11, 21}
+
+
+def test_fresh_checkpoint_appends_over_ledgers_holding_its_batch_ids(spark, tmp_path):
+    """Batch ids are numbered per checkpoint lineage: a fresh checkpoint
+    over report and quarantine tables that already hold batch 0 (from
+    a deleted checkpoint) appends its batch 0 rows. Its files are new
+    to this lineage, so the ledgers are not probed."""
+    from gcp_data_pipeline_fyp_spark.operators.expectations import in_range
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append(spark.createDataFrame(
+        [("value_in_range", "in_range", "value", 1, False, 0)],
+        "rule string, kind string, target string, n_violations long, "
+        "passed boolean, batch_id long",
+    ), "LOG")
+    wh.append(spark.createDataFrame(
+        [(2, "2024-01-01 10:01:00", "view", 99.0, 0)],
+        "event_id long, ts string, event_type string, value double, "
+        "batch_id long",
+    ).withColumn("ts", F.col("ts").cast("timestamp")), "Q")
+    _write_csv(in_dir / "b1.csv", [
+        (1, "2024-01-01 10:00:00", "click", 1.0),
+        (2, "2024-01-01 10:01:00", "view", 99.0),  # violator
+    ])
+    stream_validated_ingest(
+        spark, str(in_dir), SCHEMA, ["event_id"], "ts", wh, "ev",
+        str(tmp_path / "ckpt"), rules=[in_range("value", 0, 10)],
+        quarantine_table="Q", report_table="LOG",
+    ).awaitTermination(120)
+    assert {r["event_id"] for r in wh.read("ev").collect()} == {1}
+    assert [r["batch_id"] for r in wh.read("LOG").collect()] == [0, 0]
+    assert [r["batch_id"] for r in wh.read("Q").collect()] == [0, 0]
 
 
 @pytest.mark.slow
@@ -518,31 +599,39 @@ def _quake_rules():
     ]
 
 
-def test_steady_validated_round_runs_at_most_12_jobs(spark, tmp_path):
+def test_steady_validated_round_runs_at_most_7_jobs(spark, tmp_path):
     """Structural pin on the benchmarked streaming path: after a first
-    round has created the tables, one steady `stream_validated_ingest`
-    round (a 4k-event file with violators and re-sends, appended to
-    the existing table: no id is stored yet) runs at most 12 Spark jobs
-    on local[4] with 4 shuffle partitions — 12 measured; 15 when every
-    round rewrote the table and each table read inferred its schema
-    from a footer. The stream runs its jobs in its own thread, under
-    the query's run id as job group."""
+    round has created the tables and a second has compiled the steady
+    path's classes once, one steady `stream_validated_ingest` round (a 4k-event file with violators and re-sends, appended to
+    the existing table: no id is stored yet) runs one micro-batch and
+    at most 7 Spark jobs on local[4] with 4 shuffle partitions — 7
+    measured; 12 while every round ended in a data-less batch and
+    probed both replay ledgers, 15 when every round rewrote the table
+    and each table read inferred its schema from a footer. It compiles
+    at most 5 generated classes (the watermark predicate and the two
+    `batch_id` stamps, whose long literals are inlined; 13 with the
+    probes, each LIMIT's counter being named afresh), and the
+    caller's session keeps its `noDataMicroBatches` setting. The
+    stream runs its jobs in its own thread, under the query's run id
+    as job group."""
     import csv
     import random
 
-    from gcp_data_pipeline_fyp_spark.streaming.ingest import (
-        stream_validated_ingest,
-    )
-
     assert spark.sparkContext.master == "local[4]"
     assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(no_data)
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_SOURCE_CODE_SIZE()
+    )
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     wh = Warehouse(spark, str(tmp_path / "wh"))
     rules = _quake_rules()
     rng = random.Random(3)
     prev_clean, clean_ids = [], set()
-    for r in range(2):
+    for r in range(3):
         rows = _quake_round(rng, r, 4000, prev_clean)
         with open(in_dir / f"round_{r}.csv", "w", newline="") as fh:
             w = csv.writer(fh)
@@ -553,14 +642,19 @@ def test_steady_validated_round_runs_at_most_12_jobs(spark, tmp_path):
             if x[2] and -1.0 <= float(x[2]) <= 10.0 and x[3] in _QUAKE_TYPES
         ]
         clean_ids |= {x[0] for x in prev_clean}
+        n_compiled = compiled.getCount()
         q = stream_validated_ingest(
             spark, str(in_dir), _QUAKE_SCHEMA, ["id"], "time", wh, "EVENTS",
             str(tmp_path / "ckpt"), rules=rules, quarantine_table="QUARANTINE",
             report_table="EXPECTATIONS_LOG",
         )
         q.awaitTermination(120)
+        n_compiled = compiled.getCount() - n_compiled
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert 0 < len(jobs) <= 12, len(jobs)
+    assert 0 < len(jobs) <= 7, len(jobs)
+    assert len(q.recentProgress) == 1, q.recentProgress
+    assert n_compiled <= 5, n_compiled
+    assert spark.conf.get(no_data) == before
     assert wh.read("EVENTS").count() == len(clean_ids)
 
 
@@ -652,7 +746,7 @@ def test_validated_ingest_crash_at_each_step_replays_exactly(
                 for crash in crashes:  # each restart crashes once more
                     with monkeypatch.context() as mp:
                         _crash_once(mp, *crash)
-                        with pytest.raises(StreamingQueryException, match="crash"):
+                        with pytest.raises(StreamingQueryException, match="InjectedCrash"):
                             ingest()
             ingest()
         return [_rows(wh, t) for t in ("ev", "Q", "LOG")]
@@ -764,7 +858,7 @@ def test_drift_state_fold_crash_at_each_step_replays_exactly(
         if crash is not None:
             with monkeypatch.context() as mp:
                 _crash_once(mp, *crash)
-                with pytest.raises(StreamingQueryException, match="crash"):
+                with pytest.raises(StreamingQueryException, match="InjectedCrash"):
                     monitor()
         monitor()
         return _rows(wh, "STATE", drop=["__stream_id"]), _rows(wh, "REPORT")
