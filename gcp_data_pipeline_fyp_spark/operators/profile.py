@@ -11,16 +11,33 @@ are single-pass aggregations:
 - `zscore_outliers` is the classic per-key anomaly gate: group stats
   (one shuffle over the key), broadcast back, filter. The stats side
   is |keys|-sized, so the join is a broadcast at any corpus scale.
+
+The drift monitors (numeric and categorical PSI, the persisted PSI
+profile the streaming monitor folds, exact and binned KS) are each a
+mergeable count summary plus one comparison, and each comparison is
+written once:
+
+- `_bin_counts` is the one binning step: values against per-group
+  base ranges via `_psi_bin`, through a broadcast equi-join on the
+  group columns (a broadcast crossJoin when there are none);
+- `psi_from_joint_counts` is the one PSI algebra: add-half smoothing
+  over exact integer counts, micro6-rounded contributions, exact
+  integer sum;
+- `_ks_from_pooled` is the one exact-integer ECDF max-gap.
+
+One rule for which groups are reported: a group appears only when
+both snapshots hold rows for it and its key is not NULL (a NULL key
+matches no equi-join; `_keyed` drops it before any total is taken).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gcp_data_pipeline_fyp_spark.queries_util import roundn
+from gcp_data_pipeline_fyp_spark.queries_util import micro6, roundn
 
 
 def profile_numeric(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -124,8 +141,6 @@ def exact_corr(
     cov = nn * F.col("__sxy") - F.col("__sx") * F.col("__sy")
     vx = nn * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     vy = nn * F.col("__syy") - F.col("__sy") * F.col("__sy")
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     # try_divide: a zero-variance group yields NULL (ANSI division
     # would throw mid-job); SQL mirror uses nullif on the denominator
     return g.select(
@@ -166,8 +181,6 @@ def mad_outliers(
     mad = dev.groupBy(*gcols).agg(
         F.expr("percentile(__ad, 0.5)").alias("__mad")
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     scored = dev.join(F.broadcast(mad), list(group_cols)).select(
         *id_cols,
         *group_cols,
@@ -184,106 +197,16 @@ def mad_outliers(
     )
 
 
-def ks_binned_report(
-    base: DataFrame,
-    current: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    n_bins: int = 100,
-) -> DataFrame:
-    """KS statistic evaluated on FIXED-WIDTH bin boundaries — the
-    bounded-state variant of `ks_report` for the single-giant-group /
-    continuous-values shape where the exact per-(group, value)
-    distinct profile is unbounded. ECDFs are compared only at the
-    n_bins boundaries over the BASE range (the `_psi_bin` expression,
-    shared byte-for-byte with every PSI surface), so shuffle state is
-    |groups|·n_bins REGARDLESS of value cardinality.
-
-    The emitted statistic underestimates the exact D by at most the
-    largest single-bin probability mass (ECDFs are monotone between
-    evaluation points); at n_bins=100 that is <= max(p_bin) — tighten
-    by raising n_bins, each bin costing one counter, not one value.
-    Same exact-integer core as `ks_report`: the gap numerator
-    |cb·n_cur - cc·n_base| is an exact integer, max is taken in that
-    integer domain, ONE float division + micro6 at the end.
-    """
-    gcols = list(group_cols)
-    from pyspark.sql import Window
-
-    b = base.filter(F.col(value_col).isNotNull())
-    c = current.filter(F.col(value_col).isNotNull())
-    rng = b.groupBy(*gcols).agg(
-        F.min(value_col).cast("double").alias("__lo"),
-        F.max(value_col).cast("double").alias("__hi"),
-    )
-
-    def binned(df: DataFrame, alias: str) -> DataFrame:
-        # crossJoin for the ungrouped (single-giant-group) case: the
-        # range frame is one row, and an equi-join on an empty key
-        # list is not a join
-        j = (
-            df.join(F.broadcast(rng), gcols)
-            if gcols
-            else df.crossJoin(F.broadcast(rng))
-        )
-        return (
-            j.groupBy(
-                *gcols,
-                _psi_bin(value_col, "__lo", "__hi", n_bins).alias("bin"),
-            )
-            .agg(F.count(F.lit(1)).alias(alias))
-        )
-
-    pooled = (
-        binned(b, "__b")
-        .join(binned(c, "__c"), [*gcols, "bin"], "full")
-        .select(
-            *gcols,
-            "bin",
-            F.coalesce("__b", F.lit(0)).alias("__b"),
-            F.coalesce("__c", F.lit(0)).alias("__c"),
-        )
-    )
-    w = Window.partitionBy(*gcols).orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = pooled.select(
-        *gcols,
-        F.sum("__b").over(w).alias("__cb"),
-        F.sum("__c").over(w).alias("__cc"),
-    )
-    wg = Window.partitionBy(*gcols)
-    gapped = cum.select(
-        *gcols,
-        F.max("__cb").over(wg).alias("n_base"),
-        F.max("__cc").over(wg).alias("n_cur"),
-        F.abs(
-            F.col("__cb") * F.max("__cc").over(wg)
-            - F.col("__cc") * F.max("__cb").over(wg)
-        ).alias("__num"),
-    )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
-    agg = gapped.groupBy(*gcols, "n_base", "n_cur").agg(
-        F.max("__num").alias("__mx")
-    ).filter((F.col("n_base") > 0) & (F.col("n_cur") > 0))
-    ks = micro6(
-        F.col("__mx").cast("double")
-        / (F.col("n_base").cast("double") * F.col("n_cur").cast("double"))
-    )
-    return agg.select(*gcols, "n_base", "n_cur", ks.alias("ks_micro"))
-
-
+# ------------------------------------------- drift: the shared pieces
 def _psi_bin(value_col: str, lo_col: str, hi_col: str, n_bins: int):
-    """Fixed-width bin index over [lo, hi], clamped to the edge bins —
-    the one expression every PSI surface (batch report, persisted
-    profile, streaming monitor) must share byte-for-byte."""
-    x = F.col(value_col).cast("double")
+    """Fixed-width bin index over the group's [lo, hi], clamped to the
+    edge bins."""
+    lo, hi = F.col(lo_col), F.col(hi_col)
     raw = F.floor(
-        (x - F.col(lo_col)) / (F.col(hi_col) - F.col(lo_col)) * F.lit(float(n_bins))
+        (F.col(value_col).cast("double") - lo) / (hi - lo) * F.lit(float(n_bins))
     )
     return F.when(
-        F.col(hi_col) > F.col(lo_col),
+        hi > lo,
         F.least(
             F.greatest(raw, F.lit(0).cast("long")),
             F.lit(n_bins - 1).cast("long"),
@@ -291,44 +214,171 @@ def _psi_bin(value_col: str, lo_col: str, hi_col: str, n_bins: int):
     ).otherwise(F.lit(0).cast("long"))
 
 
+def _keyed(df: DataFrame, gcols: list[str]) -> DataFrame:
+    """`df` without rows whose group key is NULL: a NULL key matches no
+    equi-join, so no drift surface reports it."""
+    for c in gcols:
+        df = df.filter(F.col(c).isNotNull())
+    return df
+
+
+def _counts(
+    df: DataFrame, value_col: str, gcols: list[str], key: Column, alias: str
+) -> DataFrame:
+    """Per-(group, key) row counts of `df`'s non-NULL `value_col`."""
+    return (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(*gcols, key)
+        .agg(F.count(F.lit(1)).alias(alias))
+    )
+
+
+def _base_ranges(base: DataFrame, value_col: str, gcols: list[str]) -> DataFrame:
+    """Per-group [__lo, __hi] of the base snapshot's non-NULL values
+    under a non-NULL group key."""
+    b = _keyed(base, gcols).filter(F.col(value_col).isNotNull())
+    return b.groupBy(*gcols).agg(
+        F.min(value_col).cast("double").alias("__lo"),
+        F.max(value_col).cast("double").alias("__hi"),
+    )
+
+
+def _bin_counts(
+    df: DataFrame,
+    rng: DataFrame,
+    value_col: str,
+    gcols: list[str],
+    n_bins: int,
+    alias: str,
+    lo_col: str = "__lo",
+    hi_col: str = "__hi",
+) -> DataFrame:
+    """THE binning step: per-(group, bin) counts of `df` against the
+    per-group base ranges `rng`, broadcast through an equi-join on the
+    group columns, or a crossJoin when there are none (an equi-join on
+    an empty key list is not a join). Values outside the base range
+    clamp to the edge bins — exactly the drift signal; a group without
+    a base range has nothing to bin against."""
+    r = F.broadcast(rng)
+    with_rng = df.join(r, gcols) if gcols else df.crossJoin(r)
+    bin_ = _psi_bin(value_col, lo_col, hi_col, n_bins).alias("bin")
+    return _counts(with_rng, value_col, gcols, bin_, alias)
+
+
+def _base_bins(
+    base: DataFrame,
+    rng: DataFrame,
+    value_col: str,
+    gcols: list[str],
+    n_bins: int,
+) -> DataFrame:
+    """The profile rows (group, bin, lo, hi, base_cnt) over EVERY bin
+    of each base group's range — an empty bin is a 0 row, so the PSI
+    algebra's category count is n_bins."""
+    bins = F.sequence(F.lit(0).cast("long"), F.lit(n_bins - 1).cast("long"))
+    scaffold = rng.select(
+        *gcols,
+        F.col("__lo").alias("lo"),
+        F.col("__hi").alias("hi"),
+        F.explode(bins).alias("bin"),
+    )
+    return scaffold.join(
+        _bin_counts(base, rng, value_col, gcols, n_bins, "base_cnt"),
+        [*gcols, "bin"],
+        "left",
+    ).na.fill(0, ["base_cnt"])
+
+
+def psi_from_joint_counts(
+    pooled: DataFrame, group_cols: Sequence[str]
+) -> DataFrame:
+    """THE smoothed-PSI algebra every PSI surface shares (numeric
+    report, persisted profile, streaming monitor, categorical mix,
+    retrain trigger). `pooled` carries (group_cols…, __cb, __cc), one
+    row per category or bin; add-half smoothing (2c+1)/(2n+n_cats)
+    over exact integer counts keeps empty categories finite, each
+    contribution (p_cur - p_base)·ln(p_cur/p_base) is micro6-rounded
+    FIRST and PSI is the exact integer sum — no float summation order
+    anywhere. Groups must have mass in BOTH snapshots and a non-NULL
+    key to be reported.
+    Returns (group_cols…, n_base, n_cur, n_cats, psi_micro)."""
+    gcols = list(group_cols)
+    wg = Window.partitionBy(*gcols)
+    with_tot = _keyed(pooled, gcols).select(
+        *gcols,
+        "__cb",
+        "__cc",
+        F.sum("__cb").over(wg).alias("n_base"),
+        F.sum("__cc").over(wg).alias("n_cur"),
+        F.count(F.lit(1)).over(wg).alias("n_cats"),
+    ).filter((F.col("n_base") > 0) & (F.col("n_cur") > 0))
+    pb = (2.0 * F.col("__cb") + 1.0) / (
+        2.0 * F.col("n_base") + F.col("n_cats").cast("double")
+    )
+    pc = (2.0 * F.col("__cc") + 1.0) / (
+        2.0 * F.col("n_cur") + F.col("n_cats").cast("double")
+    )
+    detail = with_tot.select(
+        *gcols,
+        "n_base",
+        "n_cur",
+        "n_cats",
+        micro6((pc - pb) * F.log(pc / pb)).alias("__contrib_micro"),
+    )
+    return detail.groupBy(*gcols, "n_base", "n_cur", "n_cats").agg(
+        F.sum("__contrib_micro").alias("psi_micro")
+    )
+
+
+def _ks_from_pooled(
+    pooled: DataFrame, gcols: list[str], order_col: str
+) -> DataFrame:
+    """THE exact-integer ECDF max-gap, over pooled (group_cols…,
+    `order_col`, __cb, __cc) counts: at each point the gap is
+    |cb·n_cur - cc·n_base| / (n_base·n_cur) with cumulative cb, cc;
+    the numerator is an exact integer, so the per-group max is
+    order-independent and the one float division + micro6 happens on
+    the winning value. Groups must have rows in BOTH snapshots and a
+    non-NULL key."""
+    w = Window.partitionBy(*gcols).orderBy(order_col).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    wg = Window.partitionBy(*gcols)
+    gapped = _keyed(pooled, gcols).select(
+        *gcols,
+        F.sum("__cb").over(w).alias("__cb"),
+        F.sum("__cc").over(w).alias("__cc"),
+        F.sum("__cb").over(wg).alias("__nb"),
+        F.sum("__cc").over(wg).alias("__nc"),
+    )
+    agg = gapped.groupBy(*gcols).agg(
+        F.max("__nb").alias("n_base"),
+        F.max("__nc").alias("n_cur"),
+        F.max(
+            F.abs(F.col("__cb") * F.col("__nc") - F.col("__cc") * F.col("__nb"))
+        ).alias("__dnum"),
+    ).filter((F.col("n_base") > 0) & (F.col("n_cur") > 0))
+    ks = F.col("__dnum").cast("double") / (
+        F.col("n_base").cast("double") * F.col("n_cur").cast("double")
+    )
+    return agg.select(*gcols, "n_base", "n_cur", micro6(ks).alias("ks_micro"))
+
+
+# ------------------------------------------- drift: the monitors
 def fit_psi_profile(
     base: DataFrame,
     value_col: str,
     group_cols: Sequence[str],
     n_bins: int = 10,
 ) -> DataFrame:
-    """Persistable PSI base profile: one row per (group, bin) with the
-    base bin count, group total, and the fixed-width [lo, hi] range —
-    the |groups|·n_bins state a drift monitor bins every future
+    """Persistable PSI base profile: one row (group, bin, lo, hi,
+    base_cnt) per group and bin, with the group's fixed-width [lo, hi]
+    range — the |groups|·n_bins state a drift monitor bins every future
     snapshot or micro-batch against without rescanning the base
-    corpus. Binning contract identical to `psi_report` (same shared
-    expression)."""
+    corpus."""
     gcols = list(group_cols)
-    b = base.filter(F.col(value_col).isNotNull())
-    rng = b.groupBy(*gcols).agg(
-        F.min(value_col).cast("double").alias("lo"),
-        F.max(value_col).cast("double").alias("hi"),
-    )
-    binned = (
-        b.join(F.broadcast(rng), gcols)
-        .groupBy(*gcols, _psi_bin(value_col, "lo", "hi", n_bins).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("base_cnt"))
-    )
-    scaffold = rng.select(
-        *gcols,
-        "lo",
-        "hi",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin"),
-    ).withColumn("bin", F.col("bin").cast("long"))
-    prof = scaffold.join(binned, [*gcols, "bin"], "left").select(
-        *gcols,
-        "bin",
-        "lo",
-        "hi",
-        F.coalesce("base_cnt", F.lit(0)).alias("base_cnt"),
-    )
-    tot = prof.groupBy(*gcols).agg(F.sum("base_cnt").alias("n_base"))
-    return prof.join(F.broadcast(tot), gcols)
+    rng = _base_ranges(base, value_col, gcols)
+    return _base_bins(base, rng, value_col, gcols, n_bins)
 
 
 def bin_against_profile(
@@ -343,47 +393,22 @@ def bin_against_profile(
     monitor folds into its state table."""
     gcols = list(group_cols)
     rng = profile.select(*gcols, "lo", "hi").distinct()
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .join(F.broadcast(rng), gcols)
-        .groupBy(*gcols, _psi_bin(value_col, "lo", "hi", n_bins).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cur_cnt"))
-    )
+    return _bin_counts(df, rng, value_col, gcols, n_bins, "cur_cnt", "lo", "hi")
 
 
 def psi_from_profile(
     profile: DataFrame,
     cur_counts: DataFrame,
     group_cols: Sequence[str],
-    n_bins: int = 10,
 ) -> DataFrame:
     """PSI per group from a fitted profile + current per-bin counts —
-    the read side of the streaming drift monitor. Identical smoothing
-    and micro6-then-integer-sum contract as `psi_report` (equivalence
-    test-pinned); groups with no current rows are not reported."""
-    gcols = list(group_cols)
-    j = profile.join(cur_counts, [*gcols, "bin"], "left").select(
-        *gcols,
-        "bin",
-        "base_cnt",
-        "n_base",
-        F.coalesce("cur_cnt", F.lit(0)).alias("__cc"),
+    the read side of the streaming drift monitor."""
+    keys = [*group_cols, "bin"]
+    pooled = profile.select(*keys, F.col("base_cnt").alias("__cb")).join(
+        cur_counts.select(*keys, F.col("cur_cnt").alias("__cc")), keys, "left"
     )
-    tot = j.groupBy(*gcols).agg(F.sum("__cc").alias("n_cur")).filter(
-        F.col("n_cur") > 0
-    )
-    pb = (2.0 * F.col("base_cnt") + 1.0) / (2.0 * F.col("n_base") + float(n_bins))
-    pc = (2.0 * F.col("__cc") + 1.0) / (2.0 * F.col("n_cur") + float(n_bins))
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
-    detail = j.join(F.broadcast(tot), gcols).select(
-        *gcols,
-        "n_base",
-        "n_cur",
-        micro6((pc - pb) * F.log(pc / pb)).alias("__contrib_micro"),
-    )
-    return detail.groupBy(*gcols, "n_base", "n_cur").agg(
-        F.sum("__contrib_micro").alias("psi_micro")
+    return psi_from_joint_counts(pooled.na.fill(0, ["__cc"]), group_cols).drop(
+        "n_cats"
     )
 
 
@@ -399,72 +424,23 @@ def psi_report(
     between a training corpus and a fresh crawl (PSI < 0.1 stable,
     0.1–0.25 moderate shift, > 0.25 retrain).
 
-    Design, pinned for cross-engine determinism:
-    - bin edges are FIXED-WIDTH over the BASE snapshot's [min, max]
-      (exact, order-independent aggregates), never quantiles — the
-      same rows always land in the same bins on any partitioning;
-      current-snapshot values outside the base range clamp to the
-      edge bins, which is exactly the drift signal PSI wants;
-    - per-bin probabilities use add-half Laplace smoothing
-      ((2c+1)/(2n+n_bins)) so empty bins contribute finitely and the
-      log never sees zero;
-    - each bin's contribution (p_cur - p_base)·ln(p_cur/p_base) is
-      rounded to integer micro-units FIRST and the per-group PSI is
-      the exact integer sum — no float summation order anywhere.
+    Bin edges are FIXED-WIDTH over the BASE snapshot's [min, max]
+    (exact, order-independent aggregates), never quantiles — the same
+    rows always land in the same bins on any partitioning. The one-shot
+    form of the profile route: `psi_from_profile` over the base's
+    unpersisted profile and the current snapshot's bin counts.
 
     Scale: one aggregation over each snapshot (min/max, then
     group×bin counts); everything after runs on |groups|·n_bins rows
-    with broadcast joins. Groups must appear in the base snapshot to
-    be reported (a brand-new group has no base distribution to
-    compare against — gate those separately on n_base).
+    with broadcast joins. A brand-new group has no base distribution
+    to compare against — gate those separately on n_base.
     """
     gcols = list(group_cols)
-    b = base.filter(F.col(value_col).isNotNull())
-    c = current.filter(F.col(value_col).isNotNull())
-    rng = b.groupBy(*gcols).agg(
-        F.min(value_col).cast("double").alias("__lo"),
-        F.max(value_col).cast("double").alias("__hi"),
-    )
-
-    def binned(df: DataFrame, cnt_alias: str) -> DataFrame:
-        return (
-            df.join(F.broadcast(rng), gcols)
-            .groupBy(
-                *gcols, _psi_bin(value_col, "__lo", "__hi", n_bins).alias("bin")
-            )
-            .agg(F.count(F.lit(1)).alias(cnt_alias))
-        )
-
-    bb = binned(b, "__cb")
-    cc = binned(c, "__cc")
-    nb = bb.groupBy(*gcols).agg(F.sum("__cb").alias("n_base"))
-    nc = cc.groupBy(*gcols).agg(F.sum("__cc").alias("n_cur"))
-    scaffold = rng.select(
-        *gcols, F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin")
-    ).withColumn("bin", F.col("bin").cast("long"))
-    pb = (2.0 * F.coalesce(F.col("__cb"), F.lit(0)) + 1.0) / (
-        2.0 * F.col("n_base") + float(n_bins)
-    )
-    pc = (2.0 * F.coalesce(F.col("__cc"), F.lit(0)) + 1.0) / (
-        2.0 * F.col("n_cur") + float(n_bins)
-    )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
-    detail = (
-        scaffold.join(bb, [*gcols, "bin"], "left")
-        .join(cc, [*gcols, "bin"], "left")
-        .join(F.broadcast(nb), gcols)
-        .join(F.broadcast(nc), gcols)
-        .select(
-            *gcols,
-            "bin",
-            "n_base",
-            "n_cur",
-            micro6((pc - pb) * F.log(pc / pb)).alias("__contrib_micro"),
-        )
-    )
-    return detail.groupBy(*gcols, "n_base", "n_cur").agg(
-        F.sum("__contrib_micro").alias("psi_micro")
+    rng = _base_ranges(base, value_col, gcols)
+    return psi_from_profile(
+        _base_bins(base, rng, value_col, gcols, n_bins),
+        _bin_counts(current, rng, value_col, gcols, n_bins, "cur_cnt"),
+        gcols,
     )
 
 
@@ -481,75 +457,75 @@ def psi_categorical(
     No bins: the category set is the union observed across both
     snapshots (a category seen only in one side is exactly the drift
     signal, smoothed finitely rather than blowing up the log).
-    Same determinism contract as `psi_report`: add-half smoothing
-    over exact integer counts ((2c+1)/(2n+n_cats)), per-category
-    contributions micro6-rounded FIRST, PSI = exact integer sum.
-    Groups must appear in BOTH snapshots to be reported.
 
     Scale: one count aggregation per snapshot, then everything runs
     on |groups|·|categories| rows with broadcast joins.
     """
     gcols = list(group_cols)
-    b = (
-        base.filter(F.col(cat_col).isNotNull())
-        .groupBy(*gcols, F.col(cat_col).alias("__cat"))
-        .agg(F.count(F.lit(1)).alias("__cb"))
+    cat = F.col(cat_col).alias("__cat")
+    pooled = _counts(base, cat_col, gcols, cat, "__cb").join(
+        _counts(current, cat_col, gcols, cat, "__cc"), [*gcols, "__cat"], "full"
     )
-    c = (
-        current.filter(F.col(cat_col).isNotNull())
-        .groupBy(*gcols, F.col(cat_col).alias("__cat"))
-        .agg(F.count(F.lit(1)).alias("__cc"))
-    )
-    pooled = b.join(c, [*gcols, "__cat"], "full").select(
-        *gcols,
-        "__cat",
-        F.coalesce("__cb", F.lit(0)).alias("__cb"),
-        F.coalesce("__cc", F.lit(0)).alias("__cc"),
-    )
-    return psi_from_joint_counts(pooled, gcols)
+    return psi_from_joint_counts(pooled.na.fill(0, ["__cb", "__cc"]), gcols)
 
 
-def psi_from_joint_counts(
-    pooled: DataFrame, group_cols: Sequence[str]
+def ks_report(
+    base: DataFrame,
+    current: DataFrame,
+    value_col: str,
+    group_cols: Sequence[str],
 ) -> DataFrame:
-    """The smoothed-PSI algebra over already-joined category counts —
-    THE single definition every categorical-PSI surface shares
-    (psi_categorical, the streaming retrain monitor): add-half
-    smoothing (2c+1)/(2n+n_cats) over exact integer counts,
-    per-category contributions micro6-rounded FIRST, PSI = exact
-    integer sum. `pooled` carries (group_cols…, __cb, __cc), one row
-    per observed category; groups must have mass in BOTH snapshots to
-    be reported. Empty `group_cols` = one global group (broadcast
-    crossJoin of the 1-row totals)."""
-    gcols = list(group_cols)
-    tot = pooled.groupBy(*gcols).agg(
-        F.sum("__cb").alias("n_base"),
-        F.sum("__cc").alias("n_cur"),
-        F.count(F.lit(1)).alias("n_cats"),
-    ).filter((F.col("n_base") > 0) & (F.col("n_cur") > 0))
-    pb = (2.0 * F.col("__cb") + 1.0) / (
-        2.0 * F.col("n_base") + F.col("n_cats").cast("double")
-    )
-    pc = (2.0 * F.col("__cc") + 1.0) / (
-        2.0 * F.col("n_cur") + F.col("n_cats").cast("double")
-    )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
+    """Two-sample Kolmogorov-Smirnov statistic per group — the
+    bin-free complement to `psi_report`: D = max |ECDF_base(x) -
+    ECDF_cur(x)| over the pooled distinct values, sensitive to any
+    distributional change (location, scale, shape) without choosing
+    bins.
 
-    joined = (
-        pooled.join(F.broadcast(tot), gcols)
-        if gcols
-        else pooled.crossJoin(F.broadcast(tot))
+    Scale: counts reduce each snapshot to its per-(group, value)
+    distinct profile first (map-side combinable); the cumulative sums
+    run over that DISTINCT-VALUES frame partitioned by group — fine
+    whenever one group's distinct values fit an executor (the usual
+    many-groups shape). For a single corpus-sized group with
+    near-unique doubles, run `ks_binned_report` (bounded |groups|·bins
+    state, underestimate bounded by the largest single-bin mass) or
+    `psi_report`'s fixed bins — at that cardinality the exact KS
+    frame is the wrong tool on any engine.
+    """
+    gcols = list(group_cols)
+    v = F.col(value_col).cast("double").alias("__v")
+    pooled = _counts(base, value_col, gcols, v, "__cb").join(
+        _counts(current, value_col, gcols, v, "__cc"), [*gcols, "__v"], "full"
     )
-    detail = joined.select(
-        *gcols,
-        "n_base",
-        "n_cur",
-        "n_cats",
-        micro6((pc - pb) * F.log(pc / pb)).alias("__contrib_micro"),
+    return _ks_from_pooled(pooled.na.fill(0, ["__cb", "__cc"]), gcols, "__v")
+
+
+def ks_binned_report(
+    base: DataFrame,
+    current: DataFrame,
+    value_col: str,
+    group_cols: Sequence[str],
+    n_bins: int = 100,
+) -> DataFrame:
+    """KS statistic evaluated on FIXED-WIDTH bin boundaries — the
+    bounded-state variant of `ks_report` for the single-giant-group /
+    continuous-values shape where the exact per-(group, value)
+    distinct profile is unbounded. ECDFs are compared only at the
+    n_bins boundaries over the BASE range, so shuffle state is
+    |groups|·n_bins REGARDLESS of value cardinality.
+
+    The emitted statistic underestimates the exact D by at most the
+    largest single-bin probability mass (ECDFs are monotone between
+    evaluation points); at n_bins=100 that is <= max(p_bin) — tighten
+    by raising n_bins, each bin costing one counter, not one value.
+    """
+    gcols = list(group_cols)
+    rng = _base_ranges(base, value_col, gcols)
+    pooled = _bin_counts(base, rng, value_col, gcols, n_bins, "__cb").join(
+        _bin_counts(current, rng, value_col, gcols, n_bins, "__cc"),
+        [*gcols, "bin"],
+        "full",
     )
-    return detail.groupBy(*gcols, "n_base", "n_cur", "n_cats").agg(
-        F.sum("__contrib_micro").alias("psi_micro")
-    )
+    return _ks_from_pooled(pooled.na.fill(0, ["__cb", "__cc"]), gcols, "bin")
 
 
 def embedding_drift(
@@ -601,8 +577,6 @@ def embedding_drift(
         F.sum(F.col("__mb").cast("decimal(38,0)") * F.col("__mb")).alias("__bb"),
         F.sum(F.col("__mc").cast("decimal(38,0)") * F.col("__mc")).alias("__cc"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     return agg.select(
         *gcols,
         "n_base",
@@ -614,95 +588,6 @@ def embedding_drift(
                 * F.sqrt(F.col("__cc").cast("double"))
             )
         ).alias("centroid_cos_micro"),
-    )
-
-
-def ks_report(
-    base: DataFrame,
-    current: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov statistic per group — the
-    bin-free complement to `psi_report`: D = max |ECDF_base(x) -
-    ECDF_cur(x)| over the pooled distinct values, sensitive to any
-    distributional change (location, scale, shape) without choosing
-    bins.
-
-    Exact-integer core: at each pooled value the ECDF gap is
-    |cb·n_cur - cc·n_base| / (n_base·n_cur); the numerator is an
-    exact integer, so the per-group max is order-independent and the
-    single float division + micro6 rounding happens ONCE on the
-    winning value. No float comparisons anywhere.
-
-    Scale: counts reduce each snapshot to its per-(group, value)
-    distinct profile first (map-side combinable); the cumulative sums
-    run over that DISTINCT-VALUES frame partitioned by group — fine
-    whenever one group's distinct values fit an executor (the usual
-    many-groups shape). For a single corpus-sized group with
-    near-unique doubles, run `ks_binned_report` (bounded |groups|·bins
-    state, underestimate bounded by the largest single-bin mass) or
-    `psi_report`'s fixed bins — at that cardinality the exact KS
-    frame is the wrong tool on any engine.
-    """
-    gcols = list(group_cols)
-    from pyspark.sql import Window
-
-    def counts(df: DataFrame, alias: str) -> DataFrame:
-        return (
-            df.filter(F.col(value_col).isNotNull())
-            .select(*gcols, F.col(value_col).cast("double").alias("__v"))
-            .groupBy(*gcols, "__v")
-            .agg(F.count(F.lit(1)).alias(alias))
-        )
-
-    b = counts(base, "__b")
-    c = counts(current, "__c")
-    pooled = (
-        b.join(c, [*gcols, "__v"], "full")
-        .select(
-            *gcols,
-            "__v",
-            F.coalesce("__b", F.lit(0)).alias("__b"),
-            F.coalesce("__c", F.lit(0)).alias("__c"),
-        )
-    )
-    w = Window.partitionBy(*gcols).orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = pooled.select(
-        *gcols,
-        F.sum("__b").over(w).alias("__cb"),
-        F.sum("__c").over(w).alias("__cc"),
-    )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
-    wg = Window.partitionBy(*gcols)
-    gapped = cum.select(
-        *gcols,
-        "__cb",
-        "__cc",
-        F.max("__cb").over(wg).alias("__nb"),
-        F.max("__cc").over(wg).alias("__nc"),
-    )
-    return (
-        gapped.groupBy(*gcols)
-        .agg(
-            F.max("__nb").alias("n_base"),
-            F.max("__nc").alias("n_cur"),
-            F.max(
-                F.abs(F.col("__cb") * F.col("__nc") - F.col("__cc") * F.col("__nb"))
-            ).alias("__dnum"),
-        )
-        .select(
-            *gcols,
-            "n_base",
-            "n_cur",
-            micro6(
-                F.col("__dnum").cast("double")
-                / (F.col("n_base").cast("double") * F.col("n_cur").cast("double"))
-            ).alias("ks_micro"),
-        )
     )
 
 
@@ -732,8 +617,6 @@ def winsorize(
     corpus-sized group), broadcast back, one integer expression.
     """
     gcols = [F.col(c) for c in group_cols]
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     cuts = df.groupBy(*gcols).agg(
         micro6(F.expr(f"percentile({value_col}, {lo})")).alias("__qlo"),
         micro6(F.expr(f"percentile({value_col}, {hi})")).alias("__qhi"),
@@ -806,8 +689,6 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     cov = nn * F.col("__sxy") - F.col("__sx") * F.col("__sy")
     vx = nn * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     vy = nn * F.col("__syy") - F.col("__sy") * F.col("__sy")
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     return g.select(
         "col_x",
         "col_y",
@@ -841,8 +722,6 @@ def ab_test(
         F.count(F.when(t & s, F.lit(1))).alias("s_t"),
         F.count(F.when(~t & s, F.lit(1))).alias("s_c"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nt = F.col("n_t").cast("double")
     nc = F.col("n_c").cast("double")
     pt = F.try_divide(F.col("s_t").cast("double"), nt)
@@ -898,8 +777,6 @@ def benford_audit(
         "__n",
         F.explode(F.sequence(F.lit(1), F.lit(9))).alias("digit"),
     ).withColumn("digit", F.col("digit").cast("long"))
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     j = scaffold.join(counts, [*gcols, "digit"], "left").select(
         *gcols,
         "digit",
@@ -962,8 +839,6 @@ def target_encode(
         s_out = F.col("__s_c").cast("double")
         n_out = F.col("__n_c").cast("double")
     enc = (s_out + F.lit(m) * gm) / (n_out + F.lit(m))
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     keep = list(df.columns)
     out = (
         base.join(F.broadcast(cf), [cat_col, fold], "left")
@@ -997,8 +872,6 @@ def cusum_changepoint(
     the seasonal_decompose contract.
     """
     gcols = list(group_cols)
-    from pyspark.sql import Window
-
     series = df.groupBy(*gcols, F.col(time_col).alias("t")).agg(
         F.sum(F.col(value_col).cast("long")).alias("__x")
     )
@@ -1063,8 +936,6 @@ def contingency_stats(
     rx = cells.groupBy("__x").agg(F.sum("__c").alias("__rx"))
     cy = cells.groupBy("__y").agg(F.sum("__c").alias("__cy"))
     tot = cells.agg(F.sum("__c").alias("__n"))
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nn = F.col("__n").cast("double")
     grid = (
         rx.crossJoin(cy)
@@ -1211,8 +1082,6 @@ def interpolate_linear(
     seasonal_decompose contract (aggregate first; never event rows).
     """
     gcols = list(key_cols)
-    from pyspark.sql import Window
-
     t = F.col(t_col).cast("double")
     v = F.col(v_col).cast("double")
     wb = (
@@ -1238,8 +1107,6 @@ def interpolate_linear(
         .when(vb.isNull(), va)
         .otherwise(line)
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     keep = list(df.columns)
     return df.select(*keep, micro6(interp).alias(alias))
 
@@ -1274,8 +1141,6 @@ def grouped_ols(
         F.sum((x * y).cast("decimal(38,8)")).cast("double").alias("__sxy"),
         F.sum((x * x).cast("decimal(38,8)")).cast("double").alias("__sxx"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nn = F.col("n").cast("double")
     cov = nn * F.col("__sxy") - F.col("__sx") * F.col("__sy")
     vx = nn * F.col("__sxx") - F.col("__sx") * F.col("__sx")
@@ -1318,8 +1183,6 @@ def group_znormalize(
         F.sum(x).cast("double").alias("__sx"),
         F.sum((x * x).cast("decimal(38,8)")).cast("double").alias("__sxx"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nn = F.col("__n").cast("double")
     mean = F.col("__sx") / nn
     var = F.greatest(F.col("__sxx") / nn - mean * mean, F.lit(0.0))
@@ -1363,8 +1226,6 @@ def gini_coefficient(
     buckets-sized total table sees a global window.
     """
     gcols = list(group_cols)
-    from pyspark.sql import Window
-
     x = F.col(value_col).cast("decimal(18,4)")
     base = df.filter(F.col(value_col).isNotNull())
     if not gcols:
@@ -1386,8 +1247,6 @@ def gini_coefficient(
             )
         ).alias("__s1"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nn = F.col("n").cast("double")
     g = (
         2.0 * F.col("__s1").cast("double") / (nn * F.col("__s0").cast("double"))
@@ -1409,8 +1268,6 @@ def _gini_ungrouped(
     core and closed form as the grouped path; heavy value
     concentration degrades only to the per-bucket distinct-value
     count (documented, like ks_report's distinct-profile bound)."""
-    from pyspark.sql import Window
-
     x = F.col(value_col).cast("decimal(18,4)")
     vc = base.groupBy(x.alias("__v")).agg(F.count(F.lit(1)).alias("__c"))
     mm = vc.agg(
@@ -1458,8 +1315,6 @@ def _gini_ungrouped(
             (F.col("__v") * run_rank_sum).cast("decimal(38,4)")
         ).alias("__s1"),
     )
-    from gcp_data_pipeline_fyp_spark.queries_util import micro6
-
     nn = F.col("n").cast("double")
     g = (
         2.0 * F.col("__s1").cast("double") / (nn * F.col("__s0").cast("double"))

@@ -12,6 +12,7 @@ functions/text.py); the key is bucketed into [0, 10^6).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -455,11 +456,19 @@ def leakage_safe_split(
 
 
 # ------------------------------------------- distribution matching
+def _null_safe_on(pairs: Sequence[tuple[str, str]]) -> Column:
+    """AND of null-safe equalities — a NULL key is a real slice."""
+    return reduce(
+        lambda a, b: a & b, [F.col(x).eqNullSafe(F.col(y)) for x, y in pairs]
+    )
+
+
 def distribution_match_rates(
     df: DataFrame,
     bucket_col: str,
     reference: DataFrame,
     ref_bucket_col: str | None = None,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Per-bucket keep rates that reshape `df`'s bucket distribution to
     `reference`'s — "make the kept corpus's length / quality / domain
@@ -482,161 +491,39 @@ def distribution_match_rates(
     — NOT floor(a/b) over decimal division, whose 6-dp rounding can
     lift 3.9999999 to 4.0 before the floor.
 
-    Returns (bucket, n_src, n_ref, rate_micro). Two group-sized
-    aggregations + a one-row argmin; nothing corpus-sized shuffles.
-    The argmin tie-breaks on the smallest bucket value (engine-stable:
-    the ratio is the same IEEE double on both engines).
+    With `group_cols`, every group (language, source) matches its own
+    reference slice, with its own argmin — matching the GLOBAL length
+    profile lets an over-long language hide inside an under-long one.
+    Groups absent from the reference rate 0 everywhere.
+
+    Returns (group_cols..., bucket, n_src, n_ref, rate_micro). The
+    aggregations are (|groups| x |buckets|)-sized and the argmin table
+    is |groups| rows (one row ungrouped), broadcast; nothing
+    corpus-sized shuffles. NULL group keys and NULL buckets are real
+    slices on BOTH sides (null-safe joins; a plain equi-join would
+    zero-rate every NULL-bucket row even when the reference holds
+    them). The argmin tie-breaks on the smallest NON-NULL bucket
+    value (engine-stable: the ratio is the same IEEE double on both
+    engines); the NULL bucket wins a tie only against nothing — it
+    sorts last, matching SQL's default NULLS LAST (the explicit
+    isNull discriminator pins this, since bare struct ordering would
+    sort the NULL field FIRST in Spark and diverge from the oracle).
     """
-    rb = ref_bucket_col or bucket_col
-    src = df.groupBy(F.col(bucket_col).alias("bucket")).agg(
+    g = list(group_cols)
+    src = df.groupBy(*g, F.col(bucket_col).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_src")
     )
-    ref = reference.groupBy(F.col(rb).alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_ref")
-    )
-    return match_rates_from_counts(src, ref)
-
-
-def match_rates_from_counts(src: DataFrame, ref: DataFrame) -> DataFrame:
-    """`distribution_match_rates` from PRE-AGGREGATED counts: `src` is
-    (bucket, n_src), `ref` is (bucket, n_ref) — the mergeable-state
-    entry point (a persisted per-bucket count state can fold through
-    this per delivery). Same exact integer algebra, NULL-bucket
-    handling, and argmin tie-break contract as the frame-level form,
-    which delegates here.
-    """
-    ref = ref.select(F.col("bucket").alias("__rb"), "n_ref")
-    # null-safe: a NULL bucket is a real slice on BOTH sides (the
-    # adaptive-filter convention; a plain equi-join would zero-rate
-    # every NULL-bucket row even when the reference holds them).
-    # Tie-break contract (tested: test_sampling NULL-tie case): equal
-    # double ratios resolve to the smallest NON-NULL bucket; the NULL
-    # bucket wins a tie only against nothing (it sorts last, matching
-    # SQL's default NULLS LAST — the explicit isNull discriminator
-    # below pins this, since bare struct ordering would sort the NULL
-    # field FIRST in Spark and diverge from the oracle).
-    both = src.join(
-        ref, F.col("bucket").eqNullSafe(F.col("__rb")), "left"
-    ).drop("__rb")
-    present = both.filter(F.col("n_ref").isNotNull() & (F.col("n_ref") > 0))
-    argmin = present.agg(
-        F.min_by(
-            F.struct(
-                F.col("n_src").alias("s_m"), F.col("n_ref").alias("r_m")
-            ),
-            F.struct(
-                (F.col("n_src").cast("double") / F.col("n_ref").cast("double")).alias(
-                    "ratio"
-                ),
-                F.col("bucket").isNull().alias("bnull"),
-                F.col("bucket"),
-            ),
-        ).alias("__m")
-    ).select(F.col("__m.s_m").alias("__s_m"), F.col("__m.r_m").alias("__r_m"))
-    # decimal(14,0) factors keep every product inside precision 38, so
-    # nothing rounds; `div` is the exact integral quotient (= SQL //)
-    d14 = "decimal(14,0)"
-    with_m = (
-        both.crossJoin(
-            F.broadcast(
-                argmin.select(
-                    F.col("__s_m").alias("n_src_m"),
-                    F.col("__r_m").alias("n_ref_m"),
-                )
-            )
-        )
-        .withColumn(
-            "__num",
-            F.lit(1_000_000).cast("decimal(7,0)")
-            * F.col("n_src_m").cast(d14)
-            * F.col("n_ref").cast(d14),
-        )
-        .withColumn(
-            "__den", F.col("n_ref_m").cast(d14) * F.col("n_src").cast(d14)
-        )
-    )
-    rate = F.expr("__num div __den")
-    return with_m.select(
-        "bucket",
-        "n_src",
-        F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-        F.when(F.col("n_ref").isNull() | (F.col("n_ref") <= 0), F.lit(0))
-        .otherwise(F.least(F.lit(1_000_000).cast("long"), rate))
-        .alias("rate_micro"),
-    )
-
-
-def distribution_match_sample(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    bucket_col: str,
-    reference: DataFrame,
-    ref_bucket_col: str | None = None,
-    seed: int = 0,
-) -> DataFrame:
-    """The largest content-keyed subsample of `df` whose `bucket_col`
-    distribution is proportional to `reference`'s — rates from
-    `distribution_match_rates`, membership by the module's standard
-    hash_bucket(key, seed) < rate_micro rule (reproducible on any
-    engine/partitioning; nested in the rate). The rate table is
-    |buckets| rows — broadcast join, one corpus scan, no corpus
-    shuffle. NULL buckets are a real slice (null-safe join), matching
-    the adaptive-filter convention."""
-    rates = distribution_match_rates(df, bucket_col, reference, ref_bucket_col)
-    r = F.broadcast(
-        rates.select(F.col("bucket").alias("__mb"), "rate_micro")
-    )
-    joined = df.join(r, F.col(bucket_col).eqNullSafe(F.col("__mb")), "inner")
-    return (
-        joined.filter(hash_bucket(key_cols, seed) < F.col("rate_micro"))
-        .drop("__mb", "rate_micro")
-    )
-
-
-def distribution_match_rates_by_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    bucket_col: str,
-    reference: DataFrame,
-    ref_bucket_col: str | None = None,
-) -> DataFrame:
-    """Per-GROUP distribution matching: every group (language, source)
-    matches its own reference slice independently — the shape a
-    multilingual reshaping job actually needs (matching the GLOBAL
-    length profile lets an over-long language hide inside an
-    under-long one; per-group, each slice is reshaped against its own
-    target). Same exact-integer rate algebra as
-    `distribution_match_rates`, with the argmin (the scarcest
-    reference-relative bucket, kept whole) computed PER GROUP.
-
-    Returns (group_cols..., bucket, n_src, n_ref, rate_micro).
-    Aggregations are (|groups| x |buckets|)-sized; the argmin table is
-    |groups| rows and broadcasts. Groups absent from the reference
-    rate 0 everywhere (dropped — same contract as ref-absent buckets).
-    NULL group keys and NULL buckets are real slices (null-safe
-    joins throughout).
-    """
-    if not group_cols:
-        raise ValueError(
-            "group_cols must be non-empty; use distribution_match_rates"
-        )
-    rb = ref_bucket_col or bucket_col
-    g = list(group_cols)
-    src = df.groupBy(
-        *[F.col(c) for c in g], F.col(bucket_col).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n_src"))
     ref = reference.groupBy(
-        *[F.col(c).alias(f"__rg_{c}") for c in g], F.col(rb).alias("__rb")
+        *[F.col(c).alias(f"__r_{c}") for c in g],
+        F.col(ref_bucket_col or bucket_col).alias("__r_bucket"),
     ).agg(F.count(F.lit(1)).alias("n_ref"))
-    cond = F.col("bucket").eqNullSafe(F.col("__rb"))
-    for c in g:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__rg_{c}"))
-    both = src.join(ref, cond, "left").drop(
-        "__rb", *[f"__rg_{c}" for c in g]
-    )
-    present = both.filter(F.col("n_ref").isNotNull() & (F.col("n_ref") > 0))
+    keys = [*g, "bucket"]
+    both = src.join(
+        ref, _null_safe_on([(c, f"__r_{c}") for c in keys]), "left"
+    ).drop(*[f"__r_{c}" for c in keys])
     argmin = (
-        present.groupBy(*g)
+        both.filter(F.col("n_ref") > 0)
+        .groupBy(*g)
         .agg(
             F.min_by(
                 F.struct(
@@ -653,18 +540,21 @@ def distribution_match_rates_by_group(
             ).alias("__m")
         )
         .select(
-            *[F.col(c).alias(f"__mg_{c}") for c in g],
+            *[F.col(c).alias(f"__m_{c}") for c in g],
             F.col("__m.s_m").alias("n_src_m"),
             F.col("__m.r_m").alias("n_ref_m"),
         )
     )
-    mcond = None
-    for c in g:
-        term = F.col(c).eqNullSafe(F.col(f"__mg_{c}"))
-        mcond = term if mcond is None else mcond & term
+    m = F.broadcast(argmin)
+    # decimal(14,0) factors keep every product inside precision 38, so
+    # nothing rounds; `div` is the exact integral quotient (= SQL //)
     d14 = "decimal(14,0)"
     with_m = (
-        both.join(F.broadcast(argmin), mcond, "left")
+        (
+            both.join(m, _null_safe_on([(c, f"__m_{c}") for c in g]), "left")
+            if g
+            else both.crossJoin(m)
+        )
         .withColumn(
             "__num",
             F.lit(1_000_000).cast("decimal(7,0)")
@@ -677,8 +567,7 @@ def distribution_match_rates_by_group(
     )
     rate = F.expr("__num div __den")
     return with_m.select(
-        *g,
-        "bucket",
+        *keys,
         "n_src",
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
         F.when(
@@ -692,37 +581,41 @@ def distribution_match_rates_by_group(
     )
 
 
-def distribution_match_sample_by_group(
+def distribution_match_sample(
     df: DataFrame,
     key_cols: Sequence[str],
-    group_cols: Sequence[str],
     bucket_col: str,
     reference: DataFrame,
     ref_bucket_col: str | None = None,
     seed: int = 0,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group largest proportional subsample — rates from
-    `distribution_match_rates_by_group`, membership by the module's
-    hash rule. The rate table is (|groups| x |buckets|) rows —
-    broadcast join, one corpus scan, no corpus shuffle."""
-    rates = distribution_match_rates_by_group(
-        df, group_cols, bucket_col, reference, ref_bucket_col
-    )
+    """The largest content-keyed subsample of `df` whose `bucket_col`
+    distribution is proportional to `reference`'s (per group with
+    `group_cols`) — rates from `distribution_match_rates`, membership
+    by the module's standard hash_bucket(key, seed) < rate_micro rule
+    (reproducible on any engine/partitioning; nested in the rate). The
+    rate table is (|groups| x |buckets|) rows — broadcast join, one
+    corpus scan, no corpus shuffle."""
     g = list(group_cols)
+    rates = distribution_match_rates(
+        df, bucket_col, reference, ref_bucket_col, g
+    )
     r = F.broadcast(
         rates.select(
-            *[F.col(c).alias(f"__mg_{c}") for c in g],
-            F.col("bucket").alias("__mb"),
+            *[F.col(c).alias(f"__m_{c}") for c in g],
+            F.col("bucket").alias("__m_bucket"),
             "rate_micro",
         )
     )
-    cond = F.col(bucket_col).eqNullSafe(F.col("__mb"))
-    for c in g:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__mg_{c}"))
-    joined = df.join(r, cond, "inner")
-    return joined.filter(
-        hash_bucket(key_cols, seed) < F.col("rate_micro")
-    ).drop("__mb", "rate_micro", *[f"__mg_{c}" for c in g])
+    on = _null_safe_on(
+        [(bucket_col, "__m_bucket"), *[(c, f"__m_{c}") for c in g]]
+    )
+    return (
+        df.join(r, on, "inner")
+        .filter(hash_bucket(key_cols, seed) < F.col("rate_micro"))
+        .drop(*r.columns)
+    )
 
 
 # ------------------------------------------- UniMax budget allocation

@@ -4859,14 +4859,14 @@ TEXT_QUERIES["length_match_sample"] = (
 
 def q_length_match_by_lang(spark: SparkSession, sf: str) -> DataFrame:
     """Per-GROUP distribution matching (operators/sampling.py:
-    distribution_match_rates_by_group/_sample_by_group): each language
+    distribution_match_rates/_sample with group_cols): each language
     reshapes its length-bucket profile against its OWN slice of the
     skewed reference — the multilingual form of length_match_sample,
     with the argmin bucket computed per language. Emits the per-
     (lang, bucket) rate table plus kept counts."""
     from gcp_data_pipeline_fyp_spark.operators.sampling import (
-        distribution_match_rates_by_group,
-        distribution_match_sample_by_group,
+        distribution_match_rates,
+        distribution_match_sample,
     )
 
     d = _docs(spark, sf).filter(F.col("n_chars").isNotNull())
@@ -4874,9 +4874,9 @@ def q_length_match_by_lang(spark: SparkSession, sf: str) -> DataFrame:
     ref = d.filter(
         (F.col("doc_id") % 7 < 3) & (F.col("n_chars") >= 300)
     ).withColumn("bucket", F.floor(F.col("n_chars") / 200))
-    rates = distribution_match_rates_by_group(src, ["lang"], "bucket", ref)
-    kept = distribution_match_sample_by_group(
-        src, ["doc_id"], ["lang"], "bucket", ref, seed=9
+    rates = distribution_match_rates(src, "bucket", ref, group_cols=["lang"])
+    kept = distribution_match_sample(
+        src, ["doc_id"], "bucket", ref, seed=9, group_cols=["lang"]
     )
     kc = kept.groupBy("lang", "bucket").agg(F.count(F.lit(1)).alias("kept"))
     return (

@@ -334,15 +334,13 @@ def stream_validated_ingest(
         clean = batch
         if violated is not None:
             if quarantine_table is not None and not appended(quarantine_table):
-                # rebalance: dead-letter appends are a (usually tiny)
-                # filtered slice of the batch — without the clamp each
-                # append lands one file PER PARTITION of the batch
-                # (cores-sized), decaying the quarantine into
-                # core-count x batches files
+                # each append writes one file per partition of the
+                # batch, however few rows it quarantines: the
+                # foreachBatch session runs with AQE off, so a
+                # REBALANCE hint here would be dropped unrecognized
                 wh.append(
                     batch.filter(violated)
-                    .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                    .hint("rebalance"),
+                    .withColumn("batch_id", F.lit(batch_id).cast("long")),
                     quarantine_table,
                 )
             clean = batch.filter(~violated)
@@ -438,7 +436,6 @@ def stream_drift_monitor(
             profile,
             wh.read(state_table).select(*group_cols, "bin", "cur_cnt"),
             group_cols,
-            n_bins,
         ).withColumn("batch_id", F.lit(batch_id))
         wh.append(report, report_table)
 

@@ -2088,12 +2088,127 @@ def test_psi_profile_pipeline_equals_psi_report(spark):
     )
     prof = fit_psi_profile(base, "v", ["g"], 10)
     got = psi_from_profile(
-        prof, bin_against_profile(cur, prof, "v", ["g"], 10), ["g"], 10
+        prof, bin_against_profile(cur, prof, "v", ["g"], 10), ["g"]
     ).collect()
     want = psi_report(base, cur, "v", ["g"], 10).collect()
     key = lambda r: (r["g"], r["n_base"], r["n_cur"], r["psi_micro"])
     assert sorted(map(key, got)) == sorted(map(key, want))
     assert [r["g"] for r in got] == ["a"]  # 'b' has no current rows
+
+
+def test_drift_reports_only_groups_in_both_snapshots(spark):
+    """A group seen in one snapshot only is not reported by any drift
+    monitor — a base-only group has no current distribution and a
+    current-only group has no base one, and exact KS must not divide by
+    the missing side's zero total."""
+    from gcp_data_pipeline_fyp_spark.operators.profile import (
+        ks_binned_report,
+        ks_report,
+        psi_categorical,
+        psi_report,
+    )
+
+    base = spark.createDataFrame(
+        [("a", float(i % 9)) for i in range(90)]
+        + [("b", float(i % 5)) for i in range(50)],
+        "g string, v double",
+    )
+    cur = spark.createDataFrame(
+        [("a", float(2 + i % 9)) for i in range(60)]
+        + [("c", float(i % 4)) for i in range(40)],
+        "g string, v double",
+    )
+    for report in (
+        ks_report(base, cur, "v", ["g"]),
+        ks_binned_report(base, cur, "v", ["g"], n_bins=10),
+        psi_report(base, cur, "v", ["g"]),
+        psi_categorical(base, cur, "v", ["g"]),
+    ):
+        rows = report.collect()
+        assert [(r["g"], r["n_base"], r["n_cur"]) for r in rows] == [
+            ("a", 90, 60)
+        ]
+    ks = ks_report(base, cur, "v", ["g"]).collect()[0]["ks_micro"]
+    assert 0 < ks <= 1_000_000
+
+
+def test_drift_reports_no_null_group_key(spark):
+    """A NULL group key with rows in both snapshots is reported by no
+    drift monitor and leaves no row in a fitted profile: a NULL key
+    matches no equi-join, so its base and current counts never pool
+    (pooled anyway, categorical PSI would count each category twice,
+    and exact KS would read identical distributions as drifted)."""
+    from gcp_data_pipeline_fyp_spark.operators.profile import (
+        bin_against_profile,
+        fit_psi_profile,
+        ks_binned_report,
+        ks_report,
+        psi_categorical,
+        psi_from_joint_counts,
+        psi_from_profile,
+        psi_report,
+    )
+
+    base = spark.createDataFrame(
+        [("a", float(i % 9)) for i in range(90)]
+        + [(None, float(i % 5)) for i in range(50)],
+        "g string, v double",
+    )
+    cur = spark.createDataFrame(
+        [("a", float(2 + i % 9)) for i in range(60)]
+        + [(None, float(i % 5)) for i in range(40)],
+        "g string, v double",
+    )
+    prof = fit_psi_profile(base, "v", ["g"], 10)
+    assert prof.columns == ["g", "bin", "lo", "hi", "base_cnt"]
+    assert prof.filter(F.col("g").isNull()).count() == 0
+    pooled = spark.createDataFrame(
+        [("a", "x", 3, 1), ("a", "y", 1, 3), (None, "x", 2, 2), (None, "y", 2, 1)],
+        "g string, c string, __cb long, __cc long",
+    )
+    for report in (
+        ks_report(base, cur, "v", ["g"]),
+        ks_binned_report(base, cur, "v", ["g"], n_bins=10),
+        psi_report(base, cur, "v", ["g"]),
+        psi_categorical(base, cur, "v", ["g"]),
+        psi_from_profile(prof, bin_against_profile(cur, prof, "v", ["g"]), ["g"]),
+        psi_from_joint_counts(pooled, ["g"]),
+    ):
+        assert [r["g"] for r in report.collect()] == ["a"]
+
+
+def test_psi_ungrouped_equals_constant_group(spark):
+    """psi_report and the profile route (fit -> bin -> psi_from_profile)
+    without group columns equal the same calls grouped by a constant
+    column, with that column dropped."""
+    from gcp_data_pipeline_fyp_spark.operators.profile import (
+        bin_against_profile,
+        fit_psi_profile,
+        psi_from_profile,
+        psi_report,
+    )
+
+    base = spark.createDataFrame(
+        [(float(i % 23),) for i in range(230)] + [(None,)], "v double"
+    )
+    cur = spark.createDataFrame(
+        [(5.0 + i % 31,) for i in range(155)] + [(None,)], "v double"
+    )
+
+    def routes(b, c, gcols):
+        prof = fit_psi_profile(b, "v", gcols, 8)
+        cur_counts = bin_against_profile(c, prof, "v", gcols, 8)
+        return (
+            psi_report(b, c, "v", gcols, 8),
+            psi_from_profile(prof, cur_counts, gcols),
+        )
+
+    k = F.lit("all").alias("k")
+    grouped = routes(base.select(k, "v"), cur.select(k, "v"), ["k"])
+    for got, want in zip(routes(base, cur, []), grouped):
+        assert got.columns == want.columns[1:]
+        assert got.collect() == want.drop("k").collect()
+    assert routes(base, cur, [])[0].collect()[0]["psi_micro"] > 0
 
 
 def test_ab_test_known_z_and_degenerate_arms(spark):
@@ -3495,8 +3610,8 @@ def test_distribution_match_by_group_independent_slices(spark):
     everything, a group absent from the reference drops everything,
     and a skewed group reshapes independently."""
     from gcp_data_pipeline_fyp_spark.operators.sampling import (
-        distribution_match_rates_by_group,
-        distribution_match_sample_by_group,
+        distribution_match_rates,
+        distribution_match_sample,
     )
 
     src = spark.createDataFrame(
@@ -3516,8 +3631,8 @@ def test_distribution_match_by_group_independent_slices(spark):
     )
     rates = {
         (r["g"], r["bucket"]): r["rate_micro"]
-        for r in distribution_match_rates_by_group(
-            src, ["g"], "bucket", ref
+        for r in distribution_match_rates(
+            src, "bucket", ref, group_cols=["g"]
         ).collect()
     }
     # en: scarcest bucket is 1 (100 src / 50 ref); bucket 0 keeps
@@ -3528,8 +3643,8 @@ def test_distribution_match_by_group_independent_slices(spark):
     assert rates[("de", 0)] == rates[("de", 1)] == 1_000_000
     # xx absent from reference: dropped
     assert rates[("xx", 0)] == 0
-    kept = distribution_match_sample_by_group(
-        src, ["doc_id"], ["g"], "bucket", ref, seed=4
+    kept = distribution_match_sample(
+        src, ["doc_id"], "bucket", ref, seed=4, group_cols=["g"]
     )
     from collections import Counter
 
@@ -3538,6 +3653,53 @@ def test_distribution_match_by_group_independent_slices(spark):
     assert got.get(("xx", 0), 0) == 0
     assert got[("en", 1)] == 100
     assert abs(got[("en", 0)] - 100) <= 30  # 300 * 1/3, md5-rule noise
+
+
+def test_distribution_match_ungrouped_equals_constant_group(spark):
+    """distribution_match_rates and _sample without group columns equal
+    the same calls grouped by a constant column, on input with a NULL
+    bucket, a bucket missing from the reference and an exact ratio
+    tie (buckets 1 and 5 at 2.0)."""
+    from gcp_data_pipeline_fyp_spark.operators.sampling import (
+        distribution_match_rates,
+        distribution_match_sample,
+    )
+
+    src = spark.createDataFrame(
+        [(i, None) for i in range(60)]
+        + [(100 + i, 1) for i in range(80)]
+        + [(200 + i, 5) for i in range(40)]
+        + [(300 + i, 9) for i in range(30)],
+        "doc_id long, bucket long",
+    )
+    ref = spark.createDataFrame(
+        [(i, None) for i in range(15)]
+        + [(100 + i, 1) for i in range(40)]
+        + [(200 + i, 5) for i in range(20)]
+        + [(300 + i, 7) for i in range(10)],
+        "rid long, bucket long",
+    )
+    k = F.lit("all").alias("k")
+    src_k, ref_k = src.select(k, "*"), ref.select(k, "*")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    rates = distribution_match_rates(src, "bucket", ref)
+    want = distribution_match_rates(src_k, "bucket", ref_k, group_cols=["k"])
+    assert rates.columns == want.columns[1:]
+    assert rows(rates) == rows(want.drop("k"))
+    by_bucket = {r["bucket"]: r["rate_micro"] for r in rates.collect()}
+    assert by_bucket[9] == 0 and by_bucket[1] == by_bucket[5] == 1_000_000
+    assert 0 < by_bucket[None] < 1_000_000
+
+    kept = distribution_match_sample(src, ["doc_id"], "bucket", ref, seed=3)
+    want = distribution_match_sample(
+        src_k, ["doc_id"], "bucket", ref_k, seed=3, group_cols=["k"]
+    )
+    assert kept.columns == want.columns[1:]
+    assert rows(kept) == rows(want.drop("k"))
+    assert 0 < kept.count() < src.count()
 
 
 def test_semdedup_matches_naive_and_drops_exact_dups(spark):

@@ -593,3 +593,25 @@ def test_calibration_leg_plan_pinned(spark, leg):
         "R01_CALIBRATION pin must be re-based in the same session "
         "(BASELINE.md) before this histogram is updated"
     )
+
+
+# The drift family (operators/profile.py) and the distribution-matching
+# samplers (operators/sampling.py) share one binning step, one PSI
+# algebra, one KS core and one rate algebra; a change to any of them
+# moves several of these probes' plans at once. Same signature as
+# above (operator-type histogram of the formatted plan at sf0.001), so
+# a plan regression in the family fails here without any timing.
+DRIFT_PLAN_PINS = {
+    "ivf_retrain_decision": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 2, "BroadcastNestedLoopJoin": 2, "Exchange": 9, "Filter": 4, "HashAggregate": 6, "ObjectHashAggregate": 4, "Project": 9, "Scan": 4, "Sort": 3, "SortMergeJoin": 1, "Window": 1},
+    "ks_binned_drift": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 2, "BroadcastNestedLoopJoin": 2, "Exchange": 5, "Filter": 5, "HashAggregate": 10, "Project": 10, "Scan": 4, "Sort": 3, "SortMergeJoin": 1, "Window": 2},
+    "ks_drift_report": {"AdaptiveSparkPlan": 1, "Exchange": 6, "Filter": 4, "HashAggregate": 6, "Project": 6, "Scan": 2, "Sort": 4, "SortMergeJoin": 1, "Window": 2},
+    "lang_mix_drift": {"AdaptiveSparkPlan": 1, "Exchange": 4, "Filter": 4, "HashAggregate": 6, "Project": 4, "Scan": 2, "Sort": 4, "SortMergeJoin": 1, "Window": 1},
+    "length_match_by_lang": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 7, "BroadcastHashJoin": 7, "Exchange": 21, "Filter": 11, "HashAggregate": 18, "Project": 23, "Scan": 9, "Sort": 7, "SortAggregate": 4, "SortMergeJoin": 1},
+    "length_match_sample": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 7, "BroadcastHashJoin": 5, "BroadcastNestedLoopJoin": 2, "Exchange": 21, "Filter": 11, "HashAggregate": 18, "Project": 23, "Scan": 9, "Sort": 3, "SortAggregate": 4, "SortMergeJoin": 1},
+    "psi_drift_report": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 4, "BroadcastHashJoin": 4, "Exchange": 6, "Filter": 6, "Generate": 1, "HashAggregate": 12, "Project": 10, "Scan": 5, "Sort": 2, "Window": 1},
+}
+
+
+@pytest.mark.parametrize("probe", sorted(DRIFT_PLAN_PINS))
+def test_drift_probe_plan_pinned(spark, probe):
+    assert _plan_signature(spark, probe) == DRIFT_PLAN_PINS[probe]
