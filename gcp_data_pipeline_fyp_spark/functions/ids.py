@@ -20,8 +20,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def h60(col: Column) -> Column:
+    """60-bit md5 hash of a string column:
+    cast(conv(substr(md5(col),1,15),16,10) as long)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def stable_event_id(*key_cols: Column | str) -> Column:
-    """60-bit deterministic id: cast(conv(substr(md5(k1_k2_...),1,15),16,10) as long)."""
+    """60-bit deterministic id: h60 of the '_'-joined key columns."""
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    joined = F.concat_ws("_", *[c.cast("string") for c in cols])
-    return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+    return h60(F.concat_ws("_", *[c.cast("string") for c in cols]))

@@ -47,9 +47,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.functions.ids import h60
 from gcp_data_pipeline_fyp_spark.functions.text import (
     _coalesce_toks,
     tokens,
+)
+from gcp_data_pipeline_fyp_spark.operators.prefix import (
+    BUCKET,
+    PREFIX,
+    prefix_sum,
+    range_bucket,
 )
 from gcp_data_pipeline_fyp_spark.operators.sampling import _key_token
 from gcp_data_pipeline_fyp_spark.queries_util import roundn
@@ -288,8 +295,7 @@ def gumbel_key(
     # the SAME length-prefixed encoding + h60 chain weighted_sample_wor
     # owns (operators/sampling.py) — imported, not duplicated, so the
     # cross-operator determinism/nesting guarantees share one source
-    joined = F.concat(F.lit(f"{seed}|"), *[_key_token(c) for c in id_cols])
-    h = F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+    h = h60(F.concat(F.lit(f"{seed}|"), *[_key_token(c) for c in id_cols]))
     u = F.least(
         (h + F.lit(1.0)) / F.lit(1152921504606846977.0),
         F.lit(0.9999999999999999),  # 1 - 2^-53
@@ -341,7 +347,6 @@ def dsir_budget_select(
     budget: int,
     logw_col: str = "logw",
     seed: int = 0,
-    n_buckets: int = DEFAULT_BUCKETS,
     out_col: str = "cum_weight",
 ) -> DataFrame:
     """Budget-constrained DSIR selection: keep the Gumbel-top PREFIX
@@ -354,23 +359,17 @@ def dsir_budget_select(
     budget only appends rows, because the order is a pure function of
     (seed, logw, id).
 
-    No global sort (the textbook trap — a global running sum over the
-    corpus is one reducer holding everything): the Gumbel key is
-    range-bucketed between its exact min/max (`roc_auc`'s two-level
-    discipline — deterministic, unlike sampled quantiles), the
-    running sum is intra-bucket (parallel per bucket) plus the
-    bucket's offset from an n_buckets-row prefix table (the only
-    single-partition window, bounded by n_buckets regardless of
-    corpus size). Bucketing is order-preserving on the key, so the
-    result equals the naive global window exactly (differential-
-    tested).
+    No global sort: the running sum is a distributed prefix sum
+    (operators/prefix.py) over a DESCENDING range bucket of the
+    Gumbel key, so it equals the naive global window exactly
+    (differential-tested).
 
     NULL/negative weights count 0 toward the budget but remain
     selectable (a doc with no token count should not silently vanish
     from the sample; filter upstream if it should). Returns the
     input columns + inclusive `out_col`.
     """
-    clash = ({out_col, "__gk", "__gh", "__w", "__b"} & set(weights.columns))
+    clash = {out_col, "__gk", "__gh", "__w", BUCKET} & set(weights.columns)
     if clash:
         raise ValueError(
             f"dsir_budget_select: column(s) {sorted(clash)} already exist "
@@ -387,51 +386,12 @@ def dsir_budget_select(
         h.alias("__gh"),
         wgt.alias("__w"),
     )
-    mm = keyed.agg(
-        F.min("__gk").alias("__kmin"), F.max("__gk").alias("__kmax")
-    )
-    span = F.col("__kmax") - F.col("__kmin")
-    # DESC range bucket: the highest key lands in bucket 0
-    bucket = (
-        F.when(
-            span > 0,
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor(
-                    (F.col("__kmax") - F.col("__gk")) / span * n_buckets
-                ),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    bucketed = keyed.crossJoin(F.broadcast(mm)).select(
-        *keyed.columns, bucket.alias("__b")
-    )
-    from pyspark.sql import Window
-
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy(
-            F.col("__gk").desc(), F.col("__gh").asc(), F.col(id_col).asc()
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    intra = F.sum("__w").over(w_intra)  # inclusive
-    totals = bucketed.groupBy("__b").agg(F.sum("__w").alias("__bt"))
-    w_bucket = Window.orderBy(F.col("__b").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
-    )
-    out_cols = weights.columns
+    order = [F.col("__gk").desc(), F.col("__gh").asc(), F.col(id_col).asc()]
     return (
-        bucketed.join(F.broadcast(offsets), "__b")
-        .select(
-            *out_cols, (F.col("__off") + intra).alias(out_col)
+        prefix_sum(
+            range_bucket(keyed, "__gk", descending=True), BUCKET, order, "__w"
         )
+        .select(*weights.columns, F.col(PREFIX).alias(out_col))
         .filter(F.col(out_col) <= F.lit(int(budget)))
     )
 

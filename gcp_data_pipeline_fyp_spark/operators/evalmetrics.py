@@ -11,12 +11,11 @@ scores are worth filtering on, and whether "0.9" means 90%).
   anywhere: scores collapse to DISTINCT values first (per tie run of
   c rows after C smaller rows, the positives' rank contribution
   closes to p * (C + (c+1)/2), order-invariant), then the prefix
-  count C(v) comes from the same two-level range-bucket discipline as
-  the distributed ungrouped Gini (operators/profile.py:_gini_ungrouped):
-  intra-bucket cumulative counts parallel per bucket, a global window
-  only over the n_buckets-sized totals table. Everything until the
-  final division is exact integer arithmetic (2*S_pos is an integer:
-  p*(2C + c + 1)), so the micro6 emission is engine-independent.
+  count C(v) is a distributed prefix count over the distinct values
+  (operators/prefix.py, also behind the ungrouped Gini and the
+  midrank blend). Everything until the final division is exact
+  integer arithmetic (2*S_pos is an integer: p*(2C + c + 1)), so the
+  micro6 emission is engine-independent.
 
 - `calibration_report`: fixed-width score bins -> (bin, n, mean
   predicted score, observed positive rate) plus each bin's |gap| —
@@ -42,6 +41,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.operators.prefix import (
+    BUCKET,
+    PREFIX,
+    prefix_sum,
+    range_bucket,
+)
 from gcp_data_pipeline_fyp_spark.queries_util import micro6
 
 
@@ -72,7 +77,6 @@ def roc_auc(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """One-row (n_pos, n_neg, auc_micro) for a boolean/0-1 label.
 
@@ -97,48 +101,15 @@ def roc_auc(
         F.count(F.lit(1)).alias("__c"),
     )
 
-    # two-level prefix count of rows below each distinct value
-    mm = vc.agg(F.min("__v").alias("__vmin"), F.max("__v").alias("__vmax"))
-    span = F.col("__vmax") - F.col("__vmin")
-    bucket = (
-        F.when(
-            span > 0,
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor((F.col("__v") - F.col("__vmin")) / span * n_buckets),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
+    # rows below each distinct value: its running count minus its own
+    ranked = prefix_sum(
+        range_bucket(vc, "__v"), BUCKET, [F.col("__v").asc()], "__c"
     )
-    bucketed = vc.crossJoin(F.broadcast(mm)).select(
-        "__v", "__p", "__c", bucket.alias("__b")
-    )
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    intra = F.coalesce(F.sum("__c").over(w_intra), F.lit(0))
-    totals = bucketed.groupBy("__b").agg(F.sum("__c").alias("__bt"))
-    w_bucket = Window.orderBy(F.col("__b").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__b", F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off")
-    )
-    ranked = bucketed.join(F.broadcast(offsets), "__b").select(
-        "__p",
-        "__c",
-        (F.col("__off") + intra).cast("decimal(19,0)").alias("__cb"),
-    )
-
+    cb = (F.col(PREFIX) - F.col("__c")).cast("decimal(19,0)")
     agg = ranked.agg(
         F.sum("__p").alias("n_pos"),
         F.sum(F.col("__c") - F.col("__p")).alias("n_neg"),
-        F.sum(_two_s_pos(F.col("__p"), F.col("__c"), F.col("__cb"))).alias(
-            "__2sp"
-        ),
+        F.sum(_two_s_pos(F.col("__p"), F.col("__c"), cb)).alias("__2sp"),
     )
     return _finalize_auc(agg, [])
 
@@ -280,11 +251,36 @@ def threshold_sweep(
     )
 
 
+def _midrank_pcts(
+    vc: DataFrame, pcols: list[str], out_col: str
+) -> DataFrame:
+    """(pcols..., __v, out_col) from a (pcols..., __v, __c) count
+    table: the midrank CDF (2*C + c) / (2n) in micro units, with C the
+    running count below v (operators/prefix.py) and n the partition's
+    total — exact integers until the one micro6 division."""
+    n_tot = vc.groupBy(*pcols).agg(F.sum("__c").alias("__n"))
+    ranked = prefix_sum(
+        range_bucket(vc, "__v", pcols),
+        BUCKET,
+        [F.col("__v").asc()],
+        "__c",
+        pcols,
+    )
+    joined = (
+        ranked.join(F.broadcast(n_tot), pcols)
+        if pcols
+        else ranked.crossJoin(F.broadcast(n_tot))
+    )
+    # 2*C + c with C = running count - c
+    num = F.lit(2) * F.col(PREFIX) - F.col("__c")
+    pct = num.cast("double") / (F.lit(2) * F.col("__n")).cast("double")
+    return joined.select(*pcols, "__v", micro6(pct).alias(out_col))
+
+
 def midrank_normalize(
     df: DataFrame,
     score_col: str,
     out_col: str = "pct_micro",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """`df` + `out_col`: the midrank CDF of `score_col` in micro units
     — pct = (2*C(v) + c(v)) / (2n) = P(X < v) + P(X = v)/2, where
@@ -298,11 +294,11 @@ def midrank_normalize(
     the mean of this quantity over positives measured against the
     negatives-only distribution.
 
-    No global row sort: distinct-score collapse, then the two-level
-    range-bucket prefix count (`roc_auc`'s discipline) over the
-    distinct-value frame; rows get their pct back through a hash join
-    on the score VALUE (one corpus shuffle keyed by value — skew on
-    a heavy tie value is bounded by the join being value->1 row).
+    No global row sort: distinct-score collapse, then `_midrank_pcts`
+    over the distinct-value frame; rows get their pct back through a
+    hash join on the score VALUE (one corpus shuffle keyed by value —
+    skew on a heavy tie value is bounded by the join being value->1
+    row).
     Exact integers until the single micro6 division. NULL/NaN scores
     -> NULL pct (excluded from n, the roc_auc row universe).
     """
@@ -315,49 +311,7 @@ def midrank_normalize(
     valid = df.filter(F.col(score_col).isNotNull() & ~F.isnan(v))
     vc = valid.groupBy(v.alias("__v")).agg(F.count(F.lit(1)).alias("__c"))
 
-    mm = vc.agg(F.min("__v").alias("__vmin"), F.max("__v").alias("__vmax"))
-    span = F.col("__vmax") - F.col("__vmin")
-    bucket = (
-        F.when(
-            span > 0,
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor((F.col("__v") - F.col("__vmin")) / span * n_buckets),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    bucketed = vc.crossJoin(F.broadcast(mm)).select(
-        "__v", "__c", bucket.alias("__b")
-    )
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    intra = F.coalesce(F.sum("__c").over(w_intra), F.lit(0))
-    totals = bucketed.groupBy("__b").agg(F.sum("__c").alias("__bt"))
-    w_bucket = Window.orderBy(F.col("__b").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__b", F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off")
-    )
-    n_tot = vc.agg(F.sum("__c").alias("__n"))
-    ranked = (
-        bucketed.join(F.broadcast(offsets), "__b")
-        .crossJoin(F.broadcast(n_tot))
-        .select(
-            "__v",
-            micro6(
-                (F.lit(2) * (F.col("__off") + intra) + F.col("__c")).cast(
-                    "double"
-                )
-                / (F.lit(2) * F.col("__n")).cast("double")
-            ).alias(out_col),
-        )
-    )
+    ranked = _midrank_pcts(vc, [], out_col)
     joined = df.join(ranked, v.eqNullSafe(F.col("__v")), "left")
     return joined.select(
         *[df[c] for c in df.columns],
@@ -385,7 +339,6 @@ def blend_scores(
     df: DataFrame,
     weights_micro: dict[str, int],
     out_col: str = "blend_micro",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Ensemble quality score: midrank-normalize each scorer column
     and emit their weighted mean (micro units) — the multi-classifier
@@ -405,10 +358,10 @@ def blend_scores(
        re-aggregate per (scorer, value) with multiplicity weights —
        exactly midrank_normalize's per-scorer (value, count) table,
        all N of them from the one scan;
-    3. grouped two-level bucket midrank (the roc_auc discipline,
-       windows PARTITIONED BY scorer — parallel across scorers,
-       never a global row sort), then the per-vector weighted blend,
-       still |vectors|-sized;
+    3. `_midrank_pcts` partitioned by scorer (the distributed prefix
+       count runs per scorer — parallel across scorers, never a
+       global row sort), then the per-vector weighted blend, still
+       |vectors|-sized;
     4. ONE corpus rejoin on the vector key (null-safe equality per
        column; Spark's NaN-equals-NaN join semantics make NaN rows
        land on their own vector).
@@ -452,57 +405,7 @@ def blend_scores(
         .agg(F.sum("__vn").alias("__c"))
     )
 
-    mm = vc.groupBy("__sc").agg(
-        F.min("__v").alias("__vmin"), F.max("__v").alias("__vmax")
-    )
-    span = F.col("__vmax") - F.col("__vmin")
-    bucket = (
-        F.when(
-            span > 0,
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor((F.col("__v") - F.col("__vmin")) / span * n_buckets),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    bucketed = vc.join(F.broadcast(mm), "__sc").select(
-        "__sc", "__v", "__c", bucket.alias("__b")
-    )
-    w_intra = (
-        Window.partitionBy("__sc", "__b")
-        .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    intra = F.coalesce(F.sum("__c").over(w_intra), F.lit(0))
-    totals = bucketed.groupBy("__sc", "__b").agg(F.sum("__c").alias("__bt"))
-    w_bucket = (
-        Window.partitionBy("__sc")
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__sc",
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
-    )
-    n_tot = vc.groupBy("__sc").agg(F.sum("__c").alias("__n"))
-    ranked = (
-        bucketed.join(F.broadcast(offsets), ["__sc", "__b"])
-        .join(F.broadcast(n_tot), "__sc")
-        .select(
-            "__sc",
-            "__v",
-            micro6(
-                (F.lit(2) * (F.col("__off") + intra) + F.col("__c")).cast(
-                    "double"
-                )
-                / (F.lit(2) * F.col("__n")).cast("double")
-            ).alias("__pct"),
-        )
-    )
-
+    ranked = _midrank_pcts(vc, ["__sc"], "__pct")
     pv = melted.join(
         ranked,
         (melted["__sc"] == ranked["__sc"]) & (melted["__v"] == ranked["__v"]),
@@ -545,7 +448,6 @@ def blend_scores_sequential(
     df: DataFrame,
     weights_micro: dict[str, int],
     out_col: str = "blend_micro",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Reference form of `blend_scores`: one midrank_normalize pass
     (distinct-collapse + corpus rejoin) PER scorer — N corpus scans.
@@ -556,7 +458,7 @@ def blend_scores_sequential(
     pct_cols = {}
     for i, col in enumerate(weights_micro):
         pc = f"__pct_{i}"
-        out = midrank_normalize(out, col, out_col=pc, n_buckets=n_buckets)
+        out = midrank_normalize(out, col, out_col=pc)
         pct_cols[col] = pc
     num = F.lit(0).cast("long")
     den = F.lit(0).cast("long")
@@ -611,10 +513,11 @@ def roc_auc_by_group(
     w = (
         Window.partitionBy(*group_cols)
         .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    # rows below each distinct value: its running count minus its own
     ranked = vc.withColumn(
-        "__cb", F.coalesce(F.sum("__c").over(w), F.lit(0)).cast("decimal(19,0)")
+        "__cb", (F.sum("__c").over(w) - F.col("__c")).cast("decimal(19,0)")
     )
     agg = ranked.groupBy(*group_cols).agg(
         F.sum("__p").alias("n_pos"),

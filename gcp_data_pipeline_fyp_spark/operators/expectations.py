@@ -308,11 +308,11 @@ def table_fingerprint(df, cols=None):
     """
     from pyspark.sql import functions as F
 
+    from gcp_data_pipeline_fyp_spark.functions.ids import h60
     from gcp_data_pipeline_fyp_spark.operators.sampling import _key_token
 
     use = list(cols) if cols is not None else list(df.columns)
-    joined = F.concat(*[_key_token(F.col(c)) for c in use])
-    h = F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+    h = h60(F.concat(*[_key_token(F.col(c)) for c in use]))
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(h.cast("decimal(38,0)")).cast("string").alias("checksum"),

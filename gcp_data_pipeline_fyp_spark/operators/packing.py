@@ -8,21 +8,13 @@ then the training example its first token lands in (documents may span
 pack boundaries — that is the concatenate-then-chunk semantics, the
 splitting itself happens at tokenization time).
 
-A global cumulative sum is the textbook scale trap: a single
-`Window.orderBy(id)` moves the whole corpus to ONE partition. This
-implementation is a two-level distributed prefix sum instead:
+The start offset is a global running sum, and the training orders
+below are global ranks: each is one `operators/prefix.py` distributed
+prefix sum, never a single-partition `Window.orderBy`.
 
-1. rows are bucketed by `id div bucket_span` (order-preserving);
-2. an intra-bucket cumulative sum runs partitioned by bucket — fully
-   parallel, no global shuffle to one node;
-3. per-bucket totals (one row per bucket) get a cumulative offset via
-   a window over the tiny bucket table — the only single-partition
-   step, sized corpus_rows / bucket_span (1B docs @ span 4096 ->
-   ~250k bucket rows);
-4. offsets broadcast-join back and add to the intra-bucket sums.
-
-Rows with NULL token counts keep NULL offsets (they contribute nothing
-to the stream) — coalesce counts to 0 upstream if they should pack.
+Rows with NULL token counts or NULL ids keep NULL offsets (they
+contribute nothing to the stream) — coalesce upstream if they should
+pack.
 """
 
 from __future__ import annotations
@@ -30,9 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_BUCKET = "__pack_bucket"
-_BTOTAL = "__pack_btotal"
-_BOFFSET = "__pack_boffset"
+from gcp_data_pipeline_fyp_spark.functions.ids import stable_event_id
+from gcp_data_pipeline_fyp_spark.operators.prefix import (
+    BUCKET,
+    HASH_SPAN,
+    PREFIX,
+    prefix_sum,
+)
 
 
 def pack_sequences(
@@ -46,36 +42,21 @@ def pack_sequences(
 
     Deterministic: the pack layout is a pure function of the
     (id, n_tokens) pairs — stable across partitioning, retries, and
-    engines, like everything else keyed in this package.
+    engines, like everything else keyed in this package. The prefix
+    bucket is `id div bucket_span`: order-preserving, and only as
+    balanced as the ids.
     """
+    # a NULL id rides in bucket 0 with a NULL count: the row stays,
+    # gets NULL offsets and shifts no other row
+    n = F.when(F.col(id_col).isNotNull(), F.col(n_tokens_col))
     # integral `div`, not float division + floor: exact for any int64 id
-    bucketed = df.withColumn(_BUCKET, F.expr(f"{id_col} div {bucket_span}"))
-    w_intra = (
-        Window.partitionBy(_BUCKET)
-        .orderBy(F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    bucket = F.coalesce(F.expr(f"{id_col} div {bucket_span}"), F.lit(0))
+    out = prefix_sum(
+        df.withColumn(BUCKET, bucket), BUCKET, [F.col(id_col).asc()], n
     )
-    # inclusive cumsum within the bucket; subtract the row's own count
-    # afterwards to get its start offset
-    intra = F.sum(F.col(n_tokens_col)).over(w_intra)
-    totals = bucketed.groupBy(_BUCKET).agg(F.sum(n_tokens_col).alias(_BTOTAL))
-    # tiny table (one row per bucket): the single-partition window is
-    # bounded by corpus_rows / bucket_span, not corpus_rows
-    w_bucket = (
-        Window.orderBy(F.col(_BUCKET).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        F.col(_BUCKET),
-        F.coalesce(F.sum(_BTOTAL).over(w_bucket), F.lit(0)).alias(_BOFFSET),
-    )
-    out = bucketed.join(F.broadcast(offsets), _BUCKET)
-    start = (F.col(_BOFFSET) + intra - F.col(n_tokens_col)).alias("start_offset")
-    return (
-        out.select("*", start)
-        .withColumn("pack_id", F.expr(f"start_offset div {max_tokens}"))
-        .drop(_BUCKET, _BOFFSET)
-    )
+    return out.select(
+        *df.columns, (F.col(PREFIX) - n).alias("start_offset")
+    ).withColumn("pack_id", F.expr(f"start_offset div {max_tokens}"))
 
 
 def length_bucketed_batches(
@@ -121,7 +102,6 @@ def epoch_shuffle_order(
     df: DataFrame,
     id_col: str,
     epoch: int,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Deterministic per-epoch global training order — every training
     run needs "shuffle the corpus differently each epoch, identically
@@ -129,56 +109,25 @@ def epoch_shuffle_order(
     onto 0..n-1): the row's rank under the keyed permutation
     md5(epoch || '_' || id), tie-broken by id.
 
-    A global `Window.orderBy(key)` is the same single-partition trap
-    pack_sequences documents; the rank here uses the same two-level
-    escape, with a twist that makes it UNCONDITIONALLY balanced: the
-    bucket is the hash key's high bits, and the key is uniform by
-    construction, so bucket occupancy is ~n/n_buckets REGARDLESS of
-    the id distribution (the id-div bucketing above is only as
-    balanced as the ids). Intra-bucket ranks run parallel per bucket;
-    only the n_buckets-sized totals table sees a window.
+    The rank is a distributed prefix count (operators/prefix.py) whose
+    bucket is the hash key's high bits. The key is uniform by
+    construction, so bucket occupancy is ~n/N_BUCKETS REGARDLESS of
+    the id distribution (pack_sequences' id-div bucketing is only as
+    balanced as the ids).
 
-    The key is the md5-60-bit engine standard (functions/ids.py), so
-    a DuckDB oracle replays the exact permutation; chain the output
-    into `pack_sequences` (ordered by global_pos) to get the epoch's
+    The key is `stable_event_id` (functions/ids.py), so a DuckDB
+    oracle replays the exact permutation; chain the output into
+    `pack_sequences` (ordered by global_pos) to get the epoch's
     packed layout.
     """
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "_", F.lit(int(epoch)), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    span = (1 << 60) // n_buckets
-    keyed = df.withColumn("__key", key).withColumn(
-        "__b", F.expr(f"__key div {span}")
+    keyed = df.withColumn(
+        "__key", stable_event_id(F.lit(int(epoch)), id_col)
+    ).withColumn(BUCKET, F.expr(f"__key div {HASH_SPAN}"))
+    ranked = prefix_sum(
+        keyed, BUCKET, [F.col("__key").asc(), F.col(id_col).asc()], F.lit(1)
     )
-    w_intra = Window.partitionBy("__b").orderBy(
-        F.col("__key").asc(), F.col(id_col).asc()
-    )
-    totals = keyed.groupBy("__b").agg(F.count(F.lit(1)).alias("__bt"))
-    w_bucket = (
-        Window.orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
-    )
-    return (
-        keyed.join(F.broadcast(offsets), "__b")
-        .withColumn(
-            "global_pos",
-            (F.col("__off") + F.row_number().over(w_intra) - 1).cast("long"),
-        )
-        .drop("__key", "__b", "__off")
+    return ranked.select(
+        *df.columns, (F.col(PREFIX) - 1).cast("long").alias("global_pos")
     )
 
 
@@ -188,7 +137,6 @@ def interleave_by_source(
     source_col: str,
     weights: dict[str, float],
     epoch: int = 0,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Mixture-preserving training order — stride scheduling over
     sources: within each source rows take a seeded random order
@@ -204,10 +152,10 @@ def interleave_by_source(
     Emits `rank_in_source` (dense 0-based within source) and
     `interleave_micro` (the stride key in integer micro-units — write
     shards ordered by it; ties share a micro grain only when strides
-    collide exactly, broken by id downstream). Ranks use the
-    uniform-hash-bucket two-level pattern partitioned by (source,
-    bucket): parallel within every source, only (sources·buckets)-
-    sized frames see windows — no per-source single-partition sort.
+    collide exactly, broken by id downstream). Ranks are
+    `epoch_shuffle_order`'s hash-bucket prefix count partitioned by
+    source: parallel within every source, no per-source
+    single-partition sort.
 
     Unknown sources (no weight entry) are dropped with the filter
     stated here: a silent weight default would skew the mixture.
@@ -226,53 +174,25 @@ def interleave_by_source(
     wmap = F.create_map(
         *[F.lit(x) for sw in src_w for x in sw]
     )
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "_",
-                    F.lit(int(epoch)),
-                    F.col(source_col).cast("string"),
-                    F.col(id_col).cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    span = (1 << 60) // n_buckets
     keyed = (
         df.filter(F.col(source_col).isin([s for s, _ in src_w]))
-        .withColumn("__key", key)
-        .withColumn("__b", F.expr(f"__key div {span}"))
+        .withColumn(
+            "__key", stable_event_id(F.lit(int(epoch)), source_col, id_col)
+        )
+        .withColumn(BUCKET, F.expr(f"__key div {HASH_SPAN}"))
     )
-    w_intra = Window.partitionBy(source_col, "__b").orderBy(
-        F.col("__key").asc(), F.col(id_col).asc()
-    )
-    totals = keyed.groupBy(source_col, "__b").agg(
-        F.count(F.lit(1)).alias("__bt")
-    )
-    w_bucket = (
-        Window.partitionBy(source_col)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        source_col,
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
-    )
-    ranked = keyed.join(F.broadcast(offsets), [source_col, "__b"]).withColumn(
-        "rank_in_source",
-        (F.col("__off") + F.row_number().over(w_intra) - 1).cast("long"),
-    )
+    ranked = prefix_sum(
+        keyed,
+        BUCKET,
+        [F.col("__key").asc(), F.col(id_col).asc()],
+        F.lit(1),
+        [source_col],
+    ).withColumn("rank_in_source", (F.col(PREFIX) - 1).cast("long"))
     stride = (F.col("rank_in_source").cast("double") + 0.5) / wmap[
         F.col(source_col)
     ]
     from gcp_data_pipeline_fyp_spark.queries_util import micro6
 
-    return ranked.withColumn(
-        "interleave_micro", micro6(stride)
-    ).drop("__key", "__b", "__off")
+    return ranked.select(
+        *df.columns, "rank_in_source", micro6(stride).alias("interleave_micro")
+    )

@@ -37,6 +37,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.operators.prefix import (
+    BUCKET,
+    PREFIX,
+    prefix_sum,
+    range_bucket,
+)
 from gcp_data_pipeline_fyp_spark.queries_util import micro6, roundn
 
 
@@ -1220,10 +1226,8 @@ def gini_coefficient(
     every value holder in one partition, so the ungrouped case
     routes to a distributed variant instead: tie-collapse to
     distinct values (Σi·x over a tied run is order-invariant, so it
-    closes to c_before·c + c(c+1)/2), then a two-level prefix count
-    (operators/packing.py discipline) — intra-bucket cumulative
-    counts run parallel per range bucket and only the
-    buckets-sized total table sees a global window.
+    closes to c_before·c + c(c+1)/2), then a distributed prefix count
+    (operators/prefix.py).
     """
     gcols = list(group_cols)
     x = F.col(value_col).cast("decimal(18,4)")
@@ -1255,58 +1259,24 @@ def gini_coefficient(
     return agg.select(*gcols, "n", micro6(g).alias("gini_micro"))
 
 
-def _gini_ungrouped(
-    base: DataFrame, value_col: str, n_buckets: int = 4096
-) -> DataFrame:
+def _gini_ungrouped(base: DataFrame, value_col: str) -> DataFrame:
     """Global Gini without a global sort. Collapse to distinct values
     (value, holder count) — Σi·x over a run of c tied holders after
     c_before smaller ones is x·(c_before·c + c(c+1)/2), invariant to
-    tie order — then rank distinct values with a two-level prefix
-    count: range buckets from the exact (min, max), intra-bucket
-    cumulative holder counts partitioned by bucket, and a global
-    window only over the buckets-sized totals table. Same decimal
-    core and closed form as the grouped path; heavy value
-    concentration degrades only to the per-bucket distinct-value
-    count (documented, like ks_report's distinct-profile bound)."""
+    tie order — then take c_before from a distributed prefix count
+    over the distinct values (operators/prefix.py). Same decimal core
+    and closed form as the grouped path; heavy value concentration
+    degrades only to the per-bucket distinct-value count (documented,
+    like ks_report's distinct-profile bound)."""
     x = F.col(value_col).cast("decimal(18,4)")
     vc = base.groupBy(x.alias("__v")).agg(F.count(F.lit(1)).alias("__c"))
-    mm = vc.agg(
-        F.min("__v").alias("__vmin"), F.max("__v").alias("__vmax")
+    ranked = prefix_sum(
+        range_bucket(vc, "__v"), BUCKET, [F.col("__v").asc()], "__c"
     )
-    vd = F.col("__v").cast("double")
-    span = F.col("__vmax").cast("double") - F.col("__vmin").cast("double")
-    bucket = F.when(span > 0, F.least(
-        F.lit(n_buckets - 1),
-        F.floor(
-            (vd - F.col("__vmin").cast("double")) / span * n_buckets
-        ),
-    )).otherwise(F.lit(0)).cast("long")
-    bucketed = vc.crossJoin(F.broadcast(mm)).select(
-        "__v", "__c", bucket.alias("__b")
-    )
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    intra = F.coalesce(F.sum("__c").over(w_intra), F.lit(0))
-    totals = bucketed.groupBy("__b").agg(F.sum("__c").alias("__bt"))
-    w_bucket = (
-        Window.orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
-    )
-    ranked = bucketed.join(F.broadcast(offsets), "__b").select(
-        "__v",
-        "__c",
-        (F.col("__off") + intra).cast("decimal(19,0)").alias("__cb"),
-    )
+    cb = (F.col(PREFIX) - F.col("__c")).cast("decimal(19,0)")
     cc = F.col("__c").cast("decimal(19,0)")
     run_rank_sum = (
-        F.col("__cb") * cc + (cc * (cc + F.lit(1))) / F.lit(2)
+        cb * cc + (cc * (cc + F.lit(1))) / F.lit(2)
     ).cast("decimal(38,0)")
     agg = ranked.agg(
         F.sum("__c").alias("n"),

@@ -17,6 +17,13 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.functions.ids import h60, stable_event_id
+from gcp_data_pipeline_fyp_spark.operators.prefix import (
+    BUCKET,
+    HASH_SPAN,
+    PREFIX,
+    prefix_sum,
+)
 from gcp_data_pipeline_fyp_spark.queries_util import roundn
 
 _BUCKETS = 1_000_000
@@ -150,7 +157,6 @@ def token_budget_mix(
     strata_col: str,
     budgets: dict[str, int],
     seed: int = 0,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Token-budgeted prefix PER STRATUM with per-stratum budgets and
     NO single-partition sort — the distributed form of
@@ -160,12 +166,9 @@ def token_budget_mix(
     spec ("50 B tokens of web, 5 B of code") keyed by stratum value.
 
     Rows order inside each stratum by the md5-60-bit key of
-    (seed, id) — uniform by construction, so the key's high bits
-    bucket rows into ~|stratum|/n_buckets slices REGARDLESS of the id
-    distribution (the epoch_shuffle_order escape, summed over weights
-    instead of counted): the running token total is intra-bucket
-    cumulative sum (parallel per (stratum, bucket)) + the bucket's
-    offset from a |strata|·n_buckets-sized prefix table. A row is
+    (seed, id), and the running token total is a distributed prefix
+    sum (operators/prefix.py) partitioned by stratum and bucketed on
+    the key's high bits, like `epoch_shuffle_order`'s rank. A row is
     kept while its inclusive cumulative `cum_weight` stays within its
     stratum's budget — deterministic and NESTED (raising a budget
     only appends rows; the order is a pure function of seed and ids).
@@ -190,57 +193,21 @@ def token_budget_mix(
     bmap = F.create_map(
         *[F.lit(x) for sb in srt for x in (sb[0], int(sb[1]))]
     )
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "_", F.lit(int(seed)), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    span = (1 << 60) // n_buckets
     keyed = (
         df.filter(F.col(strata_col).isin([s for s, _ in srt]))
-        .withColumn("__key", key)
-        .withColumn("__b", F.expr(f"__key div {span}"))
-    )
-    w_intra = (
-        Window.partitionBy(strata_col, "__b")
-        .orderBy(F.col("__key").asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    totals = keyed.groupBy(strata_col, "__b").agg(
-        F.sum(F.col(weight_col).cast("long")).alias("__bt")
-    )
-    w_bucket = (
-        Window.partitionBy(strata_col)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        strata_col,
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
+        .withColumn("__key", stable_event_id(F.lit(int(seed)), id_col))
+        .withColumn(BUCKET, F.expr(f"__key div {HASH_SPAN}"))
     )
     return (
-        keyed.join(F.broadcast(offsets), [strata_col, "__b"])
-        .withColumn(
-            "cum_weight",
-            (
-                F.col("__off")
-                + F.coalesce(
-                    F.sum(F.col(weight_col).cast("long")).over(w_intra),
-                    F.lit(0),
-                )
-            ).cast("long"),
+        prefix_sum(
+            keyed,
+            BUCKET,
+            [F.col("__key").asc(), F.col(id_col).asc()],
+            F.coalesce(F.col(weight_col).cast("long"), F.lit(0)),
+            [strata_col],
         )
-        .filter(F.col("cum_weight") <= bmap[F.col(strata_col)])
-        .drop("__key", "__b", "__off")
+        .filter(F.col(PREFIX) <= bmap[F.col(strata_col)])
+        .select(*df.columns, F.col(PREFIX).alias("cum_weight"))
     )
 
 
@@ -397,8 +364,7 @@ def weighted_sample_wor(
     """
     gcols = [F.col(c) for c in group_cols]
     cols = [F.col(c) for c in key_cols]
-    joined = F.concat(F.lit(f"{seed}|"), *[_key_token(c) for c in cols])
-    h = F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+    h = h60(F.concat(F.lit(f"{seed}|"), *[_key_token(c) for c in cols]))
     u = (h + F.lit(1.0)) / F.lit(1152921504606846977.0)
     w = F.col(weight_col).cast("double")
     rank = -F.log(u) / w
@@ -748,7 +714,6 @@ def unimax_epoch_mix(
     strata_col: str,
     allocs: DataFrame,
     seed: int = 0,
-    n_buckets: int = 4096,
     epoch_col: str = "epoch",
     out_col: str = "cum_weight",
 ) -> DataFrame:
@@ -794,15 +759,13 @@ def unimax_epoch_mix(
 
     Scale: the epoch plan is |strata| x max-epochs rows (broadcast by
     construction); the expansion is a broadcast join that duplicates
-    each row n_epochs(stratum) times; the running totals are the
-    two-level no-global-sort prefix of `token_budget_mix` with the
-    epoch in the partition keys — intra-bucket windows parallel per
-    (stratum, epoch, bucket), offsets from a
-    |strata|·epochs·n_buckets-row broadcast table. Nothing
-    corpus-sized sorts in one partition.
+    each row n_epochs(stratum) times; the running totals are
+    `token_budget_mix`'s distributed prefix sum (operators/prefix.py)
+    partitioned by (stratum, epoch). Nothing corpus-sized sorts in
+    one partition.
     """
-    reserved = {epoch_col, out_col, "__key", "__b", "__off", "__W",
-                "__ne", "__bud", "__ew", "__bt"}
+    reserved = {epoch_col, out_col, "__key", BUCKET, "__off", PREFIX,
+                "__W", "__ne", "__bud"}
     clash = reserved & set(df.columns)
     if clash:
         raise ValueError(
@@ -851,54 +814,20 @@ def unimax_epoch_mix(
             F.col("alloc") - (F.col(epoch_col) - 1) * F.col("__W"),
         ).alias("__bud"),
     )
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "_",
-                    F.lit(int(seed)),
-                    F.col(epoch_col),
-                    F.col(id_col).cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    span = (1 << 60) // n_buckets
+    key = stable_event_id(F.lit(int(seed)), epoch_col, id_col)
     expanded = (
         df.join(F.broadcast(epochs), strata_col)
-        .withColumn("__ew", wrow)
         .withColumn("__key", key)
-        .withColumn("__b", F.expr(f"__key div {span}"))
-    )
-    w_intra = (
-        Window.partitionBy(strata_col, epoch_col, "__b")
-        .orderBy(F.col("__key").asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    btotals = expanded.groupBy(strata_col, epoch_col, "__b").agg(
-        F.sum("__ew").alias("__bt")
-    )
-    w_bucket = (
-        Window.partitionBy(strata_col, epoch_col)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = btotals.select(
-        strata_col,
-        epoch_col,
-        "__b",
-        F.coalesce(F.sum("__bt").over(w_bucket), F.lit(0)).alias("__off"),
+        .withColumn(BUCKET, F.expr(f"__key div {HASH_SPAN}"))
     )
     return (
-        expanded.join(F.broadcast(offsets), [strata_col, epoch_col, "__b"])
-        .withColumn(
-            out_col,
-            (F.col("__off") + F.sum("__ew").over(w_intra)).cast("long"),
+        prefix_sum(
+            expanded,
+            BUCKET,
+            [F.col("__key").asc(), F.col(id_col).asc()],
+            wrow,
+            [strata_col, epoch_col],
         )
-        .filter(F.col(out_col) <= F.col("__bud"))
-        .select(*df.columns, epoch_col, out_col)
+        .filter(F.col(PREFIX) <= F.col("__bud"))
+        .select(*df.columns, epoch_col, F.col(PREFIX).alias(out_col))
     )

@@ -35,15 +35,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.functions.ids import h60
+
 TWO_60 = float(1 << 60)
-
-
-def _h60(col: Column) -> Column:
-    """60-bit md5 hash (functions/ids.py:stable_event_id arithmetic)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # ------------------------------------------------------------- count-min
@@ -64,7 +61,7 @@ def cms_state(
         rows.select(
             "d",
             (
-                _h60(F.concat_ws("_", F.col("d").cast("string"), "__k"))
+                h60(F.concat_ws("_", F.col("d").cast("string"), "__k"))
                 % F.lit(width)
             ).alias("bucket"),
         )
@@ -96,7 +93,7 @@ def cms_estimate(
         F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("d"),
     ).withColumn(
         "bucket",
-        _h60(
+        h60(
             F.concat_ws(
                 "_", F.col("d").cast("string"), F.col(col).cast("string")
             )
@@ -116,7 +113,7 @@ def kmv_state(
 ) -> DataFrame:
     """Bottom-k sketch per group: the k smallest distinct hash
     fractions of `col` in [0, 1). Plain (keys..., h) rows."""
-    h = (_h60(F.col(col).cast("string")) / F.lit(TWO_60)).alias("h")
+    h = (h60(F.col(col).cast("string")) / F.lit(TWO_60)).alias("h")
     hashed = df.select(*[F.col(c) for c in keys], h).distinct()
     w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy("h")
     return (

@@ -44,6 +44,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.functions.ids import h60
 from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 ZONEMAP_DIR = "_zonemap"
@@ -333,7 +334,7 @@ def build_bucket_index(
     idx = (
         df.select(
             F.col("_metadata.file_path").alias(_FILE),
-            (_h60(F.col(col).cast("string")) % n_buckets).alias("bucket"),
+            (h60(F.col(col).cast("string")) % n_buckets).alias("bucket"),
         )
         .distinct()
     )
@@ -379,13 +380,8 @@ def read_point_lookup(
     return df.filter(F.col(col).isin(*values))
 
 
-def _h60(col):
-    """60-bit md5 hash (functions/ids.py convention — SQL-replicable)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _bucket_of(value, n_buckets: int) -> int:
-    """Driver-side mirror of `_h60(str(value)) % n_buckets`."""
+    """Plain-Python mirror of `h60(str(value)) % n_buckets`."""
     import hashlib
 
     return int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16) % (

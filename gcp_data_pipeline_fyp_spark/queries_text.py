@@ -673,7 +673,7 @@ SQL_BLOOM_DECONTAMINATE = SQL_DECONTAMINATE_CORPUS
 # ------------------------------------------------- sequence packing
 def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     """Concatenate-and-chunk packing into 2048-token examples via the
-    distributed two-level prefix sum (operators/packing.py); the oracle
+    distributed two-level prefix sum (operators/prefix.py); the oracle
     is the plain global cumulative sum."""
     from gcp_data_pipeline_fyp_spark.operators.packing import pack_sequences
 

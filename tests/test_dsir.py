@@ -197,17 +197,18 @@ def _weights_fixture(spark, n=60):
     return w.withColumn("nw", (F.col("id") % 7 + 1).cast("long"))
 
 
-def test_budget_select_matches_naive_global_window(spark):
+def test_budget_select_matches_naive_global_window(spark, monkeypatch):
+    from gcp_data_pipeline_fyp_spark.operators import prefix
     from gcp_data_pipeline_fyp_spark.operators.dsir import (
         dsir_budget_select,
     )
 
     w = _weights_fixture(spark)
+    # 8 buckets put several Gumbel keys in each one
+    monkeypatch.setattr(prefix, "N_BUCKETS", 8)
     got = {
         (r["id"], r["cum_weight"])
-        for r in dsir_budget_select(
-            w, "id", "nw", 60, seed=5, n_buckets=8
-        ).collect()
+        for r in dsir_budget_select(w, "id", "nw", 60, seed=5).collect()
     }
     want = {
         (r["id"], r["cum_weight"])

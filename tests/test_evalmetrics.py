@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_data_pipeline_fyp_spark.operators import prefix
 from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
     calibration_report,
     roc_auc,
@@ -20,9 +21,9 @@ def _naive_auc(pairs):
     return (wins + 0.5 * ties) / (len(pos) * len(neg))
 
 
-def _spark_auc(spark, pairs, n_buckets=4096):
+def _spark_auc(spark, pairs):
     df = spark.createDataFrame(pairs, "score: double, label: boolean")
-    return roc_auc(df, "score", "label", n_buckets=n_buckets).first()
+    return roc_auc(df, "score", "label").first()
 
 
 def test_auc_perfect_separation(spark):
@@ -49,13 +50,14 @@ def test_auc_with_heavy_ties(spark):
     assert r["auc_micro"] == round(want * 1_000_000)
 
 
-def test_auc_bucket_count_invariance(spark):
+def test_auc_bucket_count_invariance(spark, monkeypatch):
     import random
 
     rnd = random.Random(7)
     pairs = [(rnd.gauss(0, 1), rnd.random() < 0.5) for _ in range(300)]
-    a = _spark_auc(spark, pairs, n_buckets=4)["auc_micro"]
-    b = _spark_auc(spark, pairs, n_buckets=4096)["auc_micro"]
+    b = _spark_auc(spark, pairs)["auc_micro"]
+    monkeypatch.setattr(prefix, "N_BUCKETS", 4)
+    a = _spark_auc(spark, pairs)["auc_micro"]
     assert a == b == round(_naive_auc(pairs) * 1_000_000)
 
 
@@ -329,7 +331,7 @@ def test_blend_scores_fused_vs_sequential_differential(spark):
         blend_scores(df.withColumn("blend_micro", F.lit(1)), w)
 
 
-def test_midrank_fuzz_vs_naive(spark):
+def test_midrank_fuzz_vs_naive(spark, monkeypatch):
     import random
 
     from gcp_data_pipeline_fyp_spark.operators.evalmetrics import (
@@ -341,9 +343,11 @@ def test_midrank_fuzz_vs_naive(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id long, s double"
     )
+    # 8 buckets put several distinct values in each one
+    monkeypatch.setattr(prefix, "N_BUCKETS", 8)
     got = {
         r["id"]: r["pct_micro"]
-        for r in midrank_normalize(df, "s", n_buckets=8).collect()
+        for r in midrank_normalize(df, "s").collect()
     }
     n = len(vals)
     for i, v in enumerate(vals):

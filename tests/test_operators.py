@@ -342,6 +342,26 @@ def test_pack_sequences_matches_global_cumsum(spark):
     assert len(got) == 50
 
 
+def test_pack_sequences_null_id_keeps_row_and_counts_no_tokens(spark):
+    from gcp_data_pipeline_fyp_spark.operators.packing import pack_sequences
+
+    df = spark.createDataFrame(
+        [(1, 5), (2, 7), (None, 3), (5000, 2)], "doc_id long, n_tokens long"
+    )
+    out = pack_sequences(df, "doc_id", "n_tokens", max_tokens=8)
+    got = sorted(
+        (tuple(r) for r in out.collect()),
+        key=lambda t: (t[0] is not None, t[0]),
+    )
+    # the NULL-id row stays, gets no offset and shifts no other row
+    assert got == [
+        (None, 3, None, None),
+        (1, 5, 0, 0),
+        (2, 7, 5, 0),
+        (5000, 2, 12, 1),
+    ]
+
+
 def test_stratified_sample_nested_and_stratum_scoped(spark):
     """Raising a stratum's fraction only ADDS rows (nested samples),
     and changing one stratum's fraction never touches another."""

@@ -615,3 +615,28 @@ DRIFT_PLAN_PINS = {
 @pytest.mark.parametrize("probe", sorted(DRIFT_PLAN_PINS))
 def test_drift_probe_plan_pinned(spark, probe):
     assert _plan_signature(spark, probe) == DRIFT_PLAN_PINS[probe]
+
+
+# Every probe that runs a distributed prefix sum (operators/prefix.py),
+# pinned like the drift family above. The histograms are the ones the
+# hand-written two-level scans had, except `pack_sequences`: its
+# bucket is now coalesced for NULL ids, so the offsets join infers no
+# `isnotnull(bucket)` Filter on either side (Filter 2 -> 0).
+# `epoch_shuffle_order` is pinned in CALIBRATION_PLAN_PINS.
+PREFIX_PLAN_PINS = {
+    "blend_floor_docs": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 19, "BroadcastHashJoin": 19, "Exchange": 70, "Filter": 21, "Generate": 18, "HashAggregate": 86, "ObjectHashAggregate": 4, "Project": 65, "Scan": 21, "Sort": 9, "SortMergeJoin": 1, "Window": 6},
+    "classifier_auc": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 3, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 2, "Exchange": 8, "Filter": 4, "HashAggregate": 12, "Project": 10, "Scan": 4, "Sort": 2, "Window": 2},
+    "customer_spend_gini_global": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 3, "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 2, "Exchange": 12, "Filter": 4, "HashAggregate": 20, "Project": 10, "Scan": 4, "Sort": 2, "Window": 2},
+    "dsir_budget_docs": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 19, "BroadcastHashJoin": 9, "BroadcastNestedLoopJoin": 10, "Exchange": 65, "Filter": 25, "Generate": 20, "HashAggregate": 62, "Project": 53, "Scan": 28, "Sort": 18, "SortMergeJoin": 8, "Window": 2},
+    "pack_sequences": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 5, "HashAggregate": 2, "Project": 6, "Scan": 2, "Sort": 2, "Window": 2},
+    "rank_blend_scores": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 6, "BroadcastHashJoin": 6, "Exchange": 15, "Filter": 5, "Generate": 6, "HashAggregate": 28, "Project": 21, "Scan": 7, "Sort": 2, "Window": 2},
+    "token_budget_mix": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 5, "Filter": 4, "HashAggregate": 2, "Project": 6, "Scan": 2, "Sort": 2, "Window": 2},
+    "unimax_epoch_mix_docs": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 5, "BroadcastHashJoin": 5, "Exchange": 15, "Filter": 10, "Generate": 2, "HashAggregate": 10, "Project": 15, "Scan": 6, "Sort": 4, "Window": 6},
+    "unimax_mix_docs": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 5, "Filter": 4, "HashAggregate": 2, "Project": 6, "Scan": 2, "Sort": 2, "Window": 2},
+    "weighted_interleave_order": {"AdaptiveSparkPlan": 1, "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 6, "Filter": 3, "HashAggregate": 2, "Project": 7, "Scan": 2, "Sort": 3, "Window": 2},
+}
+
+
+@pytest.mark.parametrize("probe", sorted(PREFIX_PLAN_PINS))
+def test_prefix_probe_plan_pinned(spark, probe):
+    assert _plan_signature(spark, probe) == PREFIX_PLAN_PINS[probe]

@@ -854,12 +854,16 @@ def test_roc_auc_fuzz_vs_pair_counting(spark, rows):
     example)."""
     from decimal import ROUND_HALF_UP, Decimal
 
+    from gcp_data_pipeline_fyp_spark.operators import prefix
     from gcp_data_pipeline_fyp_spark.operators.evalmetrics import roc_auc
 
     df = spark.createDataFrame(
         [(float(s), y) for s, y in rows], "score: double, label: boolean"
     )
-    r = roc_auc(df, "score", "label", n_buckets=8).first()
+    # 8 buckets put several distinct scores in each one
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(prefix, "N_BUCKETS", 8)
+        r = roc_auc(df, "score", "label").first()
     pos = [s for s, y in rows if y]
     neg = [s for s, y in rows if not y]
     if not pos or not neg:
